@@ -23,6 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * under `distinct`. The DuckDB oracles mirror that chain textually, so the
   * VALUES must not move — only the cost does.
   *
+  * PRECONDITION: the caller filters `length(text) >= Len` first. For
+  * shorter texts the kernel returns an empty array, while the chain's
+  * `sequence` would count DOWN from 1 and emit grams; every TextOps call
+  * site applies that filter, and "exactly the chain" holds only under it.
+  *
   * Why a kernel: the expression chain pays, per shingle (~505 per doc,
   * ~675M per ×256 bench corpus pass), one O(position) UTF8String substring
   * scan (Spark substrings count codepoints from the string start, so the
@@ -148,7 +153,9 @@ object GraftMd5 {
 
   /** All char-8-gram 60-bit hashes of the first 512 chars of `text`, in
     * position order (`distinct` = first-occurrence distinct). Mirrors
-    * `transform(sequence(...))` above bit-for-bit. */
+    * `transform(sequence(...))` above bit-for-bit for texts of at least
+    * [[ShingleLen]] chars; shorter texts give an empty array (see the
+    * object-level precondition). */
   def shingles60(text: UTF8String, distinct: Boolean): ArrayData = {
     val bytes = text.getBytes
     val nBytes = bytes.length
@@ -268,7 +275,10 @@ object GraftMd5 {
 
 /** `shingles60(text)` / `shingles60_distinct(text)` as a Catalyst expression.
   * Codegen is a single static call, so consumers stay inside whole-stage
-  * codegen (same discipline as [[graft.geo.PointInPolygon]]). */
+  * codegen (same discipline as [[graft.geo.PointInPolygon]]).
+  *
+  * PRECONDITION: callers filter `length(text) >= TextOps.ShingleLen`; only
+  * then are the values the oracle's SQL chain (see [[GraftMd5]]). */
 case class Shingles60(child: Expression, distinct: Boolean)
     extends UnaryExpression {
 

@@ -13,12 +13,13 @@ import org.apache.spark.sql.expressions.Window
   * products and norms are exact BIGINT sums — order-insensitive, bit-equal in
   * any engine; only the final cosine divides in double.
   *
-  * Two paths:
-  *  - [[bruteTopK]]: exact top-k by quantized cosine — the baseline. Long-form
-  *    (vec, pos, val) join so partial aggregation handles the fan-out.
-  *  - [[srpTopK]] / [[nearDupPairs]]: scale paths — sign-random-projection
-  *    buckets (adaptive bit count, multiple tables) prune candidates before
-  *    the exact rerank; only intra-bucket pairs are scored.
+  * Two kinds of path:
+  *  - [[bruteTopK]]: exact top-k by quantized cosine — the baseline. With no
+  *    candidate table to rerank it scores all pairs through a long-form
+  *    (vec, pos, q) join so partial aggregation handles the fan-out.
+  *  - [[srpTopK]] / [[ivfTopK]] / [[nearDupPairs]]: scale paths — SRP
+  *    buckets (adaptive bit count, multiple tables) or IVF lists prune
+  *    candidates, and the ONE array-form [[rerank]] scores only those pairs.
   */
 object AnnSearch {
 
@@ -42,11 +43,53 @@ object AnnSearch {
   def norms(quant: DataFrame): DataFrame =
     quant.groupBy(col("vec_id")).agg(sum(col("q") * col("q")).as("n2"))
 
-  /** Norms off the array form: one higher-order `aggregate` per row — no
-    * explode, no exchange; integer sums commute so values match [[norms]]. */
+  /** Norms off the array form: (vec_id, qa) → (vec_id, qa, n2) with one
+    * higher-order `aggregate` per row — no explode, no exchange; integer
+    * sums commute so n2 matches [[norms]]. */
   def normsArr(qarr: DataFrame): DataFrame =
-    qarr.select(col("vec_id"),
+    qarr.select(col("vec_id"), col("qa"),
       expr("aggregate(qa, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)").as("n2"))
+
+  /** The ONE pair-cosine chain of the ANN family: candidate pairs (a, b) →
+    * (a, b, cos) by exact quantized cosine. Both sides' vectors are cut to
+    * pair participants (left_semi on bare ids) and cached as
+    * ([[quantizedArr]], [[normsArr]]) rows, attached with two shuffle_hash
+    * joins (build = candidate chain; Catalyst's estimate of the vector table
+    * is a scan-based guess, so an estimate-based broadcast is the 8 GB-cliff
+    * risk the dedup verify also pins against), and the dot is one
+    * `zip_with`/`aggregate` per pair row: no (vec, pos, q) explode and no
+    * (a, b) aggregate exchange. Integer dot/norm sums commute, so values
+    * equal the long-form join's, and `cos` is the same double expression.
+    *
+    * PRECONDITION: every embedding has the same length and no null
+    * elements. `zip_with` pads a shorter array with nulls (null dot → null
+    * cos) where a `pos`-keyed join would drop the unmatched positions, and
+    * a null element nulls the `aggregate` where `sum` would skip it. */
+  private def rerank(cand0: DataFrame, emb: DataFrame, a: String, b: String): DataFrame = {
+    val cand = cand0.cache()
+    val ids = cand.select(col(a).as("vec_id"))
+      .union(cand.select(col(b).as("vec_id"))).distinct()
+    val v = normsArr(quantizedArr(emb).join(ids, Seq("vec_id"), "left_semi")).cache()
+    cand
+      .hint("shuffle_hash")
+      .join(v.select(col("vec_id").as(a), col("qa").as("qa_a"), col("n2").as("n2_a")), a)
+      .hint("shuffle_hash")
+      .join(v.select(col("vec_id").as(b), col("qa").as("qa_b"), col("n2").as("n2_b")), b)
+      .select(col(a), col(b),
+        expr("aggregate(zip_with(qa_a, qa_b, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
+          .as("dot"),
+        col("n2_a"), col("n2_b"))
+      .select(col(a), col(b),
+        (col("dot").cast("double") / (sqrt(col("n2_a").cast("double")) * sqrt(col("n2_b").cast("double")))).as("cos"))
+  }
+
+  /** Top-k tail shared by every top-k path: rank (qvec, vec, cos) rows per
+    * query by cos desc, vec asc → (qvec, rank, vec, cos). */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qvec")).orderBy(col("cos").desc, col("vec").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select(col("qvec"), col("rank"), col("vec"), col("cos"))
+  }
 
   /** Exact top-k neighbors of the query vectors (vec_id % queryMod == 0),
     * excluding self. Output: (qvec, rank, vec, cos). */
@@ -64,9 +107,7 @@ object AnnSearch {
       .join(n.select(col("vec_id").as("vec"), col("n2").as("vn")), "vec")
       .select(col("qvec"), col("vec"),
         (col("dot").cast("double") / (sqrt(col("qn").cast("double")) * sqrt(col("vn").cast("double")))).as("cos"))
-    val w = Window.partitionBy(col("qvec")).orderBy(col("cos").desc, col("vec").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("qvec"), col("rank"), col("vec"), col("cos"))
+    topK(scored, k)
   }
 
   /** Sign-random-projection bucket id: sign bits of dot products with
@@ -94,8 +135,6 @@ object AnnSearch {
     * real text embeddings support more bits at the same recall. */
   def srpTopK(emb: DataFrame, k: Int = 5, nBits: Int = 4, tables: Int = 8,
       queryMod: Int = 250): DataFrame = {
-    val q = quantized(emb).cache()
-    val n = norms(q)
     val cand = (0 until tables).map { t =>
       val b = srpBuckets(emb, nBits, t)
       val left = b.filter(col("vec_id") % queryMod === 0)
@@ -104,23 +143,7 @@ object AnnSearch {
       left.join(right, "bucket").filter(col("qvec") =!= col("vec"))
         .select("qvec", "vec")
     }.reduce(_ unionByName _).distinct()
-    val ql = q.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("qvec"), col("pos"), col("q").as("qq"))
-    val dots = cand
-      .hint("shuffle_hash") // build = candidate chain; posexploded q is 256× under-estimated
-      .join(ql, "qvec")
-      .hint("shuffle_hash")
-      .join(q.select(col("vec_id").as("vec"), col("pos"), col("q")), Seq("vec", "pos"))
-      .groupBy(col("qvec"), col("vec"))
-      .agg(sum(col("qq") * col("q")).as("dot"))
-    val scored = dots
-      .join(n.select(col("vec_id").as("qvec"), col("n2").as("qn")), "qvec")
-      .join(n.select(col("vec_id").as("vec"), col("n2").as("vn")), "vec")
-      .select(col("qvec"), col("vec"),
-        (col("dot").cast("double") / (sqrt(col("qn").cast("double")) * sqrt(col("vn").cast("double")))).as("cos"))
-    val w = Window.partitionBy(col("qvec")).orderBy(col("cos").desc, col("vec").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("qvec"), col("rank"), col("vec"), col("cos"))
+    topK(rerank(cand, emb, "qvec", "vec"), k)
   }
 
   /** IVF (inverted-file) ANN — the cluster-pruned COMPARISON BASELINE beside
@@ -149,10 +172,9 @@ object AnnSearch {
   def ivfTopK(emb: DataFrame, k: Int = 5, nProbe: Int = 3, centroidMod: Int = 50,
       queryMod: Int = 250): DataFrame = {
     val q = quantized(emb).cache()
-    val n = norms(q)
     val cq = q.filter(col("vec_id") % centroidMod === 7)
       .select(col("vec_id").as("cid"), col("pos"), col("q").as("cq"))
-    val cn = n.filter(col("vec_id") % centroidMod === 7)
+    val cn = norms(q).filter(col("vec_id") % centroidMod === 7)
       .select(col("vec_id").as("cid"), col("n2").as("cn2"))
     val scores = q.join(broadcast(cq), "pos")
       .groupBy(col("vec_id"), col("cid"))
@@ -169,21 +191,7 @@ object AnnSearch {
     val cand = probes.join(assign, "cid")
       .filter(col("qvec") =!= col("vec_id"))
       .select(col("qvec"), col("vec_id").as("vec")).distinct()
-    val dots = cand
-      .hint("shuffle_hash")
-      .join(q.select(col("vec_id").as("qvec"), col("pos"), col("q").as("qq")), "qvec")
-      .hint("shuffle_hash")
-      .join(q.select(col("vec_id").as("vec"), col("pos"), col("q")), Seq("vec", "pos"))
-      .groupBy(col("qvec"), col("vec"))
-      .agg(sum(col("qq") * col("q")).as("dot"))
-    val scored = dots
-      .join(n.select(col("vec_id").as("qvec"), col("n2").as("qn")), "qvec")
-      .join(n.select(col("vec_id").as("vec"), col("n2").as("vn")), "vec")
-      .select(col("qvec"), col("vec"),
-        (col("dot").cast("double") / (sqrt(col("qn").cast("double")) * sqrt(col("vn").cast("double")))).as("cos"))
-    val w = Window.partitionBy(col("qvec")).orderBy(col("cos").desc, col("vec").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("qvec"), col("rank"), col("vec"), col("cos"))
+    topK(rerank(cand, emb, "qvec", "vec"), k)
   }
 
   /** One distributed Lloyd (k-means) iteration over the quantized embeddings
@@ -375,25 +383,8 @@ object AnnSearch {
     * lists only. */
   def ivfTopKWith(emb: DataFrame, centroids: DataFrame, k: Int = 5,
       nProbe: Int = 3, queryMod: Int = 250, nAssign: Int = 1): DataFrame = {
-    val q = quantized(emb).cache()
-    val n = norms(q)
-    val cents = centroids.cache()
-    val cand = ivfCandidatesWith(emb, cents, nProbe, queryMod, nAssign)
-    val dots = cand
-      .hint("shuffle_hash")
-      .join(q.select(col("vec_id").as("qvec"), col("pos"), col("q").as("qq")), "qvec")
-      .hint("shuffle_hash")
-      .join(q.select(col("vec_id").as("vec"), col("pos"), col("q")), Seq("vec", "pos"))
-      .groupBy(col("qvec"), col("vec"))
-      .agg(sum(col("qq") * col("q")).as("dot"))
-    val scored = dots
-      .join(n.select(col("vec_id").as("qvec"), col("n2").as("qn")), "qvec")
-      .join(n.select(col("vec_id").as("vec"), col("n2").as("vn")), "vec")
-      .select(col("qvec"), col("vec"),
-        (col("dot").cast("double") / (sqrt(col("qn").cast("double")) * sqrt(col("vn").cast("double")))).as("cos"))
-    val w = Window.partitionBy(col("qvec")).orderBy(col("cos").desc, col("vec").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("qvec"), col("rank"), col("vec"), col("cos"))
+    val cand = ivfCandidatesWith(emb, centroids.cache(), nProbe, queryMod, nAssign)
+    topK(rerank(cand, emb, "qvec", "vec"), k)
   }
 
   /** Adaptive SRP bit count: the smallest b with 2^b ≥ ceil(n/targetBucket),
@@ -495,24 +486,6 @@ object AnnSearch {
     * already paid for it (the artifact helpers) — avoids a second full
     * count job per invocation. */
   private def nearDupPairsN(emb: DataFrame, nDocs: Long,
-      targetBucket: Int = 32, tables: Int = 8): DataFrame = {
-    val cand = nearDupCandidates(emb, targetBucket, tables, nDocs = nDocs)
-    // ARRAY-form rerank: attach each side's quantized array + norm with two
-    // narrow vec_id joins and compute the dot per PAIR ROW via
-    // zip_with/aggregate — the (vec,pos,q)-exploded form shuffled dim× more
-    // rows through two shuffle_hash joins plus a (va,vb) aggregate exchange.
-    // Integer sums commute, so dot/norm values (and the one double divide)
-    // are bit-identical.
-    val qa = quantizedArr(emb)
-      .withColumn("n2", expr("aggregate(qa, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)"))
-    cand
-      .join(qa.select(col("vec_id").as("va"), col("qa").as("qaa"), col("n2").as("na")), "va")
-      .join(qa.select(col("vec_id").as("vb"), col("qa").as("qab"), col("n2").as("nb")), "vb")
-      .select(col("va"), col("vb"),
-        expr("aggregate(zip_with(qaa, qab, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-          .as("dot"),
-        col("na"), col("nb"))
-      .select(col("va"), col("vb"),
-        (col("dot").cast("double") / (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double")))).as("cos"))
-  }
+      targetBucket: Int = 32, tables: Int = 8): DataFrame =
+    rerank(nearDupCandidates(emb, targetBucket, tables, nDocs = nDocs), emb, "va", "vb")
 }

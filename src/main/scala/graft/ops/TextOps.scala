@@ -47,28 +47,23 @@ object TextOps {
     * linear permutations over it. */
   def baseHash(sh: Column): Column = baseHash60(sh) % HashP
 
-  /** The ONE shared artifact the whole dedup family derives from: the
-    * DISTINCT (doc_id, hb) 60-bit shingle-hash table. MinHash minima are
-    * invariant under distinct; Jaccard set sizes/intersections need distinct
-    * — so minhash, LSH banding, exact-Jaccard verify and the composed
-    * curation pipeline all share this definition instead of each
-    * re-shingling and re-md5ing the corpus differently.
+  /** The exploded DISTINCT (doc_id, hb) 60-bit shingle-hash table — the
+    * input of the per-hash aggregates (fingerprint k-min, document
+    * frequency, decontamination overlap, span profiles). Candidate-pair
+    * scorers do not read it: they attach per-doc arrays instead
+    * ([[shingleArrays]]), and MinHash is the fused [[minhashWide]] map.
     *
     * Deliberately NOT cached: it is corpus-sized (~675M rows at the ×256
     * bench leg), and caching it crosses the storage-memory threshold
     * somewhere between ×64 and ×256 — from there every consumer pays
-    * eviction/recompute thrash against its own execution memory, measured
-    * as docs/sec ratios of 0.41–0.49 on exactly the ops that read the cache
-    * (jaccard, curation) while their cache-free siblings stayed at ~1.0.
-    * It is a pure map off the parquet scan (array_distinct inside the
-    * generator), so recomputing a scan is linear compute with zero memory
-    * footprint; consumers that re-read a SUBSET cache the pairs-scoped
-    * reduction instead (bounded by dup density, not corpus size).
+    * eviction/recompute thrash against its own execution memory. It is a
+    * pure map off the parquet scan (array_distinct inside the generator),
+    * so recomputing a scan is linear compute with zero memory footprint.
     *
     * PRECONDITION: `doc_id` is unique in `docs` (the documents table's
     * primary key — the per-doc array_distinct then yields globally distinct
     * (doc_id, hb) pairs with no shuffle). A corpus with repeated doc_id rows
-    * would inflate Jaccard set sizes downstream; ingest paths that can see
+    * would inflate set sizes downstream; ingest paths that can see
     * re-crawled ids must dedup by id first (CorpusStream does; see also
     * [[exactDupGroups]] for content-level dups, which are FINE — distinct
     * ids with equal text are the workload, not a violation). */
@@ -110,15 +105,6 @@ object TextOps {
         graft.functions.Minhash16.minhash16(col("text")).as("mh"))
     mh.select(col("doc_id") +:
       (0 until NumHashes).map(k => col("mh").getItem(k).as(s"m$k")): _*)
-  }
-
-  /** Wide MinHash from a prepared (doc_id, hb) table (hb any 60-bit hash —
-    * minima are taken mod P). Distinctness of hb does not change the minima,
-    * so [[shingleHashes]] feeds this directly. */
-  def minhashWideFrom(sh: DataFrame): DataFrame = {
-    val aggs = (0 until NumHashes).map(k =>
-      min(((col("hb") % HashP) * lit(k * 4099 + 17) + lit(k * 7907 + 31)) % HashP).as(s"m$k"))
-    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Long form (doc_id, seed, minh) — unpivot of the wide signature. */
@@ -166,110 +152,61 @@ object TextOps {
 
   /** Exact n-gram Jaccard for the LSH candidate pairs (verification stage of
     * the dedup pipeline): |A∩B| / |A∪B| over distinct shingle sets.
-    * The shingle hashes are computed and md5'd ONCE ([[shingleHashes]]);
-    * candidate generation (minhash → bands → pairs) and the exact verify both
-    * read the same cached table. */
-  def ngramJaccard(docs: DataFrame): DataFrame =
-    // candidate pairs from the FUSED minhash map (no shingle explode on the
-    // banding side); the verify intersects per-doc shingle ARRAYS per pair
-    jaccardVerifyArr(docs, pairsOf(lshBands(docs)))
-
-  /** Per-doc distinct shingle arrays for the pair participants, cached:
-    * (doc_id, arr, sz). The semi-join cut keeps the cached table bounded by
-    * candidate density, not corpus size. */
-  private def pairDocArrays(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val pairDocs = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    docs.filter(length(col("text")) >= ShingleLen)
-      .select(col("doc_id"),
-        graft.functions.Shingles60.shingles60Distinct(col("text")).as("arr"))
-      .join(pairDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("arr"), size(col("arr")).cast("long").as("sz"))
-      .cache()
+    * Candidates come from the fused minhash map (no shingle explode on the
+    * banding side); the verify is [[pairIntersect]] over per-doc arrays. */
+  def ngramJaccard(docs: DataFrame): DataFrame = {
+    val arr = shingleArrays(docs)
+    jaccardOf(pairIntersect(pairsOf(lshBands(docs)), arr, arr))
   }
 
-  /** ARRAY-FORM exact-Jaccard verify (r6): every output row keys on a
-    * candidate pair, so attach each side's distinct shingle ARRAY with two
-    * narrow doc-id joins and compute |A∩B| per pair row with the
-    * [[graft.functions.IntersectCountKernel]] probe. The r5 row-form
-    * verify joined the pairs table into the (doc_id, hb)-exploded shingle
-    * table twice: the first join multiplied every pair by doc_a's ~280
-    * shingles (123 M intermediate rows at the ×256 leg — measured 25 s in
-    * the `inter` stage alone) and shuffled that for the second join + a
-    * (doc_a, doc_b) aggregate. The array form moves the same bytes at most
-    * once, has no pair×shingles intermediate and no aggregate, and i, sz_a,
-    * sz_b (and the one double division) are value-identical, so the q16
-    * oracle is untouched. Missing-intersection pairs fall out naturally
-    * (IntersectCount = 0 where the row form needed a left join + coalesce). */
-  private def jaccardVerifyArr(docs: DataFrame, pairs0: DataFrame): DataFrame = {
+  /** (doc_id, arr): each doc's first-occurrence-distinct 60-bit shingle
+    * hashes as one array — the per-doc form candidate-pair scorers attach.
+    * Same filter, values and doc_id-uniqueness precondition as
+    * [[shingleHashes]] (`size(arr)` is the doc's distinct-shingle count),
+    * with no generator. */
+  private def shingleArrays(docs: DataFrame): DataFrame =
+    docs.filter(length(col("text")) >= ShingleLen)
+      .select(col("doc_id"), graft.functions.Shingles60.shingles60Distinct(col("text")).as("arr"))
+
+  /** The ONE pair-intersection chain of the dedup family: candidate pairs
+    * (doc_a, doc_b) → (doc_a, doc_b, i, sz_a, sz_b) with i = |A∩B| over
+    * distinct shingle sets, from `arrA`/`arrB` ((doc_id, arr) tables of
+    * the a and b sides; pass the same table twice for a self-join).
+    *
+    * Each side is cut to pair participants by a left_semi join on bare ids
+    * and cached — bounded by dup DENSITY, not corpus size; a self-join
+    * (the same table on both sides) caches its participants once.
+    * Two narrow doc-id joins then attach each side's array and the
+    * [[graft.functions.IntersectCountKernel]] probe counts |A∩B| per pair
+    * row: no pair×shingles intermediate and no (doc_a, doc_b) aggregate,
+    * and a pair with no shared shingle reads i = 0.
+    *
+    * shuffle_hash on the pair chain: Catalyst's ESTIMATES for the
+    * kernel-derived array table are scan-based guesses and both sides are
+    * dup-density-bounded (a re-crawl storm can inflate them corpus-scale),
+    * so a statically-chosen broadcast is the 8 GB-cliff/OOM risk the r3
+    * bench actually hit; the hint pins a shuffled hash join with the narrow
+    * pair rows as build side (AQE keeps the hinted join, and still
+    * coalesces and skew-splits its partitions; PlanSpec gates this shape). */
+  private def pairIntersect(pairs0: DataFrame, arrA: DataFrame, arrB: DataFrame): DataFrame = {
     val pairs = pairs0.cache()
-    val arr = pairDocArrays(docs, pairs)
-    // shuffle_hash on the pair chain — same discipline as the r5 row-form
-    // verify: Catalyst's ESTIMATES for the kernel-derived array table are
-    // scan-based guesses, and both sides are dup-DENSITY-bounded, so a
-    // statically-chosen broadcast is the 8 GB-cliff/OOM risk the r3 bench
-    // actually hit; the hint pins a shuffled hash join with the narrow pair
-    // rows as build side, and AQE still coalesces/skew-splits from measured
-    // sizes (PlanSpec gates this shape)
+    val ids = pairs.select(col("doc_a").as("doc_id"))
+      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    def cut(arr: DataFrame): DataFrame = arr.join(ids, Seq("doc_id"), "left_semi").cache()
+    val a = cut(arrA)
+    val b = if (arrB eq arrA) a else cut(arrB)
     pairs
-      .hint("shuffle_hash")
-      .join(arr.select(col("doc_id").as("doc_a"), col("arr").as("arr_a"), col("sz").as("sza")), "doc_a")
-      .hint("shuffle_hash")
-      .join(arr.select(col("doc_id").as("doc_b"), col("arr").as("arr_b"), col("sz").as("szb")), "doc_b")
+      .hint("shuffle_hash").join(a.select(col("doc_id").as("doc_a"), col("arr").as("arr_a")), "doc_a")
+      .hint("shuffle_hash").join(b.select(col("doc_id").as("doc_b"), col("arr").as("arr_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         graft.functions.IntersectCount.intersectCount(col("arr_a"), col("arr_b")).as("i"),
-        col("sza"), col("szb"))
-      .select(col("doc_a"), col("doc_b"),
-        (col("i").cast("double") / (col("sza") + col("szb") - col("i")).cast("double")).as("jaccard"))
+        size(col("arr_a")).cast("long").as("sz_a"), size(col("arr_b")).cast("long").as("sz_b"))
   }
 
-  def ngramJaccardFrom(sh: DataFrame): DataFrame =
-    jaccardVerify(sh, pairsOf(bandsOf(minhashWideFrom(sh))))
-
-  private def jaccardVerify(sh: DataFrame, pairs0: DataFrame): DataFrame = {
-    // distinct 60-bit shingle hashes instead of the strings: 8-byte join keys
-    // (collision odds ~n²/2⁶¹ — negligible, and mirrored in the oracle)
-    val pairs = pairs0.cache()
-    // Semi-join reduction: every output row keys on a candidate pair, so the
-    // shingle table is first cut to docs that appear in ANY pair via a
-    // left_semi join on bare 8-byte ids — without it the verify joins
-    // shuffle the whole shingle table to verify a candidate set that is
-    // usually far smaller (and the sizes aggregate scans it again). No
-    // forced broadcast: the candidate-doc set is bounded by dup DENSITY,
-    // not corpus size, so on a boilerplate-heavy corpus it can reach
-    // billions of ids and a binding broadcast() hint would hit the 8 GB
-    // broadcast cliff / driver OOM where the unreduced plan merely got
-    // slower. AQE converts the semi join to broadcast from the MEASURED
-    // size when it is genuinely small (the common case) and keeps it a
-    // shuffle join when it is not — same fast path, no cliff.
-    val pairDocs = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    // the REDUCED table is what gets cached (three consumers below: sizes +
-    // both intersection sides) — it is bounded by dup density; caching the
-    // corpus-sized `sh` instead thrashed storage memory at ×256 (see
-    // [[shingleHashes]])
-    val shP = sh.join(pairDocs, Seq("doc_id"), "left_semi").cache()
-    val sizes = shP.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // two-key equi-join (doc, hb) on each side — joining on doc alone and
-    // filtering equality afterwards would materialize |pairs|·|shingles|² rows.
-    // shuffle_hash hints pin the BUILD side to the candidate chain: Catalyst
-    // under-estimates the exploded shingle table (generators don't scale
-    // sizeInBytes), and without the hint it broadcasts sh — ~1 GiB at a
-    // 16×-sharded corpus, unbounded at 100 TB
-    val inter = pairs
-      .hint("shuffle_hash")
-      .join(shP.select(col("doc_id").as("doc_a"), col("hb")), "doc_a")
-      .hint("shuffle_hash")
-      .join(shP.select(col("doc_id").as("doc_b"), col("hb")), Seq("doc_b", "hb"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .withColumn("i", coalesce(col("i"), lit(0L)))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sza")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("szb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (col("i").cast("double") / (col("sza") + col("szb") - col("i")).cast("double")).as("jaccard"))
-  }
+  /** (doc_a, doc_b, jaccard) from [[pairIntersect]] rows. */
+  private def jaccardOf(inter: DataFrame): DataFrame =
+    inter.select(col("doc_a"), col("doc_b"),
+      (col("i").cast("double") / (col("sz_a") + col("sz_b") - col("i")).cast("double")).as("jaccard"))
 
   /** 16-bit SimHash from the md5 of each shingle: bit k of the fingerprint is
     * the majority vote of hex-digit bit k across shingles. */
@@ -345,69 +282,37 @@ object TextOps {
     * the (small) batch side against the base's existing band partitioning. */
   def incrementalDedup(docs: DataFrame, idSplit: Long = 1000000L,
       jaccardMax: Double = 0.9): DataFrame = {
-    val sh = shingleHashes(docs)
-    val bands = lshBands(docs) // fused minhash map — same values
+    val (arr, bands) = dedupArtifacts(docs)
     incrementalDedupAgainst(
-      sh.filter(col("doc_id") < idSplit), bands.filter(col("doc_id") < idSplit),
-      sh.filter(col("doc_id") >= idSplit), bands.filter(col("doc_id") >= idSplit),
+      arr.filter(col("doc_id") < idSplit), bands.filter(col("doc_id") < idSplit),
+      arr.filter(col("doc_id") >= idSplit), bands.filter(col("doc_id") >= idSplit),
       jaccardMax)
   }
 
   /** The two PERSISTED artifacts a production incremental-dedup service keeps
-    * per corpus snapshot: the distinct (doc_id, hb) shingle-hash table and
-    * the LSH band table. Write them once (e.g. via `Snapshots`), feed them to
-    * [[incrementalDedupAgainst]] for every arriving batch. */
+    * per corpus snapshot: the per-doc distinct shingle-array table
+    * (doc_id, arr) and the LSH band table. Write them once (e.g. via
+    * `Snapshots`), feed them to [[incrementalDedupAgainst]] for every
+    * arriving batch. */
   def dedupArtifacts(docs: DataFrame): (DataFrame, DataFrame) =
-    (shingleHashes(docs), lshBands(docs))
+    (shingleArrays(docs), lshBands(docs))
 
   /** Incremental dedup of a batch against PRECOMPUTED base artifacts —
     * nothing on the base side is recomputed; only the batch is shingled and
     * banded. Candidate pairs are base-band ⋈ batch-band; the exact Jaccard
-    * verify reads each side's own shingle table. */
-  def incrementalDedupAgainst(baseSh: DataFrame, baseBands: DataFrame,
-      batchSh: DataFrame, batchBands: DataFrame,
+    * verify is [[pairIntersect]] over each side's own array table, which
+    * cuts both tables to the docs that appear in a pair before any verify
+    * join (measured at the ×256 bench leg before that cut: 180 s shuffling
+    * 359M shingle rows against 286 pairs). */
+  def incrementalDedupAgainst(baseArr: DataFrame, baseBands: DataFrame,
+      batchArr: DataFrame, batchBands: DataFrame,
       jaccardMax: Double = 0.9): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keys = Seq("band", "k0", "k1", "k2", "k3")
     val base = baseBands.withColumnRenamed("doc_id", "doc_a")
     val batch = batchBands.withColumnRenamed("doc_id", "doc_b")
-    val pairs = base.join(batch, keys).select("doc_a", "doc_b").distinct().cache()
-    // Semi-join reduction BEFORE the shingle-level verify: every output row
-    // is pairs-scoped (intersections, set sizes and the final argmax all key
-    // on a candidate pair), so both shingle tables are cut to the docs that
-    // actually appear in a pair via a left_semi join on the doc id. Without
-    // it the (doc_b, hb) verify join shuffles the ENTIRE batch shingle
-    // table to verify a candidate set that is orders of magnitude smaller
-    // (measured at the ×256 bench leg: 180 s shuffling 359M rows against
-    // 286 pairs). No forced broadcast: the candidate set is bounded by dup
-    // DENSITY, not corpus size — a re-crawl storm can make MOST of a batch
-    // duplicate (see CorpusStream's identical rationale), and a binding
-    // broadcast() hint would then hit the 8 GB cliff / driver OOM where a
-    // shuffle join merely slows down. AQE converts the semi joins to
-    // broadcast from the measured size in the common sparse case.
-    val docsA = pairs.select(col("doc_a").as("doc_id")).distinct()
-    val docsB = pairs.select(col("doc_b").as("doc_id")).distinct()
-    // cache the REDUCED tables (each read twice below: size agg +
-    // intersection side) — bounded by the batch's dup-candidate count;
-    // caching a corpus-sized shingle table thrashes storage memory at scale
-    // (see [[shingleHashes]])
-    val baseShP = baseSh.join(docsA, Seq("doc_id"), "left_semi").cache()
-    val batchShP = batchSh.join(docsB, Seq("doc_id"), "left_semi").cache()
-    val sza = baseShP.groupBy(col("doc_id").as("doc_a")).agg(count(lit(1)).as("sza"))
-    val szb = batchShP.groupBy(col("doc_id").as("doc_b")).agg(count(lit(1)).as("szb"))
-    // shuffle_hash on the pair chain: never broadcast a shingle table
-    // (generator sizeInBytes under-estimates; see ngramJaccardFrom)
-    val inter = pairs
-      .hint("shuffle_hash")
-      .join(baseShP.select(col("doc_id").as("doc_a"), col("hb")), "doc_a")
-      .hint("shuffle_hash")
-      .join(batchShP.select(col("doc_id").as("doc_b"), col("hb")), Seq("doc_b", "hb"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    val jac = pairs.join(inter, Seq("doc_a", "doc_b"), "left")
-      .withColumn("i", coalesce(col("i"), lit(0L)))
-      .join(sza, "doc_a").join(szb, "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        (col("i").cast("double") / (col("sza") + col("szb") - col("i")).cast("double")).as("jaccard"))
+    val pairs = base.join(batch, keys).select("doc_a", "doc_b").distinct()
+    val jac = jaccardOf(pairIntersect(pairs, baseArr, batchArr))
     val w = Window.partitionBy(col("doc_b")).orderBy(col("jaccard").desc, col("doc_a").asc)
     jac.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("doc_b").as("doc_id"), col("doc_a").as("match_doc"), col("jaccard"),
@@ -535,7 +440,7 @@ object TextOps {
     * before any shuffle).
     *
     * The broadcast is BY CONSTRUCTION safe, unlike the dedup candidate sets
-    * ([[ngramJaccardFrom]]'s rationale): an eval benchmark is a fixed,
+    * ([[pairIntersect]]'s rationale): an eval benchmark is a fixed,
     * human-curated artifact orders of magnitude below executor memory, not
     * a data-dependent set that a re-crawl storm can inflate. */
   def decontaminate(docs: DataFrame, evalDocs: DataFrame,
@@ -571,10 +476,9 @@ object TextOps {
     * leak flag at `jaccardMin`. */
   def fuzzyDecontaminate(docs: DataFrame, isEval: org.apache.spark.sql.Column,
       jaccardMin: Double = 0.5): DataFrame = {
-    val sh = shingleHashes(docs)
-    val bands = lshBands(docs) // fused minhash map — same values
-    incrementalDedupAgainst(sh.filter(isEval), bands.filter(isEval),
-      sh.filter(!isEval), bands.filter(!isEval), jaccardMin)
+    val (arr, bands) = dedupArtifacts(docs)
+    incrementalDedupAgainst(arr.filter(isEval), bands.filter(isEval),
+      arr.filter(!isEval), bands.filter(!isEval), jaccardMin)
       .withColumnRenamed("match_doc", "eval_doc")
       .withColumnRenamed("is_dup", "leaked")
   }
@@ -741,58 +645,13 @@ object TextOps {
     * bit", which drives KEEP-THE-SUPERSET retention where symmetric dedup
     * would keep both.
     *
-    * Scale notes: identical shape to [[ngramJaccardFrom]] — candidate pairs
-    * from the banded LSH chain (never all-pairs), the shingle table cut to
-    * pair participants by a semi-join BEFORE the verify joins (bounded by
-    * dup density, not corpus size), shuffle_hash pinning the build side.
-    * All outputs integer (counts + floor-ppm) ⇒ bit-identical at any
-    * partitioning. */
+    * Scale notes: identical shape to [[ngramJaccard]] — candidate pairs
+    * from the banded LSH chain (never all-pairs), then the shared
+    * [[pairIntersect]] verify. All outputs integer (counts + floor-ppm) ⇒
+    * bit-identical at any partitioning. */
   def containment(docs: DataFrame): DataFrame = {
-    // same array-form verify as [[ngramJaccard]] — identical i/sz values,
-    // floor-ppm arithmetic unchanged
-    val pairs = pairsOf(lshBands(docs)).cache()
-    val arr = pairDocArrays(docs, pairs)
-    // shuffle_hash: see jaccardVerifyArr — estimate-based broadcasts of
-    // dup-density-bounded sides are the scale cliff this family avoids
-    pairs
-      .hint("shuffle_hash")
-      .join(arr.select(col("doc_id").as("doc_a"), col("arr").as("arr_a"), col("sz").as("sz_a")), "doc_a")
-      .hint("shuffle_hash")
-      .join(arr.select(col("doc_id").as("doc_b"), col("arr").as("arr_b"), col("sz").as("sz_b")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.IntersectCount.intersectCount(col("arr_a"), col("arr_b")).as("i"),
-        col("sz_a"), col("sz_b"))
-      .select(col("doc_a"), col("doc_b"), col("i").as("n_shared"),
-        col("sz_a"), col("sz_b"),
-        expr("i * 1000000 div sz_a").as("cont_a_ppm"),
-        expr("i * 1000000 div sz_b").as("cont_b_ppm"),
-        when(expr("i * 1000000 div sz_a") >= 900000L &&
-             expr("i * 1000000 div sz_b") >= 900000L, lit("near-equal"))
-          .when(expr("i * 1000000 div sz_a") >= 900000L, lit("a-in-b"))
-          .when(expr("i * 1000000 div sz_b") >= 900000L, lit("b-in-a"))
-          .otherwise(lit("partial")).as("relation"))
-  }
-
-  def containmentFrom(sh: DataFrame): DataFrame =
-    containmentVerify(sh, pairsOf(bandsOf(minhashWideFrom(sh))))
-
-  private def containmentVerify(sh: DataFrame, pairs0: DataFrame): DataFrame = {
-    val pairs = pairs0.cache()
-    val pairDocs = pairs.select(col("doc_a").as("doc_id"))
-      .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val shP = sh.join(pairDocs, Seq("doc_id"), "left_semi").cache()
-    val sizes = shP.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .hint("shuffle_hash")
-      .join(shP.select(col("doc_id").as("doc_a"), col("hb")), "doc_a")
-      .hint("shuffle_hash")
-      .join(shP.select(col("doc_id").as("doc_b"), col("hb")), Seq("doc_b", "hb"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .withColumn("i", coalesce(col("i"), lit(0L)))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+    val arr = shingleArrays(docs)
+    pairIntersect(pairsOf(lshBands(docs)), arr, arr)
       .select(col("doc_a"), col("doc_b"), col("i").as("n_shared"),
         col("sz_a"), col("sz_b"),
         expr("i * 1000000 div sz_a").as("cont_a_ppm"),

@@ -47,7 +47,7 @@ object CorpusStream {
     * — no batch², no base², no corpus re-LSH;
     * [[graft.ops.TextOps.incrementalDedupAgainst]]), and the accepted
     * (non-duplicate) documents are appended to the corpus sink while their
-    * shingle/band tables are appended to the artifacts — the store grows
+    * shingle-array/band tables are appended to the artifacts — the store grows
     * monotonically and later batches dedup against everything accepted so
     * far. Exact within-batch duplicates collapse on content hash first.
     *
@@ -64,6 +64,8 @@ object CorpusStream {
   def incrementalIngest(spark: SparkSession, srcDir: String, artifactDir: String,
       outDir: String, jaccardMax: Double = 0.9, checkpoint: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    // sh/ holds per-doc (doc_id, arr) shingle arrays; a store written with
+    // the older exploded (doc_id, hb) rows fails loudly on the missing `arr`
     val shDir = s"$artifactDir/sh"; val bandDir = s"$artifactDir/bands"
     val writer = spark.readStream.schema(docSchema).parquet(srcDir)
       .writeStream
@@ -72,8 +74,8 @@ object CorpusStream {
           .withColumn("h", md5(col("text")))
           .dropDuplicates("h") // exact within-batch clones collapse first
           .select(col("doc_id"), col("text"), col("event_ts"))
-        val (bsh0, bbands0) = TextOps.dedupArtifacts(docs.select(col("doc_id"), col("text")))
-        val bsh = bsh0.cache(); val bbands = bbands0.cache()
+        val (barr0, bbands0) = TextOps.dedupArtifacts(docs.select(col("doc_id"), col("text")))
+        val barr = barr0.cache(); val bbands = bbands0.cache()
         val s = docs.sparkSession
         def readOrEmpty(dir: String, like: DataFrame): DataFrame =
           if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
@@ -85,8 +87,8 @@ object CorpusStream {
         // plan-size risk at crawl scale — the anti-join keeps the filter
         // in-plan (AQE broadcasts the dup side when it is genuinely small)
         val dupIds = TextOps.incrementalDedupAgainst(
-            readOrEmpty(shDir, bsh), readOrEmpty(bandDir, bbands),
-            bsh, bbands, jaccardMax)
+            readOrEmpty(shDir, barr), readOrEmpty(bandDir, bbands),
+            barr, bbands, jaccardMax)
           // a doc whose BEST match is itself is a replayed batch re-checking
           // against its own committed artifacts — accept it again
           .filter(col("is_dup") === 1 && col("match_doc") =!= col("doc_id"))
@@ -101,12 +103,12 @@ object CorpusStream {
                        // later job reads the path it is appending to
         // artifact store commits FIRST (only ids not already in the store —
         // a replay must not double-append its artifacts), sink second
-        bsh.join(newIds, Seq("doc_id"), "left_semi")
+        barr.join(newIds, Seq("doc_id"), "left_semi")
           .write.mode("append").parquet(shDir)
         bbands.join(newIds, Seq("doc_id"), "left_semi")
           .write.mode("append").parquet(bandDir)
         accepted.write.mode("append").parquet(outDir)
-        bsh.unpersist(); bbands.unpersist(); accepted.unpersist()
+        barr.unpersist(); bbands.unpersist(); accepted.unpersist()
         // drop the verify plan's internal pair cache: a long-running stream
         // would otherwise accumulate one orphan cache entry per micro-batch
         s.catalog.clearCache()

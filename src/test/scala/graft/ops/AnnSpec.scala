@@ -39,6 +39,17 @@ class AnnSpec extends SparkTestBase {
         .maxBy { case (id, s) => (s, -id) }
       assert(best._1 == vec && best._2 == c, s"qvec=$qv")
     }
+    // the candidate-rerank paths score with the same exact cosine, bit for bit
+    def exact(rows: Array[org.apache.spark.sql.Row], a: Int, b: Int, c: Int, path: String): Unit = {
+      assert(rows.nonEmpty, path)
+      rows.foreach { r =>
+        val (va, vb) = (r.getLong(a), r.getLong(b))
+        assert(r.getDouble(c) == cos(vecs(va), vecs(vb)), s"$path ($va, $vb)")
+      }
+    }
+    exact(AnnSearch.srpTopK(emb).collect(), 0, 2, 3, "srpTopK")
+    exact(AnnSearch.ivfTopKWith(emb, AnnSearch.trainedCentroids(emb)).collect(), 0, 2, 3, "ivfTopKWith")
+    exact(AnnSearch.nearDupPairs(emb).collect(), 0, 1, 2, "nearDupPairs")
   }
 
   test("multi-table SRP ANN reaches recall@5 >= 0.9 vs brute force (2 bits x 12 tables)") {

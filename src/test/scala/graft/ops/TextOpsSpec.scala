@@ -122,13 +122,13 @@ class TextOpsSpec extends SparkTestBase {
     val base = corpus.filter(col("doc_id") < 1000000L)
     val batch = corpus.filter(col("doc_id") >= 1000000L)
     // snapshot the base's dedup artifacts once
-    val (sh, bands) = TextOps.dedupArtifacts(base)
-    sh.write.parquet(s"$dir/base_sh"); bands.write.parquet(s"$dir/base_bands")
+    val (arr, bands) = TextOps.dedupArtifacts(base)
+    arr.write.parquet(s"$dir/base_arr"); bands.write.parquet(s"$dir/base_bands")
     // an arriving batch only shingles/bands itself
-    val (bsh, bbands) = TextOps.dedupArtifacts(batch)
+    val (barr, bbands) = TextOps.dedupArtifacts(batch)
     val viaArtifacts = TextOps.incrementalDedupAgainst(
-      spark.read.parquet(s"$dir/base_sh"), spark.read.parquet(s"$dir/base_bands"),
-      bsh, bbands)
+      spark.read.parquet(s"$dir/base_arr"), spark.read.parquet(s"$dir/base_bands"),
+      barr, bbands)
     val direct = TextOps.incrementalDedup(corpus)
     assert(viaArtifacts.except(direct).isEmpty && direct.except(viaArtifacts).isEmpty)
   }

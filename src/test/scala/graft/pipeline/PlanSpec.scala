@@ -167,21 +167,43 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("jaccard verify never broadcasts the shingle-array table (estimates mislead Catalyst)") {
-    // Catalyst's size estimates for the kernel-derived per-doc array table
-    // are scan-based guesses, and BOTH verify sides are dup-density-bounded
-    // (a re-crawl storm can inflate them corpus-scale) — a statically-chosen
-    // broadcast is the 8 GB-cliff/OOM the round-3 bench actually hit with
-    // the old exploded shingle table. The gate inspects the ESTIMATE-planned
-    // physical plan: the shuffle_hash hints must pin shuffled hash joins for
-    // the two arr-attach joins; AQE may still convert to broadcast at
-    // runtime from MEASURED sizes — that is the behavior we want to keep.
-    val plan = graft.ops.TextOps.ngramJaccard(Synth.corpus(spark, sf0001))
-      .queryExecution.sparkPlan.toString
-    assert(!"""BroadcastHashJoin \[doc_[ab]""".r.findFirstIn(plan).isDefined,
+  /** Estimate-planned gate for a candidate-pair scorer: Catalyst's size
+    * estimates for the kernel-derived array tables are scan-based guesses,
+    * and BOTH attach sides are dup-density-bounded (a re-crawl storm can
+    * inflate them corpus-scale) — a statically-chosen broadcast is the
+    * 8 GB-cliff/OOM the round-3 bench actually hit with the old exploded
+    * shingle table. The gate inspects the ESTIMATE-planned physical plan:
+    * the shuffle_hash hints must pin shuffled hash joins for the two
+    * attach joins, and no generator may explode a shingle or embedding
+    * array (the row form). */
+  private def assertArrayFormAttach(df: Dataset[_], keys: String,
+      rowFormFree: Boolean = true): Unit = {
+    val plan = df.queryExecution.sparkPlan.toString
+    assert(s"BroadcastHashJoin \\[($keys)#".r.findFirstIn(plan).isEmpty,
       "array-side broadcast returned:\n" + plan.take(3000))
     assert("ShuffledHashJoin".r.findAllIn(plan).size >= 2,
-      "verify joins lost the shuffle_hash build:\n" + plan.take(2000))
+      "attach joins lost the shuffle_hash build:\n" + plan.take(2000))
+    if (rowFormFree)
+      assert("""Generate (pos)?explode\((shingles60|embedding)""".r.findFirstIn(plan).isEmpty,
+        "row-form explode returned:\n" + plan.take(3000))
+  }
+
+  test("jaccard verify never broadcasts the shingle-array table (estimates mislead Catalyst)") {
+    assertArrayFormAttach(graft.ops.TextOps.ngramJaccard(Synth.corpus(spark, sf0001)), "doc_a|doc_b")
+  }
+
+  test("every pair scorer attaches arrays with shuffled hash joins, never a broadcast or explode") {
+    import graft.ops.{AnnSearch, TextOps}
+    val corpus = Synth.corpus(spark, sf0001)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    assertArrayFormAttach(TextOps.containment(corpus), "doc_a|doc_b")
+    assertArrayFormAttach(TextOps.incrementalDedup(corpus), "doc_a|doc_b")
+    assertArrayFormAttach(TextOps.fuzzyDecontaminate(corpus,
+      col("doc_id") < 1000000L && col("doc_id") % 37 === 0), "doc_a|doc_b")
+    assertArrayFormAttach(AnnSearch.nearDupPairs(emb), "va|vb")
+    assertArrayFormAttach(AnnSearch.srpTopK(emb), "qvec|vec")
+    // IVF's centroid assignment keeps the long (vec, pos, q) form
+    assertArrayFormAttach(AnnSearch.ivfTopK(emb), "qvec|vec", rowFormFree = false)
   }
 
   test("bridge flows: buffer cover + threshold dims broadcast; zonal max is a partial agg") {
