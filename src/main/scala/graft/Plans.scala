@@ -6,8 +6,8 @@ import graft.synth.Synth
 
 /** Writes PLANS.md — the executed physical plans of the flagship pipeline and
   * key operators, as reviewable evidence of the scale design (broadcast-only
-  * dimension joins, fused st_contains, partial aggregation, bounded
-  * exchanges). Run: `sbt "runMain graft.Plans"`. */
+  * dimension joins, the codegen'd PIP lookup as a join key, partial
+  * aggregation, bounded exchanges). Run: `sbt "runMain graft.Plans"`. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")

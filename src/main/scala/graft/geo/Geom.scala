@@ -32,20 +32,23 @@ object Geom {
   /** Crossing-number point-in-polygon; x = lng, y = lat.
     * Half-open: includes lower/left boundary, excludes upper/right (for
     * convex axis-aligned rings). */
-  def contains(ring: Array[Double], lng: Double, lat: Double): Boolean = {
-    val n = ring.length / 2
+  def contains(ring: Array[Double], lng: Double, lat: Double): Boolean =
+    contains(ring, 0, ring.length, lng, lat)
+
+  /** [[contains]] over the ring packed in `coords[from until until]`. */
+  def contains(coords: Array[Double], from: Int, until: Int, lng: Double, lat: Double): Boolean = {
     var inside = false
-    var i = 0
-    var j = n - 1
-    while (i < n) {
-      val xi = ring(2 * i); val yi = ring(2 * i + 1)
-      val xj = ring(2 * j); val yj = ring(2 * j + 1)
+    var i = from
+    var j = until - 2
+    while (i < until) {
+      val xi = coords(i); val yi = coords(i + 1)
+      val xj = coords(j); val yj = coords(j + 1)
       if ((yi > lat) != (yj > lat)) {
         val xCross = xi + (lat - yi) * (xj - xi) / (yj - yi)
         if (lng < xCross) inside = !inside
       }
       j = i
-      i += 1
+      i += 2
     }
     inside
   }

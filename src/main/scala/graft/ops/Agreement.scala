@@ -259,8 +259,7 @@ object Agreement {
     val withGeo = mosaic
       .withColumn("lat", Cells.centroidLatCol(col("cell"), Cells.BaseRes))
       .withColumn("lng", Cells.centroidLngCol(col("cell"), Cells.BaseRes))
-      .withColumn("ccell", Cells.cellToParentCol(col("cell"), Cells.BaseRes, Cells.CoarseRes))
-    val assigned = SpatialJoin.assign(withGeo, graft.synth.Synth.catchmentCover(spark))
+    val assigned = SpatialJoin.assign(spark, withGeo)
     val countExprs = MasterCombos.flatMap { case (src, mag, k, w, t) =>
       val agr = comboAgreement(col("cell"), col("depth_max"), k, w, t)
       (0 to 4).map(c => count(when(agr === c, 1)).as(s"c${c}_${src}_$mag"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Global duplicate-cluster resolution — the step AFTER pair generation that
   * every production dedup run needs (C4/RefinedWeb/SlimPajama keep one doc
@@ -84,19 +85,24 @@ object DedupGraph {
     // fixpoint the old changed-row join detected, for the cost of one local
     // scan of the just-checkpointed partitions. The r5 shape paid, per
     // round, a labels⋈labels exchange + join just to find one changed row.
-    // Σ fits BIGINT for n·max_id < 2⁶³ (1.34 M docs × 2.6e10 ids at the
-    // ×256 leg ≈ 3.4e16; a deployment past ~10¹⁴ id-docs swaps in a DECIMAL
-    // sum). Non-numeric ids (the host-name graph of q153) cannot sum — they
-    // keep the r5 changed-row join, which is fine at host-graph cardinality.
+    // Σ is a DECIMAL(38,0) sum of integral ids: exact for n·max_id < 10³⁸
+    // (any row count × any BIGINT id), where a BIGINT sum would wrap or
+    // fail past 2⁶³. Non-integral ids (the host-name graph of q153) cannot
+    // sum — they keep the r5 changed-row join, which is fine at host-graph
+    // cardinality.
     // The propagate is the UNION form — labels ∪ edge-carried neighbor
     // labels into ONE partial-aggregating min — one fewer exchange per
     // round than the aggregate-then-left-join form, same minima.
-    val numericIds = edges.schema.fields.head.dataType
-      .isInstanceOf[org.apache.spark.sql.types.NumericType]
+    val numericIds = edges.schema.fields.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    def labelSum(df: DataFrame): Option[Any] =
+      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).collect()(0).get(0))
     // seed-aware init: a graph the seed already labelled (all-star) then
     // exits after one confirming round instead of two
     var prevSum: Option[Any] =
-      if (numericIds) Option(labels.agg(sum(col("comp"))).collect()(0).get(0))
+      if (numericIds) labelSum(labels)
       else None
     while (!converged && it < maxIters) {
       // propagate: comp ← min(own comp, neighbors' comps)
@@ -112,7 +118,7 @@ object DedupGraph {
         .select(col("doc_id"), coalesce(col("comp2"), col("comp")).as("comp"))
         .localCheckpoint()
       if (numericIds) {
-        val s = Option(next.agg(sum(col("comp"))).collect()(0).get(0))
+        val s = labelSum(next)
         // None == None on an empty edge set: converges after one round
         converged = s == prevSum
         prevSum = s

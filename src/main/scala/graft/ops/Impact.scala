@@ -124,14 +124,11 @@ object Impact {
       .withColumn("nwet", lit(1)), Seq("ncell"), "left")
       .filter(col("nwet").isNull)
     def assigned(df: DataFrame, cellCol: String, out: String): DataFrame =
-      SpatialJoin.assign(
+      SpatialJoin.assign(spark,
         df.withColumn("lat", Cells.centroidLatCol(col(cellCol), Cells.BaseRes))
-          .withColumn("lng", Cells.centroidLngCol(col(cellCol), Cells.BaseRes))
-          .withColumn("ccell",
-            Cells.cellToParentCol(col(cellCol), Cells.BaseRes, Cells.CoarseRes)),
-        graft.synth.Synth.catchmentCover(spark))
+          .withColumn("lng", Cells.centroidLngCol(col(cellCol), Cells.BaseRes)))
         .withColumnRenamed("hydroid", out)
-        .drop("lat", "lng", "ccell", "feature_id", "huc8", "lake_id", "order_")
+        .drop("lat", "lng", "feature_id", "huc8", "lake_id", "order_")
     val err = assigned(assigned(dry, "cell", "hyd"), "ncell", "nhyd")
       .filter(col("hyd") =!= col("nhyd"))
     err.groupBy(col("hyd").cast("long").as("hydroid"))

@@ -140,7 +140,9 @@ object Synth {
   }
 
   /** (ccell, catchment…) cover table: each polygon exploded to the CoarseRes
-    * cells its bbox intersects — the broadcast side of the spatial join. */
+    * cells its bbox intersects — the cell-keyed side of the q68 polygon
+    * overlay. (Point assignment uses the grid index of
+    * [[graft.ops.SpatialJoin]] instead.) */
   def catchmentCover(spark: SparkSession): DataFrame = {
     import spark.implicits._
     catchmentList.flatMap { p =>

@@ -59,12 +59,28 @@ class PlanSpec extends SparkTestBase {
     assert("Exchange".r.findAllIn(plan).size <= 2, plan.take(2000))
   }
 
-  test("PointInPolygon expression participates in codegen (no CodegenFallback wrapper)") {
+  test("PIP lookup expression participates in codegen (no CodegenFallback wrapper)") {
     val df = graft.ops.SpatialJoin.assign(spark, Synth.points(spark, sf0001))
     val plan = physical(df)
-    // st_contains is fused into the codegen'd broadcast join itself
-    assert("""\*\(\d+\) BroadcastHashJoin .*st_contains""".r.findFirstIn(plan).isDefined,
-      plan.take(1500))
+    // the catchment lookup is the stream-side key of the attribute join, a
+    // broadcast-hash join inside a whole-stage-codegen stage
+    assert("""\*\(\d+\) BroadcastHashJoin \[pip_lookup\(lng#\d+, lat#\d+\)\], \[hydroid#\d+\], Inner, BuildRight""".r
+      .findFirstIn(plan).isDefined, plan.take(1500))
+    // ... compiled to its own doGenCode (a CodegenFallback would instead
+    // call back into the expression's eval through the references array)
+    val generated = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+    assert(generated.contains(".lookup("), generated.take(3000))
+    assert("""\(\(Expression\) references\[\d+\]\)\.eval""".r.findFirstIn(generated).isEmpty,
+      generated.take(3000))
+    // and the fact side never shuffles: the only exchange is the broadcast
+    assert("""(?<!Broadcast)Exchange """.r.findFirstIn(plan).isEmpty, plan.take(1500))
+    // ... up to the mosaic, whose groupBy(cell) is the flagship's one shuffle
+    val mosaic = physical(Inundate.run(spark, sf0001))
+    assert("""(?<!Broadcast)Exchange """.r.findAllIn(mosaic).size == 1, mosaic.take(3000))
+    assert(mosaic.contains("Exchange hashpartitioning(cell"), mosaic.take(3000))
+    // the lookup runs once per point: the stage join's lake filter on
+    // hydroid is not copied onto the fact side
+    assert("pip_lookup".r.findAllIn(mosaic).size == 1, mosaic.take(3000))
   }
 
   test("polygon-mask agreement adds NO exchange: mask re-agg reuses the mosaic partitioning") {
