@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One scaling measurement at SPARK_GRAFT_CORES — run under
   * `taskset -c 0-(N-1)` so the WHOLE process (task slots, GC, shuffle IO) is
   * confined to N cores, the honest single-box proxy for an N-executor
-  * cluster. `tools/run_scaling.sh` orchestrates N and 4N and writes
-  * BENCH/BASELINE.md.
+  * cluster. `tools/run_scaling_multi.sh` orchestrates the 2/8/32-core legs
+  * and writes BENCH/BASELINE.md.
   */
 object ScalingOne {
   def main(args: Array[String]): Unit = {

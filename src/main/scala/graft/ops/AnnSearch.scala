@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -13,15 +13,31 @@ import org.apache.spark.sql.expressions.Window
   * products and norms are exact BIGINT sums — order-insensitive, bit-equal in
   * any engine; only the final cosine divides in double.
   *
-  * Two kinds of path:
-  *  - [[bruteTopK]]: exact top-k by quantized cosine — the baseline. With no
-  *    candidate table to rerank it scores all pairs through a long-form
-  *    (vec, pos, q) join so partial aggregation handles the fan-out.
-  *  - [[srpTopK]] / [[ivfTopK]] / [[nearDupPairs]]: scale paths — SRP
-  *    buckets (adaptive bit count, multiple tables) or IVF lists prune
-  *    candidates, and the ONE array-form [[rerank]] scores only those pairs.
+  * Two array-form scorers, one per kind of pair, both computing the dot as
+  * one `zip_with`/`aggregate` per row:
+  *  - [[rerank]] (vector × vector): the ONE candidate cosine rerank of the
+  *    scale paths [[srpTopK]] / [[ivfTopK]] / [[ivfTopKWith]] /
+  *    [[nearDupPairs]] — SRP buckets or IVF lists prune candidates, and only
+  *    those pairs are scored.
+  *  - [[centroidScores]] (vector × centroid): the ONE centroid scorer of the
+  *    IVF/Lloyd family, against a broadcast centroid table. IVF list
+  *    assignment and probes ([[ivfCandidatesWith]]) and the k-means E-step
+  *    ([[kmeansStep]], [[kmeansStepWith]]) read it through one [[argmax]];
+  *    [[kmeansIterateFrom]] is the one Lloyd driver.
+  *
+  * The long (vec, pos, q) form stays where it is the natural shape:
+  * [[bruteTopK]]'s all-pairs join (no candidate table to rerank; partial
+  * aggregation handles the fan-out) and the Lloyd M-step's per-(cluster, dim)
+  * sums.
   */
 object AnnSearch {
+
+  /** Query vectors of every top-k path: `vec_id % QueryMod == 0`. */
+  private val QueryMod = 250
+
+  /** The fixed coarse quantizer of [[ivfTopK]] and [[kmeansStep]]: the
+    * vectors with `vec_id % CentroidMod == 7` stand in as centroids. */
+  private val CentroidMod = 50
 
   /** Long form (vec_id, pos, q) with quantized values. Zero terms are kept:
     * dropping them (mirrored in the oracle's qt CTE) would shrink the join
@@ -91,12 +107,12 @@ object AnnSearch {
       .select(col("qvec"), col("rank"), col("vec"), col("cos"))
   }
 
-  /** Exact top-k neighbors of the query vectors (vec_id % queryMod == 0),
+  /** Exact top-k neighbors of the query vectors (vec_id % 250 == 0),
     * excluding self. Output: (qvec, rank, vec, cos). */
-  def bruteTopK(emb: DataFrame, k: Int = 5, queryMod: Int = 250): DataFrame = {
+  def bruteTopK(emb: DataFrame, k: Int = 5): DataFrame = {
     val q = quantized(emb).cache()
     val n = norms(q)
-    val queries = q.filter(col("vec_id") % queryMod === 0)
+    val queries = q.filter(col("vec_id") % QueryMod === 0)
       .select(col("vec_id").as("qvec"), col("pos"), col("q").as("qq"))
     val dots = queries.join(q, "pos")
       .groupBy(col("qvec"), col("vec_id").as("vec"))
@@ -133,11 +149,10 @@ object AnnSearch {
     * synthetic embeddings (weakly clustered, neighbor cos ≈ 0.4):
     * (2 bits, 12 tables) → recall@5 = 0.95; (4, 8) → 0.50. Tightly-clustered
     * real text embeddings support more bits at the same recall. */
-  def srpTopK(emb: DataFrame, k: Int = 5, nBits: Int = 4, tables: Int = 8,
-      queryMod: Int = 250): DataFrame = {
+  def srpTopK(emb: DataFrame, k: Int = 5, nBits: Int = 4, tables: Int = 8): DataFrame = {
     val cand = (0 until tables).map { t =>
       val b = srpBuckets(emb, nBits, t)
-      val left = b.filter(col("vec_id") % queryMod === 0)
+      val left = b.filter(col("vec_id") % QueryMod === 0)
         .select(col("bucket"), col("vec_id").as("qvec"))
       val right = b.select(col("bucket"), col("vec_id").as("vec"))
       left.join(right, "bucket").filter(col("qvec") =!= col("vec"))
@@ -146,15 +161,83 @@ object AnnSearch {
     topK(rerank(cand, emb, "qvec", "vec"), k)
   }
 
+  /** Pack a (cid, pos, cq) centroid table — the one format every training
+    * function returns — into one (cid, ca) row per centroid, `ca` the
+    * components in pos order. PRECONDITION: dense centroids (one cq per pos
+    * of the embedding), which every M-step mean and seed satisfies. */
+  private def packed(centroids: DataFrame): DataFrame =
+    centroids.groupBy(col("cid"))
+      .agg(sort_array(collect_list(struct(col("pos"), col("cq")))).as("cs"))
+      .select(col("cid"), expr("transform(cs, s -> s.cq)").as("ca"))
+
+  /** The fixed coarse quantizer, packed: the `vec_id % CentroidMod == 7`
+    * vectors as (cid, ca), their quantized components as doubles. */
+  private def idSubset(emb: DataFrame): DataFrame =
+    quantizedArr(emb).filter(col("vec_id") % CentroidMod === 7)
+      .select(col("vec_id").as("cid"), expr("transform(qa, x -> CAST(x AS DOUBLE))").as("ca"))
+
+  /** THE centroid scorer: every vector's [[quantizedArr]] row against every
+    * packed centroid (cid, ca), → (vec_id, cid, score) with score = dot/√|c|²
+    * (|v| is common to a vector's rows, so the argmax score is the argmax
+    * cosine). The centroid table gains `cn2` and is BROADCAST (C ≪ N), so
+    * the vector side never shuffles; the dot is the same
+    * `zip_with`/`aggregate` as [[rerank]], summed in pos order.
+    *
+    * Exactness: for the id-subset quantizer the components are integers with
+    * |q| ≤ 577 on the test data, so every partial sum of the dot (≤ 64·577²)
+    * and of cn2 is an integer far below 2^53 — the double sums equal the
+    * BIGINT long-form sums bit for bit, in any order, and the score is the
+    * oracle's `CAST(dot AS DOUBLE) / sqrt(CAST(cn2 AS DOUBLE))`. For trained
+    * (fractional) centroids the fixed pos order keeps scores independent of
+    * partitioning. Same PRECONDITION as [[rerank]]: equal-length, null-free
+    * arrays. */
+  private def centroidScores(emb: DataFrame, centroids: DataFrame): DataFrame = {
+    val cents = centroids.select(col("cid"), col("ca"),
+      expr("aggregate(ca, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)").as("cn2"))
+    quantizedArr(emb).crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("cid"),
+        (expr("aggregate(zip_with(qa, ca, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)") /
+          sqrt(col("cn2"))).as("score"))
+  }
+
+  /** Each vector's best centroid, (vec_id, cid): argmax score, ties to the
+    * lowest cid — one partial-aggregating `min(struct(−score, cid))`. */
+  private def argmax(scores: DataFrame): DataFrame =
+    scores.groupBy(col("vec_id"))
+      .agg(min(struct((-col("score")).as("ns"), col("cid"))).as("m"))
+      .select(col("vec_id"), col("m.cid").as("cid"))
+
+  /** Each vector's `n` best centroids, (vec_id, cid), in the [[argmax]]
+    * order (score desc, cid asc) — the probe lists and multi-assignment. */
+  private def nearest(scores: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cid").asc)
+    scores.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
+      .select(col("vec_id"), col("cid"))
+  }
+
+  /** IVF candidate (qvec, vec) pairs against a packed centroid table: each
+    * vector indexed under its best list ([[argmax]]) or its `nAssign` best,
+    * each query probing its `nProbe` nearest lists. */
+  private def ivfCandidates(emb: DataFrame, cents: DataFrame, nProbe: Int,
+      nAssign: Int): DataFrame = {
+    val scores = centroidScores(emb, cents)
+    val assign = if (nAssign <= 1) argmax(scores) else nearest(scores, nAssign)
+    val probes = nearest(scores.filter(col("vec_id") % QueryMod === 0), nProbe)
+      .select(col("vec_id").as("qvec"), col("cid"))
+    probes.join(assign, "cid")
+      .filter(col("qvec") =!= col("vec_id"))
+      .select(col("qvec"), col("vec_id").as("vec")).distinct()
+  }
+
   /** IVF (inverted-file) ANN — the cluster-pruned COMPARISON BASELINE beside
     * the hash-pruned SRP tables: a deterministic coarse quantizer (every
-    * `centroidMod`-th vector stands in for a trained centroid set), each
-    * vector assigned to its best centroid's list (argmax cos; |v| cancels so
-    * the score is dot/√|c|²), queries probe the `nProbe` nearest lists and
-    * exact-rerank only those candidates.
+    * 50th vector stands in for a trained centroid set), each vector
+    * assigned to its best centroid's list (argmax cos), queries probe the
+    * `nProbe` nearest lists and exact-rerank only those candidates — the
+    * [[ivfTopKWith]] path over the id-subset centroids.
     *
     * PRODUCTION-PATH VERDICT (round-4 sweep + round-5 bounded retune,
-    * `graft.tools.IvfTune`, recorded in AnnSpec): the round-4 grid
+    * recorded in AnnSpec): the round-4 grid
     * (C ≤ 40) topped out at recall@5 = 0.525 at a 10 % scan; the round-5
     * levers — finer quantization and SOAR-style multi-assignment
     * (`nAssign`) — clear the bar: C = 80 (≈25 vecs/list, kmeans++ +
@@ -169,131 +252,60 @@ object AnnSearch {
     * Scale shape: assignment is O(N·C·d) map work against a BROADCAST
     * centroid table (C ≪ N); the probe→candidate join shuffles on the list
     * id (lists ≈ N/C vectors); rerank cost is nProbe/C of brute force. */
-  def ivfTopK(emb: DataFrame, k: Int = 5, nProbe: Int = 3, centroidMod: Int = 50,
-      queryMod: Int = 250): DataFrame = {
-    val q = quantized(emb).cache()
-    val cq = q.filter(col("vec_id") % centroidMod === 7)
-      .select(col("vec_id").as("cid"), col("pos"), col("q").as("cq"))
-    val cn = norms(q).filter(col("vec_id") % centroidMod === 7)
-      .select(col("vec_id").as("cid"), col("n2").as("cn2"))
-    val scores = q.join(broadcast(cq), "pos")
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum(col("q") * col("cq")).as("dot"))
-      .join(broadcast(cn), "cid")
-      .withColumn("score", col("dot").cast("double") / sqrt(col("cn2").cast("double")))
-    val assign = scores.groupBy(col("vec_id"))
-      .agg(min(struct((-col("score")).as("ns"), col("cid"))).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cid"))
-    val wq = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cid").asc)
-    val probes = scores.filter(col("vec_id") % queryMod === 0)
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("qvec"), col("cid"))
-    val cand = probes.join(assign, "cid")
-      .filter(col("qvec") =!= col("vec_id"))
-      .select(col("qvec"), col("vec_id").as("vec")).distinct()
-    topK(rerank(cand, emb, "qvec", "vec"), k)
-  }
+  def ivfTopK(emb: DataFrame, k: Int = 5, nProbe: Int = 3): DataFrame =
+    topK(rerank(ivfCandidates(emb, idSubset(emb), nProbe, 1), emb, "qvec", "vec"), k)
 
-  /** One distributed Lloyd (k-means) iteration over the quantized embeddings
-    * (q80) — the clustering step every IVF/embedding-curation pipeline
-    * re-runs at scale. E-step: argmax-cosine assignment against the
-    * deterministic coarse centroid subset (`vec_id % centroidMod == 7`, the
-    * same quantizer [[ivfTopK]] probes). M-step: per-(cluster, dim) EXACT
-    * BIGINT component sums + member counts — quantized sums are
-    * order-insensitive where float means are not; the caller divides when a
-    * float centroid is wanted.
-    *
-    * Scale shape: centroids broadcast; the E-step is one partial-aggregating
-    * groupBy per (vector, centroid) dot; the M-step is one partial-aggregating
-    * groupBy on (cluster, dim) — two bounded shuffles, no iteration inside
-    * the plan (drive rounds from the caller). */
-  def kmeansStep(emb: DataFrame, centroidMod: Int = 50): DataFrame = {
-    val q = quantized(emb).cache()
-    val cq = q.filter(col("vec_id") % centroidMod === 7)
-      .select(col("vec_id").as("cid"), col("pos"), col("q").as("cq"))
-    val cn = norms(q).filter(col("vec_id") % centroidMod === 7)
-      .select(col("vec_id").as("cid"), col("n2").as("cn2"))
-    val assign = q.join(broadcast(cq), "pos")
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum(col("q") * col("cq")).as("dot"))
-      .join(broadcast(cn), "cid")
-      .withColumn("score", col("dot").cast("double") / sqrt(col("cn2").cast("double")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct((-col("score")).as("ns"), col("cid"))).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cid"))
-    q.join(assign.hint("shuffle_hash"), "vec_id")
+  /** One Lloyd round's E-step + M-step against a packed centroid table:
+    * argmax assignment off [[centroidScores]], then per-(cluster, dim) EXACT
+    * BIGINT component sums + member counts (cid, pos, sum_q, n_members) —
+    * quantized sums are order-insensitive where float means are not. Two
+    * bounded shuffles (the argmax aggregate, the (cluster, dim) aggregate)
+    * plus the assignment attach; no iteration inside the plan. */
+  private def lloydSums(emb: DataFrame, cents: DataFrame): DataFrame = {
+    val assign = argmax(centroidScores(emb, cents))
+    quantized(emb).join(assign.hint("shuffle_hash"), "vec_id")
       .groupBy(col("cid"), col("pos"))
       .agg(sum(col("q")).as("sum_q"), count(lit(1)).as("n_members"))
   }
 
-  /** Float centroids from one [[kmeansStep]] M-step: component mean per
+  /** Float centroids (cid, pos, cq) off [[lloydSums]]: component means. */
+  private def means(sums: DataFrame): DataFrame =
+    sums.select(col("cid"), col("pos"),
+      (col("sum_q").cast("double") / col("n_members").cast("double")).as("cq"))
+
+  /** One distributed Lloyd (k-means) iteration over the quantized embeddings
+    * (q80) — the clustering step every IVF/embedding-curation pipeline
+    * re-runs at scale — against the deterministic coarse centroid subset
+    * (`vec_id % 50 == 7`, the same quantizer [[ivfTopK]] probes). Output:
+    * the exact (cid, pos, sum_q, n_members) M-step sums; the caller divides
+    * when a float centroid is wanted ([[trainedCentroids]]). */
+  def kmeansStep(emb: DataFrame): DataFrame = lloydSums(emb, idSubset(emb))
+
+  /** Float centroids from one [[kmeansStep]]: component mean per
     * (cluster, dim). The trained table plugs straight into [[ivfTopKWith]]
-    * — the compose-don't-iterate path a production IVF build runs a few
-    * rounds of before freezing the quantizer. */
-  def trainedCentroids(emb: DataFrame, centroidMod: Int = 50): DataFrame =
-    kmeansStep(emb, centroidMod)
-      .select(col("cid"), col("pos"),
-        (col("sum_q").cast("double") / col("n_members").cast("double")).as("cq"))
+    * or seeds [[kmeansIterateFrom]]. */
+  def trainedCentroids(emb: DataFrame): DataFrame = means(kmeansStep(emb))
 
-  /** One Lloyd round against an ARBITRARY float centroid table: E-step
-    * assignment (argmax dot/√|c|², broadcast centroids), M-step component
-    * means. Same two-bounded-shuffle shape as [[kmeansStep]]. */
-  def kmeansStepWith(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    val q = quantized(emb).cache()
-    val cents = centroids
-    val cn = cents.groupBy(col("cid")).agg(sum(col("cq") * col("cq")).as("cn2"))
-    val assign = q.join(broadcast(cents), "pos")
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum(col("q").cast("double") * col("cq")).as("dot"))
-      .join(broadcast(cn), "cid")
-      .withColumn("score", col("dot") / sqrt(col("cn2")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct((-col("score")).as("ns"), col("cid"))).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cid"))
-    q.join(assign.hint("shuffle_hash"), "vec_id")
-      .groupBy(col("cid"), col("pos"))
-      .agg((sum(col("q")).cast("double") / count(lit(1)).cast("double")).as("cq"))
-  }
-
-  /** Multi-round Lloyd driver loop — the production IVF training job.
-    * Round state is the centroid table only (~C·d rows): each round it is
-    * collected, re-localized and re-broadcast — the canonical Spark
-    * iterate-with-small-state shape (lineage stays one round deep; the big
-    * embedding table is scanned once per round, never iterated over on the
-    * driver). Returns (cid, pos, cq) after `rounds` rounds. */
-  def kmeansIterate(emb: DataFrame, rounds: Int, centroidMod: Int = 50): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    var cents = trainedCentroids(emb, centroidMod)
-    for (_ <- 2 to rounds) {
-      val local = cents.collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-      cents = kmeansStepWith(emb, local.toDF("cid", "pos", "cq"))
-    }
-    cents
-  }
+  /** One Lloyd round against an ARBITRARY (cid, pos, cq) centroid table:
+    * the same E-step and M-step as [[kmeansStep]], returning the means. */
+  def kmeansStepWith(emb: DataFrame, centroids: DataFrame): DataFrame =
+    means(lloydSums(emb, packed(centroids)))
 
   /** Deterministic kmeans++-style seeding: farthest-first traversal in
-    * cosine distance over a collected sample of the quantized vectors
-    * (`vec_id % sampleMod == 0`; the full table at test scale, a bounded
-    * sample at 100 TB — seeding state is C·d either way, the canonical
-    * small-state driver step). Replaces the id-subset quantizer
+    * cosine distance over the collected [[quantizedArr]] vectors (at
+    * 100 TB a bounded sample — seeding state is C·d either way, the
+    * canonical small-state driver step). Replaces the id-subset quantizer
     * (`vec_id % 50 == 7`) whose centroids were just arbitrary corpus
     * vectors: farthest-first spreads the seeds across the direction space,
     * which is exactly what the weakly-clustered synthetic embeddings punish
     * the id-subset for. Start = lowest vec_id; every tie breaks to the
     * lowest index — fully deterministic, no RNG. */
-  def seedCentroidsPP(emb: DataFrame, c: Int = 40, sampleMod: Int = 1): DataFrame = {
+  def seedCentroidsPP(emb: DataFrame, c: Int = 40): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val rows = quantized(emb).filter(col("vec_id") % sampleMod === 0)
-      .groupBy(col("vec_id"))
-      .agg(sort_array(collect_list(struct(col("pos"), col("q")))).as("v"))
-      .collect()
-    val vecs: Array[(Long, Array[Double])] = rows.map { r =>
-      val arr = r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1).toDouble).toArray
-      (r.getLong(0), arr)
-    }.sortBy(_._1)
+    val vecs: Array[(Long, Array[Double])] = quantizedArr(emb).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).map(_.toDouble).toArray))
+      .sortBy(_._1)
     def dot(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var i = 0
       while (i < a.length) { s += a(i) * b(i); i += 1 }; s
@@ -321,25 +333,28 @@ object AnnSearch {
     }.toSeq.toDF("cid", "pos", "cq")
   }
 
-  /** Multi-round Lloyd from an ARBITRARY initial centroid table — the
-    * production IVF training loop: kmeans++ seeding ([[seedCentroidsPP]])
-    * followed by collect/re-broadcast rounds of [[kmeansStepWith]]. */
+  /** The Lloyd driver — the production IVF training loop: `rounds` rounds of
+    * [[kmeansStepWith]] from an initial centroid table (kmeans++ seeds from
+    * [[seedCentroidsPP]], or [[trainedCentroids]]). Round state is the
+    * centroid table only (~C·d rows): each round it is collected,
+    * re-localized and re-broadcast — the canonical Spark
+    * iterate-with-small-state shape (lineage stays one round deep; the big
+    * embedding table is scanned once per round, never iterated over on the
+    * driver). Returns (cid, pos, cq). */
   def kmeansIterateFrom(emb: DataFrame, init: DataFrame, rounds: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    var cents = init
-    for (_ <- 1 to rounds) {
+    (1 to rounds).foldLeft(init) { (cents, _) =>
       val local = cents.collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
-      cents = kmeansStepWith(emb, local.toDF("cid", "pos", "cq"))
+      kmeansStepWith(emb, local.toDF("cid", "pos", "cq"))
     }
-    cents
   }
 
   /** Candidate (qvec, vec) pairs an IVF probe reranks, against an arbitrary
-    * centroid table — the first half of [[ivfTopKWith]], exposed standalone
-    * so the tuning sweep can measure the ACTUAL scanned fraction: probed
-    * lists are population-skewed after Lloyd rounds, so the nominal
+    * (cid, pos, cq) centroid table — the first half of [[ivfTopKWith]],
+    * exposed standalone so a caller can measure the ACTUAL scanned fraction:
+    * probed lists are population-skewed after Lloyd rounds, so the nominal
     * nProbe/C badly under- or over-states the real rerank cost.
     *
     * `nAssign` > 1 indexes each vector under its `nAssign` best lists
@@ -349,43 +364,16 @@ object AnnSearch {
     * side. The scanned fraction is still MEASURED (candidates are distinct
     * pairs), so the recall-at-cost comparison stays honest. */
   def ivfCandidatesWith(emb: DataFrame, centroids: DataFrame, nProbe: Int = 3,
-      queryMod: Int = 250, nAssign: Int = 1): DataFrame = {
-    val q = quantized(emb)
-    val cn = centroids.groupBy(col("cid")).agg(sum(col("cq") * col("cq")).as("cn2"))
-    val scores = q.join(broadcast(centroids), "pos")
-      .groupBy(col("vec_id"), col("cid"))
-      .agg(sum(col("q").cast("double") * col("cq")).as("dot"))
-      .join(broadcast(cn), "cid")
-      .withColumn("score", col("dot") / sqrt(col("cn2")))
-    val wq = Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cid").asc)
-    val assign =
-      if (nAssign <= 1)
-        // single assignment stays the partial-aggregating min(struct) shape
-        // (no window, map-side combine)
-        scores.groupBy(col("vec_id"))
-          .agg(min(struct((-col("score")).as("ns"), col("cid"))).as("m"))
-          .select(col("vec_id"), col("m.cid").as("cid"))
-      else
-        scores.withColumn("rn", row_number().over(wq)).filter(col("rn") <= nAssign)
-          .select(col("vec_id"), col("cid"))
-    val probes = scores.filter(col("vec_id") % queryMod === 0)
-      .withColumn("rn", row_number().over(wq)).filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("qvec"), col("cid"))
-    probes.join(assign, "cid")
-      .filter(col("qvec") =!= col("vec_id"))
-      .select(col("qvec"), col("vec_id").as("vec")).distinct()
-  }
+      nAssign: Int = 1): DataFrame =
+    ivfCandidates(emb, packed(centroids), nProbe, nAssign)
 
-  /** IVF top-k against an ARBITRARY centroid table (cid, pos, cq: double) —
-    * the generalized form of [[ivfTopK]] (whose deterministic quantizer is
-    * the oracle-checked instance). Same plan shape: broadcast centroids,
-    * one assignment aggregate, list-id shuffle, exact rerank of probed
-    * lists only. */
+  /** IVF top-k against an ARBITRARY (cid, pos, cq) centroid table — the
+    * general form of [[ivfTopK]] (whose id-subset quantizer is the
+    * oracle-checked instance): broadcast centroids, one assignment
+    * aggregate, list-id shuffle, exact rerank of probed lists only. */
   def ivfTopKWith(emb: DataFrame, centroids: DataFrame, k: Int = 5,
-      nProbe: Int = 3, queryMod: Int = 250, nAssign: Int = 1): DataFrame = {
-    val cand = ivfCandidatesWith(emb, centroids.cache(), nProbe, queryMod, nAssign)
-    topK(rerank(cand, emb, "qvec", "vec"), k)
-  }
+      nProbe: Int = 3, nAssign: Int = 1): DataFrame =
+    topK(rerank(ivfCandidatesWith(emb, centroids, nProbe, nAssign), emb, "qvec", "vec"), k)
 
   /** Adaptive SRP bit count: the smallest b with 2^b ≥ ceil(n/targetBucket),
     * clamped to [2, 16] — so expected bucket population stays ≈ targetBucket

@@ -48,6 +48,7 @@ class AnnSpec extends SparkTestBase {
       }
     }
     exact(AnnSearch.srpTopK(emb).collect(), 0, 2, 3, "srpTopK")
+    exact(AnnSearch.ivfTopK(emb).collect(), 0, 2, 3, "ivfTopK")
     exact(AnnSearch.ivfTopKWith(emb, AnnSearch.trainedCentroids(emb)).collect(), 0, 2, 3, "ivfTopKWith")
     exact(AnnSearch.nearDupPairs(emb).collect(), 0, 1, 2, "nearDupPairs")
   }
@@ -90,7 +91,8 @@ class AnnSpec extends SparkTestBase {
     val trained = recallOf(
       AnnSearch.ivfTopKWith(embBig, AnnSearch.trainedCentroids(embBig), 5).collect())
     val trained2 = recallOf(
-      AnnSearch.ivfTopKWith(embBig, AnnSearch.kmeansIterate(embBig, 2), 5).collect())
+      AnnSearch.ivfTopKWith(embBig,
+        AnnSearch.kmeansIterateFrom(embBig, AnnSearch.trainedCentroids(embBig), 1), 5).collect())
     info(s"IVF recall@5: untrained=$untrained 1-round=$trained 2-round=$trained2")
     // an M-step moves centroids toward their members' means — the lists a
     // query probes then hold more of its true neighborhood
@@ -106,7 +108,8 @@ class AnnSpec extends SparkTestBase {
       assert(b >= a, s"recall fell as nProbe grew: $curve")
     }
 
-    // ROUND-4 TUNING VERDICT (full grid: graft.tools.IvfTune — seeding
+    // ROUND-4 TUNING VERDICT (full grid of a one-off sweep tool, since
+    // deleted; these asserts keep its numbers — seeding
     // {id-subset, kmeans++ farthest-first} × Lloyd rounds {0,3,8} × lists
     // {20,40} × nProbe {1,2,3,4,6}): the best 10%-scan config is C=40,
     // id-subset seed + 3 Lloyd rounds, nProbe=4 → recall@5 = 0.525; kmeans++
@@ -122,7 +125,7 @@ class AnnSpec extends SparkTestBase {
     info(s"IVF best-at-10%-scan (C=40, 3 rounds, nProbe=4): recall@5 = $tuned")
     assert(tuned >= 0.45, s"tuned IVF fell below its recorded band: $tuned")
 
-    // ROUND-5 BOUNDED RETUNE (graft.tools.IvfTune SPARK_GRAFT_IVF_GRID=r5 —
+    // ROUND-5 BOUNDED RETUNE (the same deleted sweep tool's r5 grid —
     // lists {40,80} × nAssign {1,2} × nProbe {2,4,6,8}, kmeans++ + 3 rounds
     // fixed): FINER quantization clears the bar the r4 grid could not —
     // C=80 (~25 vecs/list), nProbe=8 reaches recall@5 = 0.600 at a MEASURED
@@ -166,6 +169,18 @@ class AnnSpec extends SparkTestBase {
     // farthest-first must pick DIFFERENT directions: no two seeds identical
     val byCid = s1.groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
     assert(byCid.values.toSeq.distinct.length == 10, "duplicate seed centroid")
+  }
+
+  test("Lloyd rounds from kmeans++ seeds: identical centroids under 1 and 8 shuffle partitions") {
+    def run(partitions: Int): Set[(Long, Int, Double)] = {
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      try AnnSearch.kmeansIterateFrom(emb, AnnSearch.seedCentroidsPP(emb, 10), 3).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSet
+      finally spark.conf.set("spark.sql.shuffle.partitions", "8")
+    }
+    val one = run(1)
+    assert(one.nonEmpty)
+    assert(one == run(8), "Lloyd centroids depend on the shuffle partitioning")
   }
 
   test("SRP buckets: clones of the same vector share a bucket; buckets bounded") {

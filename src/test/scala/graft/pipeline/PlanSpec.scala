@@ -192,16 +192,14 @@ class PlanSpec extends SparkTestBase {
     * the shuffle_hash hints must pin shuffled hash joins for the two
     * attach joins, and no generator may explode a shingle or embedding
     * array (the row form). */
-  private def assertArrayFormAttach(df: Dataset[_], keys: String,
-      rowFormFree: Boolean = true): Unit = {
+  private def assertArrayFormAttach(df: Dataset[_], keys: String): Unit = {
     val plan = df.queryExecution.sparkPlan.toString
     assert(s"BroadcastHashJoin \\[($keys)#".r.findFirstIn(plan).isEmpty,
       "array-side broadcast returned:\n" + plan.take(3000))
     assert("ShuffledHashJoin".r.findAllIn(plan).size >= 2,
       "attach joins lost the shuffle_hash build:\n" + plan.take(2000))
-    if (rowFormFree)
-      assert("""Generate (pos)?explode\((shingles60|embedding)""".r.findFirstIn(plan).isEmpty,
-        "row-form explode returned:\n" + plan.take(3000))
+    assert("""Generate (pos)?explode\((shingles60|embedding)""".r.findFirstIn(plan).isEmpty,
+      "row-form explode returned:\n" + plan.take(3000))
   }
 
   test("jaccard verify never broadcasts the shingle-array table (estimates mislead Catalyst)") {
@@ -218,8 +216,7 @@ class PlanSpec extends SparkTestBase {
       col("doc_id") < 1000000L && col("doc_id") % 37 === 0), "doc_a|doc_b")
     assertArrayFormAttach(AnnSearch.nearDupPairs(emb), "va|vb")
     assertArrayFormAttach(AnnSearch.srpTopK(emb), "qvec|vec")
-    // IVF's centroid assignment keeps the long (vec, pos, q) form
-    assertArrayFormAttach(AnnSearch.ivfTopK(emb), "qvec|vec", rowFormFree = false)
+    assertArrayFormAttach(AnnSearch.ivfTopK(emb), "qvec|vec")
   }
 
   test("bridge flows: buffer cover + threshold dims broadcast; zonal max is a partial agg") {

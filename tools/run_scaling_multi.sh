@@ -1,7 +1,7 @@
 #!/bin/bash
 # Scaling gate with real statistics (round-6): N samples of the identical
-# taskset-pinned 2/8/32-core flagship legs (same ScalingOne protocol as
-# tools/run_scaling.sh), reported as MEDIAN per leg with min–max spread —
+# taskset-pinned 2/8/32-core flagship legs (one graft.ScalingOne JVM per
+# sample), reported as MEDIAN per leg with min–max spread —
 # a single best-of-2 per leg flapped the 2→8 gate across five rounds
 # (0.877/0.818/0.924/0.984/0.774). BENCH/BASELINE.md is regenerated from the
 # median record; raw samples are printed and embedded so a rerun can be
