@@ -11,7 +11,6 @@ import graft.synth.Synth
 object Plans {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.geo.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -19,9 +18,12 @@ object Plans {
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.001"
 
+    // expression and plan ids are masked, so a diff of two runs shows
+    // plan shapes, not id churn
     def planOf(df: DataFrame): String = {
       df.collect()
       df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+        .replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
     }
     val sections = Seq(
       "Flagship: tiles (PIP join + stages join + depth/class kernel)" ->
@@ -43,8 +45,8 @@ object Plans {
           .filter(org.apache.spark.sql.functions.col("hydroid") % 7 === 3)),
       "Near-dup candidates (adaptive SRP bits, capped windows, 8 tables)" ->
         ops.AnnSearch.nearDupPairs(spark.read.parquet(s"$sf/embeddings.parquet")),
-      "Agreement with exclusion-polygon masks (broadcast cover + PIP)" ->
-        ops.Agreement.agreement(spark, pipeline.Inundate.run(spark, sf)),
+      "Agreement metrics with exclusion-polygon masks (mask lookup in the mosaic's final aggregate; no join)" ->
+        ops.Agreement.metrics(ops.Agreement.agreement(spark, pipeline.Inundate.run(spark, sf))),
       "Extent dissolve (wet-cell 4-neighbor self-equi-join)" ->
         pipeline.Extents.dissolve(pipeline.Inundate.run(spark, sf)),
       "Group-roughness downstream walk (gaps-and-islands windows)" ->

@@ -275,7 +275,7 @@ object GraftMd5 {
 
 /** `shingles60(text)` / `shingles60_distinct(text)` as a Catalyst expression.
   * Codegen is a single static call, so consumers stay inside whole-stage
-  * codegen (same discipline as [[graft.geo.PointInPolygon]]).
+  * codegen (same discipline as [[graft.geo.PipLookup]]).
   *
   * PRECONDITION: callers filter `length(text) >= TextOps.ShingleLen`; only
   * then are the values the oracle's SQL chain (see [[GraftMd5]]). */

@@ -3,81 +3,11 @@ package graft.geo
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.sql.GraftColumnBridge
-
-/** `st_contains(ring, lng, lat)` — crossing-number PIP as a native Catalyst
-  * expression with codegen (preference order (b) of the graft brief: a real
-  * `Expression` with `doGenCode`, not a Scala UDF, so the candidate-filter
-  * stays inside whole-stage codegen).
-  *
-  * `ring` is ARRAY<DOUBLE> packed [lng0, lat0, lng1, lat1, ...].
-  * Semantics identical to [[Geom.contains]] (half-open edges). Replaces the
-  * reference's shapely `within` sjoin predicate
-  * (`src/usgs_gage_crosswalk.py:89-94`).
-  */
-case class PointInPolygon(ringExpr: Expression, lngExpr: Expression, latExpr: Expression)
-    extends TernaryExpression {
-
-  override def first: Expression = ringExpr
-  override def second: Expression = lngExpr
-  override def third: Expression = latExpr
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean =
-    ringExpr.nullable || lngExpr.nullable || latExpr.nullable
-  override def prettyName: String = "st_contains"
-
-  override protected def nullSafeEval(ring: Any, lng: Any, lat: Any): Any = {
-    val arr = ring.asInstanceOf[ArrayData].toDoubleArray()
-    Geom.contains(arr, lng.asInstanceOf[Double], lat.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (ring, lng, lat) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
-      val xj = ctx.freshName("xj"); val yj = ctx.freshName("yj")
-      val inside = ctx.freshName("inside")
-      s"""
-         |final int $n = $ring.numElements() / 2;
-         |boolean $inside = false;
-         |int $j = $n - 1;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $xi = $ring.getDouble(2 * $i);
-         |  final double $yi = $ring.getDouble(2 * $i + 1);
-         |  final double $xj = $ring.getDouble(2 * $j);
-         |  final double $yj = $ring.getDouble(2 * $j + 1);
-         |  if (($yi > $lat) != ($yj > $lat)) {
-         |    if ($lng < $xi + ($lat - $yi) * ($xj - $xi) / ($yj - $yi)) {
-         |      $inside = !$inside;
-         |    }
-         |  }
-         |  $j = $i;
-         |}
-         |${ev.value} = $inside;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(ringExpr = newFirst, lngExpr = newSecond, latExpr = newThird)
-}
-
-object PointInPolygon {
-  /** Column-level entry point. */
-  def stContains(ring: Column, lng: Column, lat: Column): Column =
-    GraftColumnBridge.column(PointInPolygon(
-      GraftColumnBridge.expression(ring),
-      GraftColumnBridge.expression(lng),
-      GraftColumnBridge.expression(lat)))
-}
 
 /** `pip_lookup(lng, lat)` — the id of the polygon of a broadcast
   * [[GridIndex]] containing the point, or [[GridIndex.Miss]] (also for a

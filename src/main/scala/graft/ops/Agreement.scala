@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.geo.Cells
+import graft.geo.{Cells, GridIndex}
 
 /** Evaluation lifecycle — SURVEY.md §3.3 (`tools/tools_shared_functions.py`):
   * predicted vs benchmark extents per cell → agreement class → contingency
@@ -28,30 +28,16 @@ object Agreement {
   /** Legacy hash exclusion mask — kept for the multi-benchmark combos (q56),
     * where every combo derives a synthetic extent family from the cell id.
     * The evaluation path proper ([[agreement]]) masks by REAL exclusion
-    * polygons ([[graft.synth.Synth.maskCover]]). */
+    * polygons ([[graft.synth.Synth.maskList]]). */
   def isMasked(cell: Column): Column =
     (cellRow(cell) * 29 + cellCol(cell) * 13) % 50 === 0
 
-  /** mosaic + `mskd` flag (1 ⇔ the cell centroid falls inside any exclusion
-    * mask polygon): centroid → coarse-cell broadcast join against the mask
-    * cover → codegen'd PIP, re-aggregated per cell. The mosaic is already
-    * hash-partitioned by cell from its own groupBy and the mask join is
-    * broadcast, so the re-aggregation reuses that partitioning — no extra
-    * exchange at any scale. All non-cell columns are carried through with
-    * max() (they are constant per cell). */
-  def withMaskFlag(spark: SparkSession, mosaic: DataFrame): DataFrame = {
-    import graft.geo.{Cells, PointInPolygon}
-    val wc = mosaic
-      .withColumn("clat", Cells.centroidLatCol(col("cell"), Cells.BaseRes))
-      .withColumn("clng", Cells.centroidLngCol(col("cell"), Cells.BaseRes))
-      .withColumn("ccell", Cells.cellToParentCol(col("cell"), Cells.BaseRes, Cells.CoarseRes))
-    val carried = mosaic.columns.filter(_ != "cell").map(c => max(col(c)).as(c))
-    val mskd = max(when(col("ring").isNotNull &&
-      PointInPolygon.stContains(col("ring"), col("clng"), col("clat")), 1).otherwise(0)).as("mskd")
-    wc.join(broadcast(graft.synth.Synth.maskCover(spark)), Seq("ccell"), "left")
-      .groupBy(col("cell"))
-      .agg((carried :+ mskd).head, (carried :+ mskd).tail: _*)
-  }
+  /** mosaic + `mskd` flag (INT; 1 ⇔ the cell centroid falls inside an
+    * exclusion mask polygon): one projection, the codegen'd lookup of the
+    * centroid in the broadcast mask index ([[SpatialJoin.maskOf]]). No
+    * join and no exchange; the mosaic's columns keep their order. */
+  def withMaskFlag(spark: SparkSession, mosaic: DataFrame): DataFrame =
+    mosaic.withColumn("mskd", (SpatialJoin.maskOf(spark, col("cell")) =!= GridIndex.Miss).cast("int"))
 
   /** mosaic(cell, depth_max, …) → (cell, agreement), with the exclusion-mask
     * class (4) decided by the REAL mask polygons

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.geo.{Cells, PointInPolygon}
+import graft.geo.Cells
 import graft.synth.Synth
 
 /** Flood-impact analysis — the reference's infrastructure-exposure and
@@ -78,17 +78,19 @@ object Impact {
   /** Deep-flooding check (q110) — `tools/check_deep_flooding.py:20-78`: the
     * depth grid is masked to the analysis polygons and thresholded
     * (`np.where(depth > t, depth, -1)` under the polygon mask); summarized
-    * per polygon as deep-cell count, share, and maximum depth. The polygon
-    * cover is a broadcast join on the coarse parent cell + codegen'd PIP —
-    * the mosaic never shuffles for the mask. */
+    * per polygon as deep-cell count, share, and maximum depth. A cell's
+    * polygon is the lookup of its centroid in the broadcast mask index
+    * ([[SpatialJoin.maskOf]]); cells in no polygon drop. The lookup is
+    * the stream-side key of a broadcast join to the mask ids, as in
+    * [[SpatialJoin.assign]]: a projected id would let the optimizer push the
+    * miss filter below the projection and run the lookup twice per cell.
+    * The mosaic never shuffles for the mask. */
   def deepFlooding(spark: SparkSession, mosaic: DataFrame,
-      threshold: Double = 2.0): DataFrame =
+      threshold: Double = 2.0): DataFrame = {
+    import spark.implicits._
+    val ids = Synth.maskList.map(_.mask_id).toDF("mask_id")
     mosaic
-      .withColumn("clat", Cells.centroidLatCol(col("cell"), Cells.BaseRes))
-      .withColumn("clng", Cells.centroidLngCol(col("cell"), Cells.BaseRes))
-      .withColumn("ccell", Cells.cellToParentCol(col("cell"), Cells.BaseRes, Cells.CoarseRes))
-      .join(broadcast(Synth.maskCover(spark)), Seq("ccell"))
-      .filter(PointInPolygon.stContains(col("ring"), col("clng"), col("clat")))
+      .join(broadcast(ids), SpatialJoin.maskOf(spark, col("cell")) === ids("mask_id"))
       .groupBy(col("mask_id").cast("long").as("mask_id"))
       .agg(count(lit(1)).as("n_cells"),
         count(when(col("depth_max") > threshold, 1)).as("n_deep"),
@@ -96,6 +98,7 @@ object Impact {
       .select(col("mask_id"), col("n_cells"), col("n_deep"), col("max_deep"),
         (col("n_deep").cast("double") / col("n_cells").cast("double") * lit(100.0))
           .as("pct_deep"))
+  }
 
   /** Catchment-boundary inundation errors (q112) —
     * `tools/identify_catchment_boundary.py:14-120`: where the inundation

@@ -2,26 +2,31 @@ package graft.ops
 
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.geo.{Geom, GridIndex, PipLookup}
+import graft.geo.{Cells, Geom, GridIndex, PipLookup}
 import graft.synth.Synth
 
-/** Point-in-polygon catchment assignment — the engine's core custom
-  * operator (SURVEY.md §2.3 J3; replaces `gpd.sjoin` /
-  * `gdal_rasterize -a HydroID`).
+/** Point-in-polygon membership — the engine's core custom operator
+  * (SURVEY.md §2.3 J3; replaces `gpd.sjoin` / `gdal_rasterize -a HydroID`).
+  * This module owns both polygon sets a point is looked up in: the
+  * catchments ([[assign]]) and the evaluation's exclusion masks
+  * ([[maskOf]], read by `Agreement.withMaskFlag` and
+  * `Impact.deepFlooding`).
   *
   * Plan shape (scale rationale):
-  *  1. the catchment polygons are indexed once per JVM as a
-  *     [[graft.geo.GridIndex]] (CSR primitive arrays, 3.1 MB for the 20 736
-  *     catchments at res 8) and **broadcast once per SparkContext**;
-  *  2. each point's catchment is the codegen'd [[graft.geo.PipLookup]]
+  *  1. each polygon set is indexed once per JVM as a [[graft.geo.GridIndex]]
+  *     (CSR primitive arrays: 3.1 MB for the 20 736 catchments at res 8,
+  *     30 KB for the 40 masks at res 6) and **broadcast once per
+  *     SparkContext**;
+  *  2. a point's polygon is the codegen'd [[graft.geo.PipLookup]]
   *     expression over its lng/lat: an interior grid cell answers with no
   *     ring test, a boundary cell runs the crossing-number test over the
-  *     few catchments that meet it (1.2 on average on the flagship's pages);
-  *  3. that lookup is the stream-side key of a **broadcast**-hash join
-  *     against the 20 736-row catchment-attribute table on its unique
-  *     dense `hydroid` (points in no catchment drop here).
+  *     few polygons that meet it (1.2 on average on the flagship's pages);
+  *  3. for catchments that lookup is the stream-side key of a
+  *     **broadcast**-hash join against the 20 736-row catchment-attribute
+  *     table on its unique dense `hydroid` (points in no catchment drop
+  *     here).
   *
   * Both steps run inside one whole-stage-codegen stage: ZERO shuffle of the
   * fact (pages) side at any scale. At 100 TB this is a map-only stage:
@@ -29,24 +34,39 @@ import graft.synth.Synth
   */
 object SpatialJoin {
 
-  private lazy val index: GridIndex =
+  private lazy val catchments: GridIndex =
     GridIndex.build(Synth.catchmentList.map(c => Geom.Poly(c.hydroid, c.ring)))
 
-  private var shared: Option[(SparkContext, Broadcast[GridIndex])] = None
+  private lazy val masks: GridIndex =
+    GridIndex.build(Synth.maskList.map(m => Geom.Poly(m.mask_id, m.ring)))
 
-  /** The catchment index broadcast on `spark`'s SparkContext: one broadcast
-    * per context, so a call on a new context (e.g. after `stop()`)
+  private var shared: Option[(SparkContext, Map[GridIndex, Broadcast[GridIndex]])] = None
+
+  /** `index` broadcast on `spark`'s SparkContext: one broadcast per index
+    * and context, so a call on a new context (e.g. after `stop()`)
     * broadcasts afresh and never hands out a stopped context's broadcast. */
-  def catchmentIndex(spark: SparkSession): Broadcast[GridIndex] = synchronized {
+  private def broadcastOf(spark: SparkSession, index: GridIndex): Broadcast[GridIndex] = synchronized {
     val sc = spark.sparkContext
-    shared match {
-      case Some((c, b)) if c eq sc => b
-      case _ =>
-        val b = sc.broadcast(index)
-        shared = Some((sc, b))
-        b
-    }
+    val live = shared.collect { case (c, m) if c eq sc => m }.getOrElse(Map.empty)
+    live.getOrElse(index, {
+      val b = sc.broadcast(index)
+      shared = Some((sc, live + (index -> b)))
+      b
+    })
   }
+
+  /** The catchment index ([[Synth.catchmentList]], ids = hydroid). */
+  def catchmentIndex(spark: SparkSession): Broadcast[GridIndex] = broadcastOf(spark, catchments)
+
+  /** The exclusion-mask index ([[Synth.maskList]], ids = mask_id; the
+    * masks cover ~1.7 % of the globe, so most points miss). */
+  def maskIndex(spark: SparkSession): Broadcast[GridIndex] = broadcastOf(spark, masks)
+
+  /** The mask_id of the exclusion mask holding the centroid of `cell` (a
+    * [[Cells.BaseRes]] cell id), or [[GridIndex.Miss]]. */
+  def maskOf(spark: SparkSession, cell: Column): Column =
+    PipLookup.lookup(Cells.centroidLngCol(cell, Cells.BaseRes), Cells.centroidLatCol(cell, Cells.BaseRes),
+      maskIndex(spark))
 
   /** Assign each point (needs lat/lng columns) its containing catchment.
     * Inner join: points outside every polygon are dropped (the catchments

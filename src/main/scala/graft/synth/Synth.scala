@@ -165,7 +165,8 @@ object Synth {
     * rectangles (~1.7 % of the globe). Integer-degree edges + the cell-grid's
     * dyadic centroids mean no centroid ever lands ON a mask boundary, so
     * ray-cast containment and the oracle's closed-form bounds compare agree
-    * exactly. */
+    * exactly. Their interiors are pairwise disjoint, so they index as a
+    * partition ([[graft.ops.SpatialJoin.maskIndex]]). */
   lazy val maskList: IndexedSeq[MaskPoly] =
     for (k <- 0 until 40) yield {
       val latMin = ((k * 37 + 5) % 150) - 85.0
@@ -175,8 +176,9 @@ object Synth {
       MaskPoly(k, Array(lngMin, latMin, lngMax, latMin, lngMax, latMax, lngMin, latMax))
     }
 
-  /** (ccell, mask_id, ring) cover table — broadcast side of the mask join
-    * (~240 rows). */
+  /** (ccell, mask_id, ring) cover table (~240 rows) — the cell-keyed mask
+    * side of the q68 polygon overlay. (Point membership uses the mask grid
+    * index of [[graft.ops.SpatialJoin]] instead.) */
   def maskCover(spark: SparkSession): DataFrame = {
     import spark.implicits._
     maskList.flatMap { p =>

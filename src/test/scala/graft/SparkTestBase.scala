@@ -9,7 +9,6 @@ object SharedSpark {
     val s = SparkSession.builder()
       .master("local[8]")
       .appName("graft-test")
-      .withExtensions(new graft.geo.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

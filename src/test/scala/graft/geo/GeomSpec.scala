@@ -75,6 +75,22 @@ class GeomSpec extends AnyFunSuite {
       (for (a <- ulps(40.0) ++ ulps(42.0); b <- ulps(-74.0) ++ ulps(-72.0)) yield (a, b))
     assertMatches(idx, polys,
       random ++ edges ++ corners ++ cellEdgePoints(idx, rng, -90, 90, -180, 180) ++ hotspot)
+
+    // the exclusion masks: a partition of ~1.7 % of the globe, so most
+    // probes miss every polygon
+    val masks = Synth.maskList.map(m => Geom.Poly(m.mask_id, m.ring))
+    val maskIdx = GridIndex.build(masks)
+    val maskProbes = Seq.fill(4000)((rnd(-90, 90), rnd(-180, 180)))
+    val maskEdges = masks.flatMap { p =>
+      val (latMin, latMax, lngMin, lngMax) = p.bbox
+      Seq(latMin, latMax).flatMap(e => ulps(e).map(la => (la, rnd(lngMin - 1, lngMax + 1)))) ++
+        Seq(lngMin, lngMax).flatMap(e => ulps(e).map(ln => (rnd(latMin - 1, latMax + 1), ln))) ++
+        (for (la <- Seq(latMin, latMax); ln <- Seq(lngMin, lngMax); a <- ulps(la); b <- ulps(ln)) yield (a, b))
+    }
+    assertMatches(maskIdx, masks,
+      maskProbes ++ maskEdges ++ cellEdgePoints(maskIdx, rng, -90, 90, -180, 180))
+    val misses = maskProbes.count { case (la, ln) => maskIdx.lookup(ln, la) == GridIndex.Miss }
+    assert(misses > maskProbes.size * 9 / 10 && misses < maskProbes.size, s"$misses misses, $maskIdx")
   }
 
   test("grid index == first-match scan over a triangle partition (boundary-only cells)") {

@@ -59,6 +59,15 @@ class ImpactSpec extends SparkTestBase {
     assert(out.filter(col("n_deep") > col("n_cells")).count() == 0)
     assert(out.filter(col("n_deep") > 0 && col("max_deep") <= 2.0).count() == 0)
     assert(out.filter(col("n_deep") === 0 && col("max_deep").isNotNull).count() == 0)
+    // each mask's counts == a driver-side any-match of every cell centroid
+    val want = mosaic.select(col("cell"), col("depth_max")).collect().toSeq.flatMap { r =>
+      val (lat, lng) = graft.geo.Cells.centroid(r.getLong(0))
+      graft.synth.Synth.maskList.filter(m => graft.geo.Geom.contains(m.ring, lng, lat))
+        .map(m => (m.mask_id.toLong, r.getDouble(1)))
+    }.groupBy(_._1).map { case (k, v) => k -> (v.size.toLong, v.count(_._2 > 2.0).toLong) }
+    val got = out.select(col("mask_id"), col("n_cells"), col("n_deep")).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == want)
     out.unpersist()
   }
 }

@@ -147,4 +147,20 @@ class OpsSpec extends SparkTestBase {
     // every cell got a class: the pairing table is total over (cand, bench)
     assert(paired.filter(col("agreement").isNull).count() === 0)
   }
+
+  test("mask flag: every mosaic cell's mskd == driver-side any-match of its centroid over the masks") {
+    val mosaic = Inundate.run(spark, sf0001)
+    val flagged = Agreement.withMaskFlag(spark, mosaic)
+    assert(flagged.columns.toSeq == mosaic.columns.toSeq :+ "mskd")
+    assert(flagged.schema("mskd").dataType == org.apache.spark.sql.types.IntegerType)
+    val rows = flagged.select(col("cell"), col("mskd")).collect()
+    assert(rows.length == mosaic.count())
+    val wrong = rows.filter { r =>
+      val (lat, lng) = graft.geo.Cells.centroid(r.getLong(0))
+      val want = if (Synth.maskList.exists(m => graft.geo.Geom.contains(m.ring, lng, lat))) 1 else 0
+      r.getInt(1) != want
+    }
+    assert(wrong.isEmpty, wrong.take(5).mkString(", "))
+    assert(rows.exists(_.getInt(1) == 1) && rows.exists(_.getInt(1) == 0))
+  }
 }

@@ -2,8 +2,11 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.Dataset
 import graft.SparkTestBase
+import graft.geo.PipLookup
 import graft.synth.Synth
 
 /** Physical-plan quality gates — the 100 TB design assertions (SURVEY.md §4).
@@ -17,6 +20,19 @@ class PlanSpec extends SparkTestBase {
     df.collect() // execute THIS plan so AQE finalizes it (isFinalPlan=true)
     // keep only the final AQE plan (the string also embeds the initial plan)
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+  }
+
+  /** pip_lookup expressions in a physical plan, through AQE query stages
+    * and cached relations: a lookup folded into an aggregate's result
+    * projection does not show in the plan string. */
+  private def pipLookups(p: SparkPlan): Int = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    p.expressions.map(_.collect { case _: PipLookup => 1 }.size).sum + (p.children ++ inner).map(pipLookups).sum
   }
 
   test("PIP spatial join is broadcast-hash (fact side never shuffles)") {
@@ -83,13 +99,23 @@ class PlanSpec extends SparkTestBase {
     assert("pip_lookup".r.findAllIn(mosaic).size == 1, mosaic.take(3000))
   }
 
-  test("polygon-mask agreement adds NO exchange: mask re-agg reuses the mosaic partitioning") {
-    val plan = physical(graft.ops.Agreement.agreement(spark, Inundate.run(spark, sf0001)))
-    // exactly one hash exchange in the whole plan — the mosaic groupBy(cell);
-    // the mask broadcast join + per-cell max run in the same stage
+  test("polygon-mask agreement: NO exchange, NO join, one mask lookup per cell") {
+    val df = graft.ops.Agreement.metrics(graft.ops.Agreement.agreement(spark, Inundate.run(spark, sf0001)))
+    val plan = physical(df)
+    // exactly one hash exchange in the whole plan — the mosaic groupBy(cell)
     assert("Exchange hashpartitioning\\(cell".r.findAllIn(plan).size == 1, plan.take(3000))
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 1, plan.take(3000))
-    assert(plan.contains("LeftOuter, BuildRight"), plan.take(3000))
+    // two lookups: catchments on points, masks on cells
+    assert(pipLookups(df.queryExecution.executedPlan) == 2, plan.take(3000))
+    // the mask flag is a projection over the mosaic's final aggregate, not a
+    // join (the plan prints top-down: everything above that aggregate
+    // precedes its line)
+    val finalAgg = """HashAggregate\(keys=\[cell#\d+L\], functions=\[max\(""".r
+      .findFirstMatchIn(plan).getOrElse(fail(plan.take(3000)))
+    assert(!plan.take(finalAgg.start).contains("Join"), plan.take(3000))
+    val generated = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+    assert("""\(\(Expression\) references\[\d+\]\)\.eval""".r.findFirstIn(generated).isEmpty,
+      generated.take(3000))
   }
 
   test("Manning Newton chain stays stacked projections (no exponential expression inlining)") {
