@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run. */
@@ -21,8 +22,14 @@ object SharedSpark {
   }
 }
 
-abstract class SparkTestBase extends AnyFunSuite {
+abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SharedSpark.spark
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Drops what the suite cached in the shared session — its own fixtures
+    * (`ImpactSpec.mosaic`, `WebCurationSpec.corpus`, `AnnSpec.emb`) and the
+    * participant caches the ops under test register — so a later suite
+    * plans over the real relations, not `InMemoryRelation`s. */
+  override def afterAll(): Unit = try spark.catalog.clearCache() finally super.afterAll()
 }

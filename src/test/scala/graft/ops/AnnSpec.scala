@@ -155,6 +155,7 @@ class AnnSpec extends SparkTestBase {
     info(s"IVF nAssign=2 vs 1 (C=80, nProbe=6): $dual vs $single")
     assert(dual >= single, s"multi-assignment lost recall: $dual < $single")
     c80.unpersist()
+    embBig.unpersist()
   }
 
   test("kmeans++ seeding: deterministic, C distinct spread-out centroids") {

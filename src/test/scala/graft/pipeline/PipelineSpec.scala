@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.synth.Synth
 import graft.SparkEntry
+import graft.queries.Query
 
 class PipelineSpec extends SparkTestBase {
 
@@ -34,5 +35,15 @@ class PipelineSpec extends SparkTestBase {
 
   test("oracleSql covers every query") {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  }
+
+  test("the registry refuses a query name declared twice, and names it") {
+    val q = Query("q00_twice", (s, _) => s.range(1).toDF(), "SELECT 0 AS id")
+    val e = intercept[IllegalArgumentException](Query.byName(Seq(q, q.copy(oracle = "SELECT 1 AS id"))))
+    assert(e.getMessage.contains("q00_twice"), e.getMessage)
+  }
+
+  test("the registry declares 156 queries") {
+    assert(SparkEntry.queries.size == 156)
   }
 }

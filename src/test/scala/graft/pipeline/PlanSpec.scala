@@ -16,6 +16,15 @@ import graft.synth.Synth
   */
 class PlanSpec extends SparkTestBase {
 
+  /** The gates read physical plans: a relation that a suite run earlier in
+    * this JVM left cached would turn them into `InMemoryRelation` scans, so
+    * the gates would pass or fail by suite order. */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a cached relation is registered before the plan gates ran")
+  }
+
   private def physical(df: Dataset[_]): String = {
     df.collect() // execute THIS plan so AQE finalizes it (isFinalPlan=true)
     // keep only the final AQE plan (the string also embeds the initial plan)
