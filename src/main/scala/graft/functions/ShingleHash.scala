@@ -208,9 +208,9 @@ object GraftMd5 {
     }
   }
 
-  /** MinHash family constants — MUST stay textually in sync with
-    * [[graft.ops.TextOps]] (HashP / the k·4099+17, k·7907+31 coefficients)
-    * and with every oracle that mirrors them. */
+  /** MinHash family constants (P and the k·4099+17, k·7907+31
+    * coefficients) — MUST stay textually in sync with every oracle that
+    * mirrors them ([[graft.OracleSql]]'s MinHash chain). */
   val HashP = 1000000007L
   val NumHashes = 16
 

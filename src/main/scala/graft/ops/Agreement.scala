@@ -89,35 +89,91 @@ object Agreement {
       .join(broadcast(pairing), Seq("cand", "bench"), "left")
       .select(col("cell"), col("agreement").cast("int").as("agreement"))
 
+  /** An evaluation's contingency counts as the doubles every statistic
+    * divides: each BIGINT count cast on use, the total summed in BIGINT
+    * first — the oracle's `CAST(x AS DOUBLE)` / `CAST(tn + … AS DOUBLE)`. */
+  private final class Counts(tnC: Column, fnC: Column, fpC: Column, tpC: Column) {
+    val tn = tnC.cast("double"); val fn = fnC.cast("double")
+    val fp = fpC.cast("double"); val tp = tpC.cast("double")
+    val tot = (tnC + fnC + fpC + tpC).cast("double")
+    val aref = (tp + fp) * (tp + fn) / tot
+  }
+
+  /** One contingency statistic from count columns, by the oracle's name
+    * (`EvaluationQueries.metricSql`; `tools_shared_functions.py:1666-1689`,
+    * `:277-380`). Unguarded: over counts that can zero a denominator, use
+    * [[naStat]]. */
+  private[graft] def stat(name: String, tn: Column, fn: Column, fp: Column, tp: Column): Column =
+    formula(name, new Counts(tn, fn, fp, tp))._1
+
+  /** Guarded form of [[stat]]: NULL where the statistic's zero-denominator
+    * guard is zero — the reference's `compute_stats_from_contingency_table`
+    * returns 'NA' on ZeroDivisionError. The NA projection of q95/q106. */
+  private[graft] def naStat(name: String, tn: Column, fn: Column, fp: Column, tp: Column): Column = {
+    val (value, guard) = formula(name, new Counts(tn, fn, fp, tp))
+    guard.fold(value)(g => when(g =!= 0.0, value))
+  }
+
+  /** Each statistic's formula and zero-denominator guard — the only place
+    * either is written. A ratio is guarded by its denominator, mcc by the
+    * product under its root, bal_acc by the product of its two
+    * denominators; prevalence divides by the total, which the NA
+    * projection's inputs keep positive, so it has no guard. */
+  private def formula(name: String, c: Counts): (Column, Option[Column]) = {
+    import c._
+    def ratio(num: Column, den: Column) = (num / den, Some(den))
+    name match {
+      case "csi" => ratio(tp, tp + fp + fn)
+      case "tpr" => ratio(tp, tp + fn)
+      case "far" => ratio(fp, tp + fp)
+      case "mcc" =>
+        val d = (tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)
+        ((tp * tn - fp * fn) / sqrt(d), Some(d))
+      case "acc" => ratio(tp + tn, tp + tn + fp + fn)
+      case "f1" => ratio(tp * 2, tp * 2 + fp + fn)
+      case "bias" => ratio(tp + fp, tp + fn)
+      case "tnr" => ratio(tn, tn + fp)
+      case "ppv" => ratio(tp, tp + fp)
+      case "npv" => ratio(tn, tn + fn)
+      case "bal_acc" =>
+        ((formula("tpr", c)._1 + formula("tnr", c)._1) / lit(2.0), Some((tp + fn) * (tn + fp)))
+      case "prevalence" => ((tp + fn) / tot, None)
+      case "equitable_threat_score" => ratio(tp - aref, tp + fp + fn - aref)
+    }
+  }
+
+  /** The statistics of the NA projection, in its column order, with each
+    * one's output column name. */
+  private[graft] val NaStats: Seq[(String, String)] =
+    Seq("csi", "far", "tpr", "tnr", "ppv", "npv", "bal_acc", "mcc", "equitable_threat_score",
+      "prevalence", "bias").map(s => s -> s) :+ ("f1" -> "f1_score")
+
+  /** The masked share of all cells, in percent. */
+  private def maskedPerc(c: Counts): Column =
+    col("masked").cast("double") / (c.tot + col("masked").cast("double")) * 100
+
   /** The reference's printworthy metric family from contingency-count
     * columns (`tools_shared_functions.py:1666-1689`): CSI, TPR, FAR, MCC,
     * ACC, F1, plus bias — exact double arithmetic from BIGINT counts,
     * shared by [[metrics]] (q12) and [[masterMetrics]] (q56). */
-  def metricCols(tnC: Column, fnC: Column, fpC: Column, tpC: Column): Seq[Column] = {
-    val tp = tpC.cast("double"); val tn = tnC.cast("double")
-    val fp = fpC.cast("double"); val fn = fnC.cast("double")
-    Seq(
-      (tp / (tp + fp + fn)).as("csi"),
-      (tp / (tp + fn)).as("tpr"),
-      (fp / (tp + fp)).as("far"),
-      ((tp * tn - fp * fn) /
-        sqrt((tp + fp) * (tp + fn) * (tn + fp) * (tn + fn))).as("mcc"),
-      ((tp + tn) / (tp + tn + fp + fn)).as("acc"),
-      (tp * 2 / (tp * 2 + fp + fn)).as("f1"),
-      ((tp + fp) / (tp + fn)).as("bias"))
-  }
+  def metricCols(tnC: Column, fnC: Column, fpC: Column, tpC: Column): Seq[Column] =
+    MetricOrientation.map { case (name, _) => stat(name, tnC, fnC, fpC, tpC).as(name) }
 
-  /** Contingency counts + metrics for one agreement raster (q12). */
-  def metrics(agreementDf: DataFrame): DataFrame = {
-    val counted = agreementDf.agg(
+  /** The five per-class counts of an agreement raster, one aggregate. */
+  private def classCounts(agreementDf: DataFrame): DataFrame =
+    agreementDf.agg(
       count(when(col("agreement") === 0, 1)).as("tn"),
       count(when(col("agreement") === 1, 1)).as("fn"),
       count(when(col("agreement") === 2, 1)).as("fp"),
       count(when(col("agreement") === 3, 1)).as("tp"),
       count(when(col("agreement") === 4, 1)).as("masked"))
-    counted.select(Seq(col("tn"), col("fn"), col("fp"), col("tp"), col("masked")) ++
+
+  private val countCols = Seq(col("tn"), col("fn"), col("fp"), col("tp"), col("masked"))
+
+  /** Contingency counts + metrics for one agreement raster (q12). */
+  def metrics(agreementDf: DataFrame): DataFrame =
+    classCounts(agreementDf).select(countCols ++
       metricCols(col("tn"), col("fn"), col("fp"), col("tp")): _*)
-  }
 
   /** The COMPLETE master-CSV metric family (q59) — every derived statistic
     * the reference writes per evaluation row
@@ -127,58 +183,53 @@ object Agreement {
     * family, and the cell-area → km² family. All exact double arithmetic
     * from the BIGINT contingency counts. */
   def fullMetrics(agreementDf: DataFrame, cellAreaM2: Double = 25000000.0): DataFrame = {
-    val counted = agreementDf.agg(
-      count(when(col("agreement") === 0, 1)).as("tn"),
-      count(when(col("agreement") === 1, 1)).as("fn"),
-      count(when(col("agreement") === 2, 1)).as("fp"),
-      count(when(col("agreement") === 3, 1)).as("tp"),
-      count(when(col("agreement") === 4, 1)).as("masked"))
-    val tp = col("tp").cast("double"); val tn = col("tn").cast("double")
-    val fp = col("fp").cast("double"); val fn = col("fn").cast("double")
-    val totD = (col("tn") + col("fn") + col("fp") + col("tp")).cast("double")
-    val aref = (tp + fp) * (tp + fn) / totD
+    val c = new Counts(col("tn"), col("fn"), col("fp"), col("tp"))
+    import c._
+    def s(name: String) = formula(name, c)._1
+    val pnd = fn / (fn + tp)
+    // the remaining gval CatStats keys (reference stat dict,
+    // tools_shared_functions.py:277-380) — canonical definitions
+    val fpr = fp / (fp + tn)
+    def perc(x: Column) = x / tot * 100
     val a = lit(cellAreaM2)
-    counted.select(Seq(
-      col("tn"), col("fn"), col("fp"), col("tp"), col("masked"),
+    def km2(x: Column) = x * a / lit(1000000.0)
+    classCounts(agreementDf).select(countCols ++ Seq(
       (col("tn") + col("fn") + col("fp") + col("tp")).as("contingency_tot_count")) ++
       metricCols(col("tn"), col("fn"), col("fp"), col("tp")) ++ Seq(
-      (tn / (tn + fp)).as("tnr"),
-      (fn / (fn + tp)).as("pnd"),
-      (tp / (tp + fp)).as("ppv"),
-      (tn / (tn + fn)).as("npv"),
-      ((tp / (tp + fn) + tn / (tn + fp)) / lit(2.0)).as("bal_acc"),
-      ((tp + fn) / totD).as("prevalence"),
-      ((tp - aref) / (tp + fp + fn - aref)).as("equitable_threat_score"),
-      // the remaining gval CatStats keys (reference stat dict,
-      // tools_shared_functions.py:277-380) — canonical definitions
-      (fp / (fp + tn)).as("fpr"),
+      s("tnr").as("tnr"),
+      pnd.as("pnd"),
+      s("ppv").as("ppv"),
+      s("npv").as("npv"),
+      s("bal_acc").as("bal_acc"),
+      s("prevalence").as("prevalence"),
+      s("equitable_threat_score").as("equitable_threat_score"),
+      fpr.as("fpr"),
       (fn / (fn + tn)).as("false_omission_rate"),
-      sqrt((tp / (tp + fp)) * (tp / (tp + fn))).as("fowlkes_mallows_index"),
-      ((tp / (tp + fn)) / (fp / (fp + tn))).as("positive_likelihood_ratio"),
-      ((fn / (fn + tp)) / (tn / (tn + fp))).as("negative_likelihood_ratio"),
-      ((sqrt((tp / (tp + fn)) * (fp / (fp + tn))) - fp / (fp + tn))
-        / (tp / (tp + fn) - fp / (fp + tn))).as("prevalence_threshold"),
-      (tp / totD * 100).as("tp_perc"),
-      (fp / totD * 100).as("fp_perc"),
-      (tn / totD * 100).as("tn_perc"),
-      (fn / totD * 100).as("fn_perc"),
-      ((tp + fp) / totD * 100).as("pred_positive_perc"),
-      ((tn + fn) / totD * 100).as("pred_negative_perc"),
-      ((tp + fn) / totD * 100).as("obs_positive_perc"),
-      ((tn + fp) / totD * 100).as("obs_negative_perc"),
-      ((tp + fp) / totD * 100 - (tp + fn) / totD * 100).as("positive_diff_perc"),
-      (col("masked").cast("double") / (totD + col("masked").cast("double")) * 100).as("masked_perc"),
+      sqrt(s("ppv") * s("tpr")).as("fowlkes_mallows_index"),
+      (s("tpr") / fpr).as("positive_likelihood_ratio"),
+      (pnd / s("tnr")).as("negative_likelihood_ratio"),
+      ((sqrt(s("tpr") * fpr) - fpr) / (s("tpr") - fpr)).as("prevalence_threshold"),
+      perc(tp).as("tp_perc"),
+      perc(fp).as("fp_perc"),
+      perc(tn).as("tn_perc"),
+      perc(fn).as("fn_perc"),
+      perc(tp + fp).as("pred_positive_perc"),
+      perc(tn + fn).as("pred_negative_perc"),
+      perc(tp + fn).as("obs_positive_perc"),
+      perc(tn + fp).as("obs_negative_perc"),
+      (perc(tp + fp) - perc(tp + fn)).as("positive_diff_perc"),
+      maskedPerc(c).as("masked_perc"),
       a.as("cell_area_m2"),
-      (tp * a / lit(1000000.0)).as("tp_area_km2"),
-      (fp * a / lit(1000000.0)).as("fp_area_km2"),
-      (tn * a / lit(1000000.0)).as("tn_area_km2"),
-      (fn * a / lit(1000000.0)).as("fn_area_km2"),
-      (totD * a / lit(1000000.0)).as("contingency_tot_area_km2"),
-      ((tp + fp) * a / lit(1000000.0)).as("pred_positive_area_km2"),
-      ((tn + fn) * a / lit(1000000.0)).as("pred_negative_area_km2"),
-      ((tp + fn) * a / lit(1000000.0)).as("obs_positive_area_km2"),
-      ((tn + fp) * a / lit(1000000.0)).as("obs_negative_area_km2"),
-      ((tp + fp) * a / lit(1000000.0) - (tp + fn) * a / lit(1000000.0)).as("positive_diff_area_km2")): _*)
+      km2(tp).as("tp_area_km2"),
+      km2(fp).as("fp_area_km2"),
+      km2(tn).as("tn_area_km2"),
+      km2(fn).as("fn_area_km2"),
+      km2(tot).as("contingency_tot_area_km2"),
+      km2(tp + fp).as("pred_positive_area_km2"),
+      km2(tn + fn).as("pred_negative_area_km2"),
+      km2(tp + fn).as("obs_positive_area_km2"),
+      km2(tn + fp).as("obs_negative_area_km2"),
+      (km2(tp + fp) - km2(tp + fn)).as("positive_diff_area_km2")): _*)
   }
 
   /** Multi-benchmark master-metrics assembly (q56) — the engine's form of
@@ -202,18 +253,28 @@ object Agreement {
         ((cellRow(cell) * 31 + cellCol(cell) * 17 + k) % 10 < w).cast("int"))
       .cast("int")
 
-  def masterMetrics(mosaic: DataFrame, version: String = "graft_r2"): DataFrame = {
-    val countExprs = MasterCombos.flatMap { case (src, mag, k, w, t) =>
-      val agr = comboAgreement(col("cell"), col("depth_max"), k, w, t)
-      (0 to 4).map(c => count(when(agr === c, 1)).as(s"c${c}_${src}_$mag"))
+  /** Per master combo, one count column per agreement code,
+    * `c<code>_<src>_<mag><suffix>`, with the combo's threshold raised by
+    * `dlt` — the engine twin of the oracle's `comboCountsSql`. */
+  private def comboCounts(dlt: Double = 0.0, suffix: String = ""): Seq[Column] =
+    MasterCombos.flatMap { case (src, mag, k, w, t) =>
+      val agr = comboAgreement(col("cell"), col("depth_max"), k, w, t + dlt)
+      (0 to 4).map(c => count(when(agr === c, 1)).as(s"c${c}_${src}_$mag$suffix"))
     }
+
+  /** The five [[comboCounts]] columns of one combo, in code order (tn, fn, fp, tp, masked). */
+  private def comboCols(src: String, mag: String, suffix: String = ""): Seq[Column] =
+    (0 to 4).map(c => col(s"c${c}_${src}_$mag$suffix"))
+
+  def masterMetrics(mosaic: DataFrame, version: String = "graft_r2"): DataFrame = {
+    val countExprs = comboCounts()
     val counted = mosaic.agg(countExprs.head, countExprs.tail: _*)
     val rows = MasterCombos.map { case (src, mag, _, _, _) =>
-      def c(i: Int) = col(s"c${i}_${src}_$mag")
+      val Seq(tn, fn, fp, tp, masked) = comboCols(src, mag)
       struct(Seq(lit(version).as("version"), lit(src).as("benchmark_source"),
-        lit(mag).as("magnitude"), c(0).as("tn"), c(1).as("fn"), c(2).as("fp"),
-        c(3).as("tp"), c(4).as("masked")) ++
-        metricCols(c(0), c(1), c(2), c(3)): _*)
+        lit(mag).as("magnitude"), tn.as("tn"), fn.as("fn"), fp.as("fp"),
+        tp.as("tp"), masked.as("masked")) ++
+        metricCols(tn, fn, fp, tp): _*)
     }
     counted.select(explode(array(rows: _*)).as("r")).select(col("r.*"))
   }
@@ -246,17 +307,14 @@ object Agreement {
       .withColumn("lat", Cells.centroidLatCol(col("cell"), Cells.BaseRes))
       .withColumn("lng", Cells.centroidLngCol(col("cell"), Cells.BaseRes))
     val assigned = SpatialJoin.assign(spark, withGeo)
-    val countExprs = MasterCombos.flatMap { case (src, mag, k, w, t) =>
-      val agr = comboAgreement(col("cell"), col("depth_max"), k, w, t)
-      (0 to 4).map(c => count(when(agr === c, 1)).as(s"c${c}_${src}_$mag"))
-    }
+    val countExprs = comboCounts()
     val counted = assigned
       .groupBy(col("hydroid").cast("long").as("hydroid"), col("huc8"))
       .agg(countExprs.head, countExprs.tail: _*)
     val rows = MasterCombos.map { case (src, mag, _, _, _) =>
-      def c(i: Int) = col(s"c${i}_${src}_$mag")
-      struct(lit(src).as("bench"), lit(mag).as("mag"), c(0).as("tn"),
-        c(1).as("fn"), c(2).as("fp"), c(3).as("tp"), c(4).as("masked"))
+      val Seq(tn, fn, fp, tp, masked) = comboCols(src, mag)
+      struct(lit(src).as("bench"), lit(mag).as("mag"), tn.as("tn"),
+        fn.as("fn"), fp.as("fp"), tp.as("tp"), masked.as("masked"))
     }
     val melted = counted
       .select(col("hydroid"), col("huc8"), explode(array(rows: _*)).as("r"))
@@ -273,31 +331,12 @@ object Agreement {
     * (summed national grain). */
   private def contingencyMetricSelect(melted: DataFrame, keyCols: Seq[Column],
       cellAreaM2: Double): DataFrame = {
-    val tp = col("tp").cast("double"); val tn = col("tn").cast("double")
-    val fp = col("fp").cast("double"); val fn = col("fn").cast("double")
-    val totD = (col("tn") + col("fn") + col("fp") + col("tp")).cast("double")
-    val aref = (tp + fp) * (tp + fn) / totD
-    melted.select(keyCols ++ Seq(
-      col("tn"), col("fn"), col("fp"), col("tp"), col("masked"),
-      (totD * lit(cellAreaM2) / lit(1000000.0)).as("contingency_tot_area_km2"),
-      when(tp + fp + fn =!= 0.0, tp / (tp + fp + fn)).as("csi"),
-      when(tp + fp =!= 0.0, fp / (tp + fp)).as("far"),
-      when(tp + fn =!= 0.0, tp / (tp + fn)).as("tpr"),
-      when(tn + fp =!= 0.0, tn / (tn + fp)).as("tnr"),
-      when(tp + fp =!= 0.0, tp / (tp + fp)).as("ppv"),
-      when(tn + fn =!= 0.0, tn / (tn + fn)).as("npv"),
-      when((tp + fn) * (tn + fp) =!= 0.0,
-        (tp / (tp + fn) + tn / (tn + fp)) / lit(2.0)).as("bal_acc"),
-      when((tp + fp) * (tp + fn) * (tn + fp) * (tn + fn) =!= 0.0,
-        (tp * tn - fp * fn) /
-          sqrt((tp + fp) * (tp + fn) * (tn + fp) * (tn + fn))).as("mcc"),
-      when(tp + fp + fn - aref =!= 0.0,
-        (tp - aref) / (tp + fp + fn - aref)).as("equitable_threat_score"),
-      ((tp + fn) / totD).as("prevalence"),
-      when(tp + fn =!= 0.0, (tp + fp) / (tp + fn)).as("bias"),
-      when(tp * 2 + fp + fn =!= 0.0, tp * 2 / (tp * 2 + fp + fn)).as("f1_score"),
-      (col("masked").cast("double") / (totD + col("masked").cast("double")) * 100)
-        .as("masked_perc")): _*)
+    val c = new Counts(col("tn"), col("fn"), col("fp"), col("tp"))
+    melted.select(keyCols ++ countCols ++
+      Seq((c.tot * lit(cellAreaM2) / lit(1000000.0)).as("contingency_tot_area_km2")) ++
+      NaStats.map { case (name, column) =>
+        naStat(name, col("tn"), col("fn"), col("fp"), col("tp")).as(column) } ++
+      Seq(maskedPerc(c).as("masked_perc")): _*)
   }
 
   /** National metric rollup (q106) — `tools/aggregate_metrics.py:203-307`:
@@ -344,17 +383,11 @@ object Agreement {
   def versionRegression(mosaic: DataFrame,
       prevThresholdDelta: Double = 0.25): DataFrame = {
     val versions = Seq(("new", 0.0), ("prev", prevThresholdDelta))
-    val countExprs = versions.flatMap { case (v, d) =>
-      MasterCombos.flatMap { case (src, mag, k, w, t) =>
-        val agr = comboAgreement(col("cell"), col("depth_max"), k, w, t + d)
-        (0 to 4).map(c => count(when(agr === c, 1)).as(s"c${c}_${src}_${mag}_$v"))
-      }
-    }
+    val countExprs = versions.flatMap { case (v, d) => comboCounts(d, s"_$v") }
     val counted = mosaic.agg(countExprs.head, countExprs.tail: _*)
     val rows = MasterCombos.flatMap { case (src, mag, _, _, _) =>
-      def cs(v: String) = (0 to 4).map(i => col(s"c${i}_${src}_${mag}_$v"))
-      val Seq(tnN, fnN, fpN, tpN, _) = cs("new")
-      val Seq(tnP, fnP, fpP, tpP, _) = cs("prev")
+      val Seq(tnN, fnN, fpN, tpN, _) = comboCols(src, mag, "_new")
+      val Seq(tnP, fnP, fpP, tpP, _) = comboCols(src, mag, "_prev")
       val newM = metricCols(tnN, fnN, fpN, tpN)
       val prevM = metricCols(tnP, fnP, fpP, tpP)
       MetricOrientation.zipWithIndex.map { case ((stat, orient), i) =>

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Global duplicate-cluster resolution — the step AFTER pair generation that
   * every production dedup run needs (C4/RefinedWeb/SlimPajama keep one doc
@@ -19,7 +18,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * mutually-truncated near-dups is exactly such a graph). Every round is two
   * bounded shuffles over the EDGE table (never docs²), partial-aggregating
   * `min` both times, so each round is AQE-sized and skew-splittable; the
-  * convergence check reduces one BIGINT to the driver per round — the same
+  * convergence check collects one changed-row count per round — the same
   * small-state iterate as the k-means trainer (AnnSearch).
   */
 object DedupGraph {
@@ -78,55 +77,37 @@ object DedupGraph {
       .localCheckpoint()
     var converged = false
     var it = 0
-    // Convergence by MONOTONE LABEL SUM for numeric ids: every round maps
-    // comp(v) → min(comp(v), …) then comp(comp(v)) ≤ comp(v), so per-doc
-    // labels never increase; Σcomp is therefore equal between rounds iff NO
-    // row changed (all deltas ≤ 0 and Σdelta = 0 ⇒ all 0) — the identical
-    // fixpoint the old changed-row join detected, for the cost of one local
-    // scan of the just-checkpointed partitions. The r5 shape paid, per
-    // round, a labels⋈labels exchange + join just to find one changed row.
-    // Σ is a DECIMAL(38,0) sum of integral ids: exact for n·max_id < 10³⁸
-    // (any row count × any BIGINT id), where a BIGINT sum would wrap or
-    // fail past 2⁶³. Non-integral ids (the host-name graph of q153) cannot
-    // sum — they keep the r5 changed-row join, which is fine at host-graph
-    // cardinality.
+    // Convergence: each round carries every row's previous label through
+    // the propagate aggregate (the own row gives `prev`, neighbour rows
+    // give NULL, `max(prev)` keeps it), so the just-checkpointed table
+    // itself says whether any row changed: one local scan of its
+    // partitions, for ids of any type. Labels never increase, so "no row
+    // changed" is the fixpoint.
     // The propagate is the UNION form — labels ∪ edge-carried neighbor
     // labels into ONE partial-aggregating min — one fewer exchange per
     // round than the aggregate-then-left-join form, same minima.
-    val numericIds = edges.schema.fields.head.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    def labelSum(df: DataFrame): Option[Any] =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).collect()(0).get(0))
-    // seed-aware init: a graph the seed already labelled (all-star) then
-    // exits after one confirming round instead of two
-    var prevSum: Option[Any] =
-      if (numericIds) labelSum(labels)
-      else None
     while (!converged && it < maxIters) {
       // propagate: comp ← min(own comp, neighbors' comps)
       val contrib = undC
         .join(labels.select(col("doc_id").as("dst"), col("comp")), "dst")
-        .select(col("src").as("doc_id"), col("comp"))
-      val prop = contrib.unionByName(labels)
-        .groupBy(col("doc_id")).agg(min(col("comp")).as("comp"))
+        .select(col("src").as("doc_id"), col("comp"),
+          lit(null).cast(labels.schema("comp").dataType).as("prev"))
+      val prop = contrib
+        .unionByName(labels.select(col("doc_id"), col("comp"), col("comp").as("prev")))
+        .groupBy(col("doc_id")).agg(min(col("comp")).as("comp"), max(col("prev")).as("prev"))
       // pointer jump: comp ← comp(comp) — labels are min-ids so the label
-      // table itself maps old roots to newer, smaller roots
+      // table itself maps old roots to newer, smaller roots. `comp` is never
+      // NULL, so comp2 is `comp`; reading `prev` after it keeps this side's
+      // aggregate identical to the other side's (min(comp), max(prev), in
+      // that order), so AQE reuses its exchange instead of shuffling the
+      // union twice.
+      val roots = prop.select(col("doc_id").as("comp"),
+        coalesce(col("comp"), col("prev")).as("comp2"))
       val next = prop
-        .join(prop.select(col("doc_id").as("comp"), col("comp").as("comp2")), Seq("comp"), "left")
-        .select(col("doc_id"), coalesce(col("comp2"), col("comp")).as("comp"))
+        .join(roots, Seq("comp"), "left")
+        .select(col("doc_id"), coalesce(col("comp2"), col("comp")).as("comp"), col("prev"))
         .localCheckpoint()
-      if (numericIds) {
-        val s = labelSum(next)
-        // None == None on an empty edge set: converges after one round
-        converged = s == prevSum
-        prevSum = s
-      } else {
-        val changed = next.join(labels.withColumnRenamed("comp", "prev"), "doc_id")
-          .filter(col("comp") =!= col("prev")).limit(1).count()
-        converged = changed == 0L
-      }
+      converged = next.filter(col("comp") =!= col("prev")).count() == 0L
       labels = next
       it += 1
     }

@@ -26,26 +26,13 @@ object TextOps {
 
   /** (doc_id, hb): 60-bit hashes of all char [[ShingleLen]]-grams of the
     * first [[MaxShingleChars]] chars, in position order (multiset — repeats
-    * kept; `distinct = true` for the first-occurrence-distinct set). Docs
-    * shorter than one shingle are dropped. Values = the md5-prefix chain the
-    * oracles mirror, computed by the [[graft.functions.GraftMd5]] kernel. */
-  def shingles(docs: DataFrame, distinct: Boolean = false): DataFrame =
+    * kept; [[shingleHashes]] is the distinct form). Docs shorter than one
+    * shingle are dropped. Values = the md5-prefix chain the oracles mirror,
+    * computed by the [[graft.functions.GraftMd5]] kernel. */
+  def shingles(docs: DataFrame): DataFrame =
     docs
       .filter(length(col("text")) >= ShingleLen)
-      .select(col("doc_id"),
-        explode(if (distinct) graft.functions.Shingles60.shingles60Distinct(col("text"))
-          else graft.functions.Shingles60.shingles60(col("text"))).as("hb"))
-
-  /** MinHash permutation modulus + per-seed universal-hash coefficients. */
-  val HashP = 1000000007L
-
-  /** Raw 60-bit shingle hash: first 15 hex digits of md5(sh) as BIGINT. */
-  def baseHash60(sh: Column): Column =
-    conv(substring(md5(sh), 1, 15), 16, 10).cast("long")
-
-  /** Base shingle hash mod P — ONE md5 per shingle; the seed family is
-    * linear permutations over it. */
-  def baseHash(sh: Column): Column = baseHash60(sh) % HashP
+      .select(col("doc_id"), explode(graft.functions.Shingles60.shingles60(col("text"))).as("hb"))
 
   /** The exploded DISTINCT (doc_id, hb) 60-bit shingle-hash table — the
     * input of the per-hash aggregates (fingerprint k-min, document
@@ -216,7 +203,7 @@ object TextOps {
     // digits this op votes on are bits 59..44. NON-distinct multiset
     // (multiplicity is the vote weight), same values as the old per-shingle
     // md5-hex derivation.
-    val withHash = shingles(docs, distinct = false)
+    val withHash = shingles(docs)
     // hex digit d_k = value of hex char k/4; bit = (d >> (3 - k%4)) & 1
     val bitSums = (0 until 16).map { k =>
       val bit = shiftright(col("hb"), 4 * (14 - k / 4) + (3 - k % 4)) % 2
@@ -418,7 +405,8 @@ object TextOps {
     * `fp` is NULL when a doc has < 4 distinct shingles — same as the
     * oracle's `m1 || '-' || …` with a missing (NULL) rank. The fingerprint
     * value space moved from concatenated md5 hex to the same 60-bit
-    * md5-prefix integers every other dedup op keys on ([[baseHash60]]) —
+    * md5-prefix integers every other dedup op keys on
+    * ([[graft.functions.GraftMd5.shingles60]]) —
     * one hash family across the whole file. */
   def fingerprint(docs: DataFrame): DataFrame =
     shingleHashes(docs)

@@ -22,7 +22,6 @@ object EvaluationQueries {
       s"""cmb AS (SELECT * FROM (VALUES $combos) v(bench, mag, k, w, t))""",
       """mcn AS (
         |  SELECT cell, depth_max,
-        |    ((cell // 268435456) % 268435456) AS crow, (cell % 268435456) AS ccol,
         |    (((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS clat,
         |    ((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS clng
         |  FROM mos
@@ -31,21 +30,21 @@ object EvaluationQueries {
          |  SELECT CAST(floor((clat + 90.0) / 1.25) AS BIGINT) * 144
          |           + CAST(floor((clng + 180.0) / 2.5) AS BIGINT) AS hydroid,
          |    bench, mag,
-         |    CASE WHEN (crow * 29 + ccol * 13) % 50 = 0 THEN 4
-         |         ELSE (CASE WHEN depth_max > t THEN 1 ELSE 0 END) * 2
-         |              + CASE WHEN (crow * 31 + ccol * 17 + k) % 10 < w THEN 1 ELSE 0 END
-         |    END AS agreement
+         |    ${agreementSql("k", "w", "t")} AS agreement
          |  FROM mcn CROSS JOIN cmb
          |)""".stripMargin,
-      s"""c95 AS (
-         |  SELECT hydroid, $huc8FromHydroid AS huc8, bench, mag,
-         |    count(CASE WHEN agreement = 0 THEN 1 END) AS tn,
-         |    count(CASE WHEN agreement = 1 THEN 1 END) AS fn,
-         |    count(CASE WHEN agreement = 2 THEN 1 END) AS fp,
-         |    count(CASE WHEN agreement = 3 THEN 1 END) AS tp,
-         |    count(CASE WHEN agreement = 4 THEN 1 END) AS masked
-         |  FROM agh GROUP BY hydroid, bench, mag
-         |)""".stripMargin)
+      classCountCte("c95", Seq("hydroid", s"$huc8FromHydroid AS huc8", "bench", "mag"),
+        "agh GROUP BY hydroid, bench, mag"))
+  }
+
+  /** `<name> AS (SELECT <keys>, <the five class counts of `agreement`> FROM
+    * <from>)` — the counting stage of [[graft.ops.Agreement]]'s `classCounts`
+    * (q12/q59, no keys) and of its per-catchment combo counts (q95/q106). */
+  private def classCountCte(name: String, keys: Seq[String], from: String): String = {
+    val counts = Seq("tn", "fn", "fp", "tp", "masked").zipWithIndex.map { case (n, c) =>
+      s"count(CASE WHEN agreement = $c THEN 1 END) AS $n"
+    }
+    s"$name AS (\n  SELECT ${(keys ++ counts).mkString(",\n    ")}\n  FROM $from\n)"
   }
 
   private def d(c: String) = s"CAST($c AS DOUBLE)"
@@ -86,7 +85,7 @@ object EvaluationQueries {
   /** A mosaic cell's agreement code for one master combo — mirrors
     * [[graft.ops.Agreement.comboAgreement]]: masked (4), else the prediction
     * at threshold `t` against the row/column-hashed benchmark extent. */
-  private def agreementSql(k: Int, w: Int, t: String): String = {
+  private def agreementSql(k: String, w: String, t: String): String = {
     val row = "((cell // 268435456) % 268435456)"
     val colc = "(cell % 268435456)"
     s"""CASE WHEN ($row * 29 + $colc * 13) % 50 = 0 THEN 4
@@ -100,7 +99,7 @@ object EvaluationQueries {
   private def comboCountsSql(dlt: Double, suffix: String): Seq[String] =
     Agreement.MasterCombos.flatMap { case (src, mag, k, w, t) =>
       (0 to 4).map(c =>
-        s"count(CASE WHEN ${agreementSql(k, w, s"CAST(${t + dlt} AS DOUBLE)")} = $c THEN 1 END) AS c${c}_${src}_$mag$suffix")
+        s"count(CASE WHEN ${agreementSql(k.toString, w.toString, s"CAST(${t + dlt} AS DOUBLE)")} = $c THEN 1 END) AS c${c}_${src}_$mag$suffix")
     }
 
   /** The guarded metric projection over contingency-count columns — mirrors
@@ -142,27 +141,10 @@ object EvaluationQueries {
     // A7+A8 contingency counts + CSI/TPR/FAR/MCC/ACC/F1/bias
     Query("q12_metrics", (s, dir) =>
       Agreement.metrics(Agreement.agreement(s, Inundate.run(s, dir))),
-      withCtes(pts, asg, ht, fc, stg, til, mos, mrects, agr,
-        """c AS (
-          |  SELECT count(CASE WHEN agreement = 0 THEN 1 END) AS tn,
-          |         count(CASE WHEN agreement = 1 THEN 1 END) AS fn,
-          |         count(CASE WHEN agreement = 2 THEN 1 END) AS fp,
-          |         count(CASE WHEN agreement = 3 THEN 1 END) AS tp,
-          |         count(CASE WHEN agreement = 4 THEN 1 END) AS masked
-          |  FROM agr
-          |)""".stripMargin)(
-        """SELECT tn, fn, fp, tp, masked,
-          |  CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE) + CAST(fn AS DOUBLE)) AS csi,
-          |  CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE)) AS tpr,
-          |  CAST(fp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)) AS far,
-          |  (CAST(tp AS DOUBLE) * CAST(tn AS DOUBLE) - CAST(fp AS DOUBLE) * CAST(fn AS DOUBLE))
-          |    / sqrt((CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)) * (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE))
-          |           * (CAST(tn AS DOUBLE) + CAST(fp AS DOUBLE)) * (CAST(tn AS DOUBLE) + CAST(fn AS DOUBLE))) AS mcc,
-          |  (CAST(tp AS DOUBLE) + CAST(tn AS DOUBLE))
-          |    / (CAST(tp AS DOUBLE) + CAST(tn AS DOUBLE) + CAST(fp AS DOUBLE) + CAST(fn AS DOUBLE)) AS acc,
-          |  CAST(tp AS DOUBLE) * 2 / (CAST(tp AS DOUBLE) * 2 + CAST(fp AS DOUBLE) + CAST(fn AS DOUBLE)) AS f1,
-          |  (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)) / (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE)) AS bias
-          |FROM c""".stripMargin)),
+      withCtes(pts, asg, ht, fc, stg, til, mos, mrects, agr, classCountCte("c", Nil, "agr"))(
+        s"""SELECT tn, fn, fp, tp, masked,
+           |  ${masterMetricsSql("tn", "fn", "fp", "tp")}
+           |FROM c""".stripMargin)),
 
     // multi-benchmark master-metrics assembly: one mosaic evaluated against
     // every (benchmark_source × magnitude), melted to the long master table
@@ -190,15 +172,7 @@ object EvaluationQueries {
         val tot = "CAST(tn + fn + fp + tp AS DOUBLE)"
         val area = "CAST(2.5E7 AS DOUBLE)"
         val km = "CAST(1000000.0 AS DOUBLE)"
-        withCtes(pts, asg, ht, fc, stg, til, mos, mrects, agr,
-          """c AS (
-            |  SELECT count(CASE WHEN agreement = 0 THEN 1 END) AS tn,
-            |         count(CASE WHEN agreement = 1 THEN 1 END) AS fn,
-            |         count(CASE WHEN agreement = 2 THEN 1 END) AS fp,
-            |         count(CASE WHEN agreement = 3 THEN 1 END) AS tp,
-            |         count(CASE WHEN agreement = 4 THEN 1 END) AS masked
-            |  FROM agr
-            |)""".stripMargin)(
+        withCtes(pts, asg, ht, fc, stg, til, mos, mrects, agr, classCountCte("c", Nil, "agr"))(
           s"""SELECT tn, fn, fp, tp, masked,
              |  tn + fn + fp + tp AS contingency_tot_count,
              |  ${masterMetricsSql("tn", "fn", "fp", "tp")},

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.pipeline.Inundate
@@ -20,6 +21,62 @@ class ImpactSpec extends SparkTestBase {
     assert(joined.count() == Agreement.MasterCombos.size)
     assert(joined.filter(col("tp_sum") =!= col("tp")
       || col("n") =!= col("n_cases")).count() == 0)
+  }
+
+  test("NA guards: a guarded statistic is NULL exactly where its denominator is zero") {
+    import spark.implicits._
+    // (tn, fn, fp, tp) rows that zero each denominator in turn (the total
+    // stays positive, as in the per-catchment and national projections)
+    val rows = Seq((0L, 0L, 0L, 5L), (4L, 0L, 0L, 0L), (0L, 3L, 0L, 0L), (0L, 0L, 2L, 0L),
+      (6L, 0L, 3L, 0L), (9L, 1L, 0L, 0L), (0L, 4L, 5L, 6L), (5L, 2L, 3L, 7L),
+      (123456789L, 2345L, 678L, 91011L))
+    // (value, denominator) of each statistic in plain Scala doubles, same operation order
+    def expected(name: String, r: (Long, Long, Long, Long)): (Double, Double) = {
+      val (tn, fn, fp, tp) = (r._1.toDouble, r._2.toDouble, r._3.toDouble, r._4.toDouble)
+      val tot = (r._1 + r._2 + r._3 + r._4).toDouble
+      val aref = (tp + fp) * (tp + fn) / tot
+      name match {
+        case "csi" => (tp / (tp + fp + fn), tp + fp + fn)
+        case "tpr" => (tp / (tp + fn), tp + fn)
+        case "far" => (fp / (tp + fp), tp + fp)
+        case "mcc" => val d = (tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)
+          ((tp * tn - fp * fn) / math.sqrt(d), d)
+        case "acc" => ((tp + tn) / (tp + tn + fp + fn), tp + tn + fp + fn)
+        case "f1" => (tp * 2 / (tp * 2 + fp + fn), tp * 2 + fp + fn)
+        case "bias" => ((tp + fp) / (tp + fn), tp + fn)
+        case "tnr" => (tn / (tn + fp), tn + fp)
+        case "ppv" => (tp / (tp + fp), tp + fp)
+        case "npv" => (tn / (tn + fn), tn + fn)
+        case "bal_acc" => ((tp / (tp + fn) + tn / (tn + fp)) / 2.0, (tp + fn) * (tn + fp))
+        case "prevalence" => ((tp + fn) / tot, tot)
+        case "equitable_threat_score" => ((tp - aref) / (tp + fp + fn - aref), tp + fp + fn - aref)
+      }
+    }
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    def eval(rs: Seq[(Long, Long, Long, Long)], f: (Column, Column, Column, Column) => Column) =
+      rs.toDF("tn", "fn", "fp", "tp").select(f(col("tn"), col("fn"), col("fp"), col("tp")))
+        .collect().toSeq.map(r => Option(r.get(0)).map(_.asInstanceOf[Double]))
+    val names = Agreement.NaStats.map(_._1)
+    names.foreach { name =>
+      val guarded = eval(rows, Agreement.naStat(name, _, _, _, _))
+      rows.zip(guarded).foreach { case (r, g) =>
+        assert(g.isEmpty == (expected(name, r)._2 == 0.0), s"$name at $r: $g")
+      }
+      // where the denominator is not zero: guarded == unguarded, bit for bit
+      val live = rows.filter(r => expected(name, r)._2 != 0.0)
+      val plain = eval(live, Agreement.stat(name, _, _, _, _))
+      live.zip(plain).zip(guarded.flatten).foreach { case ((r, p), g) =>
+        assert(bits(p.get) == bits(g), s"$name at $r")
+      }
+    }
+    // the unguarded statistics against the plain Scala doubles, bit for bit
+    (names :+ "acc").foreach { name =>
+      val live = rows.filter(r => expected(name, r)._2 != 0.0)
+      val plain = eval(live, Agreement.stat(name, _, _, _, _))
+      live.zip(plain).foreach { case (r, p) =>
+        assert(bits(p.get) == bits(expected(name, r)._1), s"$name at $r")
+      }
+    }
   }
 
   test("flood impact: the reference's LEFT-merge TP equals ALL benchmark-impacted") {

@@ -24,9 +24,18 @@ class LexiconSpec extends SparkTestBase {
 
   test("components: a long chain (adversarial diameter) converges to one root") {
     val n = 64
-    val edges = (0 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("doc_a", "doc_b")
-    val got = DedupGraph.components(edges).as[(Long, Long)].collect().toMap
+    val chain = (0 until n).map(i => (i.toLong, (i + 1).toLong))
+    val got = DedupGraph.components(chain.toDF("doc_a", "doc_b")).as[(Long, Long)].collect().toMap
     assert(got.size == n + 1 && got.values.forall(_ == 0L))
+    // the same chain over zero-padded STRING ids (string order = id order),
+    // the id type of the link-farm host graph
+    def pad(i: Long) = f"$i%04d"
+    val str = chain.map { case (a, b) => (pad(a), pad(b)) }.toDF("doc_a", "doc_b")
+    assert(DedupGraph.components(str).as[(String, String)].collect().toMap ==
+      got.map { case (d, c) => pad(d) -> pad(c) })
+    // an empty edge table has no endpoints, so no labels, for either id type
+    assert(DedupGraph.components(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).isEmpty)
+    assert(DedupGraph.components(Seq.empty[(String, String)].toDF("doc_a", "doc_b")).isEmpty)
   }
 
   test("dupComponents: exact clones and near-clones land in one cluster, keep = canonical only") {
