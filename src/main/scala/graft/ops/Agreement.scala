@@ -89,6 +89,11 @@ object Agreement {
       .join(broadcast(pairing), Seq("cand", "bench"), "left")
       .select(col("cell"), col("agreement").cast("int").as("agreement"))
 
+  /** `num / den`, NULL where `den` is zero: the oracle's (DuckDB's) double
+    * division, which Spark's ANSI mode would fail with DIVIDE_BY_ZERO.
+    * Bit for bit the plain quotient wherever `den` is not zero. */
+  private def div(num: Column, den: Column): Column = when(den =!= 0.0, num / den)
+
   /** An evaluation's contingency counts as the doubles every statistic
     * divides: each BIGINT count cast on use, the total summed in BIGINT
     * first — the oracle's `CAST(x AS DOUBLE)` / `CAST(tn + … AS DOUBLE)`. */
@@ -96,39 +101,37 @@ object Agreement {
     val tn = tnC.cast("double"); val fn = fnC.cast("double")
     val fp = fpC.cast("double"); val tp = tpC.cast("double")
     val tot = (tnC + fnC + fpC + tpC).cast("double")
-    val aref = (tp + fp) * (tp + fn) / tot
+    val aref = div((tp + fp) * (tp + fn), tot)
   }
 
   /** One contingency statistic from count columns, by the oracle's name
     * (`EvaluationQueries.metricSql`; `tools_shared_functions.py:1666-1689`,
-    * `:277-380`). Unguarded: over counts that can zero a denominator, use
-    * [[naStat]]. */
-  private[graft] def stat(name: String, tn: Column, fn: Column, fp: Column, tp: Column): Column =
-    formula(name, new Counts(tn, fn, fp, tp))._1
+    * `:277-380`): NULL where the statistic's zero-denominator guard is
+    * zero, as the oracle's division gives NULL there — the reference's
+    * `compute_stats_from_contingency_table` returns 'NA' on
+    * ZeroDivisionError. */
+  private[graft] def naStat(name: String, tn: Column, fn: Column, fp: Column, tp: Column): Column =
+    guarded(name, new Counts(tn, fn, fp, tp))
 
-  /** Guarded form of [[stat]]: NULL where the statistic's zero-denominator
-    * guard is zero — the reference's `compute_stats_from_contingency_table`
-    * returns 'NA' on ZeroDivisionError. The NA projection of q95/q106. */
-  private[graft] def naStat(name: String, tn: Column, fn: Column, fp: Column, tp: Column): Column = {
-    val (value, guard) = formula(name, new Counts(tn, fn, fp, tp))
-    guard.fold(value)(g => when(g =!= 0.0, value))
+  private def guarded(name: String, c: Counts): Column = {
+    val (value, guard) = formula(name, c)
+    when(guard =!= 0.0, value)
   }
 
   /** Each statistic's formula and zero-denominator guard — the only place
     * either is written. A ratio is guarded by its denominator, mcc by the
     * product under its root, bal_acc by the product of its two
-    * denominators; prevalence divides by the total, which the NA
-    * projection's inputs keep positive, so it has no guard. */
-  private def formula(name: String, c: Counts): (Column, Option[Column]) = {
+    * denominators. */
+  private def formula(name: String, c: Counts): (Column, Column) = {
     import c._
-    def ratio(num: Column, den: Column) = (num / den, Some(den))
+    def ratio(num: Column, den: Column) = (num / den, den)
     name match {
       case "csi" => ratio(tp, tp + fp + fn)
       case "tpr" => ratio(tp, tp + fn)
       case "far" => ratio(fp, tp + fp)
       case "mcc" =>
         val d = (tp + fp) * (tp + fn) * (tn + fp) * (tn + fn)
-        ((tp * tn - fp * fn) / sqrt(d), Some(d))
+        ((tp * tn - fp * fn) / sqrt(d), d)
       case "acc" => ratio(tp + tn, tp + tn + fp + fn)
       case "f1" => ratio(tp * 2, tp * 2 + fp + fn)
       case "bias" => ratio(tp + fp, tp + fn)
@@ -136,8 +139,8 @@ object Agreement {
       case "ppv" => ratio(tp, tp + fp)
       case "npv" => ratio(tn, tn + fn)
       case "bal_acc" =>
-        ((formula("tpr", c)._1 + formula("tnr", c)._1) / lit(2.0), Some((tp + fn) * (tn + fp)))
-      case "prevalence" => ((tp + fn) / tot, None)
+        ((formula("tpr", c)._1 + formula("tnr", c)._1) / lit(2.0), (tp + fn) * (tn + fp))
+      case "prevalence" => ratio(tp + fn, tot)
       case "equitable_threat_score" => ratio(tp - aref, tp + fp + fn - aref)
     }
   }
@@ -150,14 +153,16 @@ object Agreement {
 
   /** The masked share of all cells, in percent. */
   private def maskedPerc(c: Counts): Column =
-    col("masked").cast("double") / (c.tot + col("masked").cast("double")) * 100
+    div(col("masked").cast("double"), c.tot + col("masked").cast("double")) * 100
 
   /** The reference's printworthy metric family from contingency-count
     * columns (`tools_shared_functions.py:1666-1689`): CSI, TPR, FAR, MCC,
-    * ACC, F1, plus bias — exact double arithmetic from BIGINT counts,
-    * shared by [[metrics]] (q12) and [[masterMetrics]] (q56). */
+    * ACC, F1, plus bias — exact double arithmetic from BIGINT counts, NULL
+    * where a denominator is zero; shared by [[metrics]] (q12),
+    * [[fullMetrics]] (q59), [[masterMetrics]] (q56) and
+    * [[versionRegression]] (q89). */
   def metricCols(tnC: Column, fnC: Column, fpC: Column, tpC: Column): Seq[Column] =
-    MetricOrientation.map { case (name, _) => stat(name, tnC, fnC, fpC, tpC).as(name) }
+    MetricOrientation.map { case (name, _) => naStat(name, tnC, fnC, fpC, tpC).as(name) }
 
   /** The five per-class counts of an agreement raster, one aggregate. */
   private def classCounts(agreementDf: DataFrame): DataFrame =
@@ -181,16 +186,16 @@ object Agreement {
     * `tools/synthesize_test_cases.py:48-88`): the 7 headline metrics plus
     * TNR/PND/PPV/NPV/Bal_ACC/prevalence/equitable-threat-score, the percent
     * family, and the cell-area → km² family. All exact double arithmetic
-    * from the BIGINT contingency counts. */
+    * from the BIGINT contingency counts, NULL where a denominator is zero. */
   def fullMetrics(agreementDf: DataFrame, cellAreaM2: Double = 25000000.0): DataFrame = {
     val c = new Counts(col("tn"), col("fn"), col("fp"), col("tp"))
     import c._
-    def s(name: String) = formula(name, c)._1
-    val pnd = fn / (fn + tp)
+    def s(name: String) = guarded(name, c)
+    val pnd = div(fn, fn + tp)
     // the remaining gval CatStats keys (reference stat dict,
     // tools_shared_functions.py:277-380) — canonical definitions
-    val fpr = fp / (fp + tn)
-    def perc(x: Column) = x / tot * 100
+    val fpr = div(fp, fp + tn)
+    def perc(x: Column) = div(x, tot) * 100
     val a = lit(cellAreaM2)
     def km2(x: Column) = x * a / lit(1000000.0)
     classCounts(agreementDf).select(countCols ++ Seq(
@@ -204,11 +209,11 @@ object Agreement {
       s("prevalence").as("prevalence"),
       s("equitable_threat_score").as("equitable_threat_score"),
       fpr.as("fpr"),
-      (fn / (fn + tn)).as("false_omission_rate"),
+      div(fn, fn + tn).as("false_omission_rate"),
       sqrt(s("ppv") * s("tpr")).as("fowlkes_mallows_index"),
-      (s("tpr") / fpr).as("positive_likelihood_ratio"),
-      (pnd / s("tnr")).as("negative_likelihood_ratio"),
-      ((sqrt(s("tpr") * fpr) - fpr) / (s("tpr") - fpr)).as("prevalence_threshold"),
+      div(s("tpr"), fpr).as("positive_likelihood_ratio"),
+      div(pnd, s("tnr")).as("negative_likelihood_ratio"),
+      div(sqrt(s("tpr") * fpr) - fpr, s("tpr") - fpr).as("prevalence_threshold"),
       perc(tp).as("tp_perc"),
       perc(fp).as("fp_perc"),
       perc(tn).as("tn_perc"),

@@ -87,31 +87,37 @@ object DedupGraph {
     // labels into ONE partial-aggregating min — one fewer exchange per
     // round than the aggregate-then-left-join form, same minima.
     while (!converged && it < maxIters) {
-      // propagate: comp ← min(own comp, neighbors' comps)
-      val contrib = undC
-        .join(labels.select(col("doc_id").as("dst"), col("comp")), "dst")
-        .select(col("src").as("doc_id"), col("comp"),
-          lit(null).cast(labels.schema("comp").dataType).as("prev"))
-      val prop = contrib
-        .unionByName(labels.select(col("doc_id"), col("comp"), col("comp").as("prev")))
-        .groupBy(col("doc_id")).agg(min(col("comp")).as("comp"), max(col("prev")).as("prev"))
-      // pointer jump: comp ← comp(comp) — labels are min-ids so the label
-      // table itself maps old roots to newer, smaller roots. `comp` is never
-      // NULL, so comp2 is `comp`; reading `prev` after it keeps this side's
-      // aggregate identical to the other side's (min(comp), max(prev), in
-      // that order), so AQE reuses its exchange instead of shuffling the
-      // union twice.
-      val roots = prop.select(col("doc_id").as("comp"),
-        coalesce(col("comp"), col("prev")).as("comp2"))
-      val next = prop
-        .join(roots, Seq("comp"), "left")
-        .select(col("doc_id"), coalesce(col("comp2"), col("comp")).as("comp"), col("prev"))
-        .localCheckpoint()
+      val next = round(undC, labels).localCheckpoint()
       converged = next.filter(col("comp") =!= col("prev")).count() == 0L
       labels = next
       it += 1
     }
     labels.select(col("doc_id"), col("comp").as("component"))
+  }
+
+  /** One propagate + pointer-jump round of [[components]] over the
+    * undirected edges `und` (src, dst) and labels (doc_id, comp): →
+    * (doc_id, comp, prev), `prev` the row's label before the round. */
+  private[ops] def round(und: DataFrame, labels: DataFrame): DataFrame = {
+    // propagate: comp ← min(own comp, neighbors' comps)
+    val contrib = und
+      .join(labels.select(col("doc_id").as("dst"), col("comp")), "dst")
+      .select(col("src").as("doc_id"), col("comp"),
+        lit(null).cast(labels.schema("comp").dataType).as("prev"))
+    val prop = contrib
+      .unionByName(labels.select(col("doc_id"), col("comp"), col("comp").as("prev")))
+      .groupBy(col("doc_id")).agg(min(col("comp")).as("comp"), max(col("prev")).as("prev"))
+    // pointer jump: comp ← comp(comp) — labels are min-ids so the label
+    // table itself maps old roots to newer, smaller roots. `comp` is never
+    // NULL, so comp2 is `comp`; reading `prev` after it keeps this side's
+    // aggregate identical to the other side's (min(comp), max(prev), in
+    // that order), so AQE reuses its exchange instead of shuffling the
+    // union twice (LexiconSpec gates the reuse).
+    val roots = prop.select(col("doc_id").as("comp"),
+      coalesce(col("comp"), col("prev")).as("comp2"))
+    prop
+      .join(roots, Seq("comp"), "left")
+      .select(col("doc_id"), coalesce(col("comp2"), col("comp")).as("comp"), col("prev"))
   }
 
   /** q132: SemDeDup-style SEMANTIC dedup ledger — near-duplicate *meaning*,

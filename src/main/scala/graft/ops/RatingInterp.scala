@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import graft.synth.Synth
 
 /** Rating-curve stage interpolation — SURVEY.md §2.4 A5, reproducing
   * `np.interp` semantics of `tools/inundation.py:667-679` exactly:
@@ -11,14 +13,22 @@ import org.apache.spark.sql.functions._
   *   Q >= q_max     → stage_max        (clamp above)
   *   else           → s_lo + (Q - q_lo) * (s_hi - s_lo) / (q_hi - q_lo)
   *
-  * Two implementations:
-  *  1. [[bracketAgg]] — pure conditional aggregation (codegen'd, partial-agg
+  * The synthetic rating curves (SRC) are static, so the engine indexes them
+  * once per JVM as [[RatingCurves]] (the 20 522 non-lake curves share 35
+  * ladders: 352 544 bytes, built on the driver from [[Synth]]'s closed form
+  * in 20–30 ms warm) and broadcasts that once per SparkContext
+  * ([[Broadcasts]]); [[stages]] is then a map-only projection of the
+  * forecast through the codegen'd [[StageLookup]].
+  *
+  * Curves that are data — calibrated, threshold and USGS ladders
+  * (`Calibration`, `CatFim`, `Bridges`) — interpolate relationally:
+  *  1. [[stageExpr]] — pure conditional aggregation (codegen'd, partial-agg
   *     friendly, bit-compatible with the SQL oracle). Relies on q strictly
   *     monotone in stage, which the synthetic curves guarantee.
   *  2. [[InterpAgg]] — a typed `Aggregator` UDAF that keeps bracketing knots
   *     in a fixed-size buffer; handles *non*-monotone duplicate-knot tables
   *     the same way np.interp does (first matching interval). Used as a
-  *     cross-check in tests; the relational form is the hot path.
+  *     cross-check (q117 and the specs).
   */
 object RatingInterp {
 
@@ -36,9 +46,34 @@ object RatingInterp {
       .otherwise(loS + (q - loQ) * (hiS - loS) / (hiQ - loQ))
   }
 
-  /** hydrotable ⋈ forecast → one interpolated stage per catchment.
-    * The forecast is broadcast (small dimension — J1 of SURVEY.md §2.3);
-    * lake rows are filtered first (`LakeID == -999`, P2). */
+  /** The synthetic SRC's non-lake curves ([[Synth.hydrotable]] with
+    * `lake_id = -999`), from the same closed form. */
+  private[graft] lazy val curves: RatingCurves = {
+    val stage = Array.tabulate(Synth.StageKnots)(Synth.stageOf)
+    RatingCurves.build(stage, Synth.catchmentList.iterator.filter(_.lake_id == -999).map { c =>
+      (c.feature_id, c.hydroid, stage.map(Synth.dischargeOf(c.hydroid, _)))
+    })
+  }
+
+  /** [[curves]] broadcast on `spark`'s SparkContext (once per context). */
+  def curvesOf(spark: SparkSession): Broadcast[RatingCurves] = Broadcasts.of(spark, curves)
+
+  /** forecast(feature_id, discharge) → (hydroid BIGINT, stage_m DOUBLE): one
+    * row per forecast feature with a non-lake curve, its stage interpolated
+    * on the synthetic SRC. Map-only: the codegen'd [[StageLookup]] of each
+    * forecast row (evaluated by the projection and by the miss filter the
+    * optimizer pushes below it), no join, aggregate or exchange. The
+    * forecast holds one row per feature_id. */
+  def stages(spark: SparkSession, forecast: DataFrame): DataFrame =
+    forecast
+      .select(StageLookup.lookup(col("feature_id"), col("discharge"), curvesOf(spark)).as("s"))
+      .filter(col("s.hydroid") =!= StageLookup.Miss)
+      .select(col("s.hydroid"), col("s.stage_m"))
+
+  /** The relational form over an arbitrary knot table (hydroid,
+    * feature_id, lake_id, stage, discharge_cms): knots ⋈ broadcast(forecast)
+    * grouped with [[stageExpr]], lake rows (`lake_id = -999`, P2) filtered
+    * first. Over [[Synth.hydrotable]] it is [[stages]]'s reference. */
   def stages(hydrotable: DataFrame, forecast: DataFrame): DataFrame =
     hydrotable
       .filter(col("lake_id") === -999)

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,7 +17,7 @@ import graft.synth.Synth
   *  1. each polygon set is indexed once per JVM as a [[graft.geo.GridIndex]]
   *     (CSR primitive arrays: 3.1 MB for the 20 736 catchments at res 8,
   *     30 KB for the 40 masks at res 6) and **broadcast once per
-  *     SparkContext**;
+  *     SparkContext** through [[Broadcasts]];
   *  2. a point's polygon is the codegen'd [[graft.geo.PipLookup]]
   *     expression over its lng/lat: an interior grid cell answers with no
   *     ring test, a boundary cell runs the crossing-number test over the
@@ -40,27 +39,12 @@ object SpatialJoin {
   private lazy val masks: GridIndex =
     GridIndex.build(Synth.maskList.map(m => Geom.Poly(m.mask_id, m.ring)))
 
-  private var shared: Option[(SparkContext, Map[GridIndex, Broadcast[GridIndex]])] = None
-
-  /** `index` broadcast on `spark`'s SparkContext: one broadcast per index
-    * and context, so a call on a new context (e.g. after `stop()`)
-    * broadcasts afresh and never hands out a stopped context's broadcast. */
-  private def broadcastOf(spark: SparkSession, index: GridIndex): Broadcast[GridIndex] = synchronized {
-    val sc = spark.sparkContext
-    val live = shared.collect { case (c, m) if c eq sc => m }.getOrElse(Map.empty)
-    live.getOrElse(index, {
-      val b = sc.broadcast(index)
-      shared = Some((sc, live + (index -> b)))
-      b
-    })
-  }
-
   /** The catchment index ([[Synth.catchmentList]], ids = hydroid). */
-  def catchmentIndex(spark: SparkSession): Broadcast[GridIndex] = broadcastOf(spark, catchments)
+  def catchmentIndex(spark: SparkSession): Broadcast[GridIndex] = Broadcasts.of(spark, catchments)
 
   /** The exclusion-mask index ([[Synth.maskList]], ids = mask_id; the
     * masks cover ~1.7 % of the globe, so most points miss). */
-  def maskIndex(spark: SparkSession): Broadcast[GridIndex] = broadcastOf(spark, masks)
+  def maskIndex(spark: SparkSession): Broadcast[GridIndex] = Broadcasts.of(spark, masks)
 
   /** The mask_id of the exclusion mask holding the centroid of `cell` (a
     * [[Cells.BaseRes]] cell id), or [[GridIndex.Miss]]. */

@@ -11,7 +11,8 @@ import graft.synth.Synth
   *   points → PIP catchment assign → ⋈ broadcast(stages) → depth/class kernel
   *          → per-cell max mosaic
   *
-  * stages = hydrotable ⋈ broadcast(forecast) → interp (J1 + A5 fused).
+  * stages = forecast → codegen'd lookup in the broadcast rating-curve index
+  * (J1 + A5 fused, map-only: [[RatingInterp.stages]]).
   * The pixel kernel (`tools/inundation.py:427-442`):
   *   depth = max(stage − hand, 0); inundated ⇔ depth > 0;
   *   class = hydroid signed by wetness (sign convention of
@@ -27,7 +28,7 @@ object Inundate {
   /** Per-point tiles: (pid, cell, huc8, hydroid, hand, stage_m, depth, clazz). */
   def tiles(spark: SparkSession, points: DataFrame): DataFrame = {
     val assigned = SpatialJoin.assign(spark, points)
-    val stages = RatingInterp.stages(Synth.hydrotable(spark), Synth.forecast(spark))
+    val stages = RatingInterp.stages(spark, Synth.forecast(spark))
     assigned
       .join(broadcast(stages), "hydroid")
       .withColumn("depth", greatest(col("stage_m") - col("hand"), lit(0.0)))
@@ -52,17 +53,17 @@ object Inundate {
     * depth, recording which model won.
     *
     * Single pass over the fact table: the ms stage ladder is a strict subset
-    * of the fr ladder's hydroids (same hydrotable ⋈ forecast, filtered to
-    * high-order reaches), so instead of a union of two scans the plan joins
-    * `assigned` once against broadcast(fr stages) (inner) and once against
-    * broadcast(ms stages) (left), derives both depths as columns, and keeps
-    * the one mosaic exchange. At 100 TB the points scan + geocode/PIP chain
+    * of the fr ladder's hydroids (same rating curves at a 1.5× forecast,
+    * filtered to high-order reaches), so instead of a union of two scans the
+    * plan joins `assigned` once against broadcast(fr stages) (inner) and
+    * once against broadcast(ms stages) (left), derives both depths as
+    * columns, and keeps the one mosaic exchange. At 100 TB the points scan + geocode/PIP chain
     * is the dominant cost — this runs it exactly once (PlanSpec gates one
     * parquet scan in the whole plan). */
   def compositeMosaic(spark: SparkSession, sfDir: String): DataFrame = {
     val assigned = SpatialJoin.assign(spark, Synth.points(spark, sfDir))
-    val frStages = RatingInterp.stages(Synth.hydrotable(spark), Synth.forecast(spark))
-    val msStages = RatingInterp.stages(Synth.hydrotable(spark),
+    val frStages = RatingInterp.stages(spark, Synth.forecast(spark))
+    val msStages = RatingInterp.stages(spark,
         Synth.forecast(spark).withColumn("discharge", col("discharge") * lit(1.5)))
       .filter((col("hydroid") % 8) + 1 >= 5) // mainstems = high-order reaches
       .withColumnRenamed("stage_m", "stage_ms")

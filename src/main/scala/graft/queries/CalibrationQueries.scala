@@ -56,7 +56,7 @@ object CalibrationQueries {
 
     // J12 interval membership: CatFIM stage-threshold categories
     Query("q45_catfim", (s, _) => {
-      val stg = RatingInterp.stages(Synth.hydrotable(s), Synth.forecast(s))
+      val stg = RatingInterp.stages(s, Synth.forecast(s))
       stg.select(col("hydroid"), col("stage_m"),
         (lit(1.0) + (col("hydroid") % 4) * lit(0.5)).as("t_action"))
         .withColumn("category",

@@ -47,7 +47,7 @@ object HydroQueries {
 
     // J1+A5: forecast join + np.interp stage (the hot join)
     Query("q05_interp_stage", (s, _) =>
-      RatingInterp.stages(Synth.hydrotable(s), Synth.forecast(s))
+      RatingInterp.stages(s, Synth.forecast(s))
         .select(col("hydroid"), col("stage_m")),
       withCtes(ht, fc, stg)("SELECT hydroid, stage_m FROM stg")),
 

@@ -10,7 +10,7 @@ import graft.ops.RatingInterp
   * per run, `tools/inundation.py:596-606`); the Spark-native engine upgrades
   * the forecast side to a stream — each micro-batch of (feature_id,
   * discharge, event_ts) recomputes interpolated stages against the static
-  * hydrotable, with a watermark for late forecasts.
+  * rating curves, with a watermark for late forecasts.
   */
 object ForecastStream {
 
@@ -25,9 +25,10 @@ object ForecastStream {
       .groupBy(window(col("event_ts"), "5 minutes"), col("feature_id"))
       .agg(max(col("discharge")).as("discharge"), count(lit(1)).as("n_updates"))
 
-  /** Per-micro-batch stage recomputation: stream–static join + interp, via
-    * foreachBatch (the operational pattern: each batch is "a forecast run"). */
-  def stagesPerBatch(spark: SparkSession, dir: String, hydrotable: DataFrame)
+  /** Per-micro-batch stage recomputation: each batch's per-feature max
+    * discharge through the broadcast rating curves, via foreachBatch (the
+    * operational pattern: each batch is "a forecast run"). */
+  def stagesPerBatch(spark: SparkSession, dir: String)
       (sink: (DataFrame, Long) => Unit): StreamingQuery =
     spark.readStream.schema(forecastSchema).parquet(dir)
       .writeStream
@@ -35,7 +36,7 @@ object ForecastStream {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val fc = batch.select(col("feature_id"), col("discharge"))
           .groupBy("feature_id").agg(max("discharge").as("discharge"))
-        sink(RatingInterp.stages(hydrotable, fc), id)
+        sink(RatingInterp.stages(spark, fc), id)
       }
       .start()
 

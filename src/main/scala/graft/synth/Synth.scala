@@ -194,10 +194,21 @@ object Synth {
   val StageKnots = 84
   val StageStep = 0.3048
 
+  /** Knot `i`'s stage: [[hydrotable]]'s `stage` in driver arithmetic. */
+  def stageOf(i: Int): Double = i.toDouble * StageStep
+
+  /** Catchment `hydroid`'s discharge at `stage`: [[hydrotable]]'s
+    * `discharge_cms` in driver arithmetic, operation for operation, so the
+    * two agree bit for bit (spec-asserted over every row). */
+  def dischargeOf(hydroid: Long, stage: Double): Double =
+    (hydroid % 7 + 1).toDouble * stage + ((hydroid % 5).toDouble * 0.5 + 0.5) * stage * stage
+
   /** hydrotable: 84 (stage, discharge) knots per catchment; discharge is the
     * strictly-monotone synthetic rating curve
     *   q(s) = (1 + h%7)·s + (0.5 + (h%5)·0.5)·s²
-    * (Manning-shaped: linear + quadratic term; `src/add_crosswalk.py:249-261`). */
+    * (Manning-shaped: linear + quadratic term; `src/add_crosswalk.py:249-261`).
+    * Its driver-side twin ([[stageOf]], [[dischargeOf]]) builds the engine's
+    * [[graft.ops.RatingCurves]]. */
   def hydrotable(spark: SparkSession): DataFrame = {
     val cats = spark.range(0, (CatRows * CatCols).toLong).select(col("id").cast("long").as("hydroid"))
     cats

@@ -56,27 +56,36 @@ class ImpactSpec extends SparkTestBase {
     def eval(rs: Seq[(Long, Long, Long, Long)], f: (Column, Column, Column, Column) => Column) =
       rs.toDF("tn", "fn", "fp", "tp").select(f(col("tn"), col("fn"), col("fp"), col("tp")))
         .collect().toSeq.map(r => Option(r.get(0)).map(_.asInstanceOf[Double]))
-    val names = Agreement.NaStats.map(_._1)
-    names.foreach { name =>
+    (Agreement.NaStats.map(_._1) :+ "acc").foreach { name =>
       val guarded = eval(rows, Agreement.naStat(name, _, _, _, _))
       rows.zip(guarded).foreach { case (r, g) =>
         assert(g.isEmpty == (expected(name, r)._2 == 0.0), s"$name at $r: $g")
-      }
-      // where the denominator is not zero: guarded == unguarded, bit for bit
-      val live = rows.filter(r => expected(name, r)._2 != 0.0)
-      val plain = eval(live, Agreement.stat(name, _, _, _, _))
-      live.zip(plain).zip(guarded.flatten).foreach { case ((r, p), g) =>
-        assert(bits(p.get) == bits(g), s"$name at $r")
+        // where the denominator is not zero: the plain Scala double, bit for bit
+        g.foreach(v => assert(bits(v) == bits(expected(name, r)._1), s"$name at $r"))
       }
     }
-    // the unguarded statistics against the plain Scala doubles, bit for bit
-    (names :+ "acc").foreach { name =>
-      val live = rows.filter(r => expected(name, r)._2 != 0.0)
-      val plain = eval(live, Agreement.stat(name, _, _, _, _))
-      live.zip(plain).foreach { case (r, p) =>
-        assert(bits(p.get) == bits(expected(name, r)._1), s"$name at $r")
-      }
-    }
+  }
+
+  test("all-dry evaluation under ANSI mode: zero denominators give NULL metrics, not DIVIDE_BY_ZERO") {
+    import spark.implicits._
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      // two all-TN cells: tp + fp = tp + fn = tp + fp + fn = 0
+      val m = Agreement.metrics(Seq((1L, 0), (2L, 0)).toDF("cell", "agreement")).head()
+      assert(m.getAs[Long]("tn") == 2L && m.getAs[Long]("tp") == 0L)
+      Seq("csi", "tpr", "far", "mcc", "f1", "bias").foreach(s => assert(m.isNullAt(m.fieldIndex(s)), s))
+      assert(m.getAs[Double]("acc") == 1.0)
+      val full = Agreement.fullMetrics(Seq((1L, 0), (2L, 0)).toDF("cell", "agreement")).head()
+      Seq("ppv", "pnd", "bal_acc", "positive_likelihood_ratio", "prevalence_threshold")
+        .foreach(s => assert(full.isNullAt(full.fieldIndex(s)), s))
+      assert(full.getAs[Double]("tn_perc") == 100.0)
+      // an all-dry mosaic: nothing predicted wet in any combo
+      val dry = Seq((1L, 0.0), (2L, 0.0), (3L, 0.0)).toDF("cell", "depth_max")
+      assert(Agreement.masterMetrics(dry).filter(col("far").isNotNull).count() == 0L)
+      assert(Agreement.versionRegression(dry).filter(col("stat") === "far" && col("value").isNotNull)
+        .count() == 0L)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("flood impact: the reference's LEFT-merge TP equals ALL benchmark-impacted") {

@@ -38,6 +38,35 @@ class LexiconSpec extends SparkTestBase {
     assert(DedupGraph.components(Seq.empty[(String, String)].toDF("doc_a", "doc_b")).isEmpty)
   }
 
+  test("components: a round's pointer jump reuses the propagate aggregate's exchange (300-edge chain)") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    val n = 300
+    val chain = (0 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("doc_a", "doc_b")
+    val got = DedupGraph.components(chain).as[(Long, Long)].collect()
+    assert(got.length == n + 1 && got.forall(_._2 == 0L))
+    // one round over checkpointed edges and labels, as the loop runs it
+    val und = chain.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(chain.select(col("doc_b").as("src"), col("doc_a").as("dst"))).localCheckpoint()
+    val labels = und.select(col("src").as("doc_id"), col("src").as("comp")).distinct().localCheckpoint()
+    val round = DedupGraph.round(und, labels)
+    round.collect() // AQE finalizes the plan it executed
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val plan = round.queryExecution.executedPlan
+    // both sides of the self-join read the same propagate aggregate: its
+    // shuffle runs once, the other side reads it back (the labels'
+    // broadcast is reused either way, so it does not count)
+    assert(nodes(plan).exists {
+      case r: ReusedExchangeExec => r.child.isInstanceOf[ShuffleExchangeLike]
+      case _ => false
+    }, plan.toString.take(4000))
+  }
+
   test("dupComponents: exact clones and near-clones land in one cluster, keep = canonical only") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
     val d = docs(

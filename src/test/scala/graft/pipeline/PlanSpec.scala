@@ -59,6 +59,24 @@ class PlanSpec extends SparkTestBase {
     assert("""\*\(\d+\) BroadcastHashJoin""".r.findFirstIn(plan).isDefined, plan.take(1500))
   }
 
+  test("rating-curve stages: one codegen'd lookup per forecast row; tiles broadcast attributes and stages only") {
+    val stages = graft.ops.RatingInterp.stages(spark, Synth.forecast(spark))
+    val plan = physical(stages)
+    // map-only over the forecast: no knot explode, no aggregate, no exchange
+    assert(!plan.contains("Generate"), plan.take(2000))
+    assert(!plan.contains("HashAggregate"), plan.take(2000))
+    assert(!plan.contains("Exchange"), plan.take(2000))
+    assert(plan.contains("stage_lookup("), plan.take(2000))
+    // compiled to its own doGenCode, not a CodegenFallback
+    val generated = org.apache.spark.sql.execution.debug.codegenString(stages.queryExecution.executedPlan)
+    assert(generated.contains(".stage("), generated.take(3000))
+    assert("""\(\(Expression\) references\[\d+\]\)\.eval""".r.findFirstIn(generated).isEmpty,
+      generated.take(3000))
+    // the tiles plan broadcasts two tables: catchment attributes and stages
+    val tiles = physical(Inundate.tiles(spark, Synth.points(spark, sf0001)))
+    assert("BroadcastExchange".r.findAllIn(tiles).size == 2, tiles.take(4000))
+  }
+
   test("column pruning reaches the parquet scan (2-col projection reads 2 cols)") {
     val df = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select(col("l_orderkey"), col("l_quantity"))

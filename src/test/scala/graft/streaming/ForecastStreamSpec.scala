@@ -32,18 +32,18 @@ class ForecastStreamSpec extends SparkTestBase {
 
   test("per-micro-batch stage recomputation via foreachBatch (stream-static join)") {
     val dir = Files.createTempDirectory("graft_stream2").toString
-    val ht = Synth.hydrotable(spark).filter(col("hydroid") % 199 === 0).cache()
     writeBatch(dir, Seq((1000199L, 50.0, 1000L)))
     @volatile var captured: Map[Long, Double] = Map.empty
-    val q = ForecastStream.stagesPerBatch(spark, dir, ht) { (stages, _) =>
+    val q = ForecastStream.stagesPerBatch(spark, dir) { (stages, _) =>
       val m = stages.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       if (m.nonEmpty) captured = m
     }
     try {
       q.processAllAvailable()
       assert(captured.contains(199L))
-      // equals the batch interp for the same forecast
+      // equals the relational interp over the SRC knots for the same forecast
       import spark.implicits._
+      val ht = Synth.hydrotable(spark).filter(col("hydroid") % 199 === 0)
       val fc = Seq((1000199L, 50.0)).toDF("feature_id", "discharge")
       val expect = graft.ops.RatingInterp.stages(ht, fc).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -58,8 +58,7 @@ class ForecastStreamSpec extends SparkTestBase {
       .toDF("pid", "secs")
       .select(col("pid"), timestamp_seconds(col("secs")).as("event_ts"))
       .coalesce(1).write.mode("append").parquet(dir)
-    val stages = graft.ops.RatingInterp.stages(
-      Synth.hydrotable(spark), Synth.forecast(spark))
+    val stages = graft.ops.RatingInterp.stages(spark, Synth.forecast(spark))
     val q = ForecastStream.streamingTiles(spark, dir, stages)
       .writeStream.outputMode("complete").format("memory").queryName("stiles").start()
     try {
