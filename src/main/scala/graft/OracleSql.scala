@@ -1,52 +1,143 @@
 package graft
 
+import graft.geo.Cells
+
 /** DuckDB oracle SQL — textual mirrors of the engine's arithmetic. Every
   * formula here is kept in exact correspondence with the Column expressions
   * in graft.synth.Synth / graft.ops.* : only IEEE-754 +,-,*,/ on doubles,
   * exact BIGINT arithmetic, floor, and order-insensitive aggregates
   * (min/max/count/sum-of-int), so Spark and DuckDB produce bit-identical
   * values.
+  *
+  * Each closed form that more than one query needs is declared once here,
+  * as a `val` CTE or a small `def` over column names, and every query calls
+  * it; each has one engine twin:
+  *  - the catchment grid ([[hydroids]], [[hydroidOfSql]], [[latCSql]] /
+  *    [[lngCSql]], [[huc8FromHydroid]]) — [[graft.synth.Synth]]'s
+  *    `catchmentList`, `hydroidOf` and `huc8Of`;
+  *  - the cell codec ([[cellSql]] and the forms built on it: [[cellOfSql]],
+  *    [[rowSql]] / [[colSql]], [[centroidLatSql]] / [[centroidLngSql]],
+  *    [[parentSql]], [[neighboursCte]]) — [[graft.geo.Cells]];
+  *  - the terrain DEM ([[elevSql]], [[demCte]]) — [[graft.ops.Terrain]]'s
+  *    `grid`;
+  *  - the reach networks ([[net]], [[net98]]) — `StreamNet.reaches` and
+  *    `NetworkEval.confluenceNet`;
+  *  - the np.interp bracket ([[interpSql]], [[stageInterp]]) —
+  *    [[graft.ops.RatingInterp.stageExpr]];
+  *  - the rating curves ([[knots]], [[srcDischarge]]) — `Synth.stageOf` /
+  *    `Synth.dischargeOf`;
+  *  - the exact Jaccard verify ([[dsh]], [[shSz]], [[interOf]], [[jacOf]]) —
+  *    `TextOps.pairIntersect`.
   */
 object OracleSql {
 
-  /** Geocoded points from lineitem (pid = l_orderkey*8 + l_linenumber). */
-  val pts: String =
-    """pts AS (
-      |  SELECT pid,
-      |    CASE WHEN pid % 5 = 0 THEN 40.0 + ((pid * 131 + 17) % 2000) / 1000.0
-      |         ELSE ((pid * 48271 + 11) % 160000) / 1000.0 - 80.0 END AS lat,
-      |    CASE WHEN pid % 5 = 0 THEN -74.0 + ((pid * 137 + 29) % 2000) / 1000.0
-      |         ELSE ((pid * 69621 + 7) % 360000) / 1000.0 - 180.0 END AS lng,
-      |    ((pid * 97 + 13) % 5000) / 1000.0 AS hand
-      |  FROM (SELECT CAST(l_orderkey * 8 + l_linenumber AS BIGINT) AS pid FROM lineitem)
-      |)""".stripMargin
+  // ---- catchment grid: 144 × 144 catchments of 1.25° × 2.5° ----
 
-  /** Catchment assignment by grid floor arithmetic (the closed form of the
-    * engine's ray-cast PIP against the grid polygons). */
-  val asg: String =
-    """asg AS (
-      |  SELECT pid, lat, lng, hand,
-      |    CAST(floor((lat + 90.0) / 1.25) AS BIGINT) * 144
-      |      + CAST(floor((lng + 180.0) / 2.5) AS BIGINT) AS hydroid,
-      |    12 * 72057594037927936 + CAST(floor((lat + 90.0) / 180.0 * 4096.0) AS BIGINT) * 268435456
-      |      + CAST(floor((lng + 180.0) / 360.0 * 8192.0) AS BIGINT) AS cell
-      |  FROM pts
-      |)""".stripMargin
+  /** Every catchment id (hydroid = row * 144 + col) as a derived table. */
+  val hydroids: String =
+    "(SELECT a.x * 144 + b.x AS hydroid FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x))"
 
+  /** The catchment holding (lat, lng) — the closed form of the engine's
+    * ray-cast PIP against the grid polygons ([[graft.synth.Synth.hydroidOf]]). */
+  def hydroidOfSql(lat: String, lng: String): String =
+    s"CAST(floor(($lat + 90.0) / 1.25) AS BIGINT) * 144 + CAST(floor(($lng + 180.0) / 2.5) AS BIGINT)"
+
+  /** Centroid latitude / longitude of catchment `h` (`Synth.catchmentList`'s
+    * `lat_c` / `lng_c`). */
+  def latCSql(h: String): String =
+    s"(CAST(floor($h / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE) - CAST(90.0 AS DOUBLE)"
+  def lngCSql(h: String): String =
+    s"(($h % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - CAST(180.0 AS DOUBLE)"
+
+  /** HUC8 code of `hydroid` (8 × 8 catchments per HUC, 18 HUC columns). */
   val huc8FromHydroid: String =
     "lpad(CAST(CAST(floor(floor(hydroid / 144) / 8) * 18 + floor((hydroid % 144) / 8) AS BIGINT) AS VARCHAR), 8, '0')"
 
+  // ---- cell codec: cell = res << 56 | row << 28 | col ([[graft.geo.Cells]]) ----
+
+  /** Cell id of resolution `res` at (`row`, `col`) in exact BIGINT
+    * arithmetic — twin of [[graft.geo.Cells.encode]] / `encodeCol`. */
+  def cellSql(res: Int, row: String, col: String): String =
+    s"$res * 72057594037927936 + ($row) * 268435456 + ($col)"
+
+  /** Row / column of a cell id — twins of `Cells.rowOf` / `colOf`. */
+  def rowSql(cell: String): String = s"(($cell // 268435456) % 268435456)"
+  def colSql(cell: String): String = s"($cell % 268435456)"
+
+  /** Cell of resolution `res` holding (lat, lng) — twin of `Cells.rowCol` +
+    * `latLngToCellCol`. */
+  def cellOfSql(lat: String, lng: String, res: Int): String =
+    cellSql(res, s"CAST(floor(($lat + 90.0) / 180.0 * ${Cells.rows(res).toDouble}) AS BIGINT)",
+      s"CAST(floor(($lng + 180.0) / 360.0 * ${Cells.cols(res).toDouble}) AS BIGINT)")
+
+  /** Centroid latitude / longitude of a resolution-`res` cell — twins of
+    * `Cells.centroidLatCol` / `centroidLngCol`. */
+  def centroidLatSql(cell: String, res: Int): String =
+    s"(${rowSql(cell)} + CAST(0.5 AS DOUBLE)) / ${Cells.rows(res).toDouble} * 180.0 - 90.0"
+  def centroidLngSql(cell: String, res: Int): String =
+    s"(${colSql(cell)} + CAST(0.5 AS DOUBLE)) / ${Cells.cols(res).toDouble} * 360.0 - 180.0"
+
+  /** Parent of a resolution-`childRes` cell — twin of `Cells.cellToParentCol`. */
+  def parentSql(cell: String, childRes: Int, parentRes: Int): String = {
+    val shift = childRes - parentRes
+    cellSql(parentRes, s"${rowSql(cell)} >> $shift", s"${colSql(cell)} >> $shift")
+  }
+
+  /** `<name>(<keys>, ncell)`: every row of `from` once per 4-neighbour id
+    * of its [[Cells.BaseRes]] `cell` — twin of `Cells.neighbourCols`. */
+  def neighboursCte(name: String, keys: String, from: String): String =
+    s"""$name AS (
+       |  SELECT $keys,
+       |    ${cellSql(Cells.BaseRes, s"${rowSql("cell")} + dr", s"${colSql("cell")} + dc")} AS ncell
+       |  FROM $from CROSS JOIN (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) o(dr, dc)
+       |)""".stripMargin
+
+  // ---- flood map: points → catchments → stages → tiles → mosaic ----
+
+  /** Geocode of point `pid` — twins of `Synth.latCol` / `Synth.lngCol`. */
+  def latSql(pid: String): String =
+    s"""CASE WHEN $pid % 5 = 0 THEN 40.0 + (($pid * 131 + 17) % 2000) / 1000.0
+       |         ELSE (($pid * 48271 + 11) % 160000) / 1000.0 - 80.0 END""".stripMargin
+  def lngSql(pid: String): String =
+    s"""CASE WHEN $pid % 5 = 0 THEN -74.0 + (($pid * 137 + 29) % 2000) / 1000.0
+       |         ELSE (($pid * 69621 + 7) % 360000) / 1000.0 - 180.0 END""".stripMargin
+
+  /** Geocoded points from lineitem (pid = l_orderkey*8 + l_linenumber). */
+  val pts: String =
+    s"""pts AS (
+       |  SELECT pid,
+       |    ${latSql("pid")} AS lat,
+       |    ${lngSql("pid")} AS lng,
+       |    ((pid * 97 + 13) % 5000) / 1000.0 AS hand
+       |  FROM (SELECT CAST(l_orderkey * 8 + l_linenumber AS BIGINT) AS pid FROM lineitem)
+       |)""".stripMargin
+
+  /** Catchment assignment and base-resolution cell of every point. */
+  val asg: String =
+    s"""asg AS (
+       |  SELECT pid, lat, lng, hand,
+       |    ${hydroidOfSql("lat", "lng")} AS hydroid,
+       |    ${cellOfSql("lat", "lng", Cells.BaseRes)} AS cell
+       |  FROM pts
+       |)""".stripMargin
+
+  /** The 84-knot stage ladder of every catchment, (hydroid, i, stage) —
+    * `Synth.stageOf` per knot. */
+  val knots: String =
+    s"(SELECT h.hydroid, s.i, s.i * CAST(0.3048 AS DOUBLE) AS stage FROM $hydroids h, generate_series(0, 83) s(i))"
+
+  /** The synthetic rating curve's discharge at `stage` — `Synth.dischargeOf`. */
+  val srcDischarge: String =
+    """(hydroid % 7 + 1) * stage
+      |      + ((hydroid % 5) * CAST(0.5 AS DOUBLE) + CAST(0.5 AS DOUBLE)) * stage * stage""".stripMargin
+
   /** Synthetic hydrotable: 84 knots × 20736 catchments. */
   val ht: String =
-    """ht AS (
-      |  SELECT hydroid, 1000000 + hydroid AS feature_id, stage,
-      |    (hydroid % 7 + 1) * stage
-      |      + ((hydroid % 5) * CAST(0.5 AS DOUBLE) + CAST(0.5 AS DOUBLE)) * stage * stage AS discharge_cms
-      |  FROM (SELECT h.hydroid, s.i * CAST(0.3048 AS DOUBLE) AS stage
-      |        FROM (SELECT a.x * 144 + b.x AS hydroid
-      |              FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)) h,
-      |             generate_series(0, 83) s(i))
-      |)""".stripMargin
+    s"""ht AS (
+       |  SELECT hydroid, 1000000 + hydroid AS feature_id, stage,
+       |    $srcDischarge AS discharge_cms
+       |  FROM $knots
+       |)""".stripMargin
 
   val fc: String =
     """fc AS (
@@ -55,35 +146,57 @@ object OracleSql {
       |  FROM generate_series(0, 20735) t(x)
       |)""".stripMargin
 
-  /** np.interp bracketing via conditional aggregation (lake rows filtered:
-    * hydroid % 97 = 0 ⇔ LakeID ≠ -999). */
-  val stg: String =
-    """stg AS (
-      |  SELECT hydroid,
-      |    CASE WHEN max(CASE WHEN discharge_cms <= discharge THEN stage END) IS NULL THEN min(stage)
-      |         WHEN min(CASE WHEN discharge_cms > discharge THEN stage END) IS NULL THEN max(stage)
-      |         ELSE max(CASE WHEN discharge_cms <= discharge THEN stage END)
-      |            + (max(discharge) - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-      |            * (min(CASE WHEN discharge_cms > discharge THEN stage END)
-      |               - max(CASE WHEN discharge_cms <= discharge THEN stage END))
-      |            / (min(CASE WHEN discharge_cms > discharge THEN discharge_cms END)
-      |               - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-      |    END AS stage_m
-      |  FROM (SELECT ht.hydroid, ht.stage, ht.discharge_cms, fc.discharge
-      |        FROM ht JOIN fc ON ht.feature_id = fc.feature_id
-      |        WHERE ht.hydroid % 97 <> 0)
-      |  GROUP BY hydroid
-      |)""".stripMargin
+  /** np.interp(x; xp, fp) as conditional aggregation over one group's knots
+    * (xp strictly rising): clamp below, clamp above, else the bracketing
+    * segment — [[graft.ops.RatingInterp.stageExpr]]'s expression tree. */
+  def interpSql(x: String, xp: String, fp: String): String = {
+    def lo(v: String) = s"max(CASE WHEN $xp <= $x THEN $v END)"
+    def hi(v: String) = s"min(CASE WHEN $xp > $x THEN $v END)"
+    s"""CASE WHEN ${lo(fp)} IS NULL THEN min($fp)
+       |         WHEN ${hi(fp)} IS NULL THEN max($fp)
+       |         ELSE ${lo(fp)}
+       |            + (max($x) - ${lo(xp)})
+       |            * (${hi(fp)}
+       |               - ${lo(fp)})
+       |            / (${hi(xp)}
+       |               - ${lo(xp)})
+       |    END""".stripMargin
+  }
+
+  /** Stage at the forecast discharge over rows (stage, discharge_cms, discharge). */
+  val stageInterp: String = interpSql("discharge", "discharge_cms", "stage")
+
+  /** Per-catchment stage at forecast table `forecast`'s discharge (lake rows
+    * filtered: hydroid % 97 = 0 ⇔ LakeID ≠ -999). */
+  def stageCte(name: String, forecast: String): String =
+    s"""$name AS (
+       |  SELECT hydroid, $stageInterp AS stage_m
+       |  FROM (SELECT ht.hydroid, ht.stage, ht.discharge_cms, f.discharge
+       |        FROM ht JOIN $forecast f ON ht.feature_id = f.feature_id
+       |        WHERE ht.hydroid % 97 <> 0)
+       |  GROUP BY hydroid
+       |)""".stripMargin
+
+  val stg: String = stageCte("stg", "fc")
+
+  /** Depth of point `a` under stage row `s`. */
+  val depthSql: String = "CASE WHEN s.stage_m - a.hand > 0.0 THEN s.stage_m - a.hand ELSE 0.0 END"
 
   /** Per-point tile: depth/class kernel. */
   val til: String =
-    """til AS (
-      |  SELECT a.pid, a.cell, a.hydroid, a.hand, s.stage_m,
-      |    CASE WHEN s.stage_m - a.hand > 0.0 THEN s.stage_m - a.hand ELSE 0.0 END AS depth
-      |  FROM asg a JOIN stg s ON a.hydroid = s.hydroid
-      |)""".stripMargin
+    s"""til AS (
+       |  SELECT a.pid, a.cell, a.hydroid, a.hand, s.stage_m, $depthSql AS depth
+       |  FROM asg a JOIN stg s ON a.hydroid = s.hydroid
+       |)""".stripMargin
 
   val mos: String = "mos AS (SELECT cell, max(depth) AS depth_max FROM til GROUP BY cell)"
+
+  /** The mosaic's cells with their centroids, as a derived table. */
+  val mosCentroids: String =
+    s"""(SELECT cell, depth_max,
+       |          ${centroidLatSql("cell", Cells.BaseRes)} AS clat,
+       |          ${centroidLngSql("cell", Cells.BaseRes)} AS clng
+       |        FROM mos)""".stripMargin
 
   /** Exclusion mask rectangles — mirror of [[graft.synth.Synth.maskList]]. */
   val mrects: String =
@@ -96,25 +209,28 @@ object OracleSql {
       |  FROM generate_series(0, 39) t(k)
       |)""".stripMargin
 
+  /** The cell centroid (clat, clng) lies inside an exclusion mask. */
+  val maskedSql: String =
+    """EXISTS (SELECT 1 FROM mrects m
+      |           WHERE clat >= m.lat_min AND clat < m.lat_max
+      |             AND clng >= m.lng_min AND clng < m.lng_max)""".stripMargin
+
+  /** Benchmark wet flag of `cell` (0/1) — `Agreement.benchWet`. */
+  val benchWetSql: String =
+    s"CASE WHEN (${rowSql("cell")} * 31 + ${colSql("cell")} * 17) % 10 < 4 THEN 1 ELSE 0 END"
+
   /** Agreement class per cell: 0 TN / 1 FN / 2 FP / 3 TP / 4 masked
     * (`tools_shared_functions.py:400-406`); benchmark extent is a row/col
     * hash; the exclusion mask is the REAL polygon test — centroid inside any
-    * mrects rectangle (closed form of the engine's cover + ray-cast PIP). */
+    * mrects rectangle (closed form of the engine's mask-index lookup). */
   val agr: String =
-    """agr AS (
-      |  SELECT cell,
-      |    CAST(CASE WHEN EXISTS (SELECT 1 FROM mrects m
-      |           WHERE clat >= m.lat_min AND clat < m.lat_max
-      |             AND clng >= m.lng_min AND clng < m.lng_max) THEN 4
-      |         ELSE (CASE WHEN depth_max > 0.0 THEN 1 ELSE 0 END) * 2
-      |              + CASE WHEN (((cell // 268435456) % 268435456) * 31 + (cell % 268435456) * 17) % 10 < 4
-      |                THEN 1 ELSE 0 END
-      |    END AS INT) AS agreement
-      |  FROM (SELECT cell, depth_max,
-      |          (((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS clat,
-      |          ((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS clng
-      |        FROM mos)
-      |)""".stripMargin
+    s"""agr AS (
+       |  SELECT cell,
+       |    CAST(CASE WHEN $maskedSql THEN 4
+       |         ELSE (CASE WHEN depth_max > 0.0 THEN 1 ELSE 0 END) * 2 + $benchWetSql
+       |    END AS INT) AS agreement
+       |  FROM $mosCentroids
+       |)""".stripMargin
 
   // ---- web-text corpus + dedup family ----
 
@@ -168,9 +284,9 @@ object OracleSql {
       |    AND a.k2 = b.k2 AND a.k3 = b.k3 AND a.doc_id < b.doc_id
       |)""".stripMargin
 
-  // ---- shared dedup-verify chain (distinct shingle-hash table → exact
-  // Jaccard over the LSH candidate pairs) — the q16 chain, promoted to vals
-  // for the dup-graph / decontamination / heavy-hitter family ----
+  // ---- exact Jaccard verify over candidate pairs: distinct shingle-hash
+  // table → per-pair intersection → Jaccard (the oracle of
+  // `TextOps.pairIntersect`) ----
 
   val dsh: String =
     """dsh AS (SELECT DISTINCT doc_id,
@@ -178,23 +294,35 @@ object OracleSql {
 
   val shSz: String = "sz AS (SELECT doc_id, count(*) AS sz FROM dsh GROUP BY doc_id)"
 
-  val shInter: String =
-    """inter AS (
-      |  SELECT p2.doc_a, p2.doc_b, count(*) AS i
-      |  FROM prs p2 JOIN dsh a ON p2.doc_a = a.doc_id
-      |  JOIN dsh b ON p2.doc_b = b.doc_id AND a.hb = b.hb
-      |  GROUP BY p2.doc_a, p2.doc_b
-      |)""".stripMargin
+  /** `<name>`: shared distinct shingle hashes per pair of table `pairs`. */
+  def interOf(name: String, pairs: String): String =
+    s"""$name AS (
+       |  SELECT p2.doc_a, p2.doc_b, count(*) AS i
+       |  FROM $pairs p2 JOIN dsh a ON p2.doc_a = a.doc_id
+       |  JOIN dsh b ON p2.doc_b = b.doc_id AND a.hb = b.hb
+       |  GROUP BY p2.doc_a, p2.doc_b
+       |)""".stripMargin
 
-  val jacCte: String =
-    """jac AS (
-      |  SELECT p.doc_a, p.doc_b,
-      |    CAST(coalesce(i.i, 0) AS DOUBLE) / CAST(sa.sz + sb.sz - coalesce(i.i, 0) AS DOUBLE) AS jaccard
-      |  FROM prs p
-      |  LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-      |  JOIN sz sa ON sa.doc_id = p.doc_a
-      |  JOIN sz sb ON sb.doc_id = p.doc_b
-      |)""".stripMargin
+  /** `<name>`: exact Jaccard of every pair of table `pairs`, from the
+    * intersections `inter` and the sizes [[shSz]]. */
+  def jacOf(name: String, pairs: String, inter: String): String =
+    s"""$name AS (
+       |  SELECT p.doc_a, p.doc_b,
+       |    CAST(coalesce(i.i, 0) AS DOUBLE) / CAST(sa.sz + sb.sz - coalesce(i.i, 0) AS DOUBLE) AS jaccard
+       |  FROM $pairs p
+       |  LEFT JOIN $inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
+       |  JOIN sz sa ON sa.doc_id = p.doc_a
+       |  JOIN sz sb ON sb.doc_id = p.doc_b
+       |)""".stripMargin
+
+  /** The chain over the LSH candidates [[prs]]: `inter`, then `jac`. */
+  val shInter: String = interOf("inter", "prs")
+  val jacCte: String = jacOf("jac", "prs", "inter")
+
+  /** Frozen integer weight in [-1001, 1001] of word `w` — the hashed linear
+    * classifier of `QualityModels.qualityClassifier`. */
+  val wordWeight: String =
+    "((CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) % 4096) * 2654435761) % 2003 - 1001"
 
   // ---- paragraph-level dedup (q73) ----
 
@@ -253,10 +381,9 @@ object OracleSql {
   /** SRC with channel-geometry columns — mirror of
     * [[graft.ops.Calibration.srcGeom]] (same formula text). */
   val srcg: String =
-    """srcg AS (
+    s"""srcg AS (
       |  SELECT hydroid, i, stage,
-      |    (hydroid % 7 + 1) * stage
-      |      + ((hydroid % 5) * CAST(0.5 AS DOUBLE) + CAST(0.5 AS DOUBLE)) * stage * stage AS discharge_cms,
+      |    $srcDischarge AS discharge_cms,
       |    CAST(1.0 AS DOUBLE) + (hydroid % 8) * CAST(0.125 AS DOUBLE) AS length_km,
       |    CAST(0.001 AS DOUBLE) + (hydroid % 11) * CAST(0.0005 AS DOUBLE) AS slope,
       |    CAST(0.03 AS DOUBLE) + (hydroid % 6) * CAST(0.01 AS DOUBLE) AS channel_n,
@@ -265,11 +392,7 @@ object OracleSql {
       |    area_base * stage + (hydroid % 3 + 1) * CAST(20.0 AS DOUBLE) * stage * stage AS volume,
       |    area_base + (hydroid % 3 + 1) * CAST(50.0 AS DOUBLE) * stage AS bed_area,
       |    ((hydroid * 61 + 23) % 7000) / 10.0 AS bankfull_flow
-      |  FROM (SELECT h.hydroid, s.i, s.i * CAST(0.3048 AS DOUBLE) AS stage,
-      |               (h.hydroid % 13 + 5) * CAST(100.0 AS DOUBLE) AS area_base
-      |        FROM (SELECT a.x * 144 + b.x AS hydroid
-      |              FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)) h,
-      |             generate_series(0, 83) s(i))
+      |  FROM (SELECT *, (hydroid % 13 + 5) * CAST(100.0 AS DOUBLE) AS area_base FROM $knots)
       |)""".stripMargin
 
   /** Bankfull row per HydroID: argmin |bankfull_flow − Q| over stages > 0,
@@ -288,11 +411,9 @@ object OracleSql {
   /** Synthetic calibration observations + per-obs coefficients — mirrors of
     * [[graft.ops.Calibration.observations]] / [[graft.ops.Calibration.obsCoefs]]. */
   val obsu: String =
-    """obsu AS (
+    s"""obsu AS (
       |  SELECT hydroid, j.j AS j, (hydroid * 7 + j.j * 31) % 84 AS ki
-      |  FROM (SELECT a.x * 144 + b.x AS hydroid
-      |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)),
-      |       generate_series(0, 2) j(j)
+      |  FROM $hydroids, generate_series(0, 2) j(j)
       |  WHERE hydroid % 23 < 2 AND hydroid % 97 <> 0
       |)""".stripMargin
 
@@ -334,33 +455,51 @@ object OracleSql {
 
   val wet58: String = "wet58 AS (SELECT cell, clazz FROM mos58 WHERE clazz > 0)"
 
-  val nbr58: String =
-    """nbr58 AS (
-      |  SELECT cell, clazz,
-      |    12 * 72057594037927936 + (((cell // 268435456) % 268435456) + dr) * 268435456
-      |      + ((cell % 268435456) + dc) AS ncell
-      |  FROM wet58 CROSS JOIN (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) o(dr, dc)
-      |)""".stripMargin
+  val nbr58: String = neighboursCte("nbr58", "cell, clazz", "wet58")
 
-  // ---- synthetic stream network (graph ops G1-G5) ----
+  // ---- synthetic stream networks (graph ops G1-G5) ----
 
-  /** Closed-form reach network: lr = floor(h/144) % 8, lc = h % 8 (144 ≡ 0
-    * mod 8); downstream (lr−1, lc + (lc%3 − 1) clamped); lr=0 → −1. */
-  val net: String =
-    """net AS (
-      |  SELECT hydroid,
-      |    lpad(CAST(CAST(floor(floor(hydroid / 144) / 8) * 18 + floor((hydroid % 144) / 8) AS BIGINT) AS VARCHAR), 8, '0') AS huc8,
-      |    CAST(1 + hydroid % 8 AS INT) AS order_,
-      |    CAST(1.0 AS DOUBLE) + (hydroid % 8) * CAST(0.125 AS DOUBLE) AS length_km,
-      |    CAST(CASE WHEN (CAST(floor(hydroid / 144) AS BIGINT) % 8) = 0 THEN -1
-      |         ELSE (CAST(floor(hydroid / 144) AS BIGINT) - 1) * 144 + (hydroid % 144) - (hydroid % 8)
-      |              + CASE WHEN (hydroid % 8) + ((hydroid % 8) % 3 - 1) < 0
+  /** A closed-form reach table over [[hydroids]]: lr = floor(h/144) % 8,
+    * lc = h % 8 (144 ≡ 0 mod 8); a reach in row lr = 0 is an outlet (−1),
+    * any other drains to row lr − 1, column (its row start) + `downCol`. */
+  private def reachNet(name: String, downCol: String, cols: String*): String =
+    s"""$name AS (
+       |  SELECT hydroid,
+       |    ${(s"$huc8FromHydroid AS huc8" +: cols).mkString(",\n    ")},
+       |    CAST(CASE WHEN (CAST(floor(hydroid / 144) AS BIGINT) % 8) = 0 THEN -1
+       |         ELSE (CAST(floor(hydroid / 144) AS BIGINT) - 1) * 144 + (hydroid % 144) - (hydroid % 8)
+       |              + $downCol
+       |    END AS BIGINT) AS to_node
+       |  FROM $hydroids
+       |)""".stripMargin
+
+  /** The reach network (`StreamNet.reaches`): downstream column
+    * lc + (lc % 3 − 1), clamped to the row. */
+  val net: String = reachNet("net",
+    """CASE WHEN (hydroid % 8) + ((hydroid % 8) % 3 - 1) < 0
       |                       OR (hydroid % 8) + ((hydroid % 8) % 3 - 1) > 7
-      |                     THEN (hydroid % 8) ELSE (hydroid % 8) + ((hydroid % 8) % 3 - 1) END
-      |    END AS BIGINT) AS to_node
-      |  FROM (SELECT a.x * 144 + b.x AS hydroid
-      |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x))
-      |)""".stripMargin
+      |                     THEN (hydroid % 8) ELSE (hydroid % 8) + ((hydroid % 8) % 3 - 1) END""".stripMargin,
+    "CAST(1 + hydroid % 8 AS INT) AS order_",
+    "CAST(1.0 AS DOUBLE) + (hydroid % 8) * CAST(0.125 AS DOUBLE) AS length_km")
+
+  /** The merge-forming network (`NetworkEval.confluenceNet`): downstream
+    * column floor(lc / 2), so pairs of reaches meet at confluences. */
+  val net98: String = reachNet("net98", "CAST(floor((hydroid % 8) / 2) AS BIGINT)")
+
+  /** Start and end points of every reach of [[net]] matching `where`
+    * (from = the catchment centroid, to = the downstream centroid, an
+    * outlet ends one catchment row south) — `StreamNet`'s reach geometry. */
+  def reachEnds(name: String, where: String): String =
+    s"""$name AS (
+       |  SELECT hydroid,
+       |    ${latCSql("hydroid")} AS from_lat,
+       |    ${lngCSql("hydroid")} AS from_lng,
+       |    CASE WHEN to_node < 0 THEN ${latCSql("hydroid")} - CAST(1.25 AS DOUBLE)
+       |      ELSE ${latCSql("to_node")} END AS to_lat,
+       |    CASE WHEN to_node < 0 THEN ${lngCSql("hydroid")}
+       |      ELSE ${lngCSql("to_node")} END AS to_lng
+       |  FROM net$where
+       |)""".stripMargin
 
   /** Arbolate sums via recursive transitive closure (lengths are dyadic →
     * exact sums, order-insensitive). Standalone query (WITH RECURSIVE). */
@@ -399,6 +538,55 @@ object OracleSql {
       |  SELECT c.chosen AS hydroid, lp.branch
       |  FROM lp JOIN chosen c ON c.parent = lp.hydroid
       |)""".stripMargin
+
+  /** Points and routable points per HUC8 unit (q46/q105's unit status). */
+  val hagg: String =
+    s"""hagg AS (
+       |  SELECT $huc8FromHydroid AS huc8,
+       |    count(*) AS n_pts,
+       |    count(CASE WHEN hydroid % 97 <> 0 THEN 1 END) AS n_ok
+       |  FROM asg GROUP BY 1
+       |)""".stripMargin
+
+  /** Status code of every one of the 18 × 18 HUC8 units over [[hagg]]:
+    * 60 no points, 64 no routable point, else 0 (`Inundate.unitStatus`). */
+  val unitStatus: String =
+    """ust AS (
+      |  SELECT u.huc8,
+      |    CAST(CASE WHEN a.huc8 IS NULL THEN 60 WHEN a.n_ok = 0 THEN 64 ELSE 0 END AS INT) AS status,
+      |    coalesce(a.n_pts, 0) AS n_pts, coalesce(a.n_ok, 0) AS n_ok
+      |  FROM (SELECT lpad(CAST(x.x * 18 + y.x AS VARCHAR), 8, '0') AS huc8
+      |        FROM generate_series(0, 17) x(x), generate_series(0, 17) y(x)) u
+      |  LEFT JOIN hagg a ON u.huc8 = a.huc8
+      |)""".stripMargin
+
+  /** REM/HAND detrend of every point: its HAND minus its catchment's
+    * thalweg (pid % 23 = 1) minimum, −9999 where the catchment has no
+    * thalweg point: `rem(pid, hydroid, hand, rem)`, twin of `Terrain.rem`. */
+  val remCte: String =
+    """rem AS (
+      |  SELECT a.pid, a.hydroid, a.hand,
+      |    CASE WHEN z.zmin IS NULL THEN CAST(-9999.0 AS DOUBLE)
+      |         ELSE a.hand - z.zmin END AS rem
+      |  FROM asg a LEFT JOIN (SELECT hydroid, min(hand) AS zmin FROM asg WHERE pid % 23 = 1
+      |                        GROUP BY hydroid) z ON a.hydroid = z.hydroid
+      |)""".stripMargin
+
+  // ---- terrain DEM: 144 × 144 cells, gid = r * 144 + c ([[graft.ops.Terrain]]) ----
+
+  /** Elevation of cell (r, c) — exact dyadic doubles (Terrain's `elevOf`). */
+  def elevSql(r: String, c: String): String =
+    s"(($r * 31 + $c * 17) % 400) / CAST(4.0 AS DOUBLE) + $r / CAST(4.0 AS DOUBLE)"
+
+  /** `<name>`: the DEM grid (gid, r, c, elev, `cols`…) over row r.x and
+    * column c.x, keeping the cells `where` keeps — twin of `Terrain.grid`. */
+  def demCte(name: String, cols: Seq[String] = Nil, where: String = "TRUE"): String =
+    s"""$name AS (
+       |  SELECT r.x * 144 + c.x AS gid, r.x AS r, c.x AS c,
+       |    ${(s"${elevSql("r.x", "c.x")} AS elev" +: cols).mkString(",\n    ")}
+       |  FROM generate_series(0, 143) r(x), generate_series(0, 143) c(x)
+       |  WHERE $where
+       |)""".stripMargin
 
   def withRecursiveCtes(ctes: String*)(body: String): String =
     "WITH RECURSIVE " + ctes.mkString(",\n") + "\n" + body

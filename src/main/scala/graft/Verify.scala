@@ -5,7 +5,8 @@ import graft.pipeline.Snapshots
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (`tools/check_parity.py`). A
   * query's old output is deleted before it runs, so a query that fails
-  * shows as missing output rather than as a previous run's rows. */
+  * shows as missing output rather than as a previous run's rows, and the
+  * session cache is cleared after each query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -31,6 +32,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // ops cache intermediates they never unpersist; drop them so a later
+      // query never plans over this one's InMemoryRelation (as Bench does)
+      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -16,8 +16,13 @@ import org.apache.spark.sql.functions._
   * `tools/inundation.py:427-442`).
   *
   * Determinism: every operation is IEEE-754 double +,-,*,/ and floor, so the
-  * same bits come out on any engine evaluating the same formula (the DuckDB
-  * oracle mirrors these expressions textually).
+  * same bits come out on any engine evaluating the same formula. The DuckDB
+  * oracle declares each Column form once in [[graft.OracleSql]], in the same
+  * operation order: `cellSql` ([[encodeCol]]), `rowSql` / `colSql`
+  * ([[rowOfCol]] / [[colOfCol]]), `cellOfSql` ([[rowCol]] +
+  * [[latLngToCellCol]]), `centroidLatSql` / `centroidLngSql`
+  * ([[centroidLatCol]] / [[centroidLngCol]]), `parentSql`
+  * ([[cellToParentCol]]) and `neighboursCte` ([[neighbourCols]]).
   */
 object Cells {
   val RES_BITS = 56L
@@ -102,8 +107,20 @@ object Cells {
 
   // ---- Column-side codec (codegen'd Catalyst expressions, no UDF) ----
 
-  /** Formula is kept textually identical to the DuckDB oracle:
-    * row = floor((lat + 90.0) / 180.0 * 2^res), col = floor((lng + 180.0) / 360.0 * 2^(res+1)). */
+  /** Cell id of resolution `res` at (row, col) — the Column form of
+    * [[encode]] (exact long arithmetic; mirrored by `OracleSql.cellSql`). */
+  def encodeCol(res: Int, row: Column, col: Column): Column =
+    lit(res.toLong << RES_BITS) + row * lit(1L << ROW_BITS) + col
+
+  /** Row / column of a cell id Column — [[rowOf]] / [[colOf]] (mirrored by
+    * `OracleSql.rowSql` / `colSql`). */
+  def rowOfCol(cell: Column): Column =
+    shiftright(cell, ROW_BITS.toInt).bitwiseAND(lit((1L << (RES_BITS - ROW_BITS)) - 1L))
+  def colOfCol(cell: Column): Column = cell.bitwiseAND(lit((1L << ROW_BITS) - 1L))
+
+  /** Row and column of resolution `resolution` holding (lat, lng):
+    * row = floor((lat + 90.0) / 180.0 * 2^res), col = floor((lng + 180.0) /
+    * 360.0 * 2^(res+1)) — the operation order of `OracleSql.cellOfSql`. */
   def rowCol(lat: Column, lng: Column, resolution: Int): (Column, Column) = (
     floor((lat + lit(90.0)) / lit(180.0) * lit(rows(resolution).toDouble)).cast("long"),
     floor((lng + lit(180.0)) / lit(360.0) * lit(cols(resolution).toDouble)).cast("long")
@@ -111,27 +128,29 @@ object Cells {
 
   def latLngToCellCol(lat: Column, lng: Column, resolution: Int): Column = {
     val (r, c) = rowCol(lat, lng, resolution)
-    lit(resolution.toLong << RES_BITS) + r * lit(1L << ROW_BITS) + c
+    encodeCol(resolution, r, c)
   }
 
-  /** Cell-centroid latitude/longitude as Columns (codegen'd; formula mirrored
-    * textually in the oracle). Centroids are odd multiples of half the cell
-    * pitch, so they never land on integer-degree polygon edges. */
-  def centroidLatCol(cell: Column, resolution: Int): Column = {
-    val rowC = shiftright(cell, ROW_BITS.toInt).bitwiseAND(lit((1L << (RES_BITS - ROW_BITS)) - 1L))
-    (rowC + lit(0.5)) / lit(rows(resolution).toDouble) * lit(180.0) - lit(90.0)
-  }
-  def centroidLngCol(cell: Column, resolution: Int): Column = {
-    val colC = cell.bitwiseAND(lit((1L << ROW_BITS) - 1L))
-    (colC + lit(0.5)) / lit(cols(resolution).toDouble) * lit(360.0) - lit(180.0)
-  }
+  /** Cell-centroid latitude/longitude as Columns (codegen'd; mirrored by
+    * `OracleSql.centroidLatSql` / `centroidLngSql`). Centroids are odd
+    * multiples of half the cell pitch, so they never land on integer-degree
+    * polygon edges. */
+  def centroidLatCol(cell: Column, resolution: Int): Column =
+    (rowOfCol(cell) + lit(0.5)) / lit(rows(resolution).toDouble) * lit(180.0) - lit(90.0)
+  def centroidLngCol(cell: Column, resolution: Int): Column =
+    (colOfCol(cell) + lit(0.5)) / lit(cols(resolution).toDouble) * lit(360.0) - lit(180.0)
 
   /** Exact long bit arithmetic — cell ids exceed 2^53, so no double math here. */
   def cellToParentCol(cell: Column, childRes: Int, parentRes: Int): Column = {
     val shift = childRes - parentRes
-    val rowC = shiftright(cell, ROW_BITS.toInt).bitwiseAND(lit((1L << (RES_BITS - ROW_BITS)) - 1L))
-    val colC = cell.bitwiseAND(lit((1L << ROW_BITS) - 1L))
-    lit(parentRes.toLong << RES_BITS) +
-      shiftright(rowC, shift) * lit(1L << ROW_BITS) + shiftright(colC, shift)
+    encodeCol(parentRes, shiftright(rowOfCol(cell), shift), shiftright(colOfCol(cell), shift))
+  }
+
+  /** The 4-neighbour ids (row ± 1, then col ± 1) of a resolution-`res` cell;
+    * off-grid ids (row −1 / 2^res, col −1 / 2^(res+1)) match no real cell. */
+  def neighbourCols(cell: Column, res: Int): Seq[Column] = {
+    val row = rowOfCol(cell); val c = colOfCol(cell)
+    Seq(encodeCol(res, row + 1, c), encodeCol(res, row - 1, c),
+      encodeCol(res, row, c + 1), encodeCol(res, row, c - 1))
   }
 }

@@ -16,21 +16,16 @@ import graft.geo.{Cells, GridIndex}
   */
 object Agreement {
 
-  def cellRow(cell: Column): Column =
-    shiftright(cell, Cells.ROW_BITS.toInt)
-      .bitwiseAND(lit((1L << (Cells.RES_BITS - Cells.ROW_BITS)) - 1L))
-  def cellCol(cell: Column): Column = cell.bitwiseAND(lit((1L << Cells.ROW_BITS) - 1L))
-
   /** Benchmark wet flag per cell (0/1) — deterministic extent synth. */
   def benchWet(cell: Column): Column =
-    ((cellRow(cell) * 31 + cellCol(cell) * 17) % 10 < 4).cast("int")
+    ((Cells.rowOfCol(cell) * 31 + Cells.colOfCol(cell) * 17) % 10 < 4).cast("int")
 
   /** Legacy hash exclusion mask — kept for the multi-benchmark combos (q56),
     * where every combo derives a synthetic extent family from the cell id.
     * The evaluation path proper ([[agreement]]) masks by REAL exclusion
     * polygons ([[graft.synth.Synth.maskList]]). */
   def isMasked(cell: Column): Column =
-    (cellRow(cell) * 29 + cellCol(cell) * 13) % 50 === 0
+    (Cells.rowOfCol(cell) * 29 + Cells.colOfCol(cell) * 13) % 50 === 0
 
   /** mosaic + `mskd` flag (INT; 1 ⇔ the cell centroid falls inside an
     * exclusion mask polygon): one projection, the codegen'd lookup of the
@@ -255,7 +250,7 @@ object Agreement {
   def comboAgreement(cell: Column, depthMax: Column, k: Int, w: Int, t: Double): Column =
     when(isMasked(cell), lit(4))
       .otherwise((depthMax > t).cast("int") * 2 +
-        ((cellRow(cell) * 31 + cellCol(cell) * 17 + k) % 10 < w).cast("int"))
+        ((Cells.rowOfCol(cell) * 31 + Cells.colOfCol(cell) * 17 + k) % 10 < w).cast("int"))
       .cast("int")
 
   /** Per master combo, one count column per agreement code,

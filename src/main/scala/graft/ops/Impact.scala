@@ -114,15 +114,8 @@ object Impact {
   def catchmentBoundaryErrors(spark: SparkSession, mosaic: DataFrame,
       minErrorCells: Long = 3L): DataFrame = {
     val wet = mosaic.filter(col("depth_max") > 0.0).select(col("cell"))
-    val row = Agreement.cellRow(col("cell"))
-    val c = Agreement.cellCol(col("cell"))
-    val base = lit(Cells.BaseRes.toLong << Cells.RES_BITS)
-    val step = lit(1L << Cells.ROW_BITS)
-    val nbrs = wet.select(col("cell"), explode(array(
-      base + (row + 1) * step + c,
-      base + (row - 1) * step + c,
-      base + row * step + (c + 1),
-      base + row * step + (c - 1))).as("ncell"))
+    val nbrs = wet.select(col("cell"),
+      explode(array(Cells.neighbourCols(col("cell"), Cells.BaseRes): _*)).as("ncell"))
     val dry = nbrs.join(wet.select(col("cell").as("ncell"))
       .withColumn("nwet", lit(1)), Seq("ncell"), "left")
       .filter(col("nwet").isNull)

@@ -55,14 +55,13 @@ object KnnJoin {
 
   /** k-ring of a cell column as an array column (pure codegen arithmetic). */
   private def ring(cell: org.apache.spark.sql.Column, k: Int) = {
-    val rowC = shiftright(cell, Cells.ROW_BITS.toInt)
-      .bitwiseAND(lit((1L << (Cells.RES_BITS - Cells.ROW_BITS)) - 1L))
-    val colC = cell.bitwiseAND(lit((1L << Cells.ROW_BITS) - 1L))
+    val rowC = Cells.rowOfCol(cell)
+    val colC = Cells.colOfCol(cell)
     val nr = Cells.rows(Cells.CoarseRes); val nc = Cells.cols(Cells.CoarseRes)
     val cells = for { dr <- -k to k; dc <- -k to k } yield {
       val rr = rowC + dr; val cc = colC + dc
       when(rr >= 0 && rr < nr && cc >= 0 && cc < nc,
-        lit(Cells.CoarseRes.toLong << Cells.RES_BITS) + rr * lit(1L << Cells.ROW_BITS) + cc)
+        Cells.encodeCol(Cells.CoarseRes, rr, cc))
     }
     filter(array(cells: _*), c => c.isNotNull)
   }

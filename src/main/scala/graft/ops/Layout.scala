@@ -50,10 +50,8 @@ object Layout {
     * pure projection over the aggregate. */
   def zoneMaps(points: DataFrame, rLo: Long, rHi: Long, cLo: Long, cHi: Long,
       hashBuckets: Int = 64): DataFrame = {
-    val rcMask = (1L << Cells.ROW_BITS) - 1L
     val base = points.select(col("pid"),
-      shiftright(col("cell"), Cells.ROW_BITS.toInt).bitwiseAND(lit(rcMask)).as("cr"),
-      col("cell").bitwiseAND(lit(rcMask)).as("cc"))
+      Cells.rowOfCol(col("cell")).as("cr"), Cells.colOfCol(col("cell")).as("cc"))
     val zed = base.select(lit("zorder").as("layout"),
       shiftright(zkey(col("cr"), col("cc")), BucketShift).as("bucket"),
       col("cr"), col("cc"))

@@ -117,16 +117,19 @@ object Levees {
   }
 
   /** Path segments with their CoarseRes bbox-cover cells (fact side). */
-  def segsWithCover(segs: DataFrame): DataFrame =
+  def segsWithCover(segs: DataFrame): DataFrame = {
+    val (rlo, clo) = Cells.rowCol(least(col("yf"), col("yt")), least(col("xf"), col("xt")), Cells.CoarseRes)
+    val (rhi, chi) = Cells.rowCol(greatest(col("yf"), col("yt")), greatest(col("xf"), col("xt")), Cells.CoarseRes)
     segs
-      .withColumn("rlo", floor((least(col("yf"), col("yt")) + lit(90.0)) / lit(180.0) * lit(32.0)).cast("long"))
-      .withColumn("rhi", floor((greatest(col("yf"), col("yt")) + lit(90.0)) / lit(180.0) * lit(32.0)).cast("long"))
-      .withColumn("clo", floor((least(col("xf"), col("xt")) + lit(180.0)) / lit(360.0) * lit(64.0)).cast("long"))
-      .withColumn("chi", floor((greatest(col("xf"), col("xt")) + lit(180.0)) / lit(360.0) * lit(64.0)).cast("long"))
+      .withColumn("rlo", rlo)
+      .withColumn("rhi", rhi)
+      .withColumn("clo", clo)
+      .withColumn("chi", chi)
       .withColumn("rr", explode(sequence(col("rlo"), col("rhi"))))
       .withColumn("cc", explode(sequence(col("clo"), col("chi"))))
-      .withColumn("ccell", lit(5L << 56) + col("rr") * lit(1L << 28) + col("cc"))
+      .withColumn("ccell", Cells.encodeCol(Cells.CoarseRes, col("rr"), col("cc")))
       .drop("rlo", "rhi", "clo", "chi", "rr", "cc")
+  }
 
   /** Distinct (levee_id, levelpath_id) pairs whose path touches the given
     * rect family — the engine's `gpd.sjoin(buffers, levelpaths)`. */

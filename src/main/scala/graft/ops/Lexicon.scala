@@ -101,7 +101,13 @@ object Lexicon {
     * rank cuts then run over that domain-bounded table (≤ MaxWords rows per
     * language, whatever the corpus size). Rank cuts are exact integer
     * comparisons (cum·den ≥ num·N ⇔ cum ≥ ⌈q·N⌉ for integer cum), so Spark
-    * and DuckDB agree bitwise with no floating-point ceil. */
+    * and DuckDB agree bitwise with no floating-point ceil.
+    *
+    * Output schema (public): `lang` STRING, `n_docs` DOUBLE, `p50`, `p90`,
+    * `p99` and `n_max` BIGINT. `n_docs` is a DOUBLE by contract, not by
+    * accident: the DuckDB oracle's `sum(cnt)` widens to HUGEINT, which the
+    * driver reads as float64, and a result compares equal only in the same
+    * type family. The value is a small exact integer either way. */
   def lengthQuantiles(docs: DataFrame): DataFrame = {
     val lens = docs.select(col("lang"),
       least(size(split(col("text"), " ")), lit(WebCuration.MaxWords))
@@ -122,11 +128,7 @@ object Lexicon {
       .withColumn("n_docs", sum(col("cnt")).over(wAll))
     cum
       .groupBy(col("lang"))
-      // n_docs is DOUBLE on purpose: the (frozen) oracle's `sum(cnt)` widens
-      // to DuckDB HUGEINT, which the driver materializes as float64 — an
-      // INT64 spark column is value-equal but hash-different (the r5 red
-      // row). Matching the oracle's effective output type makes the hash
-      // agree; the value is a small exact integer either way.
+      // n_docs DOUBLE: the public schema (see the scaladoc)
       .agg(max(col("n_docs")).cast("double").as("n_docs"),
         min(when(col("cum") * 2 >= col("n_docs"), col("n_tokens"))).as("p50"),
         min(when(col("cum") * 10 >= col("n_docs") * 9, col("n_tokens"))).as("p90"),

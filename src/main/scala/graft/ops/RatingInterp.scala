@@ -34,7 +34,8 @@ object RatingInterp {
 
   /** Aggregation columns: given rows (stage, q, Q) grouped by catchment,
     * produce the interpolated stage. All max/min — order-insensitive and
-    * partial-aggregation (map-side combine) friendly. */
+    * partial-aggregation (map-side combine) friendly. The oracle's twin is
+    * `OracleSql.interpSql` (as `stageInterp`). */
   def stageExpr: Column = {
     val loS = max(when(col("discharge_cms") <= col("discharge"), col("stage")))
     val loQ = max(when(col("discharge_cms") <= col("discharge"), col("discharge_cms")))

@@ -37,7 +37,8 @@ object Terrain {
                                    // 12 cols ⇒ d∞ ≤ 6 to a river cell)
 
   /** Elevation closed form — exact dyadic doubles (quarters), so every
-    * engine computes the identical bit pattern. */
+    * engine computes the identical bit pattern (oracle twin:
+    * `OracleSql.elevSql`, gridded by `OracleSql.demCte`). */
   private def elevOf(r: Column, c: Column): Column =
     ((r * 31 + c * 17) % 400) / lit(4.0) + r / lit(4.0)
 

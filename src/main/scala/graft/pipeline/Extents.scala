@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.geo.Cells
-import graft.ops.Agreement
 
 final case class WetCell(clazz: Int, cell: Long)
 final case class ExtentComp(hydroid: Int, comp: Long, n_cells: Long)
@@ -29,15 +28,8 @@ object Extents {
     * clazz = hydroid by the sign convention of `tools/inundation.py:350-359`). */
   def dissolve(mosaic: DataFrame): DataFrame = {
     val wet = mosaic.filter(col("clazz") > 0).select(col("cell"), col("clazz"))
-    val row = Agreement.cellRow(col("cell"))
-    val c = Agreement.cellCol(col("cell"))
-    val base = lit(Cells.BaseRes.toLong << Cells.RES_BITS)
-    val step = lit(1L << Cells.ROW_BITS)
-    val nbr = wet.select(col("cell"), col("clazz"), explode(array(
-      base + (row + 1) * step + c,
-      base + (row - 1) * step + c,
-      base + row * step + (c + 1),
-      base + row * step + (c - 1))).as("ncell"))
+    val nbr = wet.select(col("cell"), col("clazz"),
+      explode(array(Cells.neighbourCols(col("cell"), Cells.BaseRes): _*)).as("ncell"))
     val wetN = wet.select(col("cell").as("ncell"), col("clazz"), lit(1).as("hit"))
     val deg = nbr.join(wetN, Seq("ncell", "clazz"), "left")
       .groupBy(col("cell"), col("clazz"))

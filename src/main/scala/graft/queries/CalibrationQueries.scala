@@ -42,6 +42,54 @@ object CalibrationQueries {
          |  (CAST(2.0 AS DOUBLE) * yf + x2f / (yf * yf)) / CAST(3.0 AS DOUBLE)
          |    AS yf) FROM f${k - 1})""".stripMargin)
 
+  /** CatFIM sites (q55/q75): every 41st non-lake catchment × 5 threshold
+    * magnitudes with their flows — `CatFim`'s site table. */
+  private val catfimSites: String =
+    s"""sites AS (
+       |  SELECT hydroid, m.m AS m,
+       |    CASE WHEN m.m = 0 THEN 'action' WHEN m.m = 1 THEN 'minor'
+       |         WHEN m.m = 2 THEN 'moderate' WHEN m.m = 3 THEN 'major'
+       |         ELSE 'record' END AS magnitude,
+       |    (((hydroid * 53 + 11) % 4000) / 10.0 + CAST(5.0 AS DOUBLE))
+       |      * (CAST(1.0 AS DOUBLE) + m.m * CAST(0.75 AS DOUBLE)) AS discharge
+       |  FROM $hydroids, generate_series(0, 4) m(m)
+       |  WHERE hydroid % 41 = 0 AND hydroid % 97 <> 0
+       |)""".stripMargin
+
+  /** Per-HydroID median calibration coefficient over the in-range
+    * observations (q54/q65) — `Calibration.roughness`'s median step. */
+  private val medianCoef: String =
+    """medq AS (
+      |  SELECT hydroid, sum(coef) / count(*) AS calb_hydroid
+      |  FROM (SELECT hydroid, coef,
+      |          row_number() OVER (PARTITION BY hydroid ORDER BY coef) AS rn,
+      |          count(*) OVER (PARTITION BY hydroid) AS n
+      |        FROM coefq
+      |        WHERE qsrc > CAST(0.0 AS DOUBLE)
+      |          AND chn < CAST(0.8 AS DOUBLE) AND chn > CAST(0.001 AS DOUBLE)
+      |          AND obn < CAST(0.8 AS DOUBLE) AND obn > CAST(0.001 AS DOUBLE))
+      |  WHERE rn = floor((n + 1) / 2.0) OR rn = floor((n + 2) / 2.0)
+      |  GROUP BY hydroid
+      |)""".stripMargin
+
+  /** `<name>`: the synthetic USGS rating curves (hydroid, stage, `q`,
+    * `cols`…) of the non-lake catchments matching `where` (q82/q97) —
+    * `Calibration`'s USGS ladder. */
+  private def usgsCurves(name: String, q: String, where: String, cols: String*): String = {
+    val discharge =
+      "(hydroid % 9 + 2) * stage + ((hydroid % 4) * CAST(0.3 AS DOUBLE) + CAST(0.4 AS DOUBLE)) * stage * stage"
+    s"""$name AS (
+       |  SELECT hydroid, stage,
+       |    ${(s"$discharge AS $q" +: cols).mkString(",\n    ")}
+       |  FROM $knots
+       |  WHERE $where AND hydroid % 97 <> 0
+       |)""".stripMargin
+  }
+
+  /** NWM recurrence flow of interval index `k` (0..4: 2/5/10/25/50 yr). */
+  private def recurrenceFlow(k: String): String =
+    s"(((hydroid * 37 + 19) % 3000) / 10.0 + CAST(10.0 AS DOUBLE)) * (CAST(1.0 AS DOUBLE) + $k * CAST(0.8 AS DOUBLE))"
+
   val queries: Seq[Query] = Seq(
     // G6 short-reach rating graft: donor selection by join rule
     Query("q43_rating_graft", (s, _) =>
@@ -143,18 +191,7 @@ object CalibrationQueries {
     // fallback, applied back to the SRC (src_roughness_optimization.py:276-400,546-561)
     Query("q54_roughness", (s, _) => Calibration.roughness(s),
       withCtes(srcg, obsu, obsq, coefq,
-        """medq AS (
-          |  SELECT hydroid, sum(coef) / count(*) AS calb_hydroid
-          |  FROM (SELECT hydroid, coef,
-          |          row_number() OVER (PARTITION BY hydroid ORDER BY coef) AS rn,
-          |          count(*) OVER (PARTITION BY hydroid) AS n
-          |        FROM coefq
-          |        WHERE qsrc > CAST(0.0 AS DOUBLE)
-          |          AND chn < CAST(0.8 AS DOUBLE) AND chn > CAST(0.001 AS DOUBLE)
-          |          AND obn < CAST(0.8 AS DOUBLE) AND obn > CAST(0.001 AS DOUBLE))
-          |  WHERE rn = floor((n + 1) / 2.0) OR rn = floor((n + 2) / 2.0)
-          |  GROUP BY hydroid
-          |)""".stripMargin,
+        medianCoef,
         """grpq AS (
           |  SELECT fg, sum(calb_hydroid) / count(*) AS calb_featgrp
           |  FROM (SELECT hydroid - hydroid % 2 AS fg, calb_hydroid FROM medq)
@@ -176,30 +213,10 @@ object CalibrationQueries {
     // through the rating curve (generate_categorical_fim_flows.py:148-300)
     Query("q55_catfim_flow", (s, _) => CatFim.catfimFlow(s),
       withCtes(ht, fc,
-        """sites AS (
-          |  SELECT hydroid, m.m AS m,
-          |    CASE WHEN m.m = 0 THEN 'action' WHEN m.m = 1 THEN 'minor'
-          |         WHEN m.m = 2 THEN 'moderate' WHEN m.m = 3 THEN 'major'
-          |         ELSE 'record' END AS magnitude,
-          |    (((hydroid * 53 + 11) % 4000) / 10.0 + CAST(5.0 AS DOUBLE))
-          |      * (CAST(1.0 AS DOUBLE) + m.m * CAST(0.75 AS DOUBLE)) AS discharge
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)),
-          |       generate_series(0, 4) m(m)
-          |  WHERE hydroid % 41 = 0 AND hydroid % 97 <> 0
-          |)""".stripMargin,
-        """cstg AS (
-          |  SELECT hydroid, m, magnitude, discharge,
-          |    CASE WHEN max(CASE WHEN discharge_cms <= discharge THEN stage END) IS NULL THEN min(stage)
-          |         WHEN min(CASE WHEN discharge_cms > discharge THEN stage END) IS NULL THEN max(stage)
-          |         ELSE max(CASE WHEN discharge_cms <= discharge THEN stage END)
-          |            + (max(discharge) - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |            * (min(CASE WHEN discharge_cms > discharge THEN stage END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN stage END))
-          |            / (min(CASE WHEN discharge_cms > discharge THEN discharge_cms END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |    END AS stage_m
-          |  FROM (SELECT s.hydroid, s.m, s.magnitude, s.discharge, ht.stage, ht.discharge_cms
+        catfimSites,
+        s"""cstg AS (
+           |  SELECT hydroid, m, magnitude, discharge, $stageInterp AS stage_m
+           |  FROM (SELECT s.hydroid, s.m, s.magnitude, s.discharge, ht.stage, ht.discharge_cms
           |        FROM ht JOIN sites s ON ht.hydroid = s.hydroid)
           |  GROUP BY hydroid, m, magnitude, discharge
           |)""".stripMargin)(
@@ -213,15 +230,13 @@ object CalibrationQueries {
     // consecutive thresholds (+5 past major)
     Query("q67_catfim_intervals", (s, _) => CatFim.stageIntervals(s),
       withCtes(
-        """iv AS (
+        s"""iv AS (
           |  SELECT hydroid, m.m AS m,
           |    CAST(1.0 AS DOUBLE) + (hydroid % 4) * CAST(0.5 AS DOUBLE)
           |      + m.m * ((hydroid % 3) * CAST(1.5 AS DOUBLE)) AS t,
           |    CAST(1.0 AS DOUBLE) + (hydroid % 4) * CAST(0.5 AS DOUBLE)
           |      + (m.m + 1) * ((hydroid % 3) * CAST(1.5 AS DOUBLE)) AS t_next
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)),
-          |       generate_series(0, 3) m(m)
+          |  FROM $hydroids, generate_series(0, 3) m(m)
           |  WHERE hydroid % 41 = 0 AND hydroid % 97 <> 0
           |)""".stripMargin,
         """bounds AS (
@@ -251,12 +266,11 @@ object CalibrationQueries {
           seed +: steps
         }
         withCtes(Seq(srcg,
-          """bathyd AS (
+          s"""bathyd AS (
             |  SELECT hydroid,
             |    ((hydroid * 29 + 5) % 500) / 10.0 AS missing_xs,
             |    ((hydroid * 17 + 3) % 200) / 10.0 AS missing_wp
-            |  FROM (SELECT a.x * 144 + b.x AS hydroid
-            |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x))
+            |  FROM $hydroids
             |  WHERE hydroid % 13 = 0
             |)""".stripMargin,
           """b0 AS (
@@ -300,18 +314,7 @@ object CalibrationQueries {
     Query("q65_group_roughness", (s, _) => Calibration.groupRoughness(s),
       withRecursiveCtes(net, closure, arboAgg, chosenCte, lpCte,
         srcg, obsu, obsq, coefq,
-        """medq AS (
-          |  SELECT hydroid, sum(coef) / count(*) AS calb_hydroid
-          |  FROM (SELECT hydroid, coef,
-          |          row_number() OVER (PARTITION BY hydroid ORDER BY coef) AS rn,
-          |          count(*) OVER (PARTITION BY hydroid) AS n
-          |        FROM coefq
-          |        WHERE qsrc > CAST(0.0 AS DOUBLE)
-          |          AND chn < CAST(0.8 AS DOUBLE) AND chn > CAST(0.001 AS DOUBLE)
-          |          AND obn < CAST(0.8 AS DOUBLE) AND obn > CAST(0.001 AS DOUBLE))
-          |  WHERE rn = floor((n + 1) / 2.0) OR rn = floor((n + 2) / 2.0)
-          |  GROUP BY hydroid
-          |)""".stripMargin,
+        medianCoef,
         """base65 AS (
           |  SELECT l.hydroid, l.branch AS levelpath_id, n.length_km, a.arbolate_km, m.calb_hydroid
           |  FROM lp l JOIN net n ON l.hydroid = n.hydroid
@@ -398,18 +401,7 @@ object CalibrationQueries {
     // inside the rating curve's domain, coordinate-accuracy gate
     Query("q75_catfim_sites", (s, _) => CatFim.siteAcceptance(s),
       withCtes(ht,
-        """sites AS (
-          |  SELECT hydroid, m.m AS m,
-          |    CASE WHEN m.m = 0 THEN 'action' WHEN m.m = 1 THEN 'minor'
-          |         WHEN m.m = 2 THEN 'moderate' WHEN m.m = 3 THEN 'major'
-          |         ELSE 'record' END AS magnitude,
-          |    (((hydroid * 53 + 11) % 4000) / 10.0 + CAST(5.0 AS DOUBLE))
-          |      * (CAST(1.0 AS DOUBLE) + m.m * CAST(0.75 AS DOUBLE)) AS discharge
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)),
-          |       generate_series(0, 4) m(m)
-          |  WHERE hydroid % 41 = 0 AND hydroid % 97 <> 0
-          |)""".stripMargin,
+        catfimSites,
         """thrq AS (
           |  SELECT hydroid, count(*) AS n_mags,
           |    max(CASE WHEN magnitude = 'record' THEN discharge END) AS record_flow
@@ -427,58 +419,28 @@ object CalibrationQueries {
     // recurrence-interval flows, per-gage elevation differences
     Query("q82_sierra", (s, _) => Calibration.sierraTest(s),
       withCtes(ht,
-        """usgk AS (
-          |  SELECT hydroid, stage,
-          |    (hydroid % 9 + 2) * stage
-          |      + ((hydroid % 4) * CAST(0.3 AS DOUBLE) + CAST(0.4 AS DOUBLE)) * stage * stage AS discharge_cms
-          |  FROM (SELECT h.hydroid, s.i * CAST(0.3048 AS DOUBLE) AS stage
-          |        FROM (SELECT a.x * 144 + b.x AS hydroid
-          |              FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)) h,
-          |             generate_series(0, 83) s(i))
-          |  WHERE hydroid % 199 = 0 AND hydroid % 97 <> 0
-          |)""".stripMargin,
-        """rcr AS (
-          |  SELECT hydroid,
-          |    CASE k.k WHEN 0 THEN 2 WHEN 1 THEN 5 WHEN 2 THEN 10 WHEN 3 THEN 25
-          |         ELSE 50 END AS interval,
-          |    (((hydroid * 37 + 19) % 3000) / 10.0 + CAST(10.0 AS DOUBLE))
-          |      * (CAST(1.0 AS DOUBLE) + k.k * CAST(0.8 AS DOUBLE)) AS discharge
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)),
-          |       generate_series(0, 4) k(k)
-          |  WHERE hydroid % 199 = 0 AND hydroid % 97 <> 0
-          |)""".stripMargin,
-        """fstg AS (
-          |  SELECT hydroid, interval, discharge,
-          |    CASE WHEN max(CASE WHEN discharge_cms <= discharge THEN stage END) IS NULL THEN min(stage)
-          |         WHEN min(CASE WHEN discharge_cms > discharge THEN stage END) IS NULL THEN max(stage)
-          |         ELSE max(CASE WHEN discharge_cms <= discharge THEN stage END)
-          |            + (max(discharge) - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |            * (min(CASE WHEN discharge_cms > discharge THEN stage END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN stage END))
-          |            / (min(CASE WHEN discharge_cms > discharge THEN discharge_cms END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |    END AS fim_stage
-          |  FROM (SELECT h.hydroid, h.stage, h.discharge_cms, r.interval, r.discharge
-          |        FROM ht h JOIN rcr r ON h.hydroid = r.hydroid
-          |        WHERE h.hydroid % 199 = 0 AND h.hydroid % 97 <> 0)
-          |  GROUP BY hydroid, interval, discharge
-          |)""".stripMargin,
-        """ustg AS (
-          |  SELECT hydroid, interval, discharge,
-          |    CASE WHEN max(CASE WHEN discharge_cms <= discharge THEN stage END) IS NULL THEN min(stage)
-          |         WHEN min(CASE WHEN discharge_cms > discharge THEN stage END) IS NULL THEN max(stage)
-          |         ELSE max(CASE WHEN discharge_cms <= discharge THEN stage END)
-          |            + (max(discharge) - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |            * (min(CASE WHEN discharge_cms > discharge THEN stage END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN stage END))
-          |            / (min(CASE WHEN discharge_cms > discharge THEN discharge_cms END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |    END AS usgs_stage
-          |  FROM (SELECT u.hydroid, u.stage, u.discharge_cms, r.interval, r.discharge
-          |        FROM usgk u JOIN rcr r ON u.hydroid = r.hydroid)
-          |  GROUP BY hydroid, interval, discharge
-          |)""".stripMargin)(
+        usgsCurves("usgk", "discharge_cms", "hydroid % 199 = 0"),
+        s"""rcr AS (
+           |  SELECT hydroid,
+           |    CASE k.k WHEN 0 THEN 2 WHEN 1 THEN 5 WHEN 2 THEN 10 WHEN 3 THEN 25
+           |         ELSE 50 END AS interval,
+           |    ${recurrenceFlow("k.k")} AS discharge
+           |  FROM $hydroids, generate_series(0, 4) k(k)
+           |  WHERE hydroid % 199 = 0 AND hydroid % 97 <> 0
+           |)""".stripMargin,
+        s"""fstg AS (
+           |  SELECT hydroid, interval, discharge, $stageInterp AS fim_stage
+           |  FROM (SELECT h.hydroid, h.stage, h.discharge_cms, r.interval, r.discharge
+           |        FROM ht h JOIN rcr r ON h.hydroid = r.hydroid
+           |        WHERE h.hydroid % 199 = 0 AND h.hydroid % 97 <> 0)
+           |  GROUP BY hydroid, interval, discharge
+           |)""".stripMargin,
+        s"""ustg AS (
+           |  SELECT hydroid, interval, discharge, $stageInterp AS usgs_stage
+           |  FROM (SELECT u.hydroid, u.stage, u.discharge_cms, r.interval, r.discharge
+           |        FROM usgk u JOIN rcr r ON u.hydroid = r.hydroid)
+           |  GROUP BY hydroid, interval, discharge
+           |)""".stripMargin)(
         """SELECT f.hydroid, f.interval, f.discharge AS flow, f.fim_stage,
           |  u.usgs_stage, f.fim_stage - u.usgs_stage AS elev_diff
           |FROM fstg f JOIN ustg u
@@ -572,16 +534,12 @@ object CalibrationQueries {
     // the hydrotable, discharge = postcalb / coef, provenance kept
     Query("q92_manual_calb", (s, _) => Calibration.manualCalibration(s),
       withCtes(
-        """ht92 AS (
-          |  SELECT hydroid, 1000000 + hydroid AS feature_id, i, stage,
-          |    (hydroid % 7 + 1) * stage
-          |      + ((hydroid % 5) * CAST(0.5 AS DOUBLE) + CAST(0.5 AS DOUBLE)) * stage * stage AS postcalb_discharge_cms
-          |  FROM (SELECT h.hydroid, s.i, s.i * CAST(0.3048 AS DOUBLE) AS stage
-          |        FROM (SELECT a.x * 144 + b.x AS hydroid
-          |              FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)) h,
-          |             generate_series(0, 83) s(i))
-          |  WHERE i % 7 = 0
-          |)""".stripMargin,
+        s"""ht92 AS (
+           |  SELECT hydroid, 1000000 + hydroid AS feature_id, i, stage,
+           |    $srcDischarge AS postcalb_discharge_cms
+           |  FROM $knots
+           |  WHERE i % 7 = 0
+           |)""".stripMargin,
         """man AS (
           |  SELECT 1000000 + x AS feature_id,
           |    ((1000000 + x) % 9 + 2) / CAST(4.0 AS DOUBLE) AS calb_coef_manual
@@ -599,27 +557,14 @@ object CalibrationQueries {
     // recurrence flow (as-of join), HAND and 10%-variance quality gates
     Query("q97_ras2fim_rating", (s, _) => Calibration.ras2fimRating(s),
       withCtes(
-        """c97 AS (
-          |  SELECT hydroid, stage,
-          |    (hydroid % 9 + 2) * stage
-          |      + ((hydroid % 4) * CAST(0.3 AS DOUBLE) + CAST(0.4 AS DOUBLE)) * stage * stage AS q_ras,
-          |    stage - CAST(0.25 AS DOUBLE) AS hand
-          |  FROM (SELECT h.hydroid, s.i * CAST(0.3048 AS DOUBLE) AS stage
-          |        FROM (SELECT a.x * 144 + b.x AS hydroid
-          |              FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)) h,
-          |             generate_series(0, 83) s(i))
-          |  WHERE hydroid % 31 = 5 AND hydroid % 97 <> 0
-          |)""".stripMargin,
-        """r97 AS (
-          |  SELECT hydroid,
-          |    ['2_0_year','5_0_year','10_0_year','25_0_year','50_0_year'][k.k + 1] AS nwm_recur,
-          |    (((hydroid * 37 + 19) % 3000) / 10.0 + CAST(10.0 AS DOUBLE))
-          |      * (CAST(1.0 AS DOUBLE) + k.k * CAST(0.8 AS DOUBLE)) AS nwm_recur_flow_cms
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x)),
-          |       generate_series(0, 4) k(k)
-          |  WHERE hydroid % 31 = 5 AND hydroid % 97 <> 0
-          |)""".stripMargin,
+        usgsCurves("c97", "q_ras", "hydroid % 31 = 5", "stage - CAST(0.25 AS DOUBLE) AS hand"),
+        s"""r97 AS (
+           |  SELECT hydroid,
+           |    ['2_0_year','5_0_year','10_0_year','25_0_year','50_0_year'][k.k + 1] AS nwm_recur,
+           |    ${recurrenceFlow("k.k")} AS nwm_recur_flow_cms
+           |  FROM $hydroids, generate_series(0, 4) k(k)
+           |  WHERE hydroid % 31 = 5 AND hydroid % 97 <> 0
+           |)""".stripMargin,
         """j97 AS (
           |  SELECT c.hydroid, r.nwm_recur, r.nwm_recur_flow_cms, c.stage, c.hand, c.q_ras,
           |    row_number() OVER (PARTITION BY c.hydroid, r.nwm_recur

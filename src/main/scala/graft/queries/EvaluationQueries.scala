@@ -2,6 +2,7 @@ package graft
 package queries
 
 import org.apache.spark.sql.functions._
+import graft.geo.Cells
 import graft.ops._
 import graft.pipeline.Inundate
 import graft.synth.Synth
@@ -20,18 +21,11 @@ object EvaluationQueries {
     }.mkString(", ")
     Seq(pts, asg, ht, fc, stg, til, mos,
       s"""cmb AS (SELECT * FROM (VALUES $combos) v(bench, mag, k, w, t))""",
-      """mcn AS (
-        |  SELECT cell, depth_max,
-        |    (((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS clat,
-        |    ((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS clng
-        |  FROM mos
-        |)""".stripMargin,
       s"""agh AS (
-         |  SELECT CAST(floor((clat + 90.0) / 1.25) AS BIGINT) * 144
-         |           + CAST(floor((clng + 180.0) / 2.5) AS BIGINT) AS hydroid,
+         |  SELECT ${hydroidOfSql("clat", "clng")} AS hydroid,
          |    bench, mag,
          |    ${agreementSql("k", "w", "t")} AS agreement
-         |  FROM mcn CROSS JOIN cmb
+         |  FROM $mosCentroids CROSS JOIN cmb
          |)""".stripMargin,
       classCountCte("c95", Seq("hydroid", s"$huc8FromHydroid AS huc8", "bench", "mag"),
         "agh GROUP BY hydroid, bench, mag"))
@@ -86,8 +80,8 @@ object EvaluationQueries {
     * [[graft.ops.Agreement.comboAgreement]]: masked (4), else the prediction
     * at threshold `t` against the row/column-hashed benchmark extent. */
   private def agreementSql(k: String, w: String, t: String): String = {
-    val row = "((cell // 268435456) % 268435456)"
-    val colc = "(cell % 268435456)"
+    val row = rowSql("cell")
+    val colc = colSql("cell")
     s"""CASE WHEN ($row * 29 + $colc * 13) % 50 = 0 THEN 4
        |     ELSE (CASE WHEN depth_max > $t THEN 1 ELSE 0 END) * 2
        |          + CASE WHEN ($row * 31 + $colc * 17 + $k) % 10 < $w THEN 1 ELSE 0 END
@@ -311,16 +305,7 @@ object EvaluationQueries {
     // forecast discharge, SAPE error term, sparse-forecast fillna(0) path
     Query("q98_continuity", (s, _) => NetworkEval.continuity(s),
       withCtes(
-        """net98 AS (
-          |  SELECT hydroid,
-          |    lpad(CAST(CAST(floor(floor(hydroid / 144) / 8) * 18 + floor((hydroid % 144) / 8) AS BIGINT) AS VARCHAR), 8, '0') AS huc8,
-          |    CAST(CASE WHEN (CAST(floor(hydroid / 144) AS BIGINT) % 8) = 0 THEN -1
-          |         ELSE (CAST(floor(hydroid / 144) AS BIGINT) - 1) * 144 + (hydroid % 144)
-          |              - (hydroid % 8) + CAST(floor((hydroid % 8) / 2) AS BIGINT)
-          |    END AS BIGINT) AS to_node
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x))
-          |)""".stripMargin,
+        net98,
         """flw AS (
           |  SELECT hydroid, huc8, to_node,
           |    CASE WHEN (hydroid + 1000000) % 5 <> 2
@@ -364,42 +349,16 @@ object EvaluationQueries {
       withCtes(pts, asg, ht, fc, stg, til, mos, net,
         "wetb AS (SELECT cell FROM mos WHERE depth_max > CAST(0.5 AS DOUBLE))",
         "wett AS (SELECT cell FROM mos WHERE depth_max > CAST(0.25 AS DOUBLE) AND cell % 7 <> 3)",
-        """stc AS (
-          |  SELECT objectid, 'structure' AS ftype,
-          |    12 * 72057594037927936
-          |      + CAST(floor((lat + 90.0) / 180.0 * 4096.0) AS BIGINT) * 268435456
-          |      + CAST(floor((lng + 180.0) / 360.0 * 8192.0) AS BIGINT) AS cell
-          |  FROM (SELECT objectid,
-          |          CASE WHEN pid % 5 = 0 THEN 40.0 + ((pid * 131 + 17) % 2000) / 1000.0
-          |               ELSE ((pid * 48271 + 11) % 160000) / 1000.0 - 80.0 END AS lat,
-          |          CASE WHEN pid % 5 = 0 THEN -74.0 + ((pid * 137 + 29) % 2000) / 1000.0
-          |               ELSE ((pid * 69621 + 7) % 360000) / 1000.0 - 180.0 END AS lng
-          |        FROM (SELECT x AS objectid, x * 13 + 7 AS pid
-          |              FROM generate_series(0, 4999) t(x)))
-          |)""".stripMargin,
-        """rd0 AS (
-          |  SELECT hydroid,
-          |    (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |      - CAST(90.0 AS DOUBLE) AS from_lat,
-          |    ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE)
-          |      - CAST(180.0 AS DOUBLE) AS from_lng,
-          |    CASE WHEN to_node < 0
-          |      THEN (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |           - CAST(90.0 AS DOUBLE) - CAST(1.25 AS DOUBLE)
-          |      ELSE (CAST(floor(to_node / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |           - CAST(90.0 AS DOUBLE) END AS to_lat,
-          |    CASE WHEN to_node < 0
-          |      THEN ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - CAST(180.0 AS DOUBLE)
-          |      ELSE ((to_node % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - CAST(180.0 AS DOUBLE)
-          |    END AS to_lng
-          |  FROM net
-          |)""".stripMargin,
-        """rds AS (
-          |  SELECT hydroid AS objectid, 'road' AS ftype,
-          |    12 * 72057594037927936
-          |      + CAST(floor((lat + 90.0) / 180.0 * 4096.0) AS BIGINT) * 268435456
-          |      + CAST(floor((lng + 180.0) / 360.0 * 8192.0) AS BIGINT) AS cell
-          |  FROM (SELECT hydroid,
+        s"""stc AS (
+           |  SELECT objectid, 'structure' AS ftype, ${cellOfSql("lat", "lng", Cells.BaseRes)} AS cell
+           |  FROM (SELECT objectid, ${latSql("pid")} AS lat, ${lngSql("pid")} AS lng
+           |        FROM (SELECT x AS objectid, x * 13 + 7 AS pid
+           |              FROM generate_series(0, 4999) t(x)))
+           |)""".stripMargin,
+        reachEnds("rd0", ""),
+        s"""rds AS (
+           |  SELECT hydroid AS objectid, 'road' AS ftype, ${cellOfSql("lat", "lng", Cells.BaseRes)} AS cell
+           |  FROM (SELECT hydroid,
           |          from_lat + (j.j / CAST(4.0 AS DOUBLE)) * (to_lat - from_lat) AS lat,
           |          from_lng + (j.j / CAST(4.0 AS DOUBLE)) * (to_lng - from_lng) AS lng
           |        FROM rd0 CROSS JOIN generate_series(0, 4) j(j))
@@ -435,12 +394,7 @@ object EvaluationQueries {
     Query("q110_deep_flooding", (s, dir) =>
       Impact.deepFlooding(s, Inundate.run(s, dir)),
       withCtes(pts, asg, ht, fc, stg, til, mos, mrects,
-        """mc10 AS (
-          |  SELECT cell, depth_max,
-          |    (((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS clat,
-          |    ((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS clng
-          |  FROM mos
-          |)""".stripMargin,
+        s"mc10 AS (SELECT * FROM $mosCentroids)",
         """df10 AS (
           |  SELECT m.mask_id, c.depth_max
           |  FROM mc10 c JOIN mrects m
@@ -463,36 +417,26 @@ object EvaluationQueries {
       Impact.catchmentBoundaryErrors(s, Inundate.run(s, dir)),
       withCtes(pts, asg, ht, fc, stg, til, mos,
         "wetc AS (SELECT cell FROM mos WHERE depth_max > CAST(0.0 AS DOUBLE))",
-        """nb12 AS (
-          |  SELECT cell, 12 * 72057594037927936
-          |    + (((cell // 268435456) % 268435456) + dr) * 268435456
-          |    + ((cell % 268435456) + dc) AS ncell
-          |  FROM wetc CROSS JOIN (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) o(dr, dc)
-          |)""".stripMargin,
+        neighboursCte("nb12", "cell", "wetc"),
         """dr12 AS (
           |  SELECT n.cell, n.ncell FROM nb12 n
           |  LEFT JOIN wetc w ON n.ncell = w.cell WHERE w.cell IS NULL
           |)""".stripMargin,
-        """hy12 AS (
-          |  SELECT cell, ncell,
-          |    (((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS clat,
-          |    ((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS clng,
-          |    (((ncell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS nlat,
-          |    ((ncell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS nlng
-          |  FROM dr12
-          |)""".stripMargin,
-        """er12 AS (
-          |  SELECT CAST(floor((clat + 90.0) / 1.25) AS BIGINT) * 144
-          |           + CAST(floor((clng + 180.0) / 2.5) AS BIGINT) AS hydroid,
-          |    cell
-          |  FROM hy12
-          |  WHERE nlat >= CAST(-90.0 AS DOUBLE) AND nlat < CAST(90.0 AS DOUBLE)
-          |    AND nlng >= CAST(-180.0 AS DOUBLE) AND nlng < CAST(180.0 AS DOUBLE)
-          |    AND (CAST(floor((clat + 90.0) / 1.25) AS BIGINT) * 144
-          |           + CAST(floor((clng + 180.0) / 2.5) AS BIGINT))
-          |        <> (CAST(floor((nlat + 90.0) / 1.25) AS BIGINT) * 144
-          |           + CAST(floor((nlng + 180.0) / 2.5) AS BIGINT))
-          |)""".stripMargin)(
+        s"""hy12 AS (
+           |  SELECT cell, ncell,
+           |    ${centroidLatSql("cell", Cells.BaseRes)} AS clat,
+           |    ${centroidLngSql("cell", Cells.BaseRes)} AS clng,
+           |    ${centroidLatSql("ncell", Cells.BaseRes)} AS nlat,
+           |    ${centroidLngSql("ncell", Cells.BaseRes)} AS nlng
+           |  FROM dr12
+           |)""".stripMargin,
+        s"""er12 AS (
+           |  SELECT ${hydroidOfSql("clat", "clng")} AS hydroid, cell
+           |  FROM hy12
+           |  WHERE nlat >= CAST(-90.0 AS DOUBLE) AND nlat < CAST(90.0 AS DOUBLE)
+           |    AND nlng >= CAST(-180.0 AS DOUBLE) AND nlng < CAST(180.0 AS DOUBLE)
+           |    AND (${hydroidOfSql("clat", "clng")}) <> (${hydroidOfSql("nlat", "nlng")})
+           |)""".stripMargin)(
         """SELECT hydroid, count(DISTINCT cell) AS n_error_cells
           |FROM er12 GROUP BY hydroid HAVING count(DISTINCT cell) >= 3""".stripMargin)),
 
@@ -500,24 +444,14 @@ object EvaluationQueries {
     // per stream order
     Query("q113_missing_fim", (s, dir) =>
       Impact.missingFim(s, SpatialJoin.assign(s, Synth.points(s, dir))),
-      withCtes(pts, asg,
-        """zm AS (
-          |  SELECT hydroid, min(hand) AS zmin FROM asg WHERE pid % 23 = 1
-          |  GROUP BY hydroid
-          |)""".stripMargin,
-        """rm13 AS (
-          |  SELECT a.pid, a.hydroid,
-          |    CASE WHEN z.zmin IS NULL THEN CAST(-9999.0 AS DOUBLE)
-          |         ELSE a.hand - z.zmin END AS rem
-          |  FROM asg a LEFT JOIN zm z ON a.hydroid = z.hydroid
-          |)""".stripMargin,
+      withCtes(pts, asg, remCte,
         """ph13 AS (
           |  SELECT CAST(hydroid % 8 + 1 AS INT) AS order_, hydroid,
           |    count(*) AS n_cells,
           |    count(CASE WHEN rem = CAST(0.0 AS DOUBLE) THEN 1 END) AS n_rem0
-          |  FROM rm13 GROUP BY 1, 2
+          |  FROM rem GROUP BY 1, 2
           |)""".stripMargin,
-        "tt13 AS (SELECT count(*) AS n_total FROM rm13)")(
+        "tt13 AS (SELECT count(*) AS n_total FROM rem)")(
         """SELECT order_, count(*) AS n_hydroids,
           |  CAST(sum(n_cells) AS BIGINT) AS n_cells,
           |  CAST(sum(n_rem0) AS BIGINT) AS n_rem0_cells,
@@ -538,20 +472,14 @@ object EvaluationQueries {
       withCtes(pts, asg, ht, fc, stg, til, mos, mrects,
         """pair AS (SELECT * FROM (VALUES (0,0,0), (0,1,1), (1,0,2), (1,1,3),
           |  (2,0,4), (2,1,5), (4,0,6), (4,1,6)) v(cand, bench, agreement))""".stripMargin,
-        """cb AS (
-          |  SELECT cell,
-          |    CASE WHEN EXISTS (SELECT 1 FROM mrects m
-          |           WHERE clat >= m.lat_min AND clat < m.lat_max
-          |             AND clng >= m.lng_min AND clng < m.lng_max) THEN 4
-          |         WHEN depth_max > CAST(0.5 AS DOUBLE) THEN 2
-          |         WHEN depth_max > 0.0 THEN 1 ELSE 0 END AS cand,
-          |    CASE WHEN (((cell // 268435456) % 268435456) * 31 + (cell % 268435456) * 17) % 10 < 4
-          |         THEN 1 ELSE 0 END AS bench
-          |  FROM (SELECT cell, depth_max,
-          |          (((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS clat,
-          |          ((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS clng
-          |        FROM mos)
-          |)""".stripMargin)(
+        s"""cb AS (
+           |  SELECT cell,
+           |    CASE WHEN $maskedSql THEN 4
+           |         WHEN depth_max > CAST(0.5 AS DOUBLE) THEN 2
+           |         WHEN depth_max > 0.0 THEN 1 ELSE 0 END AS cand,
+           |    $benchWetSql AS bench
+           |  FROM $mosCentroids
+           |)""".stripMargin)(
         """SELECT p.agreement, count(*) AS n
           |FROM cb JOIN pair p ON cb.cand = p.cand AND cb.bench = p.bench
           |GROUP BY 1""".stripMargin)))

@@ -13,6 +13,41 @@ import OracleSql._
   * the raster products built on them. */
 object HydroQueries {
 
+  /** Centroids (hydroid, lat_c, lng_c) of the 105 gage catchments (hydroid
+    * = 199·x) — the kNN target table of q09/q47/q48. */
+  private val gageCentroids: String =
+    s"""gc AS (
+       |  SELECT hydroid, ${latCSql("hydroid")} AS lat_c, ${lngCSql("hydroid")} AS lng_c
+       |  FROM (SELECT 199 * x AS hydroid FROM generate_series(0, 104) t(x))
+       |)""".stripMargin
+
+  /** `d`: every (point of `points`, gage) pair within the 5° distance cap. */
+  private def gageDistances(points: String): String = {
+    val d2 = "(p.lat - gc.lat_c) * (p.lat - gc.lat_c) + (p.lng - gc.lng_c) * (p.lng - gc.lng_c)"
+    s"""d AS (
+       |  SELECT p.pid, gc.hydroid, $d2 AS d2
+       |  FROM $points p CROSS JOIN gc
+       |  WHERE $d2 <= 25.0
+       |)""".stripMargin
+  }
+
+  /** River flag of a [[demCte]] cell (Terrain.grid's `river`). */
+  private val riverCol = "CASE WHEN c.x % 12 = 5 OR r.x % 36 = 18 THEN 1 ELSE 0 END AS river"
+
+  /** Elevation of DEM cell `gid`. */
+  private def gidElevSql(gid: String): String = elevSql(s"($gid // 144)", s"($gid % 144)")
+
+  /** Nearest candidate within Chebyshev 6 as a packed
+    * min(d² · 2²⁰ + gid) — Terrain's block-halo argmin (q100/q115). */
+  private def nnSql(probe: String, cand: String, filter: String): String =
+    s"""SELECT g.gid, min(CAST((v.r - g.r) * (v.r - g.r)
+       |    + (v.c - g.c) * (v.c - g.c) AS BIGINT) * 1048576 + v.gid) AS packed
+       |  FROM $probe g JOIN $cand v
+       |    ON $filter
+       |    AND v.r BETWEEN g.r - 6 AND g.r + 6
+       |    AND v.c BETWEEN g.c - 6 AND g.c + 6
+       |  GROUP BY g.gid""".stripMargin
+
   val queries: Seq[Query] = Seq(
     // S1-S4 scan + deterministic geocode synthesis (§2.10 #6)
     Query("q01_geocode", (s, dir) =>
@@ -25,10 +60,7 @@ object HydroQueries {
         col("pid"), col("cell"),
         Cells.cellToParentCol(col("cell"), Cells.BaseRes, Cells.CoarseRes).as("parent5")),
       withCtes(pts, asg)(
-        """SELECT pid, cell,
-          |  5 * 72057594037927936 + (((cell // 268435456) % 268435456) >> 7) * 268435456
-          |    + ((cell % 268435456) >> 7) AS parent5
-          |FROM asg""".stripMargin)),
+        s"SELECT pid, cell, ${parentSql("cell", Cells.BaseRes, Cells.CoarseRes)} AS parent5 FROM asg")),
 
     // J3 point-in-polygon broadcast join (core custom operator)
     Query("q03_pip_join", (s, dir) =>
@@ -86,20 +118,8 @@ object HydroQueries {
       KnnJoin.nearestGage(s, Synth.points(s, dir)).select(
         col("pid"), col("nn_hydroid").cast("long").as("nn_hydroid"), col("nn_dist2")),
       withCtes(pts,
-        """gc AS (
-          |  SELECT hydroid,
-          |    (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |      - CAST(90.0 AS DOUBLE) AS lat_c,
-          |    ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE)
-          |      - CAST(180.0 AS DOUBLE) AS lng_c
-          |  FROM (SELECT 199 * x AS hydroid FROM generate_series(0, 104) t(x))
-          |)""".stripMargin,
-        """d AS (
-          |  SELECT p.pid, gc.hydroid,
-          |    (p.lat - gc.lat_c) * (p.lat - gc.lat_c) + (p.lng - gc.lng_c) * (p.lng - gc.lng_c) AS d2
-          |  FROM pts p CROSS JOIN gc
-          |  WHERE (p.lat - gc.lat_c) * (p.lat - gc.lat_c) + (p.lng - gc.lng_c) * (p.lng - gc.lng_c) <= 25.0
-          |)""".stripMargin,
+        gageCentroids,
+        gageDistances("pts"),
         "m AS (SELECT pid, min(d2) AS md FROM d GROUP BY pid)")(
         """SELECT p.pid, w.nn_hydroid, w.nn_dist2
           |FROM (SELECT DISTINCT pid FROM pts) p LEFT JOIN (
@@ -113,11 +133,9 @@ object HydroQueries {
         col("ccell"), col("pid"), col("hand"), 32)
         .select(col("k"), col("n"), col("mx")),
       withCtes(pts)(
-        """SELECT 5 * 72057594037927936
-          |    + CAST(floor((lat + 90.0) / 180.0 * 32.0) AS BIGINT) * 268435456
-          |    + CAST(floor((lng + 180.0) / 360.0 * 64.0) AS BIGINT) AS k,
-          |  count(*) AS n, max(hand) AS mx
-          |FROM pts GROUP BY 1""".stripMargin)),
+        s"""SELECT ${cellOfSql("lat", "lng", Cells.CoarseRes)} AS k,
+           |  count(*) AS n, max(hand) AS mx
+           |FROM pts GROUP BY 1""".stripMargin)),
 
     // ---- graph ops (§2.9) over the synthetic stream network ----
     // network synthesis (reach table)
@@ -234,28 +252,15 @@ object HydroQueries {
         .agg(min(col("hand")).as("hand_min"), count(lit(1)).as("n_samples"))
     },
       withCtes(pts, asg,
-        """gc AS (
-          |  SELECT hydroid,
-          |    (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |      - CAST(90.0 AS DOUBLE) AS lat_c,
-          |    ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE)
-          |      - CAST(180.0 AS DOUBLE) AS lng_c
-          |  FROM (SELECT 199 * x AS hydroid FROM generate_series(0, 104) t(x))
-          |)""".stripMargin,
-        """g48 AS (
-          |  SELECT hydroid AS gage_id,
-          |    5 * 72057594037927936
-          |      + CAST(floor((lat_c + 90.0) / 180.0 * 32.0) AS BIGINT) * 268435456
-          |      + CAST(floor((lng_c + 180.0) / 360.0 * 64.0) AS BIGINT) AS ccell
-          |  FROM gc
-          |)""".stripMargin)(
-        """SELECT g.gage_id, min(p.hand) AS hand_min, count(*) AS n_samples
-          |FROM g48 g JOIN (SELECT pid, hand,
-          |    5 * 72057594037927936
-          |      + CAST(floor((lat + 90.0) / 180.0 * 32.0) AS BIGINT) * 268435456
-          |      + CAST(floor((lng + 180.0) / 360.0 * 64.0) AS BIGINT) AS ccell
-          |  FROM pts) p ON p.ccell = g.ccell
-          |GROUP BY g.gage_id""".stripMargin)),
+        gageCentroids,
+        s"""g48 AS (
+           |  SELECT hydroid AS gage_id, ${cellOfSql("lat_c", "lng_c", Cells.CoarseRes)} AS ccell
+           |  FROM gc
+           |)""".stripMargin)(
+        s"""SELECT g.gage_id, min(p.hand) AS hand_min, count(*) AS n_samples
+           |FROM g48 g JOIN (SELECT pid, hand, ${cellOfSql("lat", "lng", Cells.CoarseRes)} AS ccell
+           |  FROM pts) p ON p.ccell = g.ccell
+           |GROUP BY g.gage_id""".stripMargin)),
 
     // J5 conflation: per-catchment gage by majority vote of member points
     Query("q47_knn_mode", (s, dir) => {
@@ -263,20 +268,8 @@ object HydroQueries {
       KnnJoin.modeConflation(SpatialJoin.assign(s, pts), KnnJoin.nearestGage(s, pts))
     },
       withCtes(pts, asg,
-        """gc AS (
-          |  SELECT hydroid,
-          |    (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |      - CAST(90.0 AS DOUBLE) AS lat_c,
-          |    ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE)
-          |      - CAST(180.0 AS DOUBLE) AS lng_c
-          |  FROM (SELECT 199 * x AS hydroid FROM generate_series(0, 104) t(x))
-          |)""".stripMargin,
-        """d AS (
-          |  SELECT p.pid, gc.hydroid,
-          |    (p.lat - gc.lat_c) * (p.lat - gc.lat_c) + (p.lng - gc.lng_c) * (p.lng - gc.lng_c) AS d2
-          |  FROM (SELECT DISTINCT pid, lat, lng FROM pts) p CROSS JOIN gc
-          |  WHERE (p.lat - gc.lat_c) * (p.lat - gc.lat_c) + (p.lng - gc.lng_c) * (p.lng - gc.lng_c) <= 25.0
-          |)""".stripMargin,
+        gageCentroids,
+        gageDistances("(SELECT DISTINCT pid, lat, lng FROM pts)"),
         "m AS (SELECT pid, min(d2) AS md FROM d GROUP BY pid)",
         """nnf AS (
           |  SELECT d.pid, min(d.hydroid) AS nn
@@ -315,12 +308,12 @@ object HydroQueries {
         """mos70 AS (
           |  SELECT cell, max(depth) AS depth_max, count(*) AS n_points FROM til GROUP BY cell
           |)""".stripMargin,
-        """cen70 AS (
-          |  SELECT cell, depth_max, n_points,
-          |    (((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0 AS clat,
-          |    ((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0 AS clng
-          |  FROM mos70
-          |)""".stripMargin)(
+        s"""cen70 AS (
+           |  SELECT cell, depth_max, n_points,
+           |    ${centroidLatSql("cell", Cells.BaseRes)} AS clat,
+           |    ${centroidLngSql("cell", Cells.BaseRes)} AS clng
+           |  FROM mos70
+           |)""".stripMargin)(
         """SELECT CAST(floor((clat + 90.0 - CAST(0.02 AS DOUBLE)) / 180.0 * 2048.0) AS BIGINT) * 4096
           |    + CAST(floor((clng + 180.0 - CAST(0.02 AS DOUBLE)) / 360.0 * 4096.0) AS BIGINT) AS tcell,
           |  max(depth_max) AS depth_max, count(*) AS n_src,
@@ -348,14 +341,13 @@ object HydroQueries {
         .distinct()
     },
       withCtes(mrects,
-        """cbx AS (
+        s"""cbx AS (
           |  SELECT hydroid,
           |    CAST(floor(hydroid / 144) AS BIGINT) * CAST(1.25 AS DOUBLE) - CAST(90.0 AS DOUBLE) AS lat_min,
           |    (CAST(floor(hydroid / 144) AS BIGINT) + 1) * CAST(1.25 AS DOUBLE) - CAST(90.0 AS DOUBLE) AS lat_max,
           |    (hydroid % 144) * CAST(2.5 AS DOUBLE) - CAST(180.0 AS DOUBLE) AS lng_min,
           |    ((hydroid % 144) + 1) * CAST(2.5 AS DOUBLE) - CAST(180.0 AS DOUBLE) AS lng_max
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x))
+          |  FROM $hydroids
           |)""".stripMargin)(
         """SELECT hydroid, mask_id, ilat * ilng AS inter_deg2
           |FROM (SELECT c.hydroid, m.mask_id,
@@ -386,23 +378,10 @@ object HydroQueries {
         """wetm AS (
           |  SELECT cell, CAST(CASE WHEN depth_max > 0.0 THEN 1 ELSE 0 END AS INT) AS wet FROM mos
           |)""".stripMargin)(
-        """SELECT 10 AS res,
-          |  10 * 72057594037927936 + (((cell // 268435456) % 268435456) >> 2) * 268435456
-          |    + ((cell % 268435456) >> 2) AS tile,
-          |  count(*) AS n_cells, CAST(sum(wet) AS BIGINT) AS n_wet
-          |FROM wetm GROUP BY 2
-          |UNION ALL
-          |SELECT 8 AS res,
-          |  8 * 72057594037927936 + (((cell // 268435456) % 268435456) >> 4) * 268435456
-          |    + ((cell % 268435456) >> 4) AS tile,
-          |  count(*) AS n_cells, CAST(sum(wet) AS BIGINT) AS n_wet
-          |FROM wetm GROUP BY 2
-          |UNION ALL
-          |SELECT 6 AS res,
-          |  6 * 72057594037927936 + (((cell // 268435456) % 268435456) >> 6) * 268435456
-          |    + ((cell % 268435456) >> 6) AS tile,
-          |  count(*) AS n_cells, CAST(sum(wet) AS BIGINT) AS n_wet
-          |FROM wetm GROUP BY 2""".stripMargin)),
+        Seq(10, 8, 6).map(res =>
+          s"""SELECT $res AS res, ${parentSql("cell", Cells.BaseRes, res)} AS tile,
+             |  count(*) AS n_cells, CAST(sum(wet) AS BIGINT) AS n_wet
+             |FROM wetm GROUP BY 2""".stripMargin).mkString("\nUNION ALL\n"))),
 
     // inundation-extent dissolve: wet cells → per-extent bbox + boundary
     // count + area (mosaic_inundation.py:153-188 polygonize/dissolve analog)
@@ -414,14 +393,13 @@ object HydroQueries {
           |  FROM nbr58 n LEFT JOIN wet58 w ON n.ncell = w.cell AND n.clazz = w.clazz
           |  GROUP BY n.cell, n.clazz
           |)""".stripMargin)(
-        """SELECT clazz AS hydroid, count(*) AS n_cells,
-          |  count(CASE WHEN nn < 4 THEN 1 END) AS n_boundary,
-          |  min((((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0) AS lat_min,
-          |  max((((cell // 268435456) % 268435456) + CAST(0.5 AS DOUBLE)) / 4096.0 * 180.0 - 90.0) AS lat_max,
-          |  min(((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0) AS lng_min,
-          |  max(((cell % 268435456) + CAST(0.5 AS DOUBLE)) / 8192.0 * 360.0 - 180.0) AS lng_max,
-          |  count(*) * (CAST(180.0 AS DOUBLE) / 4096.0) * (CAST(360.0 AS DOUBLE) / 8192.0) AS area_deg2
-          |FROM deg58 GROUP BY clazz""".stripMargin)),
+        s"""SELECT clazz AS hydroid, count(*) AS n_cells,
+           |  count(CASE WHEN nn < 4 THEN 1 END) AS n_boundary,
+           |  min(clat) AS lat_min, max(clat) AS lat_max, min(clng) AS lng_min, max(clng) AS lng_max,
+           |  count(*) * (CAST(180.0 AS DOUBLE) / 4096.0) * (CAST(360.0 AS DOUBLE) / 8192.0) AS area_deg2
+           |FROM (SELECT *, ${centroidLatSql("cell", Cells.BaseRes)} AS clat,
+           |        ${centroidLngSql("cell", Cells.BaseRes)} AS clng FROM deg58)
+           |GROUP BY clazz""".stripMargin)),
 
     // connected-component labeling of wet extents (polygonize proper):
     // per-extent union-find kernel, label = min cell id per component
@@ -464,14 +442,11 @@ object HydroQueries {
             col("zmin")).otherwise(col("hand")).as("hand_adj"))
     },
       withCtes(pts, asg,
-        """zc AS (
-          |  SELECT pid, hydroid, hand, lat, lng,
-          |    (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |      - CAST(90.0 AS DOUBLE) AS lat_c,
-          |    ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE)
-          |      - CAST(180.0 AS DOUBLE) AS lng_c
-          |  FROM asg
-          |)""".stripMargin,
+        s"""zc AS (
+           |  SELECT pid, hydroid, hand, lat, lng,
+           |    ${latCSql("hydroid")} AS lat_c, ${lngCSql("hydroid")} AS lng_c
+           |  FROM asg
+           |)""".stripMargin,
         """zcost AS (
           |  SELECT *, (lat - lat_c) * (lat - lat_c) + (lng - lng_c) * (lng - lng_c) AS cost
           |  FROM zc
@@ -493,26 +468,10 @@ object HydroQueries {
     Query("q87_composite", (s, dir) => Inundate.compositeMosaic(s, dir),
       withCtes(pts, asg, ht, fc, stg, til,
         "fcms AS (SELECT feature_id, discharge * CAST(1.5 AS DOUBLE) AS discharge FROM fc)",
-        """stgms AS (
-          |  SELECT hydroid,
-          |    CASE WHEN max(CASE WHEN discharge_cms <= discharge THEN stage END) IS NULL THEN min(stage)
-          |         WHEN min(CASE WHEN discharge_cms > discharge THEN stage END) IS NULL THEN max(stage)
-          |         ELSE max(CASE WHEN discharge_cms <= discharge THEN stage END)
-          |            + (max(discharge) - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |            * (min(CASE WHEN discharge_cms > discharge THEN stage END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN stage END))
-          |            / (min(CASE WHEN discharge_cms > discharge THEN discharge_cms END)
-          |               - max(CASE WHEN discharge_cms <= discharge THEN discharge_cms END))
-          |    END AS stage_m
-          |  FROM (SELECT ht.hydroid, ht.stage, ht.discharge_cms, f.discharge
-          |        FROM ht JOIN fcms f ON ht.feature_id = f.feature_id
-          |        WHERE ht.hydroid % 97 <> 0)
-          |  GROUP BY hydroid
-          |)""".stripMargin,
-        """tilms AS (
-          |  SELECT a.cell,
-          |    CASE WHEN s.stage_m - a.hand > 0.0 THEN s.stage_m - a.hand ELSE 0.0 END AS depth
-          |  FROM asg a JOIN stgms s ON a.hydroid = s.hydroid
+        stageCte("stgms", "fcms"),
+        s"""tilms AS (
+           |  SELECT a.cell, $depthSql AS depth
+           |  FROM asg a JOIN stgms s ON a.hydroid = s.hydroid
           |  WHERE (a.hydroid % 8) + 1 >= 5
           |)""".stripMargin,
         """uc AS (
@@ -534,23 +493,7 @@ object HydroQueries {
     Query("q86_gage_snap", (s, _) =>
       StreamNet.gageSnap(StreamNet.reaches(s)),
       withCtes(net,
-        """rch AS (
-          |  SELECT hydroid,
-          |    (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |      - CAST(90.0 AS DOUBLE) AS from_lat,
-          |    ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE)
-          |      - CAST(180.0 AS DOUBLE) AS from_lng,
-          |    CASE WHEN to_node < 0
-          |      THEN (CAST(floor(hydroid / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |           - CAST(90.0 AS DOUBLE) - CAST(1.25 AS DOUBLE)
-          |      ELSE (CAST(floor(to_node / 144) AS BIGINT) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE)
-          |           - CAST(90.0 AS DOUBLE) END AS to_lat,
-          |    CASE WHEN to_node < 0
-          |      THEN ((hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - CAST(180.0 AS DOUBLE)
-          |      ELSE ((to_node % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - CAST(180.0 AS DOUBLE)
-          |    END AS to_lng
-          |  FROM net WHERE hydroid % 199 = 0
-          |)""".stripMargin,
+        reachEnds("rch", " WHERE hydroid % 199 = 0"),
         """gsn AS (
           |  SELECT hydroid, from_lat, from_lng, to_lat, to_lng,
           |    from_lat + ((hydroid * 13) % 100) / 1000.0 - CAST(0.05 AS DOUBLE) AS glat,
@@ -588,7 +531,7 @@ object HydroQueries {
              |   AND greatest(least(s.yf, s.yt), $ry0) <= least(greatest(s.yf, s.yt), $ry1)
              |   AND least($s1, $s2, $s3, $s4) <= 0 AND greatest($s1, $s2, $s3, $s4) >= 0""".stripMargin
         }
-        withRecursiveCtes(net, closure, arboAgg, chosenCte, lpCte,
+        withRecursiveCtes(net, closure, arboAgg, chosenCte, lpCte, reachEnds("ends", ""),
           """lv0 AS (
             |  SELECT l,
             |    ((l * 13 + 7) % 142 + 1) * CAST(1.25 AS DOUBLE) - 90.0 AS y,
@@ -631,15 +574,8 @@ object HydroQueries {
             |)""".stripMargin,
           """seg AS (
             |  SELECT l.branch AS levelpath_id, n.hydroid,
-            |    ((n.hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - 180.0 AS xf,
-            |    (floor(n.hydroid / 144) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE) - 90.0 AS yf,
-            |    CASE WHEN n.to_node = -1
-            |         THEN ((n.hydroid % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - 180.0
-            |         ELSE ((n.to_node % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - 180.0 END AS xt,
-            |    CASE WHEN n.to_node = -1
-            |         THEN (floor(n.hydroid / 144) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE) - 90.0 - CAST(1.25 AS DOUBLE)
-            |         ELSE (floor(n.to_node / 144) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE) - 90.0 END AS yt
-            |  FROM net n JOIN lp l ON n.hydroid = l.hydroid
+            |    e.from_lng AS xf, e.from_lat AS yf, e.to_lng AS xt, e.to_lat AS yt
+            |  FROM net n JOIN lp l ON n.hydroid = l.hydroid JOIN ends e ON n.hydroid = e.hydroid
             |)""".stripMargin,
           s"""arects AS (
              |  SELECT v.l, v.x0, v.x1, v.y AS ry0, v.y + CAST(0.5 AS DOUBLE) AS ry1
@@ -684,27 +620,15 @@ object HydroQueries {
     Query("q91_bridge_flows", (s, dir) =>
       Bridges.bridgeFlows(s, Synth.points(s, dir)),
       {
-        def interpSql(t: String): String =
-          s"""CASE WHEN max(CASE WHEN h.stage <= t.$t THEN h.discharge_cms END) IS NULL THEN min(h.discharge_cms)
-             |     WHEN min(CASE WHEN h.stage > t.$t THEN h.discharge_cms END) IS NULL THEN max(h.discharge_cms)
-             |     ELSE max(CASE WHEN h.stage <= t.$t THEN h.discharge_cms END)
-             |        + (max(t.$t) - max(CASE WHEN h.stage <= t.$t THEN h.stage END))
-             |        * (min(CASE WHEN h.stage > t.$t THEN h.discharge_cms END)
-             |           - max(CASE WHEN h.stage <= t.$t THEN h.discharge_cms END))
-             |        / (min(CASE WHEN h.stage > t.$t THEN h.stage END)
-             |           - max(CASE WHEN h.stage <= t.$t THEN h.stage END))
-             |END""".stripMargin
+        def dischargeAt(t: String): String = interpSql(s"t.$t", "h.stage", "h.discharge_cms")
         withCtes(pts, ht,
-          """brg AS (
-            |  SELECT k AS bridge_id,
-            |    (floor(k / 144) + CAST(0.5 AS DOUBLE)) * CAST(1.25 AS DOUBLE) - 90.0
-            |      + ((k * 17) % 100) / 1000.0 - CAST(0.05 AS DOUBLE) AS blat,
-            |    ((k % 144) + CAST(0.5 AS DOUBLE)) * CAST(2.5 AS DOUBLE) - 180.0
-            |      + ((k * 23) % 100) / 1000.0 - CAST(0.05 AS DOUBLE) AS blng
-            |  FROM (SELECT a.x * 144 + b.x AS k
-            |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x))
-            |  WHERE k % 151 = 0
-            |)""".stripMargin,
+          s"""brg AS (
+             |  SELECT hydroid AS bridge_id,
+             |    ${latCSql("hydroid")} + ((hydroid * 17) % 100) / 1000.0 - CAST(0.05 AS DOUBLE) AS blat,
+             |    ${lngCSql("hydroid")} + ((hydroid * 23) % 100) / 1000.0 - CAST(0.05 AS DOUBLE) AS blng
+             |  FROM $hydroids
+             |  WHERE hydroid % 151 = 0
+             |)""".stripMargin,
           """thr AS (
             |  SELECT b.bridge_id, max(p.hand) AS threshold_hand, count(*) AS n_pts
             |  FROM pts p JOIN brg b
@@ -720,8 +644,8 @@ object HydroQueries {
              |    max(t.threshold_hand) AS threshold_hand,
              |    max(t.threshold_hand_75) AS threshold_hand_75,
              |    max(t.n_pts) AS n_pts,
-             |    ${interpSql("threshold_hand")} AS threshold_discharge,
-             |    ${interpSql("threshold_hand_75")} AS threshold_discharge75
+             |    ${dischargeAt("threshold_hand")} AS threshold_discharge,
+             |    ${dischargeAt("threshold_hand_75")} AS threshold_discharge75
              |  FROM ht h JOIN thr2 t ON h.hydroid = t.bridge_id
              |  GROUP BY t.bridge_id
              |)""".stripMargin)(
@@ -780,32 +704,13 @@ object HydroQueries {
     // as block-halo equi-joins, smooth/sharp drop composition
     Query("q100_agree_burn", (s, _) => Terrain.agreeBurn(s),
       {
-        // elevation closed form of a decoded gid — exact dyadic doubles
-        def elevSql(gid: String): String =
-          s"((($gid // 144) * 31 + ($gid % 144) * 17) % 400) / CAST(4.0 AS DOUBLE)" +
-            s" + ($gid // 144) / CAST(4.0 AS DOUBLE)"
-        // nearest candidate within Chebyshev 6 as packed min(d2 * 2^20 + gid)
-        def nnSql(probe: String, cand: String, filter: String): String =
-          s"""SELECT g.gid, min(CAST((v.r - g.r) * (v.r - g.r)
-             |    + (v.c - g.c) * (v.c - g.c) AS BIGINT) * 1048576 + v.gid) AS packed
-             |  FROM $probe g JOIN $cand v
-             |    ON $filter
-             |    AND v.r BETWEEN g.r - 6 AND g.r + 6
-             |    AND v.c BETWEEN g.c - 6 AND g.c + 6
-             |  GROUP BY g.gid""".stripMargin
         withCtes(
-          """g100 AS (
-            |  SELECT r.x * 144 + c.x AS gid, r.x AS r, c.x AS c,
-            |    ((r.x * 31 + c.x * 17) % 400) / CAST(4.0 AS DOUBLE)
-            |      + r.x / CAST(4.0 AS DOUBLE) AS elev,
-            |    CASE WHEN c.x % 12 = 5 OR r.x % 36 = 18 THEN 1 ELSE 0 END AS river
-            |  FROM generate_series(0, 143) r(x), generate_series(0, 143) c(x)
-            |)""".stripMargin,
+          demCte("g100", Seq(riverCol)),
           s"vnn AS (${nnSql("g100", "g100", "v.river = 1")})",
           s"""vd AS (
              |  SELECT g.*, v.packed // 1048576 AS vd2, v.packed % 1048576 AS vgid,
              |    sqrt(CAST(v.packed // 1048576 AS DOUBLE)) AS vectdist,
-             |    ${elevSql("(v.packed % 1048576)")} - CAST(10.0 AS DOUBLE) AS vectallo,
+             |    ${gidElevSql("(v.packed % 1048576)")} - CAST(10.0 AS DOUBLE) AS vectallo,
              |    CASE WHEN CAST(v.packed // 1048576 AS DOUBLE) > CAST(10.5625 AS DOUBLE)
              |         THEN 1 ELSE 0 END AS outside
              |  FROM g100 g JOIN vnn v ON g.gid = v.gid
@@ -820,7 +725,7 @@ object HydroQueries {
              |)""".stripMargin,
           s"""f100 AS (
              |  SELECT *, sqrt(CAST(bd2 AS DOUBLE)) AS bufdist,
-             |    ${elevSql("bgid")} AS bufallo
+             |    ${gidElevSql("bgid")} AS bufallo
              |  FROM bb
              |)""".stripMargin)(
           """SELECT gid, CAST(river AS INT) AS river, elev, vd2, vgid, vectallo,
@@ -843,16 +748,7 @@ object HydroQueries {
         .select(col("huc8"), col("hydroid").cast("long").as("hydroid"),
           col("flowaccum"), col("stream_pixel")),
       withRecursiveCtes(
-        """net98 AS (
-          |  SELECT hydroid,
-          |    lpad(CAST(CAST(floor(floor(hydroid / 144) / 8) * 18 + floor((hydroid % 144) / 8) AS BIGINT) AS VARCHAR), 8, '0') AS huc8,
-          |    CAST(CASE WHEN (CAST(floor(hydroid / 144) AS BIGINT) % 8) = 0 THEN -1
-          |         ELSE (CAST(floor(hydroid / 144) AS BIGINT) - 1) * 144 + (hydroid % 144)
-          |              - (hydroid % 8) + CAST(floor((hydroid % 8) / 2) AS BIGINT)
-          |    END AS BIGINT) AS to_node
-          |  FROM (SELECT a.x * 144 + b.x AS hydroid
-          |        FROM generate_series(0, 143) a(x), generate_series(0, 143) b(x))
-          |)""".stripMargin,
+        net98,
         """hw AS (
           |  SELECT hydroid FROM net98 n
           |  WHERE hydroid % 13 = 2
@@ -874,30 +770,15 @@ object HydroQueries {
     // to every cell, nodata where the catchment has no thalweg pixel
     Query("q102_rem", (s, dir) =>
       Terrain.rem(SpatialJoin.assign(s, Synth.points(s, dir))),
-      withCtes(pts, asg,
-        """zm AS (
-          |  SELECT hydroid, min(hand) AS zmin FROM asg WHERE pid % 23 = 1
-          |  GROUP BY hydroid
-          |)""".stripMargin)(
-        """SELECT a.pid, a.hydroid, a.hand AS dem,
-          |  CASE WHEN z.zmin IS NULL THEN CAST(-9999.0 AS DOUBLE)
-          |       ELSE a.hand - z.zmin END AS rem
-          |FROM asg a LEFT JOIN zm z ON a.hydroid = z.hydroid""".stripMargin)),
+      withCtes(pts, asg, remCte)("SELECT pid, hydroid, hand AS dem, rem FROM rem")),
 
     // water-surface fillnodata: exact integer-weighted IDW within radius 4,
     // depth = interpolated WSE - DEM, nodata past max search distance
     Query("q108_interp_wse", (s, _) => Terrain.interpolateWse(s),
       withCtes(
-        """g108 AS (
-          |  SELECT r.x * 144 + c.x AS gid, r.x AS r, c.x AS c,
-          |    ((r.x * 31 + c.x * 17) % 400) / CAST(4.0 AS DOUBLE)
-          |      + r.x / CAST(4.0 AS DOUBLE) AS elev,
-          |    CASE WHEN (r.x * 7 + c.x * 3) % 5 <> 0 THEN 1 ELSE 0 END AS valid,
-          |    ((r.x * 31 + c.x * 17) % 400) / CAST(4.0 AS DOUBLE)
-          |      + r.x / CAST(4.0 AS DOUBLE)
-          |      + ((r.x * 5 + c.x * 11) % 8) / CAST(4.0 AS DOUBLE) AS wse
-          |  FROM generate_series(0, 143) r(x), generate_series(0, 143) c(x)
-          |)""".stripMargin,
+        demCte("g108", Seq(
+          "CASE WHEN (r.x * 7 + c.x * 3) % 5 <> 0 THEN 1 ELSE 0 END AS valid",
+          s"${elevSql("r.x", "c.x")} + ((r.x * 5 + c.x * 11) % 8) / CAST(4.0 AS DOUBLE) AS wse")),
         """pr8 AS (
           |  SELECT g.gid,
           |    CAST((v.r - g.r) * (v.r - g.r) + (v.c - g.c) * (v.c - g.c) AS BIGINT) AS d2,
@@ -926,12 +807,7 @@ object HydroQueries {
     // levee burn-in: NLD crest grid maximum-composited into the DEM
     Query("q111_levee_burn", (s, _) => Terrain.burnInLevees(s),
       withCtes(
-        """g111 AS (
-          |  SELECT r.x * 144 + c.x AS gid, r.x AS r, c.x AS c,
-          |    ((r.x * 31 + c.x * 17) % 400) / CAST(4.0 AS DOUBLE)
-          |      + r.x / CAST(4.0 AS DOUBLE) AS elev
-          |  FROM generate_series(0, 143) r(x), generate_series(0, 143) c(x)
-          |)""".stripMargin,
+        demCte("g111"),
         """n111 AS (
           |  SELECT gid, elev,
           |    CASE WHEN r % 24 = 6
@@ -946,28 +822,11 @@ object HydroQueries {
     // river-line gap and rim-blocking flank holes
     Query("q115_agree_nodata", (s, _) => Terrain.agreeBurnWithHoles(s),
       {
-        def elevSql(gid: String): String =
-          s"((($gid // 144) * 31 + ($gid % 144) * 17) % 400) / CAST(4.0 AS DOUBLE)" +
-            s" + ($gid // 144) / CAST(4.0 AS DOUBLE)"
-        def nnSql(probe: String, cand: String, filter: String): String =
-          s"""SELECT g.gid, min(CAST((v.r - g.r) * (v.r - g.r)
-             |    + (v.c - g.c) * (v.c - g.c) AS BIGINT) * 1048576 + v.gid) AS packed
-             |  FROM $probe g JOIN $cand v
-             |    ON $filter
-             |    AND v.r BETWEEN g.r - 6 AND g.r + 6
-             |    AND v.c BETWEEN g.c - 6 AND g.c + 6
-             |  GROUP BY g.gid""".stripMargin
         withCtes(
-          """g115 AS (
-            |  SELECT r.x * 144 + c.x AS gid, r.x AS r, c.x AS c,
-            |    ((r.x * 31 + c.x * 17) % 400) / CAST(4.0 AS DOUBLE)
-            |      + r.x / CAST(4.0 AS DOUBLE) AS elev,
-            |    CASE WHEN c.x % 12 = 5 OR r.x % 36 = 18 THEN 1 ELSE 0 END AS river
-            |  FROM generate_series(0, 143) r(x), generate_series(0, 143) c(x)
-            |  WHERE NOT ((r.x BETWEEN 106 AND 118
-            |              AND (c.x BETWEEN 44 AND 49 OR c.x BETWEEN 57 AND 62))
-            |             OR (r.x BETWEEN 25 AND 47 AND c.x = 17))
-            |)""".stripMargin,
+          demCte("g115", Seq(riverCol),
+            """NOT ((r.x BETWEEN 106 AND 118
+              |              AND (c.x BETWEEN 44 AND 49 OR c.x BETWEEN 57 AND 62))
+              |             OR (r.x BETWEEN 25 AND 47 AND c.x = 17))""".stripMargin),
           s"vnn115 AS (${nnSql("g115", "g115", "v.river = 1")})",
           s"""vd115 AS (
              |  SELECT g.*,
@@ -975,7 +834,7 @@ object HydroQueries {
              |    v.packed // 1048576 AS vd2, v.packed % 1048576 AS vgid,
              |    sqrt(CAST(v.packed // 1048576 AS DOUBLE)) AS vectdist,
              |    CASE WHEN v.gid IS NULL THEN g.elev - CAST(10.0 AS DOUBLE)
-             |         ELSE ${elevSql("(v.packed % 1048576)")} - CAST(10.0 AS DOUBLE) END AS vectallo,
+             |         ELSE ${gidElevSql("(v.packed % 1048576)")} - CAST(10.0 AS DOUBLE) END AS vectallo,
              |    CASE WHEN v.gid IS NULL
              |           OR CAST(v.packed // 1048576 AS DOUBLE) > CAST(10.5625 AS DOUBLE)
              |         THEN 1 ELSE 0 END AS outside
@@ -993,7 +852,7 @@ object HydroQueries {
              |)""".stripMargin,
           s"""f115 AS (
              |  SELECT *, sqrt(CAST(bd2 AS DOUBLE)) AS bufdist,
-             |    ${elevSql("bgid")} AS bufallo
+             |    ${gidElevSql("bgid")} AS bufallo
              |  FROM bb115
              |)""".stripMargin,
           """s115 AS (

@@ -188,19 +188,7 @@ object PlatformQueries {
     // P2 error taxonomy: per-unit status codes (60/64/0) as data rows
     Query("q46_unit_status", (s, dir) =>
       Inundate.unitStatus(s, Synth.points(s, dir)),
-      withCtes(pts, asg,
-        """hagg AS (
-          |  SELECT lpad(CAST(CAST(floor(floor(hydroid / 144) / 8) * 18 + floor((hydroid % 144) / 8) AS BIGINT) AS VARCHAR), 8, '0') AS huc8,
-          |    count(*) AS n_pts,
-          |    count(CASE WHEN hydroid % 97 <> 0 THEN 1 END) AS n_ok
-          |  FROM asg GROUP BY 1
-          |)""".stripMargin)(
-        """SELECT u.huc8,
-          |  CAST(CASE WHEN a.huc8 IS NULL THEN 60 WHEN a.n_ok = 0 THEN 64 ELSE 0 END AS INT) AS status,
-          |  coalesce(a.n_pts, 0) AS n_pts, coalesce(a.n_ok, 0) AS n_ok
-          |FROM (SELECT lpad(CAST(x.x * 18 + y.x AS VARCHAR), 8, '0') AS huc8
-          |      FROM generate_series(0, 17) x(x), generate_series(0, 17) y(x)) u
-          |LEFT JOIN hagg a ON u.huc8 = a.huc8""".stripMargin)),
+      withCtes(pts, asg, hagg, unitStatus)("SELECT huc8, status, n_pts, n_ok FROM ust")),
 
     // §2.8 map functions: per-order line→quantity map via map_from_entries,
     // probed with element_at / map_keys (plain-column output for the oracle).
@@ -327,19 +315,7 @@ object PlatformQueries {
             && col("n_errors").cast("double") / col("n_units").cast("double")
                * lit(100.0) >= 10.0, lit(62)).otherwise(lit(0)).as("return_code")),
       withCtes(pts, asg,
-        """hagg AS (
-          |  SELECT lpad(CAST(CAST(floor(floor(hydroid / 144) / 8) * 18 + floor((hydroid % 144) / 8) AS BIGINT) AS VARCHAR), 8, '0') AS huc8,
-          |    count(*) AS n_pts,
-          |    count(CASE WHEN hydroid % 97 <> 0 THEN 1 END) AS n_ok
-          |  FROM asg GROUP BY 1
-          |)""".stripMargin,
-        """ust AS (
-          |  SELECT u.huc8,
-          |    CASE WHEN a.huc8 IS NULL THEN 60 WHEN a.n_ok = 0 THEN 64 ELSE 0 END AS status
-          |  FROM (SELECT lpad(CAST(x.x * 18 + y.x AS VARCHAR), 8, '0') AS huc8
-          |        FROM generate_series(0, 17) x(x), generate_series(0, 17) y(x)) u
-          |  LEFT JOIN hagg a ON u.huc8 = a.huc8
-          |)""".stripMargin,
+        hagg, unitStatus,
         """gat AS (
           |  SELECT count(*) AS n_units,
           |    count(CASE WHEN status <> 0 THEN 1 END) AS n_errors

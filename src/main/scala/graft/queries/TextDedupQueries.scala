@@ -15,6 +15,37 @@ object TextDedupQueries {
     * bit-sums, nb from the corpus count — the same integer formula as
     * AnnSearch.adaptiveBits) × 8 hyperplane tables, mirroring
     * AnnSearch.nearDupPairs; `body` runs over the dts/nrm tables. */
+  /** Dup-graph components (q118/q142): exact-content star edges ∪ the
+    * Jaccard ≥ 0.9 LSH pairs of `jac`, closed by a recursive reachability
+    * walk into `cmp(doc_id, component)` = the min reachable id. */
+  private val dupComponentCtes: Seq[String] = Seq(corpus, sh, mh, bnd, prs,
+    dsh, shSz, shInter, jacCte,
+    """epr AS (
+      |  SELECT g.doc_a, c.doc_id AS doc_b
+      |  FROM corpus c JOIN (SELECT md5(text) AS h, min(doc_id) AS doc_a, count(*) AS n
+      |                      FROM corpus GROUP BY md5(text) HAVING count(*) > 1) g
+      |    ON md5(c.text) = g.h
+      |  WHERE c.doc_id <> g.doc_a
+      |)""".stripMargin,
+    """edg AS (
+      |  SELECT DISTINCT doc_a, doc_b FROM (
+      |    SELECT doc_a, doc_b FROM epr
+      |    UNION ALL
+      |    SELECT doc_a, doc_b FROM jac WHERE jaccard >= CAST(0.9 AS DOUBLE))
+      |)""".stripMargin,
+    """und AS (
+      |  SELECT doc_a AS a, doc_b AS b FROM edg
+      |  UNION ALL
+      |  SELECT doc_b AS a, doc_a AS b FROM edg
+      |)""".stripMargin,
+    "nds AS (SELECT DISTINCT a AS doc_id FROM und)",
+    """reach AS (
+      |  SELECT doc_id AS node, doc_id AS r FROM nds
+      |  UNION
+      |  SELECT u.b AS node, reach.r AS r FROM reach JOIN und u ON u.a = reach.node
+      |)""".stripMargin,
+    "cmp AS (SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node)")
+
   private def neardupOracle(body: String): String =
     withCtes(neardupCtes: _*)(body)
 
@@ -92,22 +123,8 @@ object TextDedupQueries {
 
     // exact n-gram Jaccard verification of the candidates
     Query("q16_jaccard", (s, dir) => TextOps.ngramJaccard(Synth.corpus(s, dir)),
-      withCtes(corpus, sh, mh, bnd, prs,
-        """dsh AS (SELECT DISTINCT doc_id,
-          |  CAST('0x' || substring(md5(sh), 1, 15) AS BIGINT) AS hb FROM sh)""".stripMargin,
-        "sz AS (SELECT doc_id, count(*) AS sz FROM dsh GROUP BY doc_id)",
-        """inter AS (
-          |  SELECT p2.doc_a, p2.doc_b, count(*) AS i
-          |  FROM prs p2 JOIN dsh a ON p2.doc_a = a.doc_id
-          |  JOIN dsh b ON p2.doc_b = b.doc_id AND a.hb = b.hb
-          |  GROUP BY p2.doc_a, p2.doc_b
-          |)""".stripMargin)(
-        """SELECT p.doc_a, p.doc_b,
-          |  CAST(coalesce(i.i, 0) AS DOUBLE) / CAST(sa.sz + sb.sz - coalesce(i.i, 0) AS DOUBLE) AS jaccard
-          |FROM prs p
-          |LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-          |JOIN sz sa ON sa.doc_id = p.doc_a
-          |JOIN sz sb ON sb.doc_id = p.doc_b""".stripMargin)),
+      withCtes(corpus, sh, mh, bnd, prs, dsh, shSz, shInter, jacCte)(
+        "SELECT doc_a, doc_b, jaccard FROM jac")),
 
     // SimHash fingerprints
     Query("q17_simhash", (s, dir) => TextOps.simhash16(Synth.corpus(s, dir)),
@@ -159,9 +176,7 @@ object TextDedupQueries {
 
     // k-min document fingerprint
     Query("q20_fingerprint", (s, dir) => TextOps.fingerprint(Synth.corpus(s, dir)),
-      withCtes(corpus, sh,
-        """dsh AS (SELECT DISTINCT doc_id,
-          |  CAST('0x' || substring(md5(sh), 1, 15) AS BIGINT) AS hb FROM sh)""".stripMargin)(
+      withCtes(corpus, sh, dsh)(
         """SELECT doc_id,
           |  CAST(min(CASE WHEN rn = 1 THEN hb END) AS VARCHAR) || '-'
           |    || CAST(min(CASE WHEN rn = 2 THEN hb END) AS VARCHAR) || '-'
@@ -174,24 +189,7 @@ object TextDedupQueries {
 
     // composed curation pipeline: quality ∧ ¬exact-dup ∧ ¬near-dup
     Query("q50_curation", (s, dir) => TextOps.curate(Synth.corpus(s, dir)),
-      withCtes(corpus, sh, mh, bnd, prs,
-        """dsh AS (SELECT DISTINCT doc_id,
-          |  CAST('0x' || substring(md5(sh), 1, 15) AS BIGINT) AS hb FROM sh)""".stripMargin,
-        "sz AS (SELECT doc_id, count(*) AS sz FROM dsh GROUP BY doc_id)",
-        """inter AS (
-          |  SELECT p2.doc_a, p2.doc_b, count(*) AS i
-          |  FROM prs p2 JOIN dsh a ON p2.doc_a = a.doc_id
-          |  JOIN dsh b ON p2.doc_b = b.doc_id AND a.hb = b.hb
-          |  GROUP BY p2.doc_a, p2.doc_b
-          |)""".stripMargin,
-        """jac AS (
-          |  SELECT p.doc_a, p.doc_b,
-          |    CAST(coalesce(i.i, 0) AS DOUBLE) / CAST(sa.sz + sb.sz - coalesce(i.i, 0) AS DOUBLE) AS jaccard
-          |  FROM prs p
-          |  LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-          |  JOIN sz sa ON sa.doc_id = p.doc_a
-          |  JOIN sz sb ON sb.doc_id = p.doc_b
-          |)""".stripMargin,
+      withCtes(corpus, sh, mh, bnd, prs, dsh, shSz, shInter, jacCte,
         """ql AS (
           |  SELECT doc_id, CAST(nt AS INT) AS n_tokens,
           |    CAST(al AS DOUBLE) / CAST(nt AS DOUBLE) AS mean_word_len,
@@ -394,23 +392,7 @@ object TextDedupQueries {
       TextOps.incrementalDedup(Synth.corpus(s, dir)),
       withCtes(corpus, sh, mh, bnd, prs,
         "iprs AS (SELECT doc_a, doc_b FROM prs WHERE doc_a < 1000000 AND doc_b >= 1000000)",
-        """dsh AS (SELECT DISTINCT doc_id,
-          |  CAST('0x' || substring(md5(sh), 1, 15) AS BIGINT) AS hb FROM sh)""".stripMargin,
-        "sz AS (SELECT doc_id, count(*) AS sz FROM dsh GROUP BY doc_id)",
-        """inter AS (
-          |  SELECT p2.doc_a, p2.doc_b, count(*) AS i
-          |  FROM iprs p2 JOIN dsh a ON p2.doc_a = a.doc_id
-          |  JOIN dsh b ON p2.doc_b = b.doc_id AND a.hb = b.hb
-          |  GROUP BY p2.doc_a, p2.doc_b
-          |)""".stripMargin,
-        """ij AS (
-          |  SELECT p.doc_a, p.doc_b,
-          |    CAST(coalesce(i.i, 0) AS DOUBLE) / CAST(sa.sz + sb.sz - coalesce(i.i, 0) AS DOUBLE) AS jaccard
-          |  FROM iprs p
-          |  LEFT JOIN inter i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-          |  JOIN sz sa ON sa.doc_id = p.doc_a
-          |  JOIN sz sb ON sb.doc_id = p.doc_b
-          |)""".stripMargin)(
+        dsh, shSz, interOf("inter", "iprs"), jacOf("ij", "iprs", "inter"))(
         """SELECT doc_b AS doc_id, doc_a AS match_doc, jaccard,
           |  CAST(CASE WHEN jaccard >= CAST(0.9 AS DOUBLE) THEN 1 ELSE 0 END AS INT) AS is_dup
           |FROM (SELECT doc_a, doc_b, jaccard,
@@ -485,34 +467,8 @@ object TextDedupQueries {
       // dup-graph connected components: exact-content star edges ∪ Jaccard-
       // verified LSH pairs, closed by a recursive reachability walk; the Spark
       // side's min-label propagation must converge to the same min-reachable-id
-      withRecursiveCtes(corpus, sh, mh, bnd, prs,
-        dsh, shSz, shInter, jacCte,
-        """epr AS (
-          |  SELECT g.doc_a, c.doc_id AS doc_b
-          |  FROM corpus c JOIN (SELECT md5(text) AS h, min(doc_id) AS doc_a, count(*) AS n
-          |                      FROM corpus GROUP BY md5(text) HAVING count(*) > 1) g
-          |    ON md5(c.text) = g.h
-          |  WHERE c.doc_id <> g.doc_a
-          |)""".stripMargin,
-        """edg AS (
-          |  SELECT DISTINCT doc_a, doc_b FROM (
-          |    SELECT doc_a, doc_b FROM epr
-          |    UNION ALL
-          |    SELECT doc_a, doc_b FROM jac WHERE jaccard >= CAST(0.9 AS DOUBLE))
-          |)""".stripMargin,
-        """und AS (
-          |  SELECT doc_a AS a, doc_b AS b FROM edg
-          |  UNION ALL
-          |  SELECT doc_b AS a, doc_a AS b FROM edg
-          |)""".stripMargin,
-        "nds AS (SELECT DISTINCT a AS doc_id FROM und)",
-        """reach AS (
-          |  SELECT doc_id AS node, doc_id AS r FROM nds
-          |  UNION
-          |  SELECT u.b AS node, reach.r AS r FROM reach JOIN und u ON u.a = reach.node
-          |)""".stripMargin,
-        "cmp AS (SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node)",
-        "csz AS (SELECT component, count(*) AS cluster_size FROM cmp GROUP BY component)")(
+      withRecursiveCtes(dupComponentCtes :+
+        "csz AS (SELECT component, count(*) AS cluster_size FROM cmp GROUP BY component)": _*)(
         """SELECT c.doc_id, c.component, s.cluster_size,
           |  CAST(CASE WHEN c.doc_id = c.component THEN 1 ELSE 0 END AS INT) AS keep
           |FROM cmp c JOIN csz s ON c.component = s.component""".stripMargin)),
@@ -764,22 +720,7 @@ object TextDedupQueries {
           |  WHERE (a.doc_id < 1000000 AND a.doc_id % 37 = 0)
           |    AND NOT (b.doc_id < 1000000 AND b.doc_id % 37 = 0)
           |)""".stripMargin,
-        dsh,
-        "fsz AS (SELECT doc_id, count(*) AS sz FROM dsh GROUP BY doc_id)",
-        """fint AS (
-          |  SELECT p2.doc_a, p2.doc_b, count(*) AS i
-          |  FROM fprs p2 JOIN dsh a ON p2.doc_a = a.doc_id
-          |  JOIN dsh b ON p2.doc_b = b.doc_id AND a.hb = b.hb
-          |  GROUP BY p2.doc_a, p2.doc_b
-          |)""".stripMargin,
-        """fj AS (
-          |  SELECT p.doc_a, p.doc_b,
-          |    CAST(coalesce(i.i, 0) AS DOUBLE) / CAST(sa.sz + sb.sz - coalesce(i.i, 0) AS DOUBLE) AS jaccard
-          |  FROM fprs p
-          |  LEFT JOIN fint i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-          |  JOIN fsz sa ON sa.doc_id = p.doc_a
-          |  JOIN fsz sb ON sb.doc_id = p.doc_b
-          |)""".stripMargin)(
+        dsh, shSz, interOf("fint", "fprs"), jacOf("fj", "fprs", "fint"))(
         """SELECT doc_b AS doc_id, doc_a AS eval_doc, jaccard,
           |  CAST(CASE WHEN jaccard >= CAST(0.5 AS DOUBLE) THEN 1 ELSE 0 END AS INT) AS leaked
           |FROM (SELECT doc_a, doc_b, jaccard,
@@ -916,12 +857,7 @@ object TextDedupQueries {
       // hashed linear classifier: md5-bucket features, hash-derived integer
       // weights in [-1001, 1001], shifted non-negative per-word mean
       withCtes(corpus, wrd,
-        """wgt AS (
-          |  SELECT doc_id,
-          |    ((CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) % 4096)
-          |      * 2654435761) % 2003 - 1001 AS weight
-          |  FROM wrd
-          |)""".stripMargin)(
+        s"wgt AS (SELECT doc_id, $wordWeight AS weight FROM wrd)")(
         """SELECT doc_id, count(*) AS n_words, CAST(sum(weight) AS BIGINT) AS w_sum,
           |  CAST(((sum(weight) + 1001 * count(*)) * 1000) // count(*) AS BIGINT) AS avg_shift_ppk,
           |  CAST(CASE WHEN ((sum(weight) + 1001 * count(*)) * 1000) // count(*)
@@ -952,39 +888,8 @@ object TextDedupQueries {
       // canonical pick: q118's component chain ∘ q138's classifier chain;
       // winner per component = (score desc, doc_id asc) — the engine's
       // min(struct) ≡ the oracle's row_number = 1
-      withRecursiveCtes(corpus, sh, mh, bnd, prs,
-        dsh, shSz, shInter, jacCte, wrd,
-        """epr AS (
-          |  SELECT g.doc_a, c.doc_id AS doc_b
-          |  FROM corpus c JOIN (SELECT md5(text) AS h, min(doc_id) AS doc_a, count(*) AS n
-          |                      FROM corpus GROUP BY md5(text) HAVING count(*) > 1) g
-          |    ON md5(c.text) = g.h
-          |  WHERE c.doc_id <> g.doc_a
-          |)""".stripMargin,
-        """edg AS (
-          |  SELECT DISTINCT doc_a, doc_b FROM (
-          |    SELECT doc_a, doc_b FROM epr
-          |    UNION ALL
-          |    SELECT doc_a, doc_b FROM jac WHERE jaccard >= CAST(0.9 AS DOUBLE))
-          |)""".stripMargin,
-        """und AS (
-          |  SELECT doc_a AS a, doc_b AS b FROM edg
-          |  UNION ALL
-          |  SELECT doc_b AS a, doc_a AS b FROM edg
-          |)""".stripMargin,
-        "nds AS (SELECT DISTINCT a AS doc_id FROM und)",
-        """reach AS (
-          |  SELECT doc_id AS node, doc_id AS r FROM nds
-          |  UNION
-          |  SELECT u.b AS node, reach.r AS r FROM reach JOIN und u ON u.a = reach.node
-          |)""".stripMargin,
-        "cmp AS (SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node)",
-        """wgt AS (
-          |  SELECT doc_id,
-          |    ((CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) % 4096)
-          |      * 2654435761) % 2003 - 1001 AS weight
-          |  FROM wrd
-          |)""".stripMargin,
+      withRecursiveCtes(dupComponentCtes ++ Seq(wrd,
+        s"wgt AS (SELECT doc_id, $wordWeight AS weight FROM wrd)",
         """scr AS (
           |  SELECT doc_id,
           |    CAST(((sum(weight) + 1001 * count(*)) * 1000) // count(*) AS BIGINT) AS score
@@ -995,7 +900,7 @@ object TextDedupQueries {
           |    row_number() OVER (PARTITION BY c.component
           |      ORDER BY s.score DESC, c.doc_id) AS rn
           |  FROM cmp c JOIN scr s ON c.doc_id = s.doc_id
-          |)""".stripMargin)(
+          |)""".stripMargin): _*)(
         """SELECT doc_id, component, score,
           |  CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS INT) AS keep
           |FROM mcs""".stripMargin)),
@@ -1112,12 +1017,7 @@ object TextDedupQueries {
           |          length(replace(text, ' ', '')) AS al
           |        FROM corpus)
           |)""".stripMargin,
-        """gqw AS (
-          |  SELECT doc_id,
-          |    ((CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) % 4096)
-          |      * 2654435761) % 2003 - 1001 AS weight
-          |  FROM wrd
-          |)""".stripMargin,
+        s"gqw AS (SELECT doc_id, $wordWeight AS weight FROM wrd)",
         """gqc AS (
           |  SELECT doc_id,
           |    CASE WHEN ((sum(weight) + 1001 * count(*)) * 1000) // count(*)

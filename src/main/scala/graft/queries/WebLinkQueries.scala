@@ -30,12 +30,10 @@ object WebLinkQueries {
       |  CROSS JOIN generate_series(1, 128) g(i)
       |  WHERE g.i <= len(ws)
       |)""".stripMargin,
-    """rsc AS (
-      |  SELECT host, count(*) AS n_words,
-      |    sum(((CAST('0x' || substring(md5(w), 1, 15) AS BIGINT) % 4096)
-      |          * 2654435761) % 2003 - 1001) AS w_sum
-      |  FROM rwd GROUP BY host
-      |)""".stripMargin,
+    s"""rsc AS (
+       |  SELECT host, count(*) AS n_words, sum($wordWeight) AS w_sum
+       |  FROM rwd GROUP BY host
+       |)""".stripMargin,
     """rhs AS (
       |  SELECT split_part(url, '/', 3) AS host, url,
       |    CAST('0x' || substring(md5(text), 1, 15) AS BIGINT) AS hb
@@ -105,40 +103,67 @@ object WebLinkQueries {
       |  WHERE dst <> src
       |)""".stripMargin
 
+  /** PageRank round `k` (q140): ranks `pr<k>` from `pr<k-1>` over the
+    * out-degrees `odg`, damping 85/100, teleport 150000000 div n, every step
+    * floor-divided BIGINT ppb — one round of `LinkGraph.pageRank`. */
+  private def pageRankRound(k: Int): String =
+    s"""pr$k AS (
+       |  SELECT nd.doc_id, (150000000 // t.n) + (85 * coalesce(s.m, 0)) // 100 AS r
+       |  FROM nds nd CROSS JOIN ntot t
+       |  LEFT JOIN (SELECT e.dst AS doc_id, CAST(sum(p.r // o.outdeg) AS BIGINT) AS m
+       |             FROM edg e JOIN odg o ON e.src = o.src
+       |             JOIN pr${k - 1} p ON e.src = p.doc_id GROUP BY e.dst) s
+       |    ON nd.doc_id = s.doc_id
+       |)""".stripMargin
+
+  /** One HITS half-round (q148): scores `<name>(doc_id, s)` sum the `from`
+    * scores over the edges, keyed by the edge end `key` (`dst` for
+    * authorities, `src` for hubs), max-normalized onto the ppm grid. */
+  private def hitsHalfRound(name: String, from: String, key: String, other: String): Seq[String] = Seq(
+    s"""${name}r AS (SELECT e.$key AS doc_id, CAST(sum(f.s) AS BIGINT) AS raw
+       |  FROM edg e JOIN $from f ON e.$other = f.doc_id GROUP BY e.$key)""".stripMargin,
+    s"${name}m AS (SELECT max(raw) AS mx FROM ${name}r)",
+    s"""$name AS (SELECT nd.doc_id, coalesce(r.raw, 0) * 1000000 // m.mx AS s
+       |  FROM nds nd CROSS JOIN ${name}m m LEFT JOIN ${name}r r ON nd.doc_id = r.doc_id)""".stripMargin)
+
+  /** Canonical URLs of the fetch log, one row per (canon, host) (q74/q130). */
+  private val canonUrls: Seq[String] = Seq(flog,
+    """cano AS (
+      |  SELECT pid, fetch_ts,
+      |    lower(split_part(split_part(raw, '#', 1), '?', 1)) AS canon
+      |  FROM flog
+      |)""".stripMargin,
+    """cu AS (
+      |  SELECT canon, split_part(canon, '/', 3) AS host,
+      |    count(*) AS n_fetches, max(fetch_ts) AS latest_ts, min(pid) AS first_pid
+      |  FROM cano GROUP BY canon, split_part(canon, '/', 3)
+      |)""".stripMargin)
+
+  /** Page → host of the synthetic crawl (q144/q153). */
+  private val pageHosts: String =
+    """hst AS (
+      |  SELECT CAST(doc_id AS BIGINT) AS pid,
+      |    source || '.example.com' AS host
+      |  FROM documents
+      |)""".stripMargin
+
   val queries: Seq[Query] = Seq(
     // URL canonicalization + refetch collapse over the synthetic fetch log
     // (strip query/fragment, lowercase, host extraction — split_part algebra)
     Query("q74_url_canon", (s, dir) =>
       WebCuration.canonicalUrls(Synth.pages(s, dir)),
-      withCtes(flog,
-        """cano AS (
-          |  SELECT pid, fetch_ts,
-          |    lower(split_part(split_part(raw, '#', 1), '?', 1)) AS canon
-          |  FROM flog
-          |)""".stripMargin)(
-        """SELECT canon, split_part(canon, '/', 3) AS host,
-          |  count(*) AS n_fetches, max(fetch_ts) AS latest_ts, min(pid) AS first_pid
-          |FROM cano GROUP BY canon, split_part(canon, '/', 3)""".stripMargin)),
+      withCtes(canonUrls: _*)(
+        "SELECT canon, host, n_fetches, latest_ts, first_pid FROM cu")),
 
     // per-domain cap: keep top-2 canonical URLs per host
     Query("q130_domain_cap", (s, dir) => WebCuration.domainCap(Synth.pages(s, dir)),
       // per-domain cap over the canonical-URL table (q74 chain + ranked cut)
-      withCtes(flog,
-        """cano AS (
-          |  SELECT pid, fetch_ts,
-          |    lower(split_part(split_part(raw, '#', 1), '?', 1)) AS canon
-          |  FROM flog
-          |)""".stripMargin,
-        """cu AS (
-          |  SELECT canon, split_part(canon, '/', 3) AS host,
-          |    count(*) AS n_fetches, max(fetch_ts) AS latest_ts, min(pid) AS first_pid
-          |  FROM cano GROUP BY canon, split_part(canon, '/', 3)
-          |)""".stripMargin,
+      withCtes(canonUrls :+
         """rkd AS (
           |  SELECT *, row_number() OVER (
           |    PARTITION BY host ORDER BY n_fetches DESC, canon) AS rnk
           |  FROM cu
-          |)""".stripMargin)(
+          |)""".stripMargin: _*)(
         """SELECT host, canon, n_fetches, latest_ts, first_pid, CAST(rnk AS INT) AS rnk
           |FROM rkd WHERE rnk <= 2""".stripMargin)),
 
@@ -147,37 +172,14 @@ object WebLinkQueries {
     // BSP link-analysis workload as pure relational algebra
     Query("q140_pagerank", (s, dir) =>
       LinkGraph.pageRank(Synth.corpus(s, dir)),
-      // fixed-point PageRank, 3 unrolled rounds: hash-derived 3-out-link graph
+      // fixed-point PageRank, 3 generated rounds: hash-derived 3-out-link graph
       // over the contiguous base-doc id space; damping 85/100, teleport
       // 150000000 div n, every step floor-divided BIGINT ppb
-      withCtes(corpus, lgNds, lgNtot, lgEdg,
+      withCtes(Seq(corpus, lgNds, lgNtot, lgEdg,
         "odg AS (SELECT src, count(*) AS outdeg FROM edg GROUP BY src)",
         "idg AS (SELECT dst, count(*) AS n_in FROM edg GROUP BY dst)",
-        "pr0 AS (SELECT doc_id, 1000000000 // t.n AS r FROM nds CROSS JOIN ntot t)",
-        """pr1 AS (
-          |  SELECT nd.doc_id, (150000000 // t.n) + (85 * coalesce(s.m, 0)) // 100 AS r
-          |  FROM nds nd CROSS JOIN ntot t
-          |  LEFT JOIN (SELECT e.dst AS doc_id, CAST(sum(p.r // o.outdeg) AS BIGINT) AS m
-          |             FROM edg e JOIN odg o ON e.src = o.src
-          |             JOIN pr0 p ON e.src = p.doc_id GROUP BY e.dst) s
-          |    ON nd.doc_id = s.doc_id
-          |)""".stripMargin,
-        """pr2 AS (
-          |  SELECT nd.doc_id, (150000000 // t.n) + (85 * coalesce(s.m, 0)) // 100 AS r
-          |  FROM nds nd CROSS JOIN ntot t
-          |  LEFT JOIN (SELECT e.dst AS doc_id, CAST(sum(p.r // o.outdeg) AS BIGINT) AS m
-          |             FROM edg e JOIN odg o ON e.src = o.src
-          |             JOIN pr1 p ON e.src = p.doc_id GROUP BY e.dst) s
-          |    ON nd.doc_id = s.doc_id
-          |)""".stripMargin,
-        """pr3 AS (
-          |  SELECT nd.doc_id, (150000000 // t.n) + (85 * coalesce(s.m, 0)) // 100 AS r
-          |  FROM nds nd CROSS JOIN ntot t
-          |  LEFT JOIN (SELECT e.dst AS doc_id, CAST(sum(p.r // o.outdeg) AS BIGINT) AS m
-          |             FROM edg e JOIN odg o ON e.src = o.src
-          |             JOIN pr2 p ON e.src = p.doc_id GROUP BY e.dst) s
-          |    ON nd.doc_id = s.doc_id
-          |)""".stripMargin)(
+        "pr0 AS (SELECT doc_id, 1000000000 // t.n AS r FROM nds CROSS JOIN ntot t)") ++
+        (1 to 3).map(pageRankRound): _*)(
         """SELECT p.doc_id, CAST(p.r AS BIGINT) AS rank_ppb,
           |  CAST(coalesce(i.n_in, 0) AS BIGINT) AS n_in,
           |  CAST(coalesce(o.outdeg, 0) AS BIGINT) AS n_out
@@ -242,11 +244,7 @@ object WebLinkQueries {
       // host-graph condensation: page edges → weighted host-pair edges,
       // self-host edges dropped
       withCtes(corpus, lgNds, lgNtot, lgEdg,
-        """hst AS (
-          |  SELECT CAST(doc_id AS BIGINT) AS pid,
-          |    source || '.example.com' AS host
-          |  FROM documents
-          |)""".stripMargin)(
+        pageHosts)(
         """SELECT sh.host AS src_host, dh.host AS dst_host,
           |  CAST(count(*) AS BIGINT) AS n_links,
           |  CAST(count(DISTINCT e.src) AS BIGINT) AS n_src_pages
@@ -262,38 +260,12 @@ object WebLinkQueries {
       WebCuration.contentDrift(Synth.pages(s, dir)),
       // refetch content-drift: closed-form per-fetch change flags (v(f) vs
       // v(f-1), both pure functions of (pid, f)), rolled up to host grain
-      withCtes(
-        """ftc AS (
-          |  SELECT CAST(doc_id AS BIGINT) AS pid,
-          |    source || '.example.com' AS host, g.f AS f
-          |  FROM documents CROSS JOIN generate_series(0, 2) g(f)
-          |  WHERE g.f <= doc_id % 3
-          |)""".stripMargin,
-        """chg AS (
-          |  SELECT pid, host,
-          |    CASE WHEN f = 0 THEN 0
-          |         WHEN ((pid // (f + 1)) % 3) <> ((pid // f) % 3) THEN 1
-          |         ELSE 0 END AS changed
-          |  FROM ftc
-          |)""".stripMargin,
-        """pdu AS (
-          |  SELECT pid, host, count(*) - 1 AS n_refetches,
-          |    sum(changed) AS n_changed
-          |  FROM chg GROUP BY pid, host
-          |)""".stripMargin,
-        """hdr AS (
-          |  SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
-          |    CAST(sum(n_refetches) AS BIGINT) AS n_refetches,
-          |    CAST(sum(n_changed) AS BIGINT) AS n_changed
-          |  FROM pdu GROUP BY host
-          |)""".stripMargin)(
+      withCtes(driftCtes: _*)(
         """SELECT host, n_urls, n_refetches, n_changed,
           |  CAST(CASE WHEN n_refetches = 0 THEN 0
           |       ELSE (n_changed * 1000000) // n_refetches END AS BIGINT) AS drift_ppm,
-          |  CASE WHEN n_refetches > 0 AND (n_changed * 1000000) // n_refetches >= 500000 THEN 'volatile'
-          |       WHEN n_refetches > 0 AND n_changed > 0 THEN 'drifting'
-          |       ELSE 'static' END AS bucket
-          |FROM hdr""".stripMargin)),
+          |  bucket
+          |FROM hdr JOIN bkt USING (host)""".stripMargin)),
 
     // host-level boilerplate removal: paragraphs on ≥50 % of a host's pages
     // are template chrome, dropped host-wide (one partial-aggregating
@@ -374,29 +346,12 @@ object WebLinkQueries {
     // ppm grid (max-normalized — every intermediate exact BIGINT)
     Query("q148_hits", (s, dir) =>
       LinkGraph.hits(Synth.corpus(s, dir)),
-      // HITS, 2 unrolled mutual-reinforcement rounds: integer ppm grid,
+      // HITS, 2 generated mutual-reinforcement rounds: integer ppm grid,
       // max-normalized (floor division), hubs seeded at 10^6
-      withCtes(corpus, lgNds, lgNtot, lgEdg,
-        """a1r AS (SELECT dst AS doc_id, CAST(sum(1000000) AS BIGINT) AS raw
-          |  FROM edg GROUP BY dst)""".stripMargin,
-        "a1m AS (SELECT max(raw) AS mx FROM a1r)",
-        """a1 AS (SELECT nd.doc_id, coalesce(r.raw, 0) * 1000000 // m.mx AS s
-          |  FROM nds nd CROSS JOIN a1m m LEFT JOIN a1r r ON nd.doc_id = r.doc_id)""".stripMargin,
-        """h1r AS (SELECT e.src AS doc_id, CAST(sum(a.s) AS BIGINT) AS raw
-          |  FROM edg e JOIN a1 a ON e.dst = a.doc_id GROUP BY e.src)""".stripMargin,
-        "h1m AS (SELECT max(raw) AS mx FROM h1r)",
-        """h1 AS (SELECT nd.doc_id, coalesce(r.raw, 0) * 1000000 // m.mx AS s
-          |  FROM nds nd CROSS JOIN h1m m LEFT JOIN h1r r ON nd.doc_id = r.doc_id)""".stripMargin,
-        """a2r AS (SELECT e.dst AS doc_id, CAST(sum(h.s) AS BIGINT) AS raw
-          |  FROM edg e JOIN h1 h ON e.src = h.doc_id GROUP BY e.dst)""".stripMargin,
-        "a2m AS (SELECT max(raw) AS mx FROM a2r)",
-        """a2 AS (SELECT nd.doc_id, coalesce(r.raw, 0) * 1000000 // m.mx AS s
-          |  FROM nds nd CROSS JOIN a2m m LEFT JOIN a2r r ON nd.doc_id = r.doc_id)""".stripMargin,
-        """h2r AS (SELECT e.src AS doc_id, CAST(sum(a.s) AS BIGINT) AS raw
-          |  FROM edg e JOIN a2 a ON e.dst = a.doc_id GROUP BY e.src)""".stripMargin,
-        "h2m AS (SELECT max(raw) AS mx FROM h2r)",
-        """h2 AS (SELECT nd.doc_id, coalesce(r.raw, 0) * 1000000 // m.mx AS s
-          |  FROM nds nd CROSS JOIN h2m m LEFT JOIN h2r r ON nd.doc_id = r.doc_id)""".stripMargin)(
+      withCtes(Seq(corpus, lgNds, lgNtot, lgEdg,
+        "h0 AS (SELECT doc_id, 1000000 AS s FROM nds)") ++
+        (1 to 2).flatMap(k => hitsHalfRound(s"a$k", s"h${k - 1}", "dst", "src") ++
+          hitsHalfRound(s"h$k", s"a$k", "src", "dst")): _*)(
         """SELECT a2.doc_id, CAST(a2.s AS BIGINT) AS auth_ppm,
           |  CAST(h2.s AS BIGINT) AS hub_ppm
           |FROM a2 JOIN h2 ON a2.doc_id = h2.doc_id""".stripMargin)),
@@ -421,11 +376,7 @@ object WebLinkQueries {
       // link farms: reciprocal host pairs at/above mean mutual weight,
       // closed into components (recursive reachability, min host label)
       withRecursiveCtes(corpus, lgNds, lgNtot, lgEdg,
-        """hst AS (
-          |  SELECT CAST(doc_id AS BIGINT) AS pid,
-          |    source || '.example.com' AS host
-          |  FROM documents
-          |)""".stripMargin,
+        pageHosts,
         """hge AS (
           |  SELECT sh.host AS src_host, dh.host AS dst_host, count(*) AS n_links
           |  FROM edg e

@@ -31,7 +31,7 @@ object Synth {
   // ---------------------------------------------------------------- points
 
   /** Shared geocode formulas. `pid` must be a non-negative BIGINT column.
-    * Textual SQL mirrors live in [[OracleSql]]. */
+    * The oracle's twins are `OracleSql.latSql` / `lngSql`. */
   def latCol(pid: Column): Column =
     when(pid % 5 === 0, lit(40.0) + ((pid * 131 + 17) % 2000) / lit(1000.0))
       .otherwise(((pid * 48271 + 11) % 160000) / lit(1000.0) - 80.0)
