@@ -9,6 +9,14 @@ import graft.synth.Synth
   * dimension joins, the codegen'd PIP lookup as a join key, partial
   * aggregation, bounded exchanges). Run: `sbt "runMain graft.Plans"`. */
 object Plans {
+  /** A plan string with expression and plan ids masked, and with the JVM
+    * identities that typed operators print (lambda class names, object
+    * hash codes), so a diff of two runs shows plan shapes, not id churn. */
+  def maskIds(plan: String): String =
+    plan.replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+      .replaceAll("\\$Lambda\\$\\d+/0x[0-9a-f]+", "\\$Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]+(?![\\w.])", "@x")
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -18,12 +26,9 @@ object Plans {
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.001"
 
-    // expression and plan ids are masked, so a diff of two runs shows
-    // plan shapes, not id churn
     def planOf(df: DataFrame): String = {
       df.collect()
-      df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-        .replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+      maskIds(df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0))
     }
     val sections = Seq(
       "Flagship: tiles (PIP join + stages join + depth/class kernel)" ->
@@ -78,7 +83,7 @@ object Plans {
         ops.Lexicon.lengthQuantiles(Synth.corpus(spark, sf)),
       "Fuzzy decontamination (eval-vs-corpus band join, pairs-scoped verify)" ->
         ops.TextOps.fuzzyDecontaminate(Synth.corpus(spark, sf),
-          org.apache.spark.sql.functions.col("doc_id") < 1000000L &&
+          Synth.isBaseDoc(org.apache.spark.sql.functions.col("doc_id")) &&
             org.apache.spark.sql.functions.col("doc_id") % 37 === 0),
       "k-min fingerprint (MinK4 declarative agg — 4-long buffer, HashAggregate)" ->
         ops.TextOps.fingerprint(Synth.corpus(spark, sf)),

@@ -3,7 +3,10 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import graft.pipeline.Snapshots
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
-  * oracle_sql.json, for the DuckDB compare (`tools/check_parity.py`). A
+  * oracle_sql.json, for the DuckDB compare (`tools/check_parity.py`), and
+  * logical_plans.json: each query's optimized logical plan, ids masked
+  * ([[Plans.maskIds]]); AQE leaves logical plans alone, so `cmp` of two
+  * runs' files shows whether a change moved a plan. A
   * query's old output is deleted before it runs, so a query that fails
   * shows as missing output rather than as a previous run's rows, and the
   * session cache is cleared after each query. */
@@ -25,11 +28,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    val plans = Seq.newBuilder[(String, String)]
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       Snapshots.deleteRecursively(Paths.get(s"$outDir/$name"))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        plans += name -> Plans.maskIds(df.queryExecution.optimizedPlan.toString)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // ops cache intermediates they never unpersist; drop them so a later
@@ -48,9 +54,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def writeJson(file: String, kvs: Iterable[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    writeJson("oracle_sql.json", SparkEntry.oracleSql.filter(kv => selected(kv._1)))
+    writeJson("logical_plans.json", plans.result())
     spark.stop()
   }
 }

@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CreateArray, EqualTo, Expression, If, IsNull, LessThan, Literal, Or, Slice}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CreateArray, EqualTo, ExpectsInputTypes, Expression, If, IsNull, LessThan, Literal, Or, Slice}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Bounded k-minimum aggregate (k = 4): the 4 smallest DISTINCT BIGINT
   * values per group, ascending, as `array<bigint>` — the winnowing-style
@@ -34,18 +34,12 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Intege
   * array rather than sentinels.
   */
 case class MinK4(child: Expression)
-    extends DeclarativeAggregate with UnaryLike[Expression] {
+    extends DeclarativeAggregate with UnaryLike[Expression] with ExpectsInputTypes {
 
   override def prettyName: String = "min_k4"
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"min_k4 requires BIGINT input, got ${child.dataType.catalogString}")
+  override def inputTypes = Seq(LongType)
 
   private def empty: Literal = Literal(Long.MaxValue, LongType)
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * PRECONDITION: the caller filters `length(text) >= Len` first. For
   * shorter texts the kernel returns an empty array, while the chain's
   * `sequence` would count DOWN from 1 and emit grams; every TextOps call
-  * site applies that filter, and "exactly the chain" holds only under it.
+  * site reads through that filter (`TextOps.shingleable`), and "exactly
+  * the chain" holds only under it.
   *
   * Why a kernel: the expression chain pays, per shingle (~505 per doc,
   * ~675M per ×256 bench corpus pass), one O(position) UTF8String substring
@@ -50,48 +51,10 @@ object GraftMd5 {
   private val S: Array[Int] = Array(
     7, 12, 17, 22, 5, 9, 14, 20, 4, 11, 16, 23, 6, 10, 15, 21)
 
-  /** MD5 single-block compression over a message of `len` ≤ 55 bytes already
-    * laid out (with padding) in the 16-word little-endian block `m`; returns
-    * the 60-bit value of the first 15 hex digits of the digest. */
-  private def md5Block60(m: Array[Int]): Long = {
-    var a = 0x67452301; var b = 0xefcdab89; var c = 0x98badcfe; var d = 0x10325476
-    var i = 0
-    while (i < 64) {
-      var f = 0; var g = 0
-      if (i < 16) { f = (b & c) | (~b & d); g = i }
-      else if (i < 32) { f = (d & b) | (~d & c); g = (5 * i + 1) & 15 }
-      else if (i < 48) { f = b ^ c ^ d; g = (3 * i + 5) & 15 }
-      else { f = c ^ (b | ~d); g = (7 * i) & 15 }
-      val tmp = d; d = c; c = b
-      b = b + Integer.rotateLeft(a + f + K(i) + m(g), S(((i >> 4) << 2) | (i & 3)))
-      a = tmp
-      i += 1
-    }
-    val aF = a + 0x67452301
-    val bF = b + 0xefcdab89
-    // digest bytes d0..d7 are LE(aF) ++ LE(bF); the 15-hex-digit prefix value
-    // is d0<<52 | d1<<44 | d2<<36 | d3<<28 | d4<<20 | d5<<12 | d6<<4 | d7>>4.
-    ((aF & 0xffL) << 52) | ((aF & 0xff00L) << 36) | ((aF & 0xff0000L) << 20) |
-      ((aF & 0xff000000L) << 4) | ((bF & 0xffL) << 20) | ((bF & 0xff00L) << 4) |
-      ((bF & 0xff0000L) >>> 12) | ((bF & 0xff000000L) >>> 28)
-  }
+  private val IV: Array[Int] = Array(0x67452301, 0xefcdab89, 0x98badcfe, 0x10325476)
 
-  /** 60-bit md5 prefix of `len` bytes at `buf(off)` (len ≤ 55), reusing the
-    * caller's 16-int scratch block (fully overwritten here). */
-  def md5Prefix60(buf: Array[Byte], off: Int, len: Int, m: Array[Int]): Long = {
-    java.util.Arrays.fill(m, 0)
-    var j = 0
-    while (j < len) {
-      m(j >> 2) |= (buf(off + j) & 0xff) << ((j & 3) << 3)
-      j += 1
-    }
-    m(len >> 2) |= 0x80 << ((len & 3) << 3)
-    m(14) = len << 3
-    md5Block60(m)
-  }
-
-  /** MD5 single-block compression updating full 4-word `state` in place
-    * (for the multi-block general-length path). */
+  /** MD5 compression of the 16-word little-endian block `m` into the 4-word
+    * `state`, in place. */
   private def md5Block(m: Array[Int], state: Array[Int]): Unit = {
     var a = state(0); var b = state(1); var c = state(2); var d = state(3)
     var i = 0
@@ -109,6 +72,47 @@ object GraftMd5 {
     state(0) += a; state(1) += b; state(2) += c; state(3) += d
   }
 
+  /** The digest of the single block `m` (message ≤ 55 bytes, already padded
+    * and length-stamped) as the 60-bit value of its first 15 hex digits;
+    * `state` is 4 words of scratch. */
+  private def md5Block60(m: Array[Int], state: Array[Int]): Long = {
+    System.arraycopy(IV, 0, state, 0, 4)
+    md5Block(m, state)
+    prefix60(state)
+  }
+
+  /** The 60-bit value of the first 15 hex digits of the digest in `state`:
+    * digest bytes d0..d7 are LE(state(0)) ++ LE(state(1)), and the value is
+    * d0<<52 | d1<<44 | d2<<36 | d3<<28 | d4<<20 | d5<<12 | d6<<4 | d7>>4. */
+  private def prefix60(state: Array[Int]): Long = {
+    val aF = state(0); val bF = state(1)
+    ((aF & 0xffL) << 52) | ((aF & 0xff00L) << 36) | ((aF & 0xff0000L) << 20) |
+      ((aF & 0xff000000L) << 4) | ((bF & 0xffL) << 20) | ((bF & 0xff00L) << 4) |
+      ((bF & 0xff0000L) >>> 12) | ((bF & 0xff000000L) >>> 28)
+  }
+
+  /** Lays the `len` < 64 bytes at `buf(off)` into the zeroed block `m`,
+    * followed by the 0x80 pad byte. */
+  private def fillTail(buf: Array[Byte], off: Int, len: Int, m: Array[Int]): Unit = {
+    java.util.Arrays.fill(m, 0)
+    var j = 0
+    while (j < len) {
+      m(j >> 2) |= (buf(off + j) & 0xff) << ((j & 3) << 3)
+      j += 1
+    }
+    m(len >> 2) |= 0x80 << ((len & 3) << 3)
+  }
+
+  /** 60-bit md5 prefix of `len` bytes at `buf(off)` (len ≤ 55), reusing the
+    * caller's 16-int scratch block (fully overwritten here) and 4-int
+    * scratch state. */
+  private def md5Prefix60(buf: Array[Byte], off: Int, len: Int,
+      m: Array[Int], state: Array[Int]): Long = {
+    fillTail(buf, off, len, m)
+    m(14) = len << 3
+    md5Block60(m, state)
+  }
+
   /** 60-bit md5-hex-prefix value (≡ CAST(conv(substring(md5(s),1,15),16,10)
     * AS BIGINT)) of an arbitrary-length UTF8String — the scalar form used on
     * paragraphs / words / whole texts. Allocation-free beyond one scratch
@@ -116,7 +120,7 @@ object GraftMd5 {
   def md5Prefix60Any(s: UTF8String): Long = {
     val bytes = s.getBytes
     val n = bytes.length
-    val state = Array(0x67452301, 0xefcdab89, 0x98badcfe, 0x10325476)
+    val state = IV.clone()
     val m = new Array[Int](16)
     var off = 0
     while (n - off >= 64) {
@@ -131,21 +135,12 @@ object GraftMd5 {
       off += 64
     }
     val rem = n - off
-    java.util.Arrays.fill(m, 0)
-    var j = 0
-    while (j < rem) {
-      m(j >> 2) |= (bytes(off + j) & 0xff) << ((j & 3) << 3)
-      j += 1
-    }
-    m(rem >> 2) |= 0x80 << ((rem & 3) << 3)
+    fillTail(bytes, off, rem, m)
     if (rem >= 56) { md5Block(m, state); java.util.Arrays.fill(m, 0) }
     m(14) = (n.toLong << 3).toInt
     m(15) = (n.toLong >>> 29).toInt
     md5Block(m, state)
-    val aF = state(0); val bF = state(1)
-    ((aF & 0xffL) << 52) | ((aF & 0xff00L) << 36) | ((aF & 0xff0000L) << 20) |
-      ((aF & 0xff000000L) << 4) | ((bF & 0xffL) << 20) | ((bF & 0xff00L) << 4) |
-      ((bF & 0xff0000L) >>> 12) | ((bF & 0xff000000L) >>> 28)
+    prefix60(state)
   }
 
   val ShingleLen = 8
@@ -167,6 +162,7 @@ object GraftMd5 {
     var p = 0
     while (p < scanTo) { if (bytes(p) < 0) { ascii = false; p = scanTo }; p += 1 }
     val m = new Array[Int](16)
+    val state = new Array[Int](4)
     if (ascii) {
       val nChars = scanTo // = min(numChars, 512)
       val n = nChars - (ShingleLen - 1)
@@ -180,7 +176,7 @@ object GraftMd5 {
           ((bytes(i + 2) & 0xff) << 16) | ((bytes(i + 3) & 0xff) << 24)
         m(1) = (bytes(i + 4) & 0xff) | ((bytes(i + 5) & 0xff) << 8) |
           ((bytes(i + 6) & 0xff) << 16) | ((bytes(i + 7) & 0xff) << 24)
-        out(i) = md5Block60(m)
+        out(i) = md5Block60(m, state)
         i += 1
       }
       pack(out, n, distinct)
@@ -201,7 +197,7 @@ object GraftMd5 {
       var i = 0
       while (i < n) {
         val b0 = starts(i)
-        out(i) = md5Prefix60(bytes, b0, starts(i + ShingleLen) - b0, m)
+        out(i) = md5Prefix60(bytes, b0, starts(i + ShingleLen) - b0, m, state)
         i += 1
       }
       pack(out, n, distinct)
@@ -248,25 +244,11 @@ object GraftMd5 {
     if (!distinct)
       return UnsafeArrayData.fromPrimitiveArray(
         if (out.length == n) out else java.util.Arrays.copyOf(out, n))
-    var cap = 16
-    while (cap < (n << 1)) cap <<= 1
-    val mask = cap - 1
-    val table = new Array[Long](cap)
-    java.util.Arrays.fill(table, -1L)
+    val set = new LongSet(n)
     var kept = 0
     var i = 0
     while (i < n) {
-      val v = out(i) // 60-bit, always ≥ 0, so -1 is a safe empty slot
-      var h = (v * 0x9E3779B97F4A7C15L >>> 40).toInt & mask
-      var dup = false
-      var done = false
-      while (!done) {
-        val t = table(h)
-        if (t == -1L) { table(h) = v; done = true }
-        else if (t == v) { dup = true; done = true }
-        else h = (h + 1) & mask
-      }
-      if (!dup) { out(kept) = v; kept += 1 }
+      if (set.add(out(i))) { out(kept) = out(i); kept += 1 }
       i += 1
     }
     UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, kept))
@@ -277,21 +259,16 @@ object GraftMd5 {
   * Codegen is a single static call, so consumers stay inside whole-stage
   * codegen (same discipline as [[graft.geo.PipLookup]]).
   *
-  * PRECONDITION: callers filter `length(text) >= TextOps.ShingleLen`; only
-  * then are the values the oracle's SQL chain (see [[GraftMd5]]). */
+  * PRECONDITION: callers filter `length(text) >= TextOps.ShingleLen` (as
+  * `TextOps.shingleable` does); only then are the values the oracle's SQL
+  * chain (see [[GraftMd5]]). */
 case class Shingles60(child: Expression, distinct: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   override def prettyName: String =
     if (distinct) "shingles60_distinct" else "shingles60"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
+  override def inputTypes = Seq(StringType)
 
   override protected def nullSafeEval(text: Any): Any =
     GraftMd5.shingles60(text.asInstanceOf[UTF8String], distinct)
@@ -315,16 +292,10 @@ object Shingles60 {
 
 /** Fused wide MinHash: `minhash16(text)` → array<long>(16) — see
   * [[GraftMd5.minhash16]]. */
-case class Minhash16(child: Expression) extends UnaryExpression {
+case class Minhash16(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "minhash16"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(s: Any): Any =
     GraftMd5.minhash16(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -341,16 +312,10 @@ object Minhash16 {
 /** Scalar 60-bit md5-prefix: ≡ `CAST(conv(substring(md5(s),1,15),16,10) AS
   * BIGINT)` for any string length — the paragraph/word/whole-text hash key
   * sites, minus the hex-string round trip and the string→decimal parse. */
-case class Md5Prefix60(child: Expression) extends UnaryExpression {
+case class Md5Prefix60(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "md5_prefix60"
   override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires STRING input, got ${child.dataType.catalogString}")
+  override def inputTypes = Seq(StringType)
   override protected def nullSafeEval(s: Any): Any =
     GraftMd5.md5Prefix60Any(s.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

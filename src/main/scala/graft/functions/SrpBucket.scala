@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -44,56 +44,52 @@ object GraftAnn {
   * used to run through two corpus-row joins and an aggregate). Open-address
   * probe of the smaller side, no result array materialized. */
 object IntersectCountKernel {
-  def count(a: org.apache.spark.sql.catalyst.util.ArrayData,
-      b: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+  def count(a: ArrayData, b: ArrayData): Long = {
     val (s, l) = if (a.numElements() <= b.numElements()) (a, b) else (b, a)
     val n = s.numElements()
     if (n == 0) return 0L
-    var cap = 16
-    while (cap < (n << 1)) cap <<= 1
-    val mask = cap - 1
-    val table = new Array[Long](cap)
-    java.util.Arrays.fill(table, -1L) // values are 60-bit hashes, ≥ 0
+    val set = new LongSet(n)
     var i = 0
-    while (i < n) {
-      val v = s.getLong(i)
-      var h = (v * 0x9E3779B97F4A7C15L >>> 40).toInt & mask
-      while (table(h) != -1L && table(h) != v) h = (h + 1) & mask
-      table(h) = v
-      i += 1
-    }
+    while (i < n) { set.add(s.getLong(i)); i += 1 }
     var cnt = 0L
     val m = l.numElements()
     var j = 0
-    while (j < m) {
-      val v = l.getLong(j)
-      var h = (v * 0x9E3779B97F4A7C15L >>> 40).toInt & mask
-      var done = false
-      while (!done) {
-        val t = table(h)
-        if (t == v) { cnt += 1L; done = true }
-        else if (t == -1L) done = true
-        else h = (h + 1) & mask
-      }
-      j += 1
-    }
+    while (j < m) { if (set.contains(l.getLong(j))) cnt += 1L; j += 1 }
     cnt
   }
 }
 
+/** Open-addressed set of non-negative longs (the 60-bit shingle hashes; -1
+  * marks an empty slot), sized for `n` elements: the distinct pass of
+  * [[GraftMd5.shingles60]] and the build side of [[IntersectCountKernel]]. */
+private[functions] final class LongSet(n: Int) {
+  private val mask = { var cap = 16; while (cap < (n << 1)) cap <<= 1; cap - 1 }
+  private val table = new Array[Long](mask + 1)
+  java.util.Arrays.fill(table, -1L)
+
+  /** The slot that holds `v`, or the empty slot where it would go. */
+  private def slot(v: Long): Int = {
+    var h = (v * 0x9E3779B97F4A7C15L >>> 40).toInt & mask
+    while (table(h) != -1L && table(h) != v) h = (h + 1) & mask
+    h
+  }
+
+  /** Adds `v`; false when it was already present. */
+  def add(v: Long): Boolean = {
+    val h = slot(v)
+    val fresh = table(h) == -1L
+    table(h) = v
+    fresh
+  }
+
+  def contains(v: Long): Boolean = table(slot(v)) == v
+}
+
 case class IntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression with ExpectsInputTypes {
   override def prettyName: String = "intersect_count"
   override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires two ARRAY<BIGINT> inputs, got $other")
-    }
+  override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
   override protected def nullSafeEval(a: Any, b: Any): Any =
     IntersectCountKernel.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -111,18 +107,10 @@ object IntersectCount {
 }
 
 case class SrpBucket(child: Expression, nBits: Int, tableSeed: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
   override def prettyName: String = "srp_bucket"
   override def dataType: DataType = LongType
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires ARRAY<BIGINT> input, got ${other.catalogString}")
-    }
+  override def inputTypes = Seq(ArrayType(LongType))
   override protected def nullSafeEval(qa: Any): Any =
     GraftAnn.srpBucket(qa.asInstanceOf[ArrayData], nBits, tableSeed)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

@@ -444,10 +444,7 @@ object AnnSearch {
     val live = Paths.get(path)
     // delete-then-rename: a crash between the two leaves NO live dir, and
     // the reader falls back to the inline chain
-    if (Files.isDirectory(live)) {
-      Files.walk(live).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    graft.pipeline.Snapshots.deleteRecursively(live)
     Files.move(Paths.get(staging), live, StandardCopyOption.ATOMIC_MOVE)
     emb.sparkSession.read.parquet(path)
   }

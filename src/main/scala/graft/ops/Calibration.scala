@@ -145,9 +145,8 @@ object Calibration {
     * discharge that is a deterministic multiple of the SRC discharge —
     * the multiplier range [0.05, 10.04] exercises both Mann_flag branches. */
   def observations(spark: SparkSession): DataFrame =
-    spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select(col("id").as("hydroid"))
-      .filter(col("hydroid") % 23 < 2 && col("hydroid") % 97 =!= 0)
+    Synth.hydroids(spark)
+      .filter(col("hydroid") % 23 < 2 && !Synth.isLake(col("hydroid")))
       .withColumn("j", explode(sequence(lit(0), lit(2))))
       .withColumn("ki", (col("hydroid") * 7 + col("j") * 31) % 84)
 
@@ -214,8 +213,7 @@ object Calibration {
   /** Sparse bathymetry survey table (eHydro analog): every 13th catchment
     * carries missing cross-section area / wetted perimeter corrections. */
   def bathyDim(spark: SparkSession): DataFrame =
-    spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select(col("id").as("hydroid"))
+    Synth.hydroids(spark)
       .filter(col("hydroid") % 13 === 0)
       .withColumn("missing_xs", ((col("hydroid") * 29 + 5) % 500) / lit(10.0))
       .withColumn("missing_wp", ((col("hydroid") * 17 + 3) % 200) / lit(10.0))
@@ -319,25 +317,17 @@ object Calibration {
     * both knot scans; each interp is one partial-aggregating groupBy; the
     * final join is keyed on the (gage, interval) grain — all bounded. */
   def sierraTest(spark: SparkSession): DataFrame = {
-    val gage = col("hydroid") % 199 === 0 && col("hydroid") % 97 =!= 0
+    val gage = Synth.isGage(col("hydroid")) && !Synth.isLake(col("hydroid"))
     val fim = Synth.hydrotable(spark).filter(gage)
       .select(col("hydroid"), col("stage"), col("discharge_cms"))
-    val usgs = spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select(col("id").as("hydroid")).filter(gage)
-      .withColumn("i", explode(sequence(lit(0), lit(Synth.StageKnots - 1))))
-      .withColumn("stage", col("i") * lit(Synth.StageStep))
-      .withColumn("discharge_cms",
-        (col("hydroid") % 9 + 2) * col("stage")
-          + ((col("hydroid") % 4) * lit(0.3) + lit(0.4)) * col("stage") * col("stage"))
+    val usgs = Synth.stageKnots(Synth.hydroids(spark).filter(gage))
+      .withColumn("discharge_cms", secondCurve)
       .select(col("hydroid"), col("stage"), col("discharge_cms"))
-    val recurr = spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select(col("id").as("hydroid")).filter(gage)
-      .withColumn("k", explode(sequence(lit(0), lit(4))))
+    val recurr = recurrenceFlows(spark, gage)
       .select(col("hydroid"),
         element_at(array(lit(2), lit(5), lit(10), lit(25), lit(50)), col("k") + 1)
           .as("interval"),
-        ((((col("hydroid") * 37 + 19) % 3000) / lit(10.0) + lit(10.0))
-          * (lit(1.0) + col("k") * lit(0.8))).as("discharge"))
+        col("flow").as("discharge"))
     def interpAt(knots: DataFrame, out: String): DataFrame =
       knots.join(broadcast(recurr), "hydroid")
         .groupBy(col("hydroid"), col("interval"), col("discharge"))
@@ -380,12 +370,27 @@ object Calibration {
     * path-bounded, never corpus-bounded; the reach×gage join is an equi-join
     * on the path id with path-length-bounded fan-out. No iteration, no
     * driver-side walking. */
+  /** The second Manning parameterization of the stage ladder, the USGS curve
+    * of [[sierraTest]] and the ras2fim curve of [[ras2fimRating]]. */
+  private def secondCurve: Column =
+    (col("hydroid") % 9 + 2) * col("stage") +
+      ((col("hydroid") % 4) * lit(0.3) + lit(0.4)) * col("stage") * col("stage")
+
+  /** The NWM recurrence flows (2/5/10/25/50-year, `k` = 0..4) of the
+    * catchments that pass `sites`: (hydroid, k, flow). */
+  private def recurrenceFlows(spark: SparkSession, sites: Column): DataFrame =
+    Synth.hydroids(spark).filter(sites)
+      .withColumn("k", explode(sequence(lit(0), lit(4))))
+      .withColumn("flow",
+        (((col("hydroid") * 37 + 19) % 3000) / lit(10.0) + lit(10.0))
+          * (lit(1.0) + col("k") * lit(0.8)))
+
   def usgsRatingTrace(spark: SparkSession, traceDistKm: Double = 8.0): DataFrame = {
     val net = StreamNet.reaches(spark)
     val lp = StreamNet.levelPaths(spark, net)
     val base = net.join(lp, Seq("huc8", "hydroid"))
       .withColumn("lr", floor(col("hydroid") / 144).cast("long") % 8)
-      .withColumn("lake", (col("hydroid") % 97 === 0).cast("int"))
+      .withColumn("lake", Synth.isLake(col("hydroid")).cast("int"))
       .select(col("hydroid"), col("levelpath_id"), col("lr"), col("length_km"), col("lake"))
     val wDown = Window.partitionBy(col("levelpath_id")).orderBy(col("lr").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -400,7 +405,7 @@ object Calibration {
       .withColumn("len_next", lead(col("length_km"), 1).over(wLead))
     val traced = walked
       .withColumn("maxlakenext", lead(col("maxlakedown"), 1).over(wLead))
-    val gages = traced.filter(col("hydroid") % 199 === 0)
+    val gages = traced.filter(Synth.isGage(col("hydroid")))
       .select(col("levelpath_id"), col("hydroid").as("gage_id"), col("lr").as("lr_g"),
         col("cumdown").as("cumdown_g"), col("cumup").as("cumup_g"),
         col("length_km").as("len_g"))
@@ -449,21 +454,15 @@ object Calibration {
     * scan; the argmin is one partial-aggregating min(struct) per (location,
     * interval); every join is keyed on the location grain. */
   def ras2fimRating(spark: SparkSession): DataFrame = {
-    val xs = col("hydroid") % 31 === 5 && col("hydroid") % 97 =!= 0
+    val xs = col("hydroid") % 31 === 5 && !Synth.isLake(col("hydroid"))
     val curve = Synth.hydrotable(spark).filter(xs)
-      .select(col("hydroid"), col("huc8"), col("stage"),
-        ((col("hydroid") % 9 + 2) * col("stage")
-          + ((col("hydroid") % 4) * lit(0.3) + lit(0.4)) * col("stage") * col("stage"))
-          .as("q_ras"),
+      .select(col("hydroid"), col("huc8"), col("stage"), secondCurve.as("q_ras"),
         (col("stage") - lit(0.25)).as("hand"))
-    val recurr = spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select(col("id").as("hydroid")).filter(xs)
-      .withColumn("k", explode(sequence(lit(0), lit(4))))
+    val recurr = recurrenceFlows(spark, xs)
       .select(col("hydroid"), col("k"),
         element_at(array(lit("2_0_year"), lit("5_0_year"), lit("10_0_year"),
           lit("25_0_year"), lit("50_0_year")), col("k").cast("int") + 1).as("nwm_recur"),
-        ((((col("hydroid") * 37 + 19) % 3000) / lit(10.0) + lit(10.0))
-          * (lit(1.0) + col("k") * lit(0.8))).as("nwm_recur_flow_cms"))
+        col("flow").as("nwm_recur_flow_cms"))
     curve.join(broadcast(recurr), "hydroid")
       .withColumn("qdiff", abs(col("q_ras") - col("nwm_recur_flow_cms")))
       // huc8 is functionally dependent on hydroid — a free extra group key
@@ -473,7 +472,7 @@ object Calibration {
         abs((col("m.q_ras") - col("nwm_recur_flow_cms")) / col("m.q_ras")))
       .filter(col("m.hand") > 0.0 && col("check_variance") < 0.1)
       .select(concat(lit("xs_"), col("hydroid")).as("location_id"),
-        col("hydroid"), (col("hydroid") + 1000000L).as("feature_id"), col("huc8"),
+        col("hydroid"), Synth.featureIdOf(col("hydroid")).as("feature_id"), col("huc8"),
         col("nwm_recur"), col("m.hand").as("hand"),
         col("m.q_ras").as("discharge_cms"), col("nwm_recur_flow_cms"),
         col("check_variance"))
@@ -488,8 +487,8 @@ object Calibration {
     * broadcasts; the hydrotable never shuffles. Knots are thinned 12× for
     * the verification dump (the merge itself is per-row). */
   def manualCalibration(spark: SparkSession): DataFrame = {
-    val manual = spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select((col("id") + 1000000L).as("feature_id"))
+    val manual = Synth.hydroids(spark)
+      .select(Synth.featureIdOf(col("hydroid")).as("feature_id"))
       .filter(col("feature_id") % 37 === 0)
       .withColumn("calb_coef_manual", (col("feature_id") % 9 + 2) / lit(4.0))
     Synth.hydrotable(spark)
@@ -616,7 +615,7 @@ object Calibration {
     val rs = reachesDf.select(col("hydroid"), col("order_"), col("length_km"),
       col("to_node"),
       (((col("hydroid") * 7 + 3) % 40) / lit(20.0)).as("areasqkm"),
-      (col("hydroid") % 97 === 0).as("is_lake"))
+      Synth.isLake(col("hydroid")).as("is_lake"))
     val d2 = smallSegmentDonors(rs)
     val donorIds = d2.filter(col("donor_id").isNotNull)
       .select(col("donor_id")).distinct()
@@ -653,8 +652,8 @@ object Calibration {
   def variableMannings(spark: SparkSession): DataFrame = {
     val src = srcGeom(spark)
     val bf = bankfull(src).select("hydroid", "volume_bankfull")
-    val mann = spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select((col("id") + 1000000L).as("feature_id"))
+    val mann = Synth.hydroids(spark)
+      .select(Synth.featureIdOf(col("hydroid")).as("feature_id"))
       .filter(col("feature_id") % 17 =!= 4)
       .withColumn("vm_channel_n", lit(0.02) + (col("feature_id") % 9) * lit(0.005))
       .withColumn("vm_overbank_n", lit(0.08) + (col("feature_id") % 5) * lit(0.02))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.synth.Synth
 
@@ -22,23 +22,38 @@ object CatFim {
 
   val Magnitudes: Seq[String] = Seq("action", "minor", "moderate", "major", "record")
 
-  /** Per-site per-magnitude threshold flows: deterministic base flow per
-    * site, each magnitude 75 % higher than the last (the WRDS threshold
-    * table analog). Sites = every 41st non-lake catchment. */
-  def siteThresholds(spark: SparkSession): DataFrame = {
-    val magName = when(col("m") === 0, lit("action"))
-      .when(col("m") === 1, lit("minor"))
-      .when(col("m") === 2, lit("moderate"))
-      .when(col("m") === 3, lit("major"))
-      .otherwise(lit("record"))
-    spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select(col("id").as("hydroid"))
-      .filter(col("hydroid") % 41 === 0 && col("hydroid") % 97 =!= 0)
+  /** The name of magnitude `m` among the first `n` [[Magnitudes]]; `m` past
+    * the last but one reads as the last. */
+  private def magnitudeName(n: Int): Column = {
+    val names = Magnitudes.take(n)
+    (1 until n - 1).foldLeft(when(col("m") === 0, lit(names.head))) {
+      (ladder, m) => ladder.when(col("m") === m, lit(names(m)))
+    }.otherwise(lit(names.last))
+  }
+
+  /** The AHPS sites: every 41st non-lake catchment. */
+  private def sites(spark: SparkSession): DataFrame =
+    Synth.hydroids(spark)
+      .filter(col("hydroid") % 41 === 0 && !Synth.isLake(col("hydroid")))
+
+  // site h's base flow is ((h·SiteMul + SiteAdd) mod SiteMod)/10 + 5
+  private val SiteMul = 53; private val SiteAdd = 11; private val SiteMod = 4000
+
+  /** The threshold ladder (the WRDS threshold table analog): per site and
+    * magnitude m the flow base·(1 + 0.75·m), each 75 % above the last. */
+  def siteThresholds(spark: SparkSession): DataFrame =
+    sites(spark)
       .withColumn("m", explode(sequence(lit(0), lit(4))))
-      .withColumn("magnitude", magName)
+      .withColumn("magnitude", magnitudeName(5))
       .withColumn("discharge",
-        (((col("hydroid") * 53 + 11) % 4000) / lit(10.0) + lit(5.0))
+        (((col("hydroid") * SiteMul + SiteAdd) % SiteMod) / lit(10.0) + lit(5.0))
           * (lit(1.0) + col("m") * lit(0.75)))
+
+  /** The category a discharge `q` puts site `hydroid` in: how many of its
+    * [[Magnitudes]] thresholds ([[siteThresholds]]) `q` reaches, 0..5. */
+  def categoryOf(hydroid: Long, q: Double): Int = {
+    val base = ((hydroid * SiteMul + SiteAdd) % SiteMod) / 10.0 + 5.0
+    Magnitudes.indices.count(m => q >= base * (1.0 + m * 0.75))
   }
 
   /** Stage-interval generation (q67) —
@@ -54,13 +69,7 @@ object CatFim {
   def stageIntervals(spark: SparkSession): DataFrame = {
     val base = lit(1.0) + (col("hydroid") % 4) * lit(0.5)
     val step = (col("hydroid") % 3) * lit(1.5)
-    val magName = when(col("m") === 0, lit("action"))
-      .when(col("m") === 1, lit("minor"))
-      .when(col("m") === 2, lit("moderate"))
-      .otherwise(lit("major"))
-    spark.range(0, (Synth.CatRows * Synth.CatCols).toLong)
-      .select(col("id").as("hydroid"))
-      .filter(col("hydroid") % 41 === 0 && col("hydroid") % 97 =!= 0)
+    sites(spark)
       .withColumn("m", explode(sequence(lit(0), lit(3))))
       .withColumn("t", base + col("m") * step)
       .withColumn("t_next", base + (col("m") + 1) * step)
@@ -70,7 +79,7 @@ object CatFim {
         when(col("m") < 3, floor(col("t_next")).cast("long")).otherwise(col("lo") + 5))
       .filter(col("hi") - 1 >= col("lo"))
       .withColumn("interval_stage", explode(sequence(col("lo"), col("hi") - 1)))
-      .select(col("hydroid"), magName.as("category"), col("interval_stage"))
+      .select(col("hydroid"), magnitudeName(4).as("category"), col("interval_stage"))
   }
 
   /** Site-acceptance workflow (q75) — the CatFIM pre-flight that decides
@@ -86,7 +95,7 @@ object CatFim {
     * over the big SRC is one partial-aggregating max per hydroid. */
   def siteAcceptance(spark: SparkSession): DataFrame = {
     val thr = siteThresholds(spark)
-    val rec = thr.filter(col("magnitude") === "record")
+    val rec = thr.filter(col("magnitude") === Magnitudes.last)
       .select(col("hydroid"), col("discharge").as("record_flow"))
     val mags = thr.groupBy(col("hydroid")).agg(count(lit(1)).as("n_mags"))
     val qmax = Synth.hydrotable(spark)
@@ -108,7 +117,7 @@ object CatFim {
       .groupBy(col("hydroid"), col("m"), col("magnitude"), col("discharge"))
       .agg(RatingInterp.stageExpr.as("stage_m"))
     val qNow = Synth.forecast(spark)
-      .select((col("feature_id") - 1000000L).as("hydroid"), col("discharge").as("q_now"))
+      .select(Synth.hydroidOf(col("feature_id")).as("hydroid"), col("discharge").as("q_now"))
     interp.join(broadcast(qNow), "hydroid")
       .select(col("hydroid"), col("magnitude"),
         col("discharge").as("mag_flow"), col("stage_m"),

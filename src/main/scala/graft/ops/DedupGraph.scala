@@ -23,19 +23,13 @@ import org.apache.spark.sql.functions._
   */
 object DedupGraph {
 
-  /** Undirected dup edges (doc_a < doc_b) over the corpus: exact-content
-    * pairs (each content cluster's min id paired with every other member —
-    * a star, which is enough for connectivity) ∪ LSH-candidate pairs whose
-    * exact n-gram Jaccard clears `jaccardMin`. Pair generation is the
+  /** Undirected dup edges (doc_a < doc_b) over the corpus: the
+    * exact-content star ([[TextOps.exactDupStar]]) ∪ LSH-candidate pairs
+    * whose exact n-gram Jaccard clears `jaccardMin`. Pair generation is the
     * bucketed LSH family from [[TextOps]] — never all-pairs. */
   def dupEdges(docs: DataFrame, jaccardMin: Double = 0.9): DataFrame = {
-    val exact = docs
-      .groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("doc_a"), count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .join(docs.select(col("doc_id").as("doc_b"), md5(col("text")).as("h")), "h")
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
+    val exact = TextOps.exactDupStar(docs)
+      .select(col("keeper").as("doc_a"), col("doc_id").as("doc_b"))
     val near = TextOps.ngramJaccard(docs)
       .filter(col("jaccard") >= jaccardMin)
       .select(col("doc_a"), col("doc_b"))

@@ -25,7 +25,7 @@ object Lexicon {
     * the oracle mirrors with a bounded generate_series over string_split. */
   def words(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      explode(expr(s"slice(split(text, ' '), 1, ${WebCuration.MaxWords})")).as("w"))
+      explode(WebCuration.words).as("w"))
 
   /** Term frequencies: one row per (doc_id, w). */
   def termFreq(docs: DataFrame): DataFrame =
@@ -83,7 +83,7 @@ object Lexicon {
     * and the global top-k is a TakeOrdered, never a full sort. */
   def bpePairs(docs: DataFrame, k: Int = 20): DataFrame =
     docs
-      .select(expr(s"slice(split(text, ' '), 1, ${WebCuration.MaxWords})").as("ws"))
+      .select(WebCuration.words.as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(ws) - 1), i -> struct(ws[i-1] AS w1, ws[i] AS w2))")).as("p"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.synth.Synth
 
 /** Link-graph analytics over the web corpus: fixed-point PageRank — the
   * canonical iterated join+aggregate workload of web-scale curation (domain
@@ -36,7 +37,7 @@ object LinkGraph {
     * dropped, duplicate targets collapsed) — many-to-one by design so the
     * graph has hubs and leaves. */
   def edges(docs: DataFrame): DataFrame = {
-    val nodes = docs.filter(col("doc_id") < 1000000L).select(col("doc_id"))
+    val nodes = docs.filter(Synth.isBaseDoc(col("doc_id"))).select(col("doc_id"))
     val n = nodes.agg(count(lit(1)).as("n"))
     nodes.crossJoin(broadcast(n)) // 1-row total, broadcast by construction
       .withColumn("k", explode(expr("sequence(0, 2)")))
@@ -54,7 +55,7 @@ object LinkGraph {
   /** q140: `iterations` rounds of fixed-point PageRank; per node the final
     * rank (ppb) plus in/out degree. */
   def pageRank(docs: DataFrame, iterations: Int = 3): DataFrame = {
-    val nodes = docs.filter(col("doc_id") < 1000000L).select(col("doc_id"))
+    val nodes = docs.filter(Synth.isBaseDoc(col("doc_id"))).select(col("doc_id"))
     val n = nodes.agg(count(lit(1)).as("n"))
     val withN = nodes.crossJoin(broadcast(n))
     val e = edges(docs)
@@ -96,7 +97,7 @@ object LinkGraph {
     * WindowGroupLimit shape (map-side heaps, never a full per-target sort).
     * Output is bounded by k · targets regardless of in-link skew. */
   def anchorText(docs: DataFrame, k: Int = 3): DataFrame = {
-    val anchors = docs.filter(col("doc_id") < 1000000L)
+    val anchors = docs.filter(Synth.isBaseDoc(col("doc_id")))
       .select(col("doc_id").as("src"),
         explode(slice(split(col("text"), " "), 1, 3)).as("w"))
     val counts = edges(docs).join(anchors, "src")
@@ -161,7 +162,7 @@ object LinkGraph {
     * fixed and small; at production round counts, checkpoint scores every
     * ~10 rounds like PR. */
   def hits(docs: DataFrame, rounds: Int = 2): DataFrame = {
-    val nodes = docs.filter(col("doc_id") < 1000000L).select(col("doc_id"))
+    val nodes = docs.filter(Synth.isBaseDoc(col("doc_id"))).select(col("doc_id"))
     val e = edges(docs)
     var hub = nodes.select(col("doc_id"), lit(1000000L).as("s"))
     var auth = nodes.select(col("doc_id"), lit(0L).as("s"))

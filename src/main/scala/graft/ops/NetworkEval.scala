@@ -28,8 +28,9 @@ object NetworkEval {
   def crosswalked(spark: SparkSession): DataFrame =
     StreamNet.reaches(spark)
       .select(col("hydroid"), col("huc8"), col("to_node"),
-        (when(col("hydroid") % 11 === 3 && col("to_node") >= 0, col("to_node"))
-          .otherwise(col("hydroid")) + 1000000L).as("xw_fid"))
+        Synth.featureIdOf(
+          when(col("hydroid") % 11 === 3 && col("to_node") >= 0, col("to_node"))
+            .otherwise(col("hydroid"))).as("xw_fid"))
 
   /** Crosswalk evaluation (q96) — `tools/evaluate_crosswalk.py:13-76`:
     * per HUC, both accuracy methods as one relational plan.
@@ -60,13 +61,13 @@ object NetworkEval {
 
     // ---- method 1: intersection counts --------------------------------
     val self = xw.select(col("huc8"), col("hydroid"), col("xw_fid"),
-      (col("hydroid") + 1000000L).as("cand_fid"), lit(2).as("ipts"))
+      Synth.featureIdOf(col("hydroid")).as("cand_fid"), lit(2).as("ipts"))
     val down = xw.filter(col("to_node") >= 0)
       .select(col("huc8"), col("hydroid"), col("xw_fid"),
-        (col("to_node") + 1000000L).as("cand_fid"), lit(1).as("ipts"))
+        Synth.featureIdOf(col("to_node")).as("cand_fid"), lit(1).as("ipts"))
     val up = xw.join(ups, "hydroid")
       .select(col("huc8"), col("hydroid"), col("xw_fid"),
-        (col("up_id") + 1000000L).as("cand_fid"), lit(1).as("ipts"))
+        Synth.featureIdOf(col("up_id")).as("cand_fid"), lit(1).as("ipts"))
     // the reach's own line always has the intersection maximum (2), so
     // `max` ⇔ ipts = 2; correct ⇔ match agrees with max
     val m1 = self.unionByName(down).unionByName(up)
@@ -85,8 +86,8 @@ object NetworkEval {
     // into reach (f − 1000000): the NWM network is the same graph keyed by
     // feature ids
     val nwmFids = ups
-      .select((col("hydroid") + 1000000L).as("fid"),
-        (col("up_id") + 1000000L).as("nwm_up_fid"))
+      .select(Synth.featureIdOf(col("hydroid")).as("fid"),
+        Synth.featureIdOf(col("up_id")).as("nwm_up_fid"))
       .groupBy(col("fid"))
       .agg(sort_array(collect_set(col("nwm_up_fid"))).as("nwm_fids"))
     val status = xw
@@ -143,11 +144,11 @@ object NetworkEval {
     * form of numpy's nan. */
   def continuity(spark: SparkSession): DataFrame = {
     val flows = confluenceNet(spark)
-      .withColumn("feature_id", col("hydroid") + 1000000L)
+      .withColumn("feature_id", Synth.featureIdOf(col("hydroid")))
       // integer tenths of the forecast discharge; 0 where the forecast has
       // no row for the feature (fillna(0))
       .withColumn("qt",
-        when(col("feature_id") % 5 =!= 2, (col("feature_id") * 53 + 7) % 9000)
+        when(col("feature_id") % 5 =!= 2, Synth.forecastTenths(col("feature_id")))
           .otherwise(lit(0L)))
       .withColumn("discharge", col("qt") / lit(10.0))
     val upAgg = flows.filter(col("to_node") >= 0)

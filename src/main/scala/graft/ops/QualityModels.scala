@@ -30,7 +30,7 @@ object QualityModels {
   private def bigrams(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
-        expr(s"slice(split(text, ' '), 1, ${WebCuration.MaxWords})").as("ws"))
+        WebCuration.words.as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ws) - 1), i -> struct(ws[i-1] AS w1, ws[i] AS w2))")).as("p"))
@@ -78,7 +78,7 @@ object QualityModels {
   def qualityClassifier(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
-        expr(s"slice(split(text, ' '), 1, ${WebCuration.MaxWords})").as("ws"))
+        WebCuration.words.as("ws"))
       .filter(size(col("ws")) >= 1)
       .select(col("doc_id"), explode(col("ws")).as("w"))
       .withColumn("bucket",
@@ -119,7 +119,7 @@ object QualityModels {
       keepPpm: Long = 1000000L): DataFrame = {
     val words = docs
       .select(col("doc_id"), col("lang"),
-        expr(s"slice(split(text, ' '), 1, ${WebCuration.MaxWords})").as("ws"))
+        WebCuration.words.as("ws"))
       .filter(size(col("ws")) >= 1)
       .select(col("doc_id"), col("lang"), explode(col("ws")).as("w"))
       .withColumn("bucket",

@@ -151,7 +151,7 @@ object StreamNet {
     val shorts = reachesDf
       .withColumn("areasqkm", ((col("hydroid") % 13) + 5) * lit(0.4))
       .filter(col("areasqkm") < minAreaSqKm && col("length_km") < minLen &&
-        col("hydroid") % 97 =!= 0)
+        !Synth.isLake(col("hydroid")))
       .select(col("hydroid"), col("to_node"))
     val up = reachesDf.select(col("to_node").as("hydroid"),
       col("hydroid").as("up_id"), col("order_").as("up_order"))
@@ -184,7 +184,7 @@ object StreamNet {
     * Gage points are a deterministic jitter off the reach's from-node.
     * Per-row scalar math over one scan: fully codegen'd, no joins. */
   def gageSnap(reachesDf: DataFrame): DataFrame = {
-    val g = reachesDf.filter(col("hydroid") % 199 === 0)
+    val g = reachesDf.filter(Synth.isGage(col("hydroid")))
       .withColumn("glat",
         col("from_lat") + ((col("hydroid") * 13) % 100) / lit(1000.0) - lit(0.05))
       .withColumn("glng",

@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
 object Terrain {
 
   val GridN = 144                  // rows = cols = 144, gid = r*144 + c
-  val BufferDist = 3.75            // AGREE buffer (cells); half-res 0.5
-  val FinalBuffer2 = 10.5625       // (3.75 - 0.5)² — compare on d², exact
+  val BufferDist = 3.75            // AGREE buffer (cells)
+  // the buffer less half a cell, squared to compare on d²: 10.5625, exact
+  val FinalBuffer2 = (BufferDist - 0.5) * (BufferDist - 0.5)
   val SmoothDrop = 10.0            // agreedem.py smooth_drop
   val SharpDrop = 1000.0           // agreedem.py sharp_drop
   val Rad = 6                      // Chebyshev search radius (rivers every
@@ -54,12 +55,6 @@ object Terrain {
       .withColumn("river",
         when(col("c") % 12 === 5 || col("r") % 36 === 18, 1).otherwise(0))
 
-  /** Nearest candidate per grid cell within Chebyshev radius [[Rad]], as a
-    * block-halo equi-join: candidates are exploded to their own and the 8
-    * neighboring 8×8 blocks, the probe side joins on the block key only,
-    * and the argmin is min(d² · 2²⁰ + candidate gid) — deterministic
-    * (lowest gid wins ties) and exact (d² ≤ 2·Rad², gid < 2²⁰). Returns
-    * (gid, packed). */
   /** All (cell, candidate) pairs within Chebyshev radius `rad` via the
     * block-halo equi-join (candidates exploded to their own + 8 neighbor
     * 8×8 blocks; `rad` must be < 8). Candidate columns beyond (gid, r, c)
@@ -85,6 +80,12 @@ object Terrain {
         + (col("vc") - col("c")) * (col("vc") - col("c"))).cast("long"))
   }
 
+  /** Nearest candidate per grid cell within Chebyshev radius [[Rad]], as a
+    * block-halo equi-join: candidates are exploded to their own and the 8
+    * neighboring 8×8 blocks, the probe side joins on the block key only,
+    * and the argmin is min(d² · 2²⁰ + candidate gid) — deterministic
+    * (lowest gid wins ties) and exact (d² ≤ 2·Rad², gid < 2²⁰). Returns
+    * (gid, packed). */
   private def nearest(cells: DataFrame, candidates: DataFrame): DataFrame =
     haloPairs(cells, candidates.select("gid", "r", "c"), Rad)
       .groupBy(col("gid"))

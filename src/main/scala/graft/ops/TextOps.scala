@@ -23,6 +23,13 @@ object TextOps {
   val MaxShingleChars = 512
   val NumHashes = 16
   val NumBands = 4 // 4 rows/band
+  private val BandKeys = Seq("band", "k0", "k1", "k2", "k3") // LSH bucket key
+
+  /** The docs at least one shingle long: every shingle-kernel call reads
+    * through this filter, the kernels' precondition for matching the
+    * oracle's SQL chain ([[graft.functions.GraftMd5]]). */
+  private def shingleable(docs: DataFrame): DataFrame =
+    docs.filter(length(col("text")) >= ShingleLen)
 
   /** (doc_id, hb): 60-bit hashes of all char [[ShingleLen]]-grams of the
     * first [[MaxShingleChars]] chars, in position order (multiset — repeats
@@ -30,8 +37,7 @@ object TextOps {
     * shingle are dropped. Values = the md5-prefix chain the oracles mirror,
     * computed by the [[graft.functions.GraftMd5]] kernel. */
   def shingles(docs: DataFrame): DataFrame =
-    docs
-      .filter(length(col("text")) >= ShingleLen)
+    shingleable(docs)
       .select(col("doc_id"), explode(graft.functions.Shingles60.shingles60(col("text"))).as("hb"))
 
   /** The exploded DISTINCT (doc_id, hb) 60-bit shingle-hash table — the
@@ -54,10 +60,13 @@ object TextOps {
     * re-crawled ids must dedup by id first (CorpusStream does; see also
     * [[exactDupGroups]] for content-level dups, which are FINE — distinct
     * ids with equal text are the workload, not a violation). */
-  def shingleHashes(docs: DataFrame): DataFrame =
-    docs
-      .filter(length(col("text")) >= ShingleLen)
-      .select(col("doc_id"),
+  def shingleHashes(docs: DataFrame): DataFrame = distinctShingles(docs, "doc_id")
+
+  /** (key, hb): each row's first-occurrence-distinct shingle hashes,
+    * exploded next to the row's `key` column. */
+  private def distinctShingles(docs: DataFrame, key: String): DataFrame =
+    shingleable(docs)
+      .select(col(key),
         // per-doc distinct INSIDE the generator, not a global .distinct():
         // every duplicate (doc_id, hb) pair comes from within one source row
         // (doc_id is the corpus key), so the classic shuffle-distinct moves
@@ -87,7 +96,7 @@ object TextOps {
     // corpus-×-grams rows through a 16-expression hash aggregate. Identical
     // values (minima are multiset-invariant; the kernel reuses the same
     // 60-bit gram hashes and permutation constants).
-    val mh = docs.filter(length(col("text")) >= ShingleLen)
+    val mh = shingleable(docs)
       .select(col("doc_id"),
         graft.functions.Minhash16.minhash16(col("text")).as("mh"))
     mh.select(col("doc_id") +:
@@ -125,14 +134,13 @@ object TextOps {
     pairsOf(lshBands(docs))
 
   private def pairsOf(bands: DataFrame): DataFrame = {
-    val keys = Seq("band", "k0", "k1", "k2", "k3")
     // cache the band table explicitly: both sides of the bucket self-join
     // read it, and an explicit cache beats relying on AQE ReusedExchange to
     // dedupe the minhash computation (reuse is plan-shape-fragile)
     val cached = bands.cache()
     val a = cached.withColumnRenamed("doc_id", "doc_a")
     val c = cached.withColumnRenamed("doc_id", "doc_b")
-    a.join(c, keys)
+    a.join(c, BandKeys)
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
   }
@@ -152,7 +160,7 @@ object TextOps {
     * [[shingleHashes]] (`size(arr)` is the doc's distinct-shingle count),
     * with no generator. */
   private def shingleArrays(docs: DataFrame): DataFrame =
-    docs.filter(length(col("text")) >= ShingleLen)
+    shingleable(docs)
       .select(col("doc_id"), graft.functions.Shingles60.shingles60Distinct(col("text")).as("arr"))
 
   /** The ONE pair-intersection chain of the dedup family: candidate pairs
@@ -222,6 +230,17 @@ object TextOps {
         max(col("doc_id")).as("max_doc"))
       .filter(col("n") > 1)
 
+  /** The exact-content dup star: (keeper, doc_id) for every doc whose text
+    * an earlier doc repeats, keeper = the min doc_id of its content-hash
+    * group — a star per group, which is enough for connectivity. */
+  private[ops] def exactDupStar(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("h"))
+      .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n"))
+      .filter(col("n") > 1)
+      .join(docs.select(col("doc_id"), md5(col("text")).as("h")), "h")
+      .filter(col("doc_id") =!= col("keeper"))
+      .select(col("keeper"), col("doc_id"))
+
   /** End-to-end corpus curation — the composed training-data pipeline:
     * 1. quality gate (keep == 1),
     * 2. exact dedup: only the min doc_id of each content-hash group survives,
@@ -230,12 +249,7 @@ object TextOps {
     * Returns the surviving doc ids with their quality features. */
   def curate(docs: DataFrame, jaccardMax: Double = 0.9): DataFrame = {
     val q = quality(docs).filter(col("keep") === 1)
-    val dupLosers = docs.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .join(docs.select(col("doc_id"), md5(col("text")).as("h")), "h")
-      .filter(col("doc_id") =!= col("keeper"))
-      .select(col("doc_id"))
+    val dupLosers = exactDupStar(docs).select(col("doc_id"))
     val nearLosers = ngramJaccard(docs)
       .filter(col("jaccard") >= jaccardMax)
       .select(col("doc_b").as("doc_id")).distinct()
@@ -295,10 +309,9 @@ object TextOps {
       batchArr: DataFrame, batchBands: DataFrame,
       jaccardMax: Double = 0.9): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val keys = Seq("band", "k0", "k1", "k2", "k3")
     val base = baseBands.withColumnRenamed("doc_id", "doc_a")
     val batch = batchBands.withColumnRenamed("doc_id", "doc_b")
-    val pairs = base.join(batch, keys).select("doc_a", "doc_b").distinct()
+    val pairs = base.join(batch, BandKeys).select("doc_a", "doc_b").distinct()
     val jac = jaccardOf(pairIntersect(pairs, baseArr, batchArr))
     val w = Window.partitionBy(col("doc_b")).orderBy(col("jaccard").desc, col("doc_a").asc)
     jac.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -338,11 +351,14 @@ object TextOps {
       langs.map(l => col(s"c_$l"))): _*)
   }
 
+  /** Whitespace tokens: one more than the text's spaces. */
+  private def nTokens: Column =
+    (length(col("text")) - length(replace(col("text"), lit(" "), lit("")))).cast("int") + 1
+
   /** Quality-score features: token count, char count, mean word length,
     * stopword-marker ratio, and a composite keep/drop flag. */
   def quality(docs: DataFrame): DataFrame = {
     val nChars = length(col("text"))
-    val nTokens = (length(col("text")) - length(replace(col("text"), lit(" "), lit("")))).cast("int") + 1
     val alnum = length(replace(col("text"), lit(" "), lit("")))
     docs.select(col("doc_id"), nChars.as("n_chars_m"), nTokens.as("n_tokens"),
       (alnum.cast("double") / nTokens.cast("double")).as("mean_word_len"),
@@ -356,9 +372,7 @@ object TextOps {
     * pre-tokenizer, simplified to an RE2/Java-regex-portable pattern). */
   def tokenCounts(docs: DataFrame): DataFrame = {
     val bpeish = "[a-z]+|[A-Z][a-z]*|[0-9]+|[^A-Za-z0-9 ]"
-    docs.select(col("doc_id"),
-      ((length(col("text")) - length(replace(col("text"), lit(" "), lit("")))).cast("int") + 1)
-        .as("ws_tokens"),
+    docs.select(col("doc_id"), nTokens.as("ws_tokens"),
       regexp_count(col("text"), lit(bpeish)).cast("int").as("bpeish_tokens"))
   }
 
@@ -516,8 +530,7 @@ object TextOps {
     * grams as [[shingleHashes]] but keeping each gram's 1-based char offset
     * (and therefore within-doc repeats). Pure per-row map off the scan. */
   private def positionalShingleHashes(docs: DataFrame): DataFrame =
-    docs
-      .filter(length(col("text")) >= ShingleLen)
+    shingleable(docs)
       .select(col("doc_id"),
         posexplode(graft.functions.Shingles60.shingles60(col("text"))))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
@@ -575,10 +588,7 @@ object TextOps {
     * profiling at 100 TB would keep only the KMV column. */
   def kmvDistinct(docs: DataFrame, k: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val lsh = docs
-      .filter(length(col("text")) >= ShingleLen)
-      .select(col("lang"),
-        explode(graft.functions.Shingles60.shingles60Distinct(col("text"))).as("hb"))
+    val lsh = distinctShingles(docs, "lang")
     val byLang = Window.partitionBy(col("lang")).orderBy(col("hb").asc)
     val kept = lsh.withColumn("rnk", dense_rank().over(byLang)).filter(col("rnk") <= k)
     val est = kept.groupBy(col("lang"))
@@ -608,11 +618,7 @@ object TextOps {
     * q144-style condensation FIRST, not a bigger join); cell counts
     * collapse in one exchange on the source pair. */
   def sourceOverlap(docs: DataFrame): DataFrame = {
-    val sh = docs
-      .filter(length(col("text")) >= ShingleLen)
-      .select(col("source"),
-        explode(graft.functions.Shingles60.shingles60Distinct(col("text"))).as("hb"))
-      .distinct()
+    val sh = distinctShingles(docs, "source").distinct()
     val sizes = sh.groupBy(col("source")).agg(count(lit(1)).as("sz"))
     sh.as("a").join(sh.as("b"),
         col("a.hb") === col("b.hb") && col("a.source") < col("b.source"))

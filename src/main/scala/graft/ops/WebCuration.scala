@@ -28,6 +28,9 @@ object WebCuration {
     * generate_series needs a constant). */
   val MaxWords = 128
 
+  /** A doc's first [[MaxWords]] whitespace words, as an array. */
+  def words: Column = expr(s"slice(split(text, ' '), 1, $MaxWords)")
+
   /** (doc_id, para_id, para): fixed-word-window paragraphs — a PURE per-row
     * map (split → sliced word windows → posexplode), no shuffle. The earlier
     * form posexploded to one row per WORD and reassembled with a
@@ -369,7 +372,7 @@ object WebCuration {
         col("url"), col("text"))
     val scores = withM
       .select(col("host"),
-        explode(expr(s"slice(split(text, ' '), 1, $MaxWords)")).as("w"))
+        explode(words).as("w"))
       .withColumn("weight",
         (graft.functions.Md5Prefix60.md5Prefix60(col("w")) % QualityModels.FeatureDim)
           * 2654435761L % 2003L - 1001L)

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{RatingInterp, SpatialJoin}
 import graft.synth.Synth
@@ -25,13 +25,16 @@ import graft.synth.Synth
   */
 object Inundate {
 
+  /** The pixel kernel's depth at a point with `hand`: max(stage − hand, 0). */
+  private def depthAt(stage: Column): Column = greatest(stage - col("hand"), lit(0.0))
+
   /** Per-point tiles: (pid, cell, huc8, hydroid, hand, stage_m, depth, clazz). */
   def tiles(spark: SparkSession, points: DataFrame): DataFrame = {
     val assigned = SpatialJoin.assign(spark, points)
     val stages = RatingInterp.stages(spark, Synth.forecast(spark))
     assigned
       .join(broadcast(stages), "hydroid")
-      .withColumn("depth", greatest(col("stage_m") - col("hand"), lit(0.0)))
+      .withColumn("depth", depthAt(col("stage_m")))
       .withColumn("clazz",
         when(col("depth") > 0, col("hydroid")).otherwise(-col("hydroid")).cast("int"))
   }
@@ -70,9 +73,8 @@ object Inundate {
     assigned
       .join(broadcast(frStages), "hydroid")
       .join(broadcast(msStages), Seq("hydroid"), "left")
-      .withColumn("depth_fr", greatest(col("stage_m") - col("hand"), lit(0.0)))
-      .withColumn("depth_ms",
-        when(col("stage_ms").isNotNull, greatest(col("stage_ms") - col("hand"), lit(0.0))))
+      .withColumn("depth_fr", depthAt(col("stage_m")))
+      .withColumn("depth_ms", when(col("stage_ms").isNotNull, depthAt(col("stage_ms"))))
       .groupBy(col("cell"))
       .agg(max(col("depth_fr")).as("depth_fr"),
         max(col("depth_ms")).as("depth_ms"),
@@ -97,7 +99,7 @@ object Inundate {
     val agg = graft.ops.SpatialJoin.assign(spark, points)
       .groupBy(col("huc8"))
       .agg(count(lit(1)).as("n_pts"),
-        count(when(col("hydroid") % 97 =!= 0, 1)).as("n_ok"))
+        count(when(!Synth.isLake(col("hydroid")), 1)).as("n_ok"))
     universe.join(agg, Seq("huc8"), "left")
       .select(col("huc8"),
         when(col("n_pts").isNull, lit(UnitNoBranches.id))

@@ -369,7 +369,7 @@ object CalibrationQueries {
       val schema = StructType(Seq(StructField("knots", ArrayType(StructType(Seq(
         StructField("i", IntegerType), StructField("stage", DoubleType),
         StructField("q", DoubleType)))))))
-      Synth.hydrotable(s).filter(col("hydroid") % 199 === 0)
+      Synth.hydrotable(s).filter(Synth.isGage(col("hydroid")))
         .groupBy(col("hydroid"))
         .agg(to_json(struct(sort_array(collect_list(struct(col("i").cast("int").as("i"),
           col("stage"), col("discharge_cms").as("q")))).as("knots"))).as("js"))

@@ -72,7 +72,7 @@ object HydroQueries {
 
     // SRC synthesis: 84-knot Manning-like rating curves (gage subset)
     Query("q04_hydrotable", (s, _) =>
-      Synth.hydrotable(s).filter(col("hydroid") % 199 === 0)
+      Synth.hydrotable(s).filter(Synth.isGage(col("hydroid")))
         .select(col("hydroid"), col("stage"), col("discharge_cms")),
       withCtes(ht)(
         "SELECT hydroid, stage, discharge_cms FROM ht WHERE hydroid % 199 = 0")),

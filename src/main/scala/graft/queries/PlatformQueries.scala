@@ -25,7 +25,7 @@ object PlatformQueries {
     // J8 as-of/nearest-value join: per part, lineitem row with quantity
     // closest to 25 (argmin via min(struct(...)), hash-agg, no sort)
     Query("q30_asof_minby", (s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = Synth.lineitem(s, dir)
       li.groupBy(col("l_partkey"))
         .agg(min(struct(abs(col("l_quantity") - 25), col("l_orderkey"),
           col("l_linenumber"), col("l_quantity"))).as("m"))
@@ -44,7 +44,7 @@ object PlatformQueries {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Synth.lineitem(s, dir)
         .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"), col("l_shipdate"),
           sum(col("l_quantity")).over(w).as("cum_qty"))
     },
@@ -81,7 +81,7 @@ object PlatformQueries {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_quantity").desc, col("l_linenumber").asc)
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Synth.lineitem(s, dir)
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
     },
@@ -111,7 +111,7 @@ object PlatformQueries {
 
     // P8 sentinel handling: nullif/coalesce round-trip (−999 convention)
     Query("q36_sentinels", (s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Synth.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
           coalesce(nullif(col("l_discount"), lit(0.0)), lit(-999.0)).as("disc_sentinel"),
           nullif(col("l_discount"), lit(0.0)).isNull.cast("int").as("was_zero")),
@@ -159,7 +159,7 @@ object PlatformQueries {
 
     // §2.8 scalar-function surface: string/math kernels (exact-parity forms)
     Query("q39_scalar_funcs", (s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Synth.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
           lpad((col("l_orderkey") % 997).cast("string"), 4, "0").as("bucket"),
           lower(concat(col("l_returnflag"), col("l_linestatus"))).as("rf"),
@@ -195,7 +195,7 @@ object PlatformQueries {
     // The synthetic lineitem has duplicate (orderkey, linenumber) pairs, so
     // lines are pre-aggregated (max qty) before the map is built.
     Query("q61_map_funcs", (s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Synth.lineitem(s, dir)
         .groupBy(col("l_orderkey"), col("l_linenumber"))
         .agg(max(col("l_quantity")).as("qty"))
         .groupBy(col("l_orderkey"))
@@ -389,7 +389,7 @@ object PlatformQueries {
 
     // TPC-H Q1 shape with exact arithmetic (sum of ints, min/max, avg)
     Query("q41_tpch_q1", (s, dir) =>
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Synth.lineitem(s, dir)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(col("l_quantity")).as("sum_qty"),
           count(lit(1)).as("n"),

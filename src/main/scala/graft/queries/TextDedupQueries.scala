@@ -480,7 +480,7 @@ object TextDedupQueries {
     Query("q119_decontaminate", (s, dir) => {
       val c = Synth.corpus(s, dir)
       TextOps.decontaminate(c,
-        c.filter(col("doc_id") < 1000000L && col("doc_id") % 37 === 0))
+        c.filter(Synth.isBaseDoc(col("doc_id")) && col("doc_id") % 37 === 0))
     },
       // benchmark decontamination: eval shingle set ⋈ corpus distinct shingles
       withCtes(corpus, sh, dsh,
@@ -706,7 +706,7 @@ object TextDedupQueries {
     // fuzzy benchmark decontamination: eval bands ⋈ corpus bands (MinHash
     // LSH), exact-Jaccard verify, per-doc best eval match + leak flag
     Query("q133_fuzzy_decontam", (s, dir) => {
-      val ev = col("doc_id") < 1000000L && col("doc_id") % 37 === 0
+      val ev = Synth.isBaseDoc(col("doc_id")) && col("doc_id") % 37 === 0
       TextOps.fuzzyDecontaminate(Synth.corpus(s, dir), ev)
     },
       // fuzzy decontamination: eval-side bands ⋈ corpus-side bands (no id

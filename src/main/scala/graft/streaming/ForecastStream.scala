@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
-import graft.ops.RatingInterp
+import graft.ops.{CatFim, RatingInterp}
+import graft.synth.Synth
 
 /** Structured-Streaming front end: the reference is batch-only (forecast CSV
   * per run, `tools/inundation.py:596-606`); the Spark-native engine upgrades
@@ -50,8 +51,7 @@ object ForecastStream {
   def streamingTiles(spark: SparkSession, dir: String,
       stages: DataFrame): DataFrame = {
     val pages = spark.readStream.schema(pageSchema).parquet(dir)
-    val assigned = graft.ops.SpatialJoin.assign(spark,
-      graft.synth.Synth.withGeo(pages))
+    val assigned = graft.ops.SpatialJoin.assign(spark, Synth.withGeo(pages))
     assigned
       .join(org.apache.spark.sql.functions.broadcast(stages), "hydroid")
       .withColumn("wet", (col("stage_m") - col("hand") > 0).cast("int"))
@@ -102,16 +102,13 @@ object ForecastStream {
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (fid: Long, rows: Iterator[(Long, Double, java.sql.Timestamp)],
          st: GroupState[CatState]) =>
-          // ladder keyed on hydroid = feature_id − 1000000 (Synth's id offset),
-          // matching CatFim.siteThresholds exactly — a batch q55 site and its
+          // the batch q55 ladder (CatFim.siteThresholds), so a site and its
           // streaming alerts classify against the same thresholds
-          val hydroid = fid - 1000000L
-          val base = ((hydroid * 53 + 11) % 4000) / 10.0 + 5.0
-          def catOf(q: Double): Int = (0 until 5).count(m => q >= base * (1.0 + m * 0.75))
+          val hydroid = Synth.hydroidOf(fid)
           var prev = st.getOption.map(_.cat).getOrElse(-1)
           val out = scala.collection.mutable.Buffer.empty[CatTransition]
           rows.toSeq.sortBy(r => r._3.getTime).foreach { r =>
-            val c = catOf(r._2)
+            val c = CatFim.categoryOf(hydroid, r._2)
             if (c != prev) { out += CatTransition(fid, prev, c, r._2); prev = c }
           }
           st.update(CatState(prev))

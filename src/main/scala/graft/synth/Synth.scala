@@ -46,10 +46,14 @@ object Synth {
     * pid = l_orderkey * 8 + l_linenumber (unique). Columns:
     * (pid, lat, lng, hand, cell, ccell). */
   def points(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = lineitem(spark, sfDir)
       .select((col("l_orderkey") * 8 + col("l_linenumber")).cast("long").as("pid"))
     withGeo(li)
   }
+
+  /** The driver's `lineitem` table (the large one). */
+  def lineitem(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.parquet(s"$sfDir/lineitem.parquet")
 
   /** Pages table per BASELINE.json input_hint, from `documents`:
     * (url, warc_ts, html, text, lang) + geocode. `text` is a byte-identical
@@ -65,17 +69,23 @@ object Synth {
       col("lang")))
   }
 
+  /** [[corpus]] clone ids start here; the documents' own ids lie below. */
+  val BaseDocs = 1000000L
+
+  /** A [[corpus]] row is an original document, not a clone. */
+  def isBaseDoc(docId: Column): Column = docId < BaseDocs
+
   /** Web-text corpus for the dedup/quality operators: documents plus
-    * deterministic exact clones (every 40th doc) and near-clones (every 50th,
-    * last 10 chars truncated) — the synthetic duplicate structure the dedup
-    * family must find. */
+    * deterministic exact clones (every 40th doc, ids + 2·[[BaseDocs]]) and
+    * near-clones (every 50th, last 10 chars truncated, ids + [[BaseDocs]])
+    * — the synthetic duplicate structure the dedup family must find. */
   def corpus(spark: SparkSession, sfDir: String): DataFrame = {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("lang"))
     val exact = d.filter(col("doc_id") % 40 === 0)
-      .select((col("doc_id") + 2000000L).as("doc_id"), col("text"), col("lang"))
+      .select((col("doc_id") + 2 * BaseDocs).as("doc_id"), col("text"), col("lang"))
     val near = d.filter(col("doc_id") % 50 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
+      .select((col("doc_id") + BaseDocs).as("doc_id"),
         expr("substring(text, 1, length(text) - 10)").as("text"), col("lang"))
     d.unionByName(exact).unionByName(near)
   }
@@ -99,16 +109,30 @@ object Synth {
 
   // ------------------------------------------------------------ catchments
 
-  /** Derived attributes for catchment k (0..20735). */
+  /** The catchment universe: one BIGINT `hydroid` per catchment. */
+  def hydroids(spark: SparkSession): DataFrame =
+    spark.range(0, (CatRows * CatCols).toLong).select(col("id").as("hydroid"))
+
+  /** feature_id = hydroid + FeatureIdOffset (`src/add_crosswalk.py`). */
+  val FeatureIdOffset = 1000000L
+
+  /** Derived attributes for catchment k (0..20735); Column twins follow. */
   def hydroidOf(lat: Double, lng: Double): Int = {
     val r = math.floor((lat + 90.0) / CatH).toInt
     val c = math.floor((lng + 180.0) / CatW).toInt
     r * CatCols + c
   }
-  def featureIdOf(hydroid: Int): Long = 1000000L + hydroid
+  def featureIdOf(hydroid: Int): Long = FeatureIdOffset + hydroid
+  def hydroidOf(featureId: Long): Long = featureId - FeatureIdOffset
   def lakeIdOf(hydroid: Int): Int = if (hydroid % 97 == 0) hydroid else -999
   def orderOf(hydroid: Int): Int = 1 + hydroid % 8
   def isGage(hydroid: Int): Boolean = hydroid % 199 == 0
+
+  def featureIdOf(hydroid: Column): Column = hydroid + FeatureIdOffset
+  def hydroidOf(featureId: Column): Column = featureId - FeatureIdOffset
+  /** Waterbody (lake) catchment: [[lakeIdOf]] is its own id. */
+  def isLake(hydroid: Column): Column = hydroid % 97 === 0
+  def isGage(hydroid: Column): Column = hydroid % 199 === 0
   def hucIdxOf(hydroid: Int): Int = {
     val r = hydroid / CatCols; val c = hydroid % CatCols
     (r / HucCatRows) * HucCols + (c / HucCatRows)
@@ -197,6 +221,12 @@ object Synth {
   /** Knot `i`'s stage: [[hydrotable]]'s `stage` in driver arithmetic. */
   def stageOf(i: Int): Double = i.toDouble * StageStep
 
+  /** Each row of `sites` × the knots `i` < [[StageKnots]] at their `stage`. */
+  def stageKnots(sites: DataFrame): DataFrame =
+    sites
+      .withColumn("i", explode(sequence(lit(0), lit(StageKnots - 1))))
+      .withColumn("stage", col("i") * lit(StageStep))
+
   /** Catchment `hydroid`'s discharge at `stage`: [[hydrotable]]'s
     * `discharge_cms` in driver arithmetic, operation for operation, so the
     * two agree bit for bit (spec-asserted over every row). */
@@ -209,25 +239,24 @@ object Synth {
     * (Manning-shaped: linear + quadratic term; `src/add_crosswalk.py:249-261`).
     * Its driver-side twin ([[stageOf]], [[dischargeOf]]) builds the engine's
     * [[graft.ops.RatingCurves]]. */
-  def hydrotable(spark: SparkSession): DataFrame = {
-    val cats = spark.range(0, (CatRows * CatCols).toLong).select(col("id").cast("long").as("hydroid"))
-    cats
-      .withColumn("i", explode(sequence(lit(0), lit(StageKnots - 1))))
-      .withColumn("stage", col("i") * lit(StageStep))
+  def hydrotable(spark: SparkSession): DataFrame =
+    stageKnots(hydroids(spark))
       .withColumn("discharge_cms",
         (col("hydroid") % 7 + 1) * col("stage") +
           ((col("hydroid") % 5) * lit(0.5) + lit(0.5)) * col("stage") * col("stage"))
-      .withColumn("feature_id", col("hydroid") + 1000000L)
-      .withColumn("lake_id", when(col("hydroid") % 97 === 0, col("hydroid").cast("int")).otherwise(lit(-999)))
+      .withColumn("feature_id", featureIdOf(col("hydroid")))
+      .withColumn("lake_id", when(isLake(col("hydroid")), col("hydroid").cast("int")).otherwise(lit(-999)))
       .withColumn("huc8", lpad(
         (floor(floor(col("hydroid") / 144) / 8) * 18 + floor((col("hydroid") % 144) / 8)).cast("long").cast("string"),
         8, "0"))
       .select("hydroid", "feature_id", "huc8", "lake_id", "i", "stage", "discharge_cms")
-  }
+
+  /** A feature's [[forecast]] discharge in integer tenths. */
+  def forecastTenths(featureId: Column): Column = (featureId * 53 + 7) % 9000
 
   /** forecast(feature_id, discharge): one row per feature. */
   def forecast(spark: SparkSession): DataFrame =
-    spark.range(0, (CatRows * CatCols).toLong)
-      .select((col("id") + 1000000L).as("feature_id"))
-      .withColumn("discharge", ((col("feature_id") * 53 + 7) % 9000) / lit(10.0))
+    hydroids(spark)
+      .select(featureIdOf(col("hydroid")).as("feature_id"))
+      .withColumn("discharge", forecastTenths(col("feature_id")) / lit(10.0))
 }

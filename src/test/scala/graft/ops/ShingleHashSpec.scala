@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.SparkTestBase
-import graft.functions.Shingles60
+import graft.functions.{IntersectCount, Md5Prefix60, MinK4, Minhash16, Shingles60, SrpBucket}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The [[graft.functions.GraftMd5]] kernel must be bit-identical to the SQL
@@ -70,5 +71,31 @@ class ShingleHashSpec extends SparkTestBase {
       "𝒮𝓊𝓇𝓇𝑜𝑔𝒶𝓉𝑒 𝓅𝒶𝒾𝓇𝓈 beyond the BMP 🚀🚀🚀 and ascii tail")
     assertSame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text"))
+  }
+
+  test("each custom kernel fails analysis on a wrong input type (ExpectsInputTypes)") {
+    val df = spark.range(1).select(col("id").as("n"), col("id").cast("string").as("s"),
+      array(col("id")).as("longs"), array(col("id").cast("int")).as("ints"))
+    // (kernel, a well-typed call, the same kernel over a wrong type)
+    val calls: Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)] = Seq(
+      ("shingles60", _.select(Shingles60.shingles60(col("s"))),
+        _.select(Shingles60.shingles60(col("n")))),
+      ("shingles60_distinct", _.select(Shingles60.shingles60Distinct(col("s"))),
+        _.select(Shingles60.shingles60Distinct(col("longs")))),
+      ("minhash16", _.select(Minhash16.minhash16(col("s"))),
+        _.select(Minhash16.minhash16(col("n")))),
+      ("md5_prefix60", _.select(Md5Prefix60.md5Prefix60(col("s"))),
+        _.select(Md5Prefix60.md5Prefix60(col("n")))),
+      ("intersect_count", _.select(IntersectCount.intersectCount(col("longs"), col("longs"))),
+        _.select(IntersectCount.intersectCount(col("longs"), col("ints")))),
+      ("srp_bucket", _.select(SrpBucket.srpBucket(col("longs"), 4, 0)),
+        _.select(SrpBucket.srpBucket(col("ints"), 4, 0))),
+      ("min_k4", _.agg(MinK4.minK4(col("n"))),
+        _.agg(MinK4.minK4(col("s")))))
+    calls.foreach { case (name, ok, wrong) =>
+      ok(df).queryExecution.assertAnalyzed()
+      val e = intercept[AnalysisException](wrong(df).queryExecution.assertAnalyzed())
+      assert(e.getMessage.contains("UNEXPECTED_INPUT_TYPE"), s"$name: ${e.getMessage}")
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
+import graft.ops.CatFim
 import graft.synth.Synth
 import java.nio.file.Files
 
@@ -43,7 +44,7 @@ class ForecastStreamSpec extends SparkTestBase {
       assert(captured.contains(199L))
       // equals the relational interp over the SRC knots for the same forecast
       import spark.implicits._
-      val ht = Synth.hydrotable(spark).filter(col("hydroid") % 199 === 0)
+      val ht = Synth.hydrotable(spark).filter(Synth.isGage(col("hydroid")))
       val fc = Seq((1000199L, 50.0)).toDF("feature_id", "discharge")
       val expect = graft.ops.RatingInterp.stages(ht, fc).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -94,23 +95,40 @@ class ForecastStreamSpec extends SparkTestBase {
 
   test("streaming CatFIM transitions: category changes emit, repeats stay silent") {
     val dir = Files.createTempDirectory("graft_cat").toString
-    // feature 1000041 = hydroid 41 — a real q55 site (41 % 41 == 0); the
-    // streaming ladder must match CatFim.siteThresholds' hydroid keying
-    val fid = 1000041L
-    val base = (((fid - 1000000L) * 53 + 11) % 4000) / 10.0 + 5.0
-    writeBatch(dir, Seq((fid, base * 0.5, 1000L)))           // below action → cat 0
+    // hydroid 41 is a real q55 site (41 % 41 == 0); its action threshold is
+    // the ladder's base flow
+    val fid = Synth.featureIdOf(41)
+    val base = CatFim.siteThresholds(spark)
+      .filter(col("hydroid") === 41 && col("m") === 0).head().getAs[Double]("discharge")
+    val qs = Seq(base * 0.5, base * 2.0, base * 2.1) // below action; >= 1x and 1.75x; same
+    assert(qs.map(CatFim.categoryOf(41L, _)) == Seq(0, 2, 2))
+    writeBatch(dir, Seq((fid, qs(0), 1000L)))
     val q = ForecastStream.categoryTransitions(spark, dir)
       .writeStream.outputMode("update").format("memory").queryName("cattr").start()
     try {
       q.processAllAvailable()
-      writeBatch(dir, Seq((fid, base * 2.0, 2000L)))         // cat 2 (>= 1x and 1.75x)
+      writeBatch(dir, Seq((fid, qs(1), 2000L)))
       q.processAllAvailable()
-      writeBatch(dir, Seq((fid, base * 2.1, 3000L)))         // still cat 2 → silent
+      writeBatch(dir, Seq((fid, qs(2), 3000L)))              // same category → silent
       q.processAllAvailable()
       val rows = spark.sql("SELECT prevCat, newCat FROM cattr WHERE featureId = " + fid)
         .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
       assert(rows == Seq((-1, 0), (0, 2)), rows.toString)
     } finally q.stop()
+  }
+
+  test("streaming and batch CatFIM agree: each q55 threshold opens its category") {
+    // categoryOf (the streaming classifier) against siteThresholds (q55's
+    // ladder): a site's magnitude-m discharge is in category m + 1, and the
+    // next double below it is still in category m
+    val thr = CatFim.siteThresholds(spark)
+      .select(col("hydroid"), col("m"), col("discharge")).collect()
+    assert(thr.length == 5 * thr.map(_.getLong(0)).distinct.length && thr.length > 0)
+    thr.foreach { r =>
+      val (h, m, q) = (r.getLong(0), r.getInt(1), r.getDouble(2))
+      assert(CatFim.categoryOf(h, q) == m + 1, s"site $h magnitude $m at $q")
+      assert(CatFim.categoryOf(h, math.nextDown(q)) == m, s"site $h magnitude $m below $q")
+    }
   }
 
   test("stateful running max across micro-batches (mapGroupsWithState)") {
