@@ -16,6 +16,11 @@ import graft.geo.{Cells, GridIndex}
   */
 object Agreement {
 
+  private val FullCellAreaM2 = 25000000.0 // fullMetrics' cell_area_m2
+  private val AlphaCellAreaM2 = 100.0 // the reference's 10 m pixels (test_case_by_hydro_id.py:92)
+  private val MasterVersion = "graft_r2" // masterMetrics' version column
+  private val PrevThresholdDelta = 0.25 // versionRegression's previous release
+
   /** Benchmark wet flag per cell (0/1) — deterministic extent synth. */
   def benchWet(cell: Column): Column =
     ((Cells.rowOfCol(cell) * 31 + Cells.colOfCol(cell) * 17) % 10 < 4).cast("int")
@@ -182,7 +187,7 @@ object Agreement {
     * TNR/PND/PPV/NPV/Bal_ACC/prevalence/equitable-threat-score, the percent
     * family, and the cell-area → km² family. All exact double arithmetic
     * from the BIGINT contingency counts, NULL where a denominator is zero. */
-  def fullMetrics(agreementDf: DataFrame, cellAreaM2: Double = 25000000.0): DataFrame = {
+  def fullMetrics(agreementDf: DataFrame): DataFrame = {
     val c = new Counts(col("tn"), col("fn"), col("fp"), col("tp"))
     import c._
     def s(name: String) = guarded(name, c)
@@ -191,7 +196,7 @@ object Agreement {
     // tools_shared_functions.py:277-380) — canonical definitions
     val fpr = div(fp, fp + tn)
     def perc(x: Column) = div(x, tot) * 100
-    val a = lit(cellAreaM2)
+    val a = lit(FullCellAreaM2)
     def km2(x: Column) = x * a / lit(1000000.0)
     classCounts(agreementDf).select(countCols ++ Seq(
       (col("tn") + col("fn") + col("fp") + col("tp")).as("contingency_tot_count")) ++
@@ -266,12 +271,12 @@ object Agreement {
   private def comboCols(src: String, mag: String, suffix: String = ""): Seq[Column] =
     (0 to 4).map(c => col(s"c${c}_${src}_$mag$suffix"))
 
-  def masterMetrics(mosaic: DataFrame, version: String = "graft_r2"): DataFrame = {
+  def masterMetrics(mosaic: DataFrame): DataFrame = {
     val countExprs = comboCounts()
     val counted = mosaic.agg(countExprs.head, countExprs.tail: _*)
     val rows = MasterCombos.map { case (src, mag, _, _, _) =>
       val Seq(tn, fn, fp, tp, masked) = comboCols(src, mag)
-      struct(Seq(lit(version).as("version"), lit(src).as("benchmark_source"),
+      struct(Seq(lit(MasterVersion).as("version"), lit(src).as("benchmark_source"),
         lit(mag).as("magnitude"), tn.as("tn"), fn.as("fn"), fp.as("fp"),
         tp.as("tp"), masked.as("masked")) ++
         metricCols(tn, fn, fp, tp): _*)
@@ -298,10 +303,8 @@ object Agreement {
     * denominator is zero is NA (`compute_stats_from_contingency_table`
     * returns 'NA' on ZeroDivisionError) → NULL here, and catchment×combo
     * groups with an all-masked/empty contingency total are dropped
-    * (`test_case_by_hydro_id.py:86-88`). cell_area defaults to the
-    * reference's 100 m² (10 m pixels, `:92`). */
-  def alphaByHydroId(spark: SparkSession, mosaic: DataFrame,
-      cellAreaM2: Double = 100.0): DataFrame = {
+    * (`test_case_by_hydro_id.py:86-88`). */
+  def alphaByHydroId(spark: SparkSession, mosaic: DataFrame): DataFrame = {
     import graft.geo.Cells
     val withGeo = mosaic
       .withColumn("lat", Cells.centroidLatCol(col("cell"), Cells.BaseRes))
@@ -321,7 +324,7 @@ object Agreement {
       .select(col("hydroid"), col("huc8"), col("r.*"))
       .filter(col("tn") + col("fn") + col("fp") + col("tp") > 0)
     contingencyMetricSelect(melted,
-      Seq(col("hydroid"), col("huc8"), col("bench"), col("mag")), cellAreaM2)
+      Seq(col("hydroid"), col("huc8"), col("bench"), col("mag")))
   }
 
   /** The shared per-row metric projection over contingency-count columns
@@ -329,11 +332,10 @@ object Agreement {
     * with identical guard conditions in the oracle. Used by
     * [[alphaByHydroId]] (per-catchment grain) and [[aggregateMetrics]]
     * (summed national grain). */
-  private def contingencyMetricSelect(melted: DataFrame, keyCols: Seq[Column],
-      cellAreaM2: Double): DataFrame = {
+  private def contingencyMetricSelect(melted: DataFrame, keyCols: Seq[Column]): DataFrame = {
     val c = new Counts(col("tn"), col("fn"), col("fp"), col("tp"))
     melted.select(keyCols ++ countCols ++
-      Seq((c.tot * lit(cellAreaM2) / lit(1000000.0)).as("contingency_tot_area_km2")) ++
+      Seq((c.tot * lit(AlphaCellAreaM2) / lit(1000000.0)).as("contingency_tot_area_km2")) ++
       NaStats.map { case (name, column) =>
         naStat(name, col("tn"), col("fn"), col("fp"), col("tp")).as(column) } ++
       Seq(maskedPerc(c).as("masked_perc")): _*)
@@ -349,15 +351,14 @@ object Agreement {
     * the one fact-table pass both share — and the same guarded metric
     * projection runs over the sums. `n_cases` is the reference's
     * "aggregated metrics over N test cases" count. */
-  def aggregateMetrics(spark: SparkSession, mosaic: DataFrame,
-      cellAreaM2: Double = 100.0): DataFrame = {
-    val summed = alphaByHydroId(spark, mosaic, cellAreaM2)
+  def aggregateMetrics(spark: SparkSession, mosaic: DataFrame): DataFrame = {
+    val summed = alphaByHydroId(spark, mosaic)
       .groupBy(col("bench"), col("mag"))
       .agg(sum(col("tn")).as("tn"), sum(col("fn")).as("fn"),
         sum(col("fp")).as("fp"), sum(col("tp")).as("tp"),
         sum(col("masked")).as("masked"), count(lit(1)).as("n_cases"))
     contingencyMetricSelect(summed,
-      Seq(col("bench"), col("mag"), col("n_cases")), cellAreaM2)
+      Seq(col("bench"), col("mag"), col("n_cases")))
   }
 
   /** The 7 headline metric names in [[metricCols]] order, with each stat's
@@ -372,17 +373,16 @@ object Agreement {
     * build's master-metrics table minus the previous version's, melted one
     * row per (benchmark, magnitude, stat), with a regression verdict per the
     * stat's orientation. The "previous version" is the same evaluation with
-    * every predicted-wet threshold raised 0.25 m (a deterministic stand-in
-    * for last release's model).
+    * every predicted-wet threshold raised [[PrevThresholdDelta]] m (a
+    * deterministic stand-in for last release's model).
     *
     * Scale shape: ONE pass over the mosaic — both versions' contingency
     * counts are conditional aggregates of the same scan (2 versions × 4
     * combos × 5 classes = 40 counters in one partial-aggregating
     * HashAggregate); the melt + diff is driver-free expression algebra on
     * the single counted row. */
-  def versionRegression(mosaic: DataFrame,
-      prevThresholdDelta: Double = 0.25): DataFrame = {
-    val versions = Seq(("new", 0.0), ("prev", prevThresholdDelta))
+  def versionRegression(mosaic: DataFrame): DataFrame = {
+    val versions = Seq(("new", 0.0), ("prev", PrevThresholdDelta))
     val countExprs = versions.flatMap { case (v, d) => comboCounts(d, s"_$v") }
     val counted = mosaic.agg(countExprs.head, countExprs.tail: _*)
     val rows = MasterCombos.flatMap { case (src, mag, _, _, _) =>

@@ -39,6 +39,13 @@ object AnnSearch {
     * vectors with `vec_id % CentroidMod == 7` stand in as centroids. */
   private val CentroidMod = 50
 
+  private val TopK = 5 // neighbors per query of every top-k path
+  private val NProbe = 3 // IVF lists a query probes
+  private val NAssign = 1 // IVF lists a vector is indexed under
+  private val NearDupBucket = 32 // near-dup candidates: expected bucket population,
+  private val NearDupTables = 8  // SRP tables,
+  private val NearDupCap = 8     // and neighbors each vector pairs with per table
+
   /** Long form (vec_id, pos, q) with quantized values. Zero terms are kept:
     * dropping them (mirrored in the oracle's qt CTE) would shrink the join
     * fan-in slightly, but the synthetic embeddings have almost no exact
@@ -109,7 +116,7 @@ object AnnSearch {
 
   /** Exact top-k neighbors of the query vectors (vec_id % 250 == 0),
     * excluding self. Output: (qvec, rank, vec, cos). */
-  def bruteTopK(emb: DataFrame, k: Int = 5): DataFrame = {
+  def bruteTopK(emb: DataFrame, k: Int = TopK): DataFrame = {
     val q = quantized(emb).cache()
     val n = norms(q)
     val queries = q.filter(col("vec_id") % QueryMod === 0)
@@ -149,7 +156,7 @@ object AnnSearch {
     * synthetic embeddings (weakly clustered, neighbor cos ≈ 0.4):
     * (2 bits, 12 tables) → recall@5 = 0.95; (4, 8) → 0.50. Tightly-clustered
     * real text embeddings support more bits at the same recall. */
-  def srpTopK(emb: DataFrame, k: Int = 5, nBits: Int = 4, tables: Int = 8): DataFrame = {
+  def srpTopK(emb: DataFrame, nBits: Int = 4, tables: Int = 8): DataFrame = {
     val cand = (0 until tables).map { t =>
       val b = srpBuckets(emb, nBits, t)
       val left = b.filter(col("vec_id") % QueryMod === 0)
@@ -158,7 +165,7 @@ object AnnSearch {
       left.join(right, "bucket").filter(col("qvec") =!= col("vec"))
         .select("qvec", "vec")
     }.reduce(_ unionByName _).distinct()
-    topK(rerank(cand, emb, "qvec", "vec"), k)
+    topK(rerank(cand, emb, "qvec", "vec"), TopK)
   }
 
   /** Pack a (cid, pos, cq) centroid table — the one format every training
@@ -252,8 +259,8 @@ object AnnSearch {
     * Scale shape: assignment is O(N·C·d) map work against a BROADCAST
     * centroid table (C ≪ N); the probe→candidate join shuffles on the list
     * id (lists ≈ N/C vectors); rerank cost is nProbe/C of brute force. */
-  def ivfTopK(emb: DataFrame, k: Int = 5, nProbe: Int = 3): DataFrame =
-    topK(rerank(ivfCandidates(emb, idSubset(emb), nProbe, 1), emb, "qvec", "vec"), k)
+  def ivfTopK(emb: DataFrame): DataFrame =
+    topK(rerank(ivfCandidates(emb, idSubset(emb), NProbe, NAssign), emb, "qvec", "vec"), TopK)
 
   /** One Lloyd round's E-step + M-step against a packed centroid table:
     * argmax assignment off [[centroidScores]], then per-(cluster, dim) EXACT
@@ -363,17 +370,17 @@ object AnnSearch {
     * true neighbor straddling a Voronoi boundary is findable from either
     * side. The scanned fraction is still MEASURED (candidates are distinct
     * pairs), so the recall-at-cost comparison stays honest. */
-  def ivfCandidatesWith(emb: DataFrame, centroids: DataFrame, nProbe: Int = 3,
-      nAssign: Int = 1): DataFrame =
+  def ivfCandidatesWith(emb: DataFrame, centroids: DataFrame, nProbe: Int = NProbe,
+      nAssign: Int = NAssign): DataFrame =
     ivfCandidates(emb, packed(centroids), nProbe, nAssign)
 
   /** IVF top-k against an ARBITRARY (cid, pos, cq) centroid table — the
     * general form of [[ivfTopK]] (whose id-subset quantizer is the
     * oracle-checked instance): broadcast centroids, one assignment
     * aggregate, list-id shuffle, exact rerank of probed lists only. */
-  def ivfTopKWith(emb: DataFrame, centroids: DataFrame, k: Int = 5,
-      nProbe: Int = 3, nAssign: Int = 1): DataFrame =
-    topK(rerank(ivfCandidatesWith(emb, centroids, nProbe, nAssign), emb, "qvec", "vec"), k)
+  def ivfTopKWith(emb: DataFrame, centroids: DataFrame, nProbe: Int = NProbe,
+      nAssign: Int = NAssign): DataFrame =
+    topK(rerank(ivfCandidatesWith(emb, centroids, nProbe, nAssign), emb, "qvec", "vec"), TopK)
 
   /** Adaptive SRP bit count: the smallest b with 2^b ≥ ceil(n/targetBucket),
     * clamped to [2, 16] — so expected bucket population stays ≈ targetBucket
@@ -386,32 +393,31 @@ object AnnSearch {
     else math.max(2, math.min(16, 64 - java.lang.Long.numberOfLeadingZeros(m - 1)))
   }
 
-  /** Candidate near-duplicate pairs: union over `tables` independent SRP
+  /** Candidate near-duplicate pairs: union over [[NearDupTables]] independent SRP
     * hyperplane families of CAPPED intra-bucket pairs, with the bit count
     * chosen from the corpus size ([[adaptiveBits]]).
     *
     * Two mechanisms bound the work:
-    *  - adaptive bits keep EXPECTED bucket population ≈ targetBucket, but
+    *  - adaptive bits keep EXPECTED bucket population ≈ [[NearDupBucket]], but
     *    co-directional clusters share every SRP sign and cannot be split by
     *    more hyperplanes;
-    *  - so within each bucket every vector pairs only with its next `cap`
+    *  - so within each bucket every vector pairs only with its next [[NearDupCap]]
     *    neighbors in a per-table hash order — pair count ≤ tables·cap·n,
     *    STRICTLY linear, as an equi-join on (bucket, rank+k) (no m² blowup
     *    even transiently). Each table uses a different order, so a pair
     *    missed in one table's window is recovered by another (measured in
     *    AnnSpec); only degenerate mega-clusters lose recall, and those are
     *    exact-dup territory anyway. */
-  def nearDupCandidates(emb: DataFrame, targetBucket: Int = 32, tables: Int = 8,
-      cap: Int = 8, nDocs: Long = -1L): DataFrame = {
-    val nBits = adaptiveBits(if (nDocs >= 0) nDocs else emb.count(), targetBucket)
-    (0 until tables).map { t =>
+  def nearDupCandidates(emb: DataFrame, nDocs: Long = -1L): DataFrame = {
+    val nBits = adaptiveBits(if (nDocs >= 0) nDocs else emb.count(), NearDupBucket)
+    (0 until NearDupTables).map { t =>
       // vec_id tie-break: two vectors colliding mod 1e9+7 in one bucket must
       // rank deterministically (and identically to the SQL oracle)
       val w = Window.partitionBy(col("bucket"))
         .orderBy(((col("vec_id") + lit(t * 7919)) * lit(2654435761L)) % lit(1000000007L),
           col("vec_id"))
       val r = srpBuckets(emb, nBits, t).withColumn("rn", row_number().over(w))
-      val probe = r.withColumn("k", explode(sequence(lit(1), lit(cap))))
+      val probe = r.withColumn("k", explode(sequence(lit(1), lit(NearDupCap))))
         .select(col("bucket"), col("vec_id").as("ia"), (col("rn") + col("k")).as("rn"))
       probe.join(r.select(col("bucket"), col("vec_id").as("ib"), col("rn")), Seq("bucket", "rn"))
         .select(least(col("ia"), col("ib")).as("va"), greatest(col("ia"), col("ib")).as("vb"))
@@ -420,9 +426,11 @@ object AnnSearch {
 
   /** Scored-pairs artifact location: keyed by the sf dir name, the corpus
     * size and a logic version, so a stale artifact from an older code
-    * revision or another scale can never satisfy a read. */
+    * revision or another scale can never satisfy a read. It lies in the
+    * running application's temp dir (Spark deletes it at exit): q49 → q94
+    * share it within one application, and two JVMs never race on one path. */
   def nearDupPairsArtifactPath(sfDir: String, n: Long): String =
-    s"/tmp/graft_artifacts/neardup_pairs_v1_${new java.io.File(sfDir).getName}_$n"
+    s"${org.apache.spark.SparkFiles.getRootDirectory()}/neardup_pairs_v1_${new java.io.File(sfDir).getName}_$n"
 
   /** Compute the near-dup scored pairs ONCE and persist them (the
     * `dedupArtifacts` pattern): the production pipeline materializes the
@@ -464,13 +472,11 @@ object AnnSearch {
     * SRP candidates, then the exact quantized-cosine rerank. Replaces the
     * round-1 fixed-8-bit single-table form whose intra-bucket pair count grew
     * O(n²/256). */
-  def nearDupPairs(emb: DataFrame, targetBucket: Int = 32, tables: Int = 8): DataFrame =
-    nearDupPairsN(emb, -1L, targetBucket, tables)
+  def nearDupPairs(emb: DataFrame): DataFrame = nearDupPairsN(emb, -1L)
 
   /** [[nearDupPairs]] with the corpus count supplied by a caller that
     * already paid for it (the artifact helpers) — avoids a second full
     * count job per invocation. */
-  private def nearDupPairsN(emb: DataFrame, nDocs: Long,
-      targetBucket: Int = 32, tables: Int = 8): DataFrame =
-    rerank(nearDupCandidates(emb, targetBucket, tables, nDocs = nDocs), emb, "va", "vb")
+  private def nearDupPairsN(emb: DataFrame, nDocs: Long): DataFrame =
+    rerank(nearDupCandidates(emb, nDocs), emb, "va", "vb")
 }

@@ -28,6 +28,10 @@ import graft.synth.Synth
   */
 object Calibration {
 
+  private val GroupThreshKm = 8.0 // groupRoughness' downstream reach of a calibrated run
+  private val TraceDistKm = 8.0 // usgsRatingTrace's trace distance from a gage
+  private val ResetN = 0.06 // resetMannings' one roughness
+
   /** Synthetic SRC with channel-geometry columns — the engine's analog of the
     * reference's `src_full_crosswalked.csv` (Stage, Volume (m3), BedArea (m2),
     * SurfaceArea (m2), LENGTHKM, SLOPE, channel_n, overbank_n, plus the NWM
@@ -253,7 +257,7 @@ object Calibration {
     * `src_roughness_optimization.py`'s `branch_network_tracer` +
     * `group_manningn_calc` sequential walk: within each level path (ordered
     * upstream→downstream by arbolate distance), uncalibrated reaches within
-    * `threshKm` of the most recent RUN of ≥2 consecutive calibrated reaches
+    * [[GroupThreshKm]] of the most recent RUN of ≥2 consecutive calibrated reaches
     * inherit that run's mean coefficient.
     *
     * The per-branch scan becomes pure window algebra (gaps-and-islands):
@@ -261,7 +265,7 @@ object Calibration {
     * the same row order in any engine — deterministic FP), and
     * last(..., ignoreNulls) carries the most recent island's end/base
     * state to every downstream row. No iteration, no driver loop. */
-  def groupRoughness(spark: SparkSession, threshKm: Double = 8.0): DataFrame = {
+  def groupRoughness(spark: SparkSession): DataFrame = {
     val net = StreamNet.reaches(spark)
     val lp = StreamNet.levelPaths(spark, net)
       .select(col("hydroid"), col("levelpath_id"))
@@ -295,7 +299,7 @@ object Calibration {
         last(when(col("island_start") === 1, col("k") - 1), ignoreNulls = true).over(run))
     val groupCoef =
       when(col("is_calb") === 0 && col("e_cumlen").isNotNull &&
-        col("cumlen") - col("e_cumlen") < threshKm && col("k") - col("base_k") > 1,
+        col("cumlen") - col("e_cumlen") < GroupThreshKm && col("k") - col("base_k") > 1,
         (col("e_cumcoef") - col("base_cumcoef")) / (col("k") - col("base_k")))
     d2.select(col("hydroid").cast("long").as("hydroid"),
       col("levelpath_id").cast("long").as("levelpath_id"),
@@ -385,11 +389,11 @@ object Calibration {
         (((col("hydroid") * 37 + 19) % 3000) / lit(10.0) + lit(10.0))
           * (lit(1.0) + col("k") * lit(0.8)))
 
-  def usgsRatingTrace(spark: SparkSession, traceDistKm: Double = 8.0): DataFrame = {
+  def usgsRatingTrace(spark: SparkSession): DataFrame = {
     val net = StreamNet.reaches(spark)
     val lp = StreamNet.levelPaths(spark, net)
     val base = net.join(lp, Seq("huc8", "hydroid"))
-      .withColumn("lr", floor(col("hydroid") / 144).cast("long") % 8)
+      .withColumn("lr", Synth.catRowOf(col("hydroid")).cast("long") % Synth.HucCatRows)
       .withColumn("lake", Synth.isLake(col("hydroid")).cast("int"))
       .select(col("hydroid"), col("levelpath_id"), col("lr"), col("length_km"), col("lake"))
     val wDown = Window.partitionBy(col("levelpath_id")).orderBy(col("lr").desc)
@@ -410,7 +414,7 @@ object Calibration {
         col("cumdown").as("cumdown_g"), col("cumup").as("cumup_g"),
         col("length_km").as("len_g"))
     val joined = traced.join(gages, "levelpath_id")
-    val dist = lit(traceDistKm)
+    val dist = lit(TraceDistKm)
     val down = joined
       .filter(col("lr") <= col("lr_g") &&
         col("cumdown") - col("cumdown_g") + col("len_g") < dist &&
@@ -548,7 +552,7 @@ object Calibration {
     * `src/reset_mannings.py:13-246` end to end:
     *
     *  1. `override_mannings(:100-104)`: every reach's roughness becomes one
-    *     constant (0.06) and discharge is recomputed (`calculate_discharge
+    *     constant ([[ResetN]]) and discharge is recomputed (`calculate_discharge
     *     :106-118`, same Manning algebra as q103).
     *  2. `identify_small_reaches(:120-219)`: reaches with catchment area
     *     < 0.25 km², length < 1.2 km and no lake take a donor — the
@@ -607,11 +611,10 @@ object Calibration {
         col("small").cast("int").as("is_small"))
   }
 
-  def resetMannings(spark: SparkSession, reachesDf: DataFrame,
-                    mannings: Double = 0.06): DataFrame = {
+  def resetMannings(spark: SparkSession, reachesDf: DataFrame): DataFrame = {
     val src2 = fullGeom(srcGeom(spark))
       .select(col("hydroid"), col("i").cast("long").as("i"), col("stage"),
-        manningQ(lit(mannings)).as("q_reset"))
+        manningQ(lit(ResetN)).as("q_reset"))
     val rs = reachesDf.select(col("hydroid"), col("order_"), col("length_km"),
       col("to_node"),
       (((col("hydroid") * 7 + 3) % 40) / lit(20.0)).as("areasqkm"),
@@ -625,7 +628,7 @@ object Calibration {
     src2.join(broadcast(d2), Seq("hydroid"))
       .join(broadcast(donorCurves), Seq("donor_id", "i"), "left")
       .select(col("hydroid"), col("i"), col("stage"),
-        lit(mannings).as("manning_n"),
+        lit(ResetN).as("manning_n"),
         when(col("donor_id").isNotNull, col("donor_q")).otherwise(col("q_reset"))
           .as("discharge_cms"),
         col("donor_id").cast("long").as("donor_id"), col("is_small"))

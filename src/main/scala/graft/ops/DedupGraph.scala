@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Global duplicate-cluster resolution — the step AFTER pair generation that
@@ -23,15 +23,18 @@ import org.apache.spark.sql.functions._
   */
 object DedupGraph {
 
+  private val MaxIters = 25 // components' round bound
+  private val SemanticCos = 0.35 // semanticDedup's edge cut
+
   /** Undirected dup edges (doc_a < doc_b) over the corpus: the
     * exact-content star ([[TextOps.exactDupStar]]) ∪ LSH-candidate pairs
-    * whose exact n-gram Jaccard clears `jaccardMin`. Pair generation is the
+    * whose exact n-gram Jaccard clears [[TextOps.NearDupJaccard]]. Pair generation is the
     * bucketed LSH family from [[TextOps]] — never all-pairs. */
-  def dupEdges(docs: DataFrame, jaccardMin: Double = 0.9): DataFrame = {
+  def dupEdges(docs: DataFrame): DataFrame = {
     val exact = TextOps.exactDupStar(docs)
       .select(col("keeper").as("doc_a"), col("doc_id").as("doc_b"))
     val near = TextOps.ngramJaccard(docs)
-      .filter(col("jaccard") >= jaccardMin)
+      .filter(col("jaccard") >= TextOps.NearDupJaccard)
       .select(col("doc_a"), col("doc_b"))
     exact.unionByName(near).distinct()
   }
@@ -39,7 +42,7 @@ object DedupGraph {
   /** Connected components of an undirected (doc_a, doc_b) edge table.
     * Returns (doc_id, component) for every endpoint, component = the min
     * doc_id reachable. Deterministic at any partitioning: every step is a
-    * `min` aggregate. `maxIters` is a safety bound far above the O(log n)
+    * `min` aggregate. [[MaxIters]] is a safety bound far above the O(log n)
     * convergence of propagate+jump.
     *
     * Each round's label table is `localCheckpoint`ed, not merely cached:
@@ -52,7 +55,7 @@ object DedupGraph {
     * swap in `checkpoint()` against reliable storage if executor loss
     * mid-loop must be survivable — the loop is otherwise restartable from
     * its inputs, so local is the right default). */
-  def components(edges: DataFrame, maxIters: Int = 25): DataFrame = {
+  def components(edges: DataFrame): DataFrame = {
     val und = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     // materialize the (bounded, dup-density-sized) edge list once; every
@@ -80,7 +83,7 @@ object DedupGraph {
     // The propagate is the UNION form — labels ∪ edge-carried neighbor
     // labels into ONE partial-aggregating min — one fewer exchange per
     // round than the aggregate-then-left-join form, same minima.
-    while (!converged && it < maxIters) {
+    while (!converged && it < MaxIters) {
       val next = round(undC, labels).localCheckpoint()
       converged = next.filter(col("comp") =!= col("prev")).count() == 0L
       labels = next
@@ -119,18 +122,24 @@ object DedupGraph {
     * rewrites and template spins share embeddings, not shingles). Pairs come
     * from the SRP multi-table candidate path ([[graft.ops.AnnSearch]]
     * `nearDupPairs` — bucketed, capped, never all-pairs) at cosine ≥
-    * `cosMin`; the same min-label propagation then closes them into
+    * [[SemanticCos]]; the same min-label propagation then closes them into
     * components so a chain of pairwise-similar paraphrases collapses to ONE
     * kept representative (pair-level keep-one would leave half of every odd
     * chain in the corpus). Output: one ledger row per vector that
     * participates in any semantic-dup relation. */
-  def semanticDedup(pairs: DataFrame, cosMin: Double = 0.35): DataFrame = {
-    val edges = pairs.filter(col("cos") >= cosMin)
+  def semanticDedup(pairs: DataFrame): DataFrame = {
+    val edges = pairs.filter(col("cos") >= SemanticCos)
       .select(col("va").as("doc_a"), col("vb").as("doc_b"))
+    ledger(edges, col("doc_id").as("vec_id"))
+  }
+
+  /** The keep-one-per-component ledger of an edge table: (`id`, component,
+    * cluster_size, keep), keep ⇔ the doc is its component's min id. */
+  private def ledger(edges: DataFrame, id: Column): DataFrame = {
     val comp = components(edges)
     val sizes = comp.groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
     comp.join(sizes, "component")
-      .select(col("doc_id").as("vec_id"), col("component"), col("cluster_size"),
+      .select(id, col("component"), col("cluster_size"),
         (col("doc_id") === col("component")).cast("int").as("keep"))
   }
 
@@ -158,11 +167,5 @@ object DedupGraph {
   /** q118: every doc that participates in any dup relation, its component's
     * canonical id, and the component size — the keep/drop ledger of a
     * cluster-level dedup pass (keep ⇔ doc_id = component). */
-  def dupComponents(docs: DataFrame, jaccardMin: Double = 0.9): DataFrame = {
-    val comp = components(dupEdges(docs, jaccardMin))
-    val sizes = comp.groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
-    comp.join(sizes, "component")
-      .select(col("doc_id"), col("component"), col("cluster_size"),
-        (col("doc_id") === col("component")).cast("int").as("keep"))
-  }
+  def dupComponents(docs: DataFrame): DataFrame = ledger(dupEdges(docs), col("doc_id"))
 }

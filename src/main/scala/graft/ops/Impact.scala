@@ -13,6 +13,9 @@ import graft.synth.Synth
   */
 object Impact {
 
+  private val DeepM = 2.0 // deepFlooding's depth threshold t
+  private val MinErrorCells = 3L // catchmentBoundaryErrors' min run length
+
   /** Flood-impact CSI over synthetic structures + roads (q109) —
     * `tools/analyze_flood_impact.py:13-130`: two inundation extents
     * (benchmark and test) are intersected with a structures point layer and
@@ -85,16 +88,15 @@ object Impact {
     * [[SpatialJoin.assign]]: a projected id would let the optimizer push the
     * miss filter below the projection and run the lookup twice per cell.
     * The mosaic never shuffles for the mask. */
-  def deepFlooding(spark: SparkSession, mosaic: DataFrame,
-      threshold: Double = 2.0): DataFrame = {
+  def deepFlooding(spark: SparkSession, mosaic: DataFrame): DataFrame = {
     import spark.implicits._
     val ids = Synth.maskList.map(_.mask_id).toDF("mask_id")
     mosaic
       .join(broadcast(ids), SpatialJoin.maskOf(spark, col("cell")) === ids("mask_id"))
       .groupBy(col("mask_id").cast("long").as("mask_id"))
       .agg(count(lit(1)).as("n_cells"),
-        count(when(col("depth_max") > threshold, 1)).as("n_deep"),
-        max(when(col("depth_max") > threshold, col("depth_max"))).as("max_deep"))
+        count(when(col("depth_max") > DeepM, 1)).as("n_deep"),
+        max(when(col("depth_max") > DeepM, col("depth_max"))).as("max_deep"))
       .select(col("mask_id"), col("n_cells"), col("n_deep"), col("max_deep"),
         (col("n_deep").cast("double") / col("n_cells").cast("double") * lit(100.0))
           .as("pct_deep"))
@@ -107,12 +109,11 @@ object Impact {
     * is an error cell when one of its 4-neighbors is DRY and belongs to a
     * DIFFERENT catchment (the extent stops exactly at the catchment edge);
     * errors are linked to the wet cell's HydroID and reported where the
-    * run length clears `minErrorCells` (the reference's min_error_length
+    * run length clears [[MinErrorCells]] (the reference's min_error_length
     * on the dissolved error lines). Both catchment lookups are the
     * broadcast PIP join; the wet set shuffles once for the neighbor
     * anti-lookup. */
-  def catchmentBoundaryErrors(spark: SparkSession, mosaic: DataFrame,
-      minErrorCells: Long = 3L): DataFrame = {
+  def catchmentBoundaryErrors(spark: SparkSession, mosaic: DataFrame): DataFrame = {
     val wet = mosaic.filter(col("depth_max") > 0.0).select(col("cell"))
     val nbrs = wet.select(col("cell"),
       explode(array(Cells.neighbourCols(col("cell"), Cells.BaseRes): _*)).as("ncell"))
@@ -129,7 +130,7 @@ object Impact {
       .filter(col("hyd") =!= col("nhyd"))
     err.groupBy(col("hyd").cast("long").as("hydroid"))
       .agg(countDistinct(col("cell")).as("n_error_cells"))
-      .filter(col("n_error_cells") >= minErrorCells)
+      .filter(col("n_error_cells") >= MinErrorCells)
   }
 
   /** Missing-FIM-cell analysis (q113) —

@@ -32,6 +32,7 @@ object Layout {
   /** Prefix shift for bucketing: 26-bit zkey >> 20 → 64 leading-prefix
     * buckets (the "file" grain of the evidence table). */
   val BucketShift = 20
+  private val HashBuckets = 64L // the hash layout's buckets, as many as the prefix's
 
   /** Morton interleave: bit b of `row` → zkey bit 2b+1, bit b of `col` →
     * zkey bit 2b. Exact BIGINT shift/mask/add, mirrored textually by the
@@ -48,15 +49,14 @@ object Layout {
     * [rLo..rHi]×[cLo..cHi] can skip the bucket entirely. One union, ONE
     * partial-aggregating exchange on (layout, bucket); the skip flag is a
     * pure projection over the aggregate. */
-  def zoneMaps(points: DataFrame, rLo: Long, rHi: Long, cLo: Long, cHi: Long,
-      hashBuckets: Int = 64): DataFrame = {
+  def zoneMaps(points: DataFrame, rLo: Long, rHi: Long, cLo: Long, cHi: Long): DataFrame = {
     val base = points.select(col("pid"),
       Cells.rowOfCol(col("cell")).as("cr"), Cells.colOfCol(col("cell")).as("cc"))
     val zed = base.select(lit("zorder").as("layout"),
       shiftright(zkey(col("cr"), col("cc")), BucketShift).as("bucket"),
       col("cr"), col("cc"))
     val hashed = base.select(lit("hash").as("layout"),
-      pmod(col("pid"), lit(hashBuckets.toLong)).as("bucket"), col("cr"), col("cc"))
+      pmod(col("pid"), lit(HashBuckets)).as("bucket"), col("cr"), col("cc"))
     zed.unionByName(hashed)
       .groupBy(col("layout"), col("bucket"))
       .agg(count(lit(1)).as("n_pages"),

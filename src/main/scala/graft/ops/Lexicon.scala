@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions._
   */
 object Lexicon {
 
+  private val ProbeDocId = 7L // postingsProbe's probe document
+
   /** (doc_id, w): first [[WebCuration.MaxWords]] whitespace words per doc —
     * the oracle mirrors with a bounded generate_series over string_split. */
   def words(docs: DataFrame): DataFrame =
@@ -55,8 +57,8 @@ object Lexicon {
     * one probe document (the retrieval shape: a SMALL term set broadcast
     * against the corpus-sized postings table; output bounded by term
     * selectivity, never by vocabulary size). */
-  def postingsProbe(docs: DataFrame, probeDocId: Long = 7L): DataFrame = {
-    val terms = words(docs.filter(col("doc_id") === probeDocId))
+  def postingsProbe(docs: DataFrame): DataFrame = {
+    val terms = words(docs.filter(col("doc_id") === ProbeDocId))
       .select(col("w")).distinct()
     termFreq(docs).join(broadcast(terms), "w")
       .select(col("w"), col("doc_id"), col("tf"))

@@ -33,6 +33,10 @@ import graft.synth.Synth
   */
 object LinkGraph {
 
+  private val PageRankRounds = 3
+  private val HitsRounds = 2
+  private val AnchorTopK = 3 // anchorText's k: terms kept per target
+
   /** Out-link edges: 3 quadratic-residue targets per base doc (self-links
     * dropped, duplicate targets collapsed) — many-to-one by design so the
     * graph has hubs and leaves. */
@@ -52,16 +56,16 @@ object LinkGraph {
       .distinct()
   }
 
-  /** q140: `iterations` rounds of fixed-point PageRank; per node the final
+  /** q140: [[PageRankRounds]] rounds of fixed-point PageRank; per node the final
     * rank (ppb) plus in/out degree. */
-  def pageRank(docs: DataFrame, iterations: Int = 3): DataFrame = {
+  def pageRank(docs: DataFrame): DataFrame = {
     val nodes = docs.filter(Synth.isBaseDoc(col("doc_id"))).select(col("doc_id"))
     val n = nodes.agg(count(lit(1)).as("n"))
     val withN = nodes.crossJoin(broadcast(n))
     val e = edges(docs)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     var ranks = withN.select(col("doc_id"), expr("1000000000 div n").as("r"))
-    for (_ <- 1 to iterations) {
+    for (_ <- 1 to PageRankRounds) {
       val contrib = e.join(deg, "src")
         .join(ranks.select(col("doc_id").as("src"), col("r")), "src")
         .select(col("dst").as("doc_id"), expr("r div outdeg").as("c"))
@@ -86,7 +90,7 @@ object LinkGraph {
     * describe it. Each edge carries the source page's anchor terms (the
     * first 3 words of the source doc — the corpus fixture has no markup, so
     * the lead words stand in for the `<a>` text deterministically); per
-    * target the in-link term frequencies aggregate and the top-`k` terms
+    * target the in-link term frequencies aggregate and the top-k terms
     * survive under a total order (n_links desc, w asc).
     *
     * Scale notes: anchors derive per-row (a `slice(split(...))` — no join
@@ -96,7 +100,7 @@ object LinkGraph {
     * REDUCE key with map-side combine — and the per-target top-k is the
     * WindowGroupLimit shape (map-side heaps, never a full per-target sort).
     * Output is bounded by k · targets regardless of in-link skew. */
-  def anchorText(docs: DataFrame, k: Int = 3): DataFrame = {
+  def anchorText(docs: DataFrame): DataFrame = {
     val anchors = docs.filter(Synth.isBaseDoc(col("doc_id")))
       .select(col("doc_id").as("src"),
         explode(slice(split(col("text"), " "), 1, 3)).as("w"))
@@ -107,7 +111,7 @@ object LinkGraph {
       .orderBy(col("n_links").desc, col("w").asc)
     counts
       .withColumn("rnk", row_number().over(byDoc))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= AnchorTopK)
       .select(col("doc_id"), col("w"), col("n_links"),
         col("rnk").cast("int").as("rnk"))
   }
@@ -139,7 +143,7 @@ object LinkGraph {
         countDistinct(col("src")).as("n_src_pages"))
   }
 
-  /** q148: HITS hubs & authorities, `rounds` mutual-reinforcement rounds —
+  /** q148: HITS hubs & authorities, [[HitsRounds]] mutual-reinforcement rounds —
     * PageRank's companion ranking (a page is a good AUTHORITY if good hubs
     * link to it; a good HUB if it links to good authorities), the other
     * classic link-quality prior a curation pipeline attaches to pages.
@@ -161,12 +165,12 @@ object LinkGraph {
     * hot build sides); the max-normalizer is a 1-row broadcast. Round count
     * fixed and small; at production round counts, checkpoint scores every
     * ~10 rounds like PR. */
-  def hits(docs: DataFrame, rounds: Int = 2): DataFrame = {
+  def hits(docs: DataFrame): DataFrame = {
     val nodes = docs.filter(Synth.isBaseDoc(col("doc_id"))).select(col("doc_id"))
     val e = edges(docs)
     var hub = nodes.select(col("doc_id"), lit(1000000L).as("s"))
     var auth = nodes.select(col("doc_id"), lit(0L).as("s"))
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to HitsRounds) {
       val araw = e.join(hub.select(col("doc_id").as("src"), col("s")), "src")
         .groupBy(col("dst").as("doc_id")).agg(sum(col("s")).as("raw"))
       val amax = araw.agg(max(col("raw")).as("mx"))

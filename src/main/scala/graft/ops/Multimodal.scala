@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  private val NFrames = 4 // frameSample's windows per payload
+  private val FrameLen = 24 // frameSample's window bytes
+
   final case class MediaMeta(pid: Long, n_bytes: Int, width: Int, height: Int,
       duration_ms: Int, thumb_md5: String)
 
@@ -44,21 +47,21 @@ object Multimodal {
       // frame-sample analog: fixed-offset byte slices of the payload
       md5(expr("substring(html, 33, 32)")).as("frame1_md5"))
 
-  /** Frame sampling (q84): `nFrames` evenly-strided fixed-length byte windows
+  /** Frame sampling (q84): [[NFrames]] evenly-strided fixed-length byte windows
     * per binary payload — the video frame-sample plumbing as a relational
     * generator (explode over frame index; substring on the binary column
     * stays codegen'd). Payloads shorter than one frame are dropped (full
     * frames only, codec semantics). Oracle-checkable because the corpus is
     * ASCII (byte offsets == char offsets, locked by MultimodalSpec). */
-  def frameSample(pages: DataFrame, nFrames: Int = 4, frameLen: Int = 24): DataFrame =
+  def frameSample(pages: DataFrame): DataFrame =
     pages.select(col("pid"), col("html"), length(col("html")).as("n_bytes"))
-      .filter(col("n_bytes") >= frameLen)
-      .withColumn("k", explode(sequence(lit(0), lit(nFrames - 1))))
+      .filter(col("n_bytes") >= FrameLen)
+      .withColumn("k", explode(sequence(lit(0), lit(NFrames - 1))))
       .withColumn("off",
-        (lit(1) + col("k") * floor((col("n_bytes") - lit(frameLen)) / lit(nFrames.toDouble))
+        (lit(1) + col("k") * floor((col("n_bytes") - lit(FrameLen)) / lit(NFrames.toDouble))
           .cast("int")).cast("int"))
       .select(col("pid"), col("k").cast("int").as("k"), col("off"),
-        md5(expr(s"substring(html, off, $frameLen)")).as("frame_md5"))
+        md5(expr(s"substring(html, off, $FrameLen)")).as("frame_md5"))
 
   /** Batch kernel path (mapPartitions — §2.10 preference (d), used only here
     * where a black-box codec genuinely can't be a Catalyst expression). */

@@ -20,6 +20,8 @@ import graft.synth.Synth
   */
 object NetworkEval {
 
+  private val SlopeMin = 0.002 // backpool's slope_min clamp
+
   /** The evaluated crosswalk: the true mapping hydroid → feature_id
     * (1000000 + hydroid) with a deterministic ~9 % error injection — every
     * 11th reach (offset 3) is crosswalked to its DOWNSTREAM neighbor's
@@ -183,8 +185,7 @@ object NetworkEval {
     * The geometric trim is deterministic: the flagged outlet reach loses
     * the backpool quarter of its length (×0.75, dyadic) and its slope
     * rescales by the inverse length ratio before the `slope_min` clamp. */
-  def backpool(spark: SparkSession, points: DataFrame,
-      slopeMin: Double = 0.002): DataFrame = {
+  def backpool(spark: SparkSession, points: DataFrame): DataFrame = {
     val counts = SpatialJoin.assign(spark, points)
       .groupBy(col("hydroid").cast("long").as("hydroid"), col("huc8"))
       .agg(count(lit(1)).as("n_pts"))
@@ -212,7 +213,7 @@ object NetworkEval {
       .withColumn("slope_adj",
         when(col("flagged") === 1,
           greatest(col("slope") * col("length_km") / col("trimmed_length_km"),
-            lit(slopeMin)))
+            lit(SlopeMin)))
           .otherwise(col("slope")))
       .select(col("hydroid"), col("huc8"), col("n_pts"), col("mean_pts"),
         col("std_pts"), col("flagged"), col("length_km"), col("trimmed_length_km"),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Scale notes: packing is inherently order-dependent, so its honest cost is
   * one sort per writer shard — docs are hash-sharded (`doc_id % shards`, one
   * exchange), then a per-shard window computes running token offsets; shard
-  * count is a parameter sized to the cluster (tokens per shard ≈ a writer
+  * count ([[Shards]]) is sized to the cluster (tokens per shard ≈ a writer
   * task's output file), so the sort never exceeds a task's slice. Mix
   * weighting is two scalar aggregates and a broadcast of a languages-sized
   * table. All arithmetic is exact-integer or single-division IEEE double, so
@@ -23,17 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
+  private val Shards = 64 // seqPack's writer shards
+
   /** q124: sequence-packing ledger at `budgetTokens` per training window —
     * docs are concatenated in (shard, doc_id) order and chunked; each doc
     * reports its token interval [tok_start, tok_end), the first/last window
     * it lands in, and how many windows it spans. Token count is the
     * whitespace tokenizer (the same `split` the quality ops use). */
-  def seqPack(docs: DataFrame, budgetTokens: Int = 2048, shards: Int = 64): DataFrame = {
+  def seqPack(docs: DataFrame, budgetTokens: Int = 2048): DataFrame = {
     val byShard = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
     docs
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("bigint").as("n_tokens"),
-        (col("doc_id") % shards).cast("int").as("shard"))
+        (col("doc_id") % Shards).cast("int").as("shard"))
       .withColumn("tok_end", sum(col("n_tokens")).over(byShard))
       .withColumn("tok_start", col("tok_end") - col("n_tokens"))
       .select(col("doc_id"), col("shard"), col("n_tokens"),

@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object QualityModels {
 
+  private val TargetLang = "en" // importanceWeights' target distribution
+  private val KeepPpm = 1000000L // importanceWeights' keep bar: as target-like as raw
+
   /** (doc_id, w1, w2): adjacent word pairs, derived per-row (no posexplode
     * + self-join — that shape shuffles corpus×words rows). */
   private def bigrams(docs: DataFrame): DataFrame =
@@ -94,7 +97,7 @@ object QualityModels {
         col("avg_shift_ppk"), col("keep"))
 
   /** q150: DSIR-style importance weighting — per-doc importance of the raw
-    * corpus under a TARGET distribution (here: the `targetLang` subset),
+    * corpus under a TARGET distribution (here: the [[TargetLang]] subset),
     * the data-selection step of Xie et al. 2023 ("Data Selection for
     * Language Models via Importance Resampling") in exact arithmetic: words
     * hash to [[FeatureDim]] buckets; the bucket's importance ratio is the
@@ -102,7 +105,7 @@ object QualityModels {
     * first floored onto a ppb grid — integer division order is fixed, so
     * Spark and the oracle agree bit-for-bit; the ppb grid resolves a
     * 1/4096-uniform bucket to ~5 decimal digits); a doc's score is the mean
-    * bucket ratio over its words, kept when ≥ `keepPpm` (more target-like
+    * bucket ratio over its words, kept when ≥ [[KeepPpm]] (more target-like
     * than raw). `log` would be the classical form — a ratio preserves the
     * same per-word preorder and stays integral. Overflow headroom:
     * (c+1)·10⁹ needs c < 9.2·10⁹ occurrences per bucket; beyond that drop
@@ -115,8 +118,7 @@ object QualityModels {
     * ratio table back as a BROADCAST (map-only on the corpus) and collapses
     * straight to doc grain in one partial agg. Nothing corpus-sized ever
     * shuffles twice. */
-  def importanceWeights(docs: DataFrame, targetLang: String = "en",
-      keepPpm: Long = 1000000L): DataFrame = {
+  def importanceWeights(docs: DataFrame): DataFrame = {
     val words = docs
       .select(col("doc_id"), col("lang"),
         WebCuration.words.as("ws"))
@@ -126,7 +128,7 @@ object QualityModels {
         graft.functions.Md5Prefix60.md5Prefix60(col("w")) % FeatureDim)
     val counts = words.groupBy(col("bucket"))
       .agg(count(lit(1)).as("c_r"),
-        sum(when(col("lang") === targetLang, 1L).otherwise(0L)).as("c_t"))
+        sum(when(col("lang") === TargetLang, 1L).otherwise(0L)).as("c_t"))
     val totals = counts.agg(sum(col("c_r")).as("tot_r"), sum(col("c_t")).as("tot_t"))
     val ratios = counts.crossJoin(broadcast(totals)) // 1-row totals
       .select(col("bucket"),
@@ -143,7 +145,7 @@ object QualityModels {
       .agg(count(lit(1)).as("n_words"), sum(col("r_ppm")).as("r_sum"))
       .select(col("doc_id"), col("n_words"),
         expr("r_sum div n_words").as("score_ppm"),
-        when(expr("r_sum div n_words") >= keepPpm, 1).otherwise(0)
+        when(expr("r_sum div n_words") >= KeepPpm, 1).otherwise(0)
           .cast("int").as("keep"))
   }
 

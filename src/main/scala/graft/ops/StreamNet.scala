@@ -23,6 +23,10 @@ import graft.synth.Synth
   */
 object StreamNet {
 
+  /** Reaches shorter than this (km) take a donor's rating curve. */
+  private val MinReachKm = 1.25
+  private val MinAreaSqKm = 3.0 // ratingGraftFull's short-catchment area
+
   /** Closed-form downstream id, or -1 (driver-side mirror of the synthesis). */
   def downstreamOf(h: Int): Int = {
     val r = h / Synth.CatCols; val c = h % Synth.CatCols
@@ -115,14 +119,14 @@ object StreamNet {
     rs.map(r => r.hydroid -> arbo(r.hydroid)).toMap
   }
 
-  /** G6: short-reach rating graft — reaches shorter than `minLen` km take
+  /** G6: short-reach rating graft — reaches shorter than [[MinReachKm]] take
     * their rating curve from a donor: the downstream reach when one exists,
     * else themselves (`src/add_crosswalk.py:110-318`, simplified to the
     * deterministic donor rule; selection is a join, not iteration). */
-  def ratingGraft(reachesDf: DataFrame, minLen: Double = 1.25): DataFrame =
+  def ratingGraft(reachesDf: DataFrame): DataFrame =
     reachesDf.select(col("hydroid"), col("length_km"), col("to_node"))
       .withColumn("donor_id",
-        when(col("length_km") < minLen && col("to_node") >= 0, col("to_node"))
+        when(col("length_km") < MinReachKm && col("to_node") >= 0, col("to_node"))
           .otherwise(col("hydroid")))
 
   /** G6 FULL donor ladder (q79) — the complete short-reach rating-curve graft
@@ -146,11 +150,10 @@ object StreamNet {
     * a partial-aggregating min(struct(−order, id)); the curve graft is an
     * equi-join into the SRC scan. No windows over the big table, no driver
     * loops. */
-  def ratingGraftFull(spark: SparkSession, reachesDf: DataFrame,
-      minAreaSqKm: Double = 3.0, minLen: Double = 1.25): DataFrame = {
+  def ratingGraftFull(spark: SparkSession, reachesDf: DataFrame): DataFrame = {
     val shorts = reachesDf
       .withColumn("areasqkm", ((col("hydroid") % 13) + 5) * lit(0.4))
-      .filter(col("areasqkm") < minAreaSqKm && col("length_km") < minLen &&
+      .filter(col("areasqkm") < MinAreaSqKm && col("length_km") < MinReachKm &&
         !Synth.isLake(col("hydroid")))
       .select(col("hydroid"), col("to_node"))
     val up = reachesDf.select(col("to_node").as("hydroid"),

@@ -36,6 +36,9 @@ object Terrain {
   val SharpDrop = 1000.0           // agreedem.py sharp_drop
   val Rad = 6                      // Chebyshev search radius (rivers every
                                    // 12 cols ⇒ d∞ ≤ 6 to a river cell)
+  private val Ndv = -9999.0        // raster nodata value
+  private val WseRad = 4           // interpolateWse's max search distance
+  private val StreamThreshold = 25 // accuflux's stream-pixel value
 
   /** Elevation closed form — exact dyadic doubles (quarters), so every
     * engine computes the identical bit pattern (oracle twin:
@@ -212,8 +215,7 @@ object Terrain {
     * Per-HUC `flatMapGroups` kernel (depth ≤ 8 by construction), the same
     * shape as [[StreamNet.arbolate]]; the oracle is the recursive-CTE
     * path-count (one row per headwater × downstream node). */
-  def accuflux(spark: SparkSession, reachesDf: DataFrame,
-               threshold: Int = 25): DataFrame = {
+  def accuflux(spark: SparkSession, reachesDf: DataFrame): DataFrame = {
     import spark.implicits._
     reachesDf.select(col("huc8"), col("hydroid").cast("int"),
       col("to_node").cast("int"))
@@ -232,7 +234,7 @@ object Terrain {
       }
       .toDF("huc8", "hydroid", "flowaccum")
       .withColumn("stream_pixel",
-        when(col("flowaccum") > 0, lit(threshold)).otherwise(lit(0)))
+        when(col("flowaccum") > 0, lit(StreamThreshold)).otherwise(lit(0)))
   }
 
   /** REM / HAND detrend (q102) — `src/make_rem.py:30-130`: per
@@ -242,13 +244,13 @@ object Terrain {
     * the nodata value (`calculate_rem:79-88`). Thalweg mask: every 23rd
     * point (offset 1). Zonal min is a 20 k-row broadcast back over the
     * fact table — one partial-aggregating exchange, no wide join. */
-  def rem(assigned: DataFrame, ndv: Double = -9999.0): DataFrame = {
+  def rem(assigned: DataFrame): DataFrame = {
     val mins = assigned.filter(col("pid") % 23 === 1)
       .groupBy(col("hydroid")).agg(min(col("hand")).as("zmin"))
     assigned.join(broadcast(mins), Seq("hydroid"), "left")
       .select(col("pid"), col("hydroid").cast("long").as("hydroid"),
         col("hand").as("dem"),
-        when(col("zmin").isNull, lit(ndv))
+        when(col("zmin").isNull, lit(Ndv))
           .otherwise(col("hand") - col("zmin")).as("rem"))
   }
 
@@ -258,12 +260,12 @@ object Terrain {
     * negative sentinel, which the maximum then ignores — the reference's
     * exact formulation, reproduced with `greatest`). Levee crests run along
     * sparse deterministic lines; everything is per-cell map work. */
-  def burnInLevees(spark: SparkSession, ndv: Double = -9999.0): DataFrame =
+  def burnInLevees(spark: SparkSession): DataFrame =
     grid(spark)
       .withColumn("nld",
         when(col("r") % 24 === 6,
           col("elev") + ((col("r") * 3 + col("c") * 7) % 20) / lit(4.0) + lit(2.0))
-          .otherwise(lit(ndv)))
+          .otherwise(lit(Ndv)))
       .select(col("gid"), col("elev"), col("nld"),
         greatest(col("elev"), col("nld")).as("burned_elev"))
 
@@ -271,7 +273,7 @@ object Terrain {
     * `tools/interpolate_water_surface.py:15-80` (`fillnodata` over the WSE
     * raster within a max search distance, then depth = WSE − DEM):
     * nodata cells take the inverse-distance-weighted mean of the valid
-    * cells within Chebyshev radius 4, computed EXACTLY — weights are the
+    * cells within Chebyshev radius [[WseRad]], computed EXACTLY — weights are the
     * integer floor(2²⁰ / d²), values are exact quarter-unit integers, so
     * both Σw·v and Σw are order-insensitive BIGINT sums and the single
     * final division is bit-identical on any engine and any partitioning
@@ -280,8 +282,7 @@ object Terrain {
     * max_search_distance semantics). Same halo-join scale shape as
     * [[agreeBurn]]: candidates per cell bounded by the radius, linear in
     * cells, shards by block key. */
-  def interpolateWse(spark: SparkSession, radius: Int = 4,
-      ndv: Double = -9999.0): DataFrame = {
+  def interpolateWse(spark: SparkSession): DataFrame = {
     val g = grid(spark)
       .withColumn("valid", ((col("r") * 7 + col("c") * 3) % 5 =!= 0).cast("int"))
       .withColumn("wse",
@@ -290,7 +291,7 @@ object Terrain {
     val fill = haloPairs(g.filter(col("valid") === 0),
       g.filter(col("valid") === 1)
         .select(col("gid"), col("r"), col("c"),
-          (col("wse") * 4).cast("long").as("vq")), radius)
+          (col("wse") * 4).cast("long").as("vq")), WseRad)
       .withColumn("w", floor(lit(1048576.0) / col("d2").cast("double")).cast("long"))
       .groupBy(col("gid"))
       .agg(sum(col("w") * col("vq")).as("num"), sum(col("w")).as("den"))
@@ -299,8 +300,8 @@ object Terrain {
         when(col("valid") === 1, col("wse"))
           .when(col("den").isNotNull,
             col("num").cast("double") / col("den").cast("double") / lit(4.0))
-          .otherwise(lit(ndv)).as("wse_filled"),
-        when(col("valid") === 0 && col("den").isNull, lit(ndv))
+          .otherwise(lit(Ndv)).as("wse_filled"),
+        when(col("valid") === 0 && col("den").isNull, lit(Ndv))
           .otherwise((when(col("valid") === 1, col("wse"))
             .otherwise(col("num").cast("double") / col("den").cast("double") / lit(4.0)))
             - col("elev")).as("depth"))

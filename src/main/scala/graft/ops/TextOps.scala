@@ -24,6 +24,13 @@ object TextOps {
   val NumHashes = 16
   val NumBands = 4 // 4 rows/band
   private val BandKeys = Seq("band", "k0", "k1", "k2", "k3") // LSH bucket key
+  private val LeakJaccard = 0.5 // fuzzyDecontaminate's leak flag
+  private val ContaminatedFrac = 0.2 // decontaminate's overlap flag
+  private val HeavyDupFrac = 0.5 // dupSpanProfile's heavy-dup verdict
+  private val KmvK = 64 // kmvDistinct's sketch size k
+
+  /** The near-dup cut of curation, incremental dedup, dup components and ingest. */
+  val NearDupJaccard = 0.9
 
   /** The docs at least one shingle long: every shingle-kernel call reads
     * through this filter, the kernels' precondition for matching the
@@ -245,13 +252,13 @@ object TextOps {
     * 1. quality gate (keep == 1),
     * 2. exact dedup: only the min doc_id of each content-hash group survives,
     * 3. near-dup removal: for every LSH-candidate pair with n-gram Jaccard ≥
-    *    `jaccardMax`, the higher doc_id is dropped.
+    *    [[NearDupJaccard]], the higher doc_id is dropped.
     * Returns the surviving doc ids with their quality features. */
-  def curate(docs: DataFrame, jaccardMax: Double = 0.9): DataFrame = {
+  def curate(docs: DataFrame): DataFrame = {
     val q = quality(docs).filter(col("keep") === 1)
     val dupLosers = exactDupStar(docs).select(col("doc_id"))
     val nearLosers = ngramJaccard(docs)
-      .filter(col("jaccard") >= jaccardMax)
+      .filter(col("jaccard") >= NearDupJaccard)
       .select(col("doc_b").as("doc_id")).distinct()
     q.join(dupLosers, Seq("doc_id"), "left_anti")
       .join(nearLosers, Seq("doc_id"), "left_anti")
@@ -281,13 +288,12 @@ object TextOps {
     * At scale the base's band table is a precomputed artifact — the batch
     * never triggers a corpus-wide re-LSH, and the bucket join only shuffles
     * the (small) batch side against the base's existing band partitioning. */
-  def incrementalDedup(docs: DataFrame, idSplit: Long = 1000000L,
-      jaccardMax: Double = 0.9): DataFrame = {
+  def incrementalDedup(docs: DataFrame, idSplit: Long = graft.synth.Synth.BaseDocs): DataFrame = {
     val (arr, bands) = dedupArtifacts(docs)
     incrementalDedupAgainst(
       arr.filter(col("doc_id") < idSplit), bands.filter(col("doc_id") < idSplit),
       arr.filter(col("doc_id") >= idSplit), bands.filter(col("doc_id") >= idSplit),
-      jaccardMax)
+      NearDupJaccard)
   }
 
   /** The two PERSISTED artifacts a production incremental-dedup service keeps
@@ -306,8 +312,7 @@ object TextOps {
     * join (measured at the ×256 bench leg before that cut: 180 s shuffling
     * 359M shingle rows against 286 pairs). */
   def incrementalDedupAgainst(baseArr: DataFrame, baseBands: DataFrame,
-      batchArr: DataFrame, batchBands: DataFrame,
-      jaccardMax: Double = 0.9): DataFrame = {
+      batchArr: DataFrame, batchBands: DataFrame, jaccardMax: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = baseBands.withColumnRenamed("doc_id", "doc_a")
     val batch = batchBands.withColumnRenamed("doc_id", "doc_b")
@@ -436,7 +441,7 @@ object TextOps {
     * overlap): the distinct shingle hashes of the (definitionally small)
     * eval set are broadcast against the corpus shingle table; each corpus
     * doc reports how many of its distinct shingles appear in ANY eval doc
-    * and is flagged past `fracMin` overlap. Only overlapping docs are
+    * and is flagged past [[ContaminatedFrac]] overlap. Only overlapping docs are
     * emitted (the 100 TB common case: almost every doc has zero overlap and
     * never leaves its map task — the broadcast hash join filters it out
     * before any shuffle).
@@ -445,8 +450,7 @@ object TextOps {
     * ([[pairIntersect]]'s rationale): an eval benchmark is a fixed,
     * human-curated artifact orders of magnitude below executor memory, not
     * a data-dependent set that a re-crawl storm can inflate. */
-  def decontaminate(docs: DataFrame, evalDocs: DataFrame,
-      fracMin: Double = 0.2): DataFrame = {
+  def decontaminate(docs: DataFrame, evalDocs: DataFrame): DataFrame = {
     val evalHb = shingleHashes(evalDocs).select(col("hb")).distinct()
       .withColumn("hit", lit(1))
     // ONE corpus pass: left-broadcast-join the eval set (distinct (doc_id,hb)
@@ -461,7 +465,7 @@ object TextOps {
       .filter(col("n_overlap") > 0)
       .select(col("doc_id"), col("n_shingles"), col("n_overlap"),
         (col("n_overlap").cast("double") / col("n_shingles").cast("double")).as("overlap_frac"),
-        (col("n_overlap").cast("double") / col("n_shingles").cast("double") >= fracMin)
+        (col("n_overlap").cast("double") / col("n_shingles").cast("double") >= ContaminatedFrac)
           .cast("int").as("contaminated"))
   }
 
@@ -475,12 +479,11 @@ object TextOps {
     * definitionally small but the CANDIDATE set is what bounds cost, so the
     * same no-forced-broadcast discipline applies. Output: one row per corpus
     * doc with ≥1 candidate — best-matching eval doc, its Jaccard, and the
-    * leak flag at `jaccardMin`. */
-  def fuzzyDecontaminate(docs: DataFrame, isEval: org.apache.spark.sql.Column,
-      jaccardMin: Double = 0.5): DataFrame = {
+    * leak flag at [[LeakJaccard]]. */
+  def fuzzyDecontaminate(docs: DataFrame, isEval: org.apache.spark.sql.Column): DataFrame = {
     val (arr, bands) = dedupArtifacts(docs)
     incrementalDedupAgainst(arr.filter(isEval), bands.filter(isEval),
-      arr.filter(!isEval), bands.filter(!isEval), jaccardMin)
+      arr.filter(!isEval), bands.filter(!isEval), LeakJaccard)
       .withColumnRenamed("match_doc", "eval_doc")
       .withColumnRenamed("is_dup", "leaked")
   }
@@ -507,7 +510,7 @@ object TextOps {
     * table, one equi-join back on `hb` (both sides partial-aggregated, AQE
     * skew-splittable on boilerplate-hot hashes), one per-doc agg — no
     * window, no sort, linear in corpus shingles. */
-  def dupSpanProfile(docs: DataFrame, heavyFrac: Double = 0.5): DataFrame = {
+  def dupSpanProfile(docs: DataFrame): DataFrame = {
     val dsh = shingleHashes(docs)
     // r6 probe: a df≥2-filtered build side was tried here and measured
     // SLOWER at the ×64 leg (17.6 s vs 12.6 s) — the synthetic corpus's
@@ -523,7 +526,7 @@ object TextOps {
       .withColumn("dup_frac",
         col("n_dup").cast("double") / col("n_shingles").cast("double"))
       .select(col("doc_id"), col("n_shingles"), col("n_dup"), col("dup_frac"),
-        (col("dup_frac") >= heavyFrac).cast("int").as("heavy_dup"))
+        (col("dup_frac") >= HeavyDupFrac).cast("int").as("heavy_dup"))
   }
 
   /** (doc_id, pos, hb): POSITIONAL shingle hashes — same 60-bit md5-prefix
@@ -586,19 +589,19 @@ object TextOps {
     * exact column (the comparison baseline, = what the estimate avoids)
     * costs the classic two partial-aggregating exchanges; production
     * profiling at 100 TB would keep only the KMV column. */
-  def kmvDistinct(docs: DataFrame, k: Int = 64): DataFrame = {
+  def kmvDistinct(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val lsh = distinctShingles(docs, "lang")
     val byLang = Window.partitionBy(col("lang")).orderBy(col("hb").asc)
-    val kept = lsh.withColumn("rnk", dense_rank().over(byLang)).filter(col("rnk") <= k)
+    val kept = lsh.withColumn("rnk", dense_rank().over(byLang)).filter(col("rnk") <= KmvK)
     val est = kept.groupBy(col("lang"))
       .agg(max(col("hb")).as("kth"), countDistinct(col("hb")).as("n_kept"))
     val exact = lsh.select(col("lang"), col("hb")).distinct()
       .groupBy(col("lang")).agg(count(lit(1)).as("n_exact"))
     est.join(exact, "lang")
       .select(col("lang"), col("n_exact"), col("n_kept"),
-        when(col("n_kept") < k, col("n_kept").cast("double"))
-          .otherwise(lit((k - 1).toDouble) * lit(1152921504606846976.0)
+        when(col("n_kept") < KmvK, col("n_kept").cast("double"))
+          .otherwise(lit((KmvK - 1).toDouble) * lit(1152921504606846976.0)
             / col("kth").cast("double")).as("kmv_estimate"))
   }
 

@@ -28,6 +28,15 @@ object WebCuration {
     * generate_series needs a constant). */
   val MaxWords = 128
 
+  private val DomainCap = 2 // canonical URLs kept per host
+  private val PerTick = 2 // frontier requests per host per tick
+  private val SampleFrac = 0.3 // stratified sample share per language
+  private val MinSharePct = 50 // host boilerplate: share of the host's pages
+  private val MinPages = 2 // host boilerplate: smallest host
+  private val MaxHosts = 16 // mirror detection: hosts per hash before pairing
+  private val MinShared = 3 // mirror detection: shared docs per host pair
+  private val BasePerUrl = 1 // crawl budget: fetches per known URL
+
   /** A doc's first [[MaxWords]] whitespace words, as an array. */
   def words: Column = expr(s"slice(split(text, ' '), 1, $MaxWords)")
 
@@ -43,11 +52,14 @@ object WebCuration {
   def paragraphs(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .select(col("doc_id"),
-        posexplode(expr(
-          s"""transform(sequence(0, (size(ws) + ${ParaWords - 1}) div $ParaWords - 1),
-             |  i -> array_join(slice(ws, i * $ParaWords + 1, $ParaWords), ' '))""".stripMargin))
-          .as(Seq("para_id", "para")))
+      .select(col("doc_id"), paraWindows)
+
+  /** (para_id, para) rows of the word array `ws`, one per [[ParaWords]] window. */
+  private def paraWindows: Column =
+    posexplode(expr(
+      s"""transform(sequence(0, (size(ws) + ${ParaWords - 1}) div $ParaWords - 1),
+         |  i -> array_join(slice(ws, i * $ParaWords + 1, $ParaWords), ' '))""".stripMargin))
+      .as(Seq("para_id", "para"))
 
   /** Global paragraph-level dedup (q73): the first occurrence of each
     * paragraph — ordered by (doc_id, para_id) — survives; all later copies
@@ -118,19 +130,19 @@ object WebCuration {
       .agg(count(lit(1)).as("n_fetches"), max(col("fetch_ts")).as("latest_ts"),
         min(col("pid")).as("first_pid"))
 
-  /** Per-domain cap (q130) — C4-style host throttling: keep at most `k`
+  /** Per-domain cap (q130) — C4-style host throttling: keep at most [[DomainCap]]
     * canonical URLs per host so no single domain dominates the training mix.
     * Order inside a host is total — (n_fetches desc, canon asc) — so the cut
-    * is deterministic at any partitioning. The row_number ≤ k filter is the
+    * is deterministic at any partitioning. The row_number ≤ cap filter is the
     * WindowGroupLimit shape: Spark pushes the rank limit into per-partition
-    * top-k heaps before the exchange, so a million-page host costs k rows
+    * top-k heaps before the exchange, so a million-page host costs cap rows
     * after the map side, never a full per-host sort spill. */
-  def domainCap(pages: DataFrame, k: Int = 2): DataFrame = {
+  def domainCap(pages: DataFrame): DataFrame = {
     val byHost = Window.partitionBy(col("host"))
       .orderBy(col("n_fetches").desc, col("canon").asc)
     canonicalUrls(pages)
       .withColumn("rnk", row_number().over(byHost))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= DomainCap)
       .select(col("host"), col("canon"), col("n_fetches"), col("latest_ts"),
         col("first_pid"), col("rnk").cast("int").as("rnk"))
   }
@@ -177,38 +189,38 @@ object WebCuration {
 
   /** q141: crawl-frontier politeness schedule — per host, a FIFO of its URLs
     * (by first-seen timestamp, then URL for a total order) dealt into fetch
-    * ticks at `perTick` requests per host per tick (the crawl-delay budget).
+    * ticks at [[PerTick]] requests per host per tick (the crawl-delay budget).
     * The per-host window is the HONEST cost: politeness serializes each host
     * by definition, so a host's schedule length IS its crawl time and the
     * skew bound is the politeness policy itself, not the engine — hosts
     * parallelize freely (partition key = host), and the global tick horizon
     * `max(tick)` falls out per host for capacity planning. */
-  def frontierSchedule(pages: DataFrame, perTick: Int = 2): DataFrame = {
+  def frontierSchedule(pages: DataFrame): DataFrame = {
     val byHost = Window.partitionBy(col("host"))
       .orderBy(col("warc_ts"), col("url"))
     pages
       .select(col("url"), col("warc_ts"),
         split_part(col("url"), lit("/"), lit(3)).as("host"))
       .withColumn("slot", (row_number().over(byHost) - 1).cast("long"))
-      .withColumn("tick", expr(s"slot div $perTick"))
+      .withColumn("tick", expr(s"slot div $PerTick"))
       .select(col("host"), col("url"), col("slot"), col("tick"))
   }
 
   /** Deterministic stratified subsample (q81) — training-mix balancing: per
-    * language, keep the first ceil(frac · n_lang) documents in content-hash
+    * language, keep the first ceil([[SampleFrac]] · n_lang) documents in content-hash
     * order (md5 of the id — a fixed pseudo-random permutation, so the sample
     * is reproducible across runs/engines with no RNG). The per-stratum rank
     * is the standard exact-quota shuffle: one window per stratum. At corpus
     * scale a skewed stratum serializes its partition — acceptable for
     * stratum-count ≪ corpus (languages), or swap in a per-stratum hash
     * threshold when approximate quotas suffice. */
-  def stratifiedSample(docs: DataFrame, frac: Double = 0.3): DataFrame = {
+  def stratifiedSample(docs: DataFrame): DataFrame = {
     val h = graft.functions.Md5Prefix60.md5Prefix60(col("doc_id").cast("string"))
     val w = Window.partitionBy(col("lang")).orderBy(col("h"), col("doc_id"))
     val cw = Window.partitionBy(col("lang"))
     docs.select(col("doc_id"), col("lang"), h.as("h"))
       .withColumn("rk", row_number().over(w))
-      .withColumn("quota", ceil(count(lit(1)).over(cw) * lit(frac)).cast("long"))
+      .withColumn("quota", ceil(count(lit(1)).over(cw) * lit(SampleFrac)).cast("long"))
       .filter(col("rk") <= col("quota"))
       .select(col("doc_id"), col("lang"), col("rk"), col("quota"))
   }
@@ -257,8 +269,8 @@ object WebCuration {
   }
 
   /** q146: host-level boilerplate removal — the template-stripping pass of
-    * C4/CCNet-style curation: a paragraph that appears on ≥ `minSharePct` %
-    * of a host's pages (hosts with ≥ `minPages` pages) is boilerplate
+    * C4/CCNet-style curation: a paragraph that appears on ≥ [[MinSharePct]] %
+    * of a host's pages (hosts with ≥ [[MinPages]] pages) is boilerplate
     * (header/footer/nav chrome), and every occurrence is dropped host-wide —
     * unlike global paragraph dedup (q73), which keeps first occurrences and
     * only collapses exact repeats corpus-wide. One row per page: paragraph
@@ -271,23 +283,18 @@ object WebCuration {
     * (distinct template paragraphs per host) but is joined back on the SAME
     * (host, hash) shuffle key, so AQE skew-splits any mega-host; final
     * reassembly is one per-page aggregate. No windows anywhere. */
-  def hostBoilerplate(pages: DataFrame, minSharePct: Int = 50,
-      minPages: Int = 2): DataFrame = {
+  def hostBoilerplate(pages: DataFrame): DataFrame = {
     val docs = pagesWithBanner(pages)
     val paras = docs
       .select(col("pid"), col("host"), split(col("text"), " ").as("ws"))
-      .select(col("pid"), col("host"),
-        posexplode(expr(
-          s"""transform(sequence(0, (size(ws) + ${ParaWords - 1}) div $ParaWords - 1),
-             |  i -> array_join(slice(ws, i * $ParaWords + 1, $ParaWords), ' '))""".stripMargin))
-          .as(Seq("para_id", "para")))
+      .select(col("pid"), col("host"), paraWindows)
       .withColumn("h", graft.functions.Md5Prefix60.md5Prefix60(col("para")))
     val hostPages = docs.groupBy(col("host")).agg(count(lit(1)).as("h_pages"))
     val flags = paras.groupBy(col("host"), col("h"))
       .agg(countDistinct(col("pid")).as("n_with"))
       .join(hostPages, "host")
-      .filter(col("n_with") * 100 >= col("h_pages") * minSharePct &&
-        col("h_pages") >= minPages)
+      .filter(col("n_with") * 100 >= col("h_pages") * MinSharePct &&
+        col("h_pages") >= MinPages)
       .select(col("host"), col("h"), lit(1).as("boiler"))
     paras.join(flags, Seq("host", "h"), "left")
       .groupBy(col("pid"), col("host"))
@@ -317,7 +324,7 @@ object WebCuration {
     pages.select(col("pid"), col("url"), col("text")).unionByName(mirrors)
   }
 
-  /** q147: mirror-host detection — host pairs serving ≥ `minShared`
+  /** q147: mirror-host detection — host pairs serving ≥ [[MinShared]]
     * byte-identical documents, with the overlap as ppm of the smaller
     * host's DISTINCT-CONTENT count (`sizes` counts distinct (host, hash)
     * rows, so a host's internal exact-duplicate pages collapse before the
@@ -326,28 +333,27 @@ object WebCuration {
     * otherwise double its content's weight in the corpus).
     *
     * Scale notes: the (host, content-hash) table is distinct-collapsed in
-    * one partial-aggregating pass; hashes on more than `maxHosts` hosts are
+    * one partial-aggregating pass; hashes on more than [[MaxHosts]] hosts are
     * excluded BEFORE pairing (syndicated boilerplate on 10^4 hosts would
     * otherwise explode into 10^8 pairs — the cap bounds pair fan-out at
-    * maxHosts² per hash, the same guard every LSH band join here uses);
+    * MaxHosts² per hash, the same guard every LSH band join here uses);
     * the pair self-join keys on the hash (AQE-splittable) and pair counts
     * collapse in ONE exchange on (host_a, host_b). */
-  def mirrorHosts(pages: DataFrame, maxHosts: Int = 16,
-      minShared: Int = 3): DataFrame = {
+  def mirrorHosts(pages: DataFrame): DataFrame = {
     val withM = pagesWithMirror(pages)
     val hh = withM.select(split_part(col("url"), lit("/"), lit(3)).as("host"),
         graft.functions.Md5Prefix60.md5Prefix60(col("text")).as("hb"))
       .distinct()
     val sizes = hh.groupBy(col("host")).agg(count(lit(1)).as("n_docs"))
     val eligible = hh.groupBy(col("hb")).agg(count(lit(1)).as("nh"))
-      .filter(col("nh") >= 2 && col("nh") <= maxHosts)
+      .filter(col("nh") >= 2 && col("nh") <= MaxHosts)
       .select(col("hb"))
     val e = hh.join(eligible, "hb")
     e.as("a").join(e.as("b"),
         col("a.hb") === col("b.hb") && col("a.host") < col("b.host"))
       .groupBy(col("a.host").as("host_a"), col("b.host").as("host_b"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= MinShared)
       .join(sizes.select(col("host").as("host_a"), col("n_docs").as("n_a")), "host_a")
       .join(sizes.select(col("host").as("host_b"), col("n_docs").as("n_b")), "host_b")
       .select(col("host_a"), col("host_b"), col("n_shared"),
@@ -444,7 +450,7 @@ object WebCuration {
   /** q155: crawl-budget allocation — the revisit plan the scheduler feeds
     * from: per host, the reputation verdict (q149) gates the budget to zero
     * for blocked hosts, and the content-drift bucket (q145) scales it
-    * (volatile ×4 / drifting ×2 / static ×1) over `basePerUrl` fetches per
+    * (volatile ×4 / drifting ×2 / static ×1) over [[BasePerUrl]] fetches per
     * known URL. Composes two oracle-checked chains end-to-end — the same
     * composition discipline as q50/q142.
     *
@@ -454,7 +460,7 @@ object WebCuration {
     * moves here. Mirror hosts (reputation's fixture side) carry no drift
     * row ⇒ left join + 'static' default, and their mirror-block verdict
     * zeroes the budget regardless. */
-  def crawlBudget(pages: DataFrame, basePerUrl: Int = 1): DataFrame = {
+  def crawlBudget(pages: DataFrame): DataFrame = {
     val rep = hostReputation(pages).select(col("host"), col("n_pages"), col("verdict"))
     val drift = contentDrift(pages).select(col("host"), col("bucket"))
     rep.join(drift, Seq("host"), "left")
@@ -466,6 +472,6 @@ object WebCuration {
           .when(col("bucket") === "drifting", lit(2L))
           .otherwise(lit(1L)))
       .select(col("host"), col("n_pages"), col("verdict"), col("bucket"),
-        (col("n_pages") * col("mult") * basePerUrl).as("budget_fetches"))
+        (col("n_pages") * col("mult") * BasePerUrl).as("budget_fetches"))
   }
 }

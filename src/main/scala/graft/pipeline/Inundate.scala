@@ -26,7 +26,7 @@ import graft.synth.Synth
 object Inundate {
 
   /** The pixel kernel's depth at a point with `hand`: max(stage − hand, 0). */
-  private def depthAt(stage: Column): Column = greatest(stage - col("hand"), lit(0.0))
+  private[graft] def depthAt(stage: Column): Column = greatest(stage - col("hand"), lit(0.0))
 
   /** Per-point tiles: (pid, cell, huc8, hydroid, hand, stage_m, depth, clazz). */
   def tiles(spark: SparkSession, points: DataFrame): DataFrame = {
@@ -94,7 +94,7 @@ object Inundate {
     * boundary becomes a status column). */
   def unitStatus(spark: SparkSession, points: DataFrame): DataFrame = {
     import graft.model.GraftStatus._
-    val universe = spark.range(0, 18L * 18L)
+    val universe = spark.range(0, (Synth.CatRows / Synth.HucCatRows * Synth.HucCols).toLong)
       .select(lpad(col("id").cast("string"), 8, "0").as("huc8"))
     val agg = graft.ops.SpatialJoin.assign(spark, points)
       .groupBy(col("huc8"))

@@ -145,11 +145,15 @@ object Snapshots {
 
   /** Read a snapshot table back with partition values kept as strings
     * (zero-padded HUC8 ids must not be inferred back to ints). */
-  def readTable(spark: SparkSession, table: String): DataFrame = {
+  def readTable(spark: SparkSession, table: String): DataFrame =
+    withStringPartitions(spark)(spark.read.parquet(table))
+
+  /** Runs `read` with partition-column type inference off. */
+  private def withStringPartitions(spark: SparkSession)(read: => DataFrame): DataFrame = {
     val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     val old = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    try spark.read.parquet(table)
+    try read
     finally old.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
   }
 
@@ -160,13 +164,8 @@ object Snapshots {
     * nulls, never a scan error). Pair with [[writeResumable]]: later commits
     * may carry a superset schema and old partitions stay readable unchanged —
     * no rewrite of committed data. */
-  def readTableEvolved(spark: SparkSession, table: String): DataFrame = {
-    val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try spark.read.option("mergeSchema", "true").parquet(table)
-    finally old.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-  }
+  def readTableEvolved(spark: SparkSession, table: String): DataFrame =
+    withStringPartitions(spark)(spark.read.option("mergeSchema", "true").parquet(table))
 
   /** Snapshot (time-travel) read: the table as of `asOfTs` — only partitions
     * whose manifest commit timestamp is ≤ `asOfTs` are visible, the

@@ -424,10 +424,8 @@ object HydroQueries {
     // (adjust_thalweg_lateral.py:10-60): two-stage zonal min + broadcast-back
     Query("q63_thalweg_adjust", (s, dir) => {
       val pts = SpatialJoin.assign(s, Synth.points(s, dir))
-        .withColumn("lat_c",
-          (floor(col("hydroid") / lit(144)).cast("long") + lit(0.5)) * lit(1.25) - lit(90.0))
-        .withColumn("lng_c",
-          ((col("hydroid") % 144) + lit(0.5)) * lit(2.5) - lit(180.0))
+        .withColumn("lat_c", Synth.latCOf(col("hydroid")))
+        .withColumn("lng_c", Synth.lngCOf(col("hydroid")))
         .withColumn("cost",
           (col("lat") - col("lat_c")) * (col("lat") - col("lat_c"))
             + (col("lng") - col("lng_c")) * (col("lng") - col("lng_c")))

@@ -62,7 +62,7 @@ object CorpusStream {
     * Pass `checkpoint` so a RESTARTED query resumes from committed offsets
     * instead of reprocessing the source from scratch. */
   def incrementalIngest(spark: SparkSession, srcDir: String, artifactDir: String,
-      outDir: String, jaccardMax: Double = 0.9, checkpoint: Option[String] = None)
+      outDir: String, checkpoint: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // sh/ holds per-doc (doc_id, arr) shingle arrays; a store written with
     // the older exploded (doc_id, hb) rows fails loudly on the missing `arr`
@@ -88,7 +88,7 @@ object CorpusStream {
         // in-plan (AQE broadcasts the dup side when it is genuinely small)
         val dupIds = TextOps.incrementalDedupAgainst(
             readOrEmpty(shDir, barr), readOrEmpty(bandDir, bbands),
-            barr, bbands, jaccardMax)
+            barr, bbands, TextOps.NearDupJaccard)
           // a doc whose BEST match is itself is a replayed batch re-checking
           // against its own committed artifacts — accept it again
           .filter(col("is_dup") === 1 && col("match_doc") =!= col("doc_id"))

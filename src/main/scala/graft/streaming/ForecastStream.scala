@@ -54,7 +54,7 @@ object ForecastStream {
     val assigned = graft.ops.SpatialJoin.assign(spark, Synth.withGeo(pages))
     assigned
       .join(org.apache.spark.sql.functions.broadcast(stages), "hydroid")
-      .withColumn("wet", (col("stage_m") - col("hand") > 0).cast("int"))
+      .withColumn("wet", (graft.pipeline.Inundate.depthAt(col("stage_m")) > 0).cast("int"))
       .withWatermark("event_ts", "10 minutes")
       .groupBy(window(col("event_ts"), "5 minutes"), col("huc8"))
       .agg(count(lit(1)).as("n_pages"), sum(col("wet")).as("n_wet"))

@@ -138,6 +138,15 @@ object Synth {
     (r / HucCatRows) * HucCols + (c / HucCatRows)
   }
   def huc8Of(hydroid: Int): String = f"${hucIdxOf(hydroid)}%08d"
+  def catRowOf(hydroid: Column): Column = floor(hydroid / CatCols)
+  def catColOf(hydroid: Column): Column = hydroid % CatCols
+  def hucIdxOf(hydroid: Column): Column =
+    floor(catRowOf(hydroid) / HucCatRows) * HucCols + floor(catColOf(hydroid) / HucCatRows)
+  def huc8Of(hydroid: Column): Column = lpad(hucIdxOf(hydroid).cast("long").cast("string"), 8, "0")
+  /** Column twins of [[catchmentList]]'s centroid `lat_c`/`lng_c`. */
+  def latCOf(hydroid: Column): Column =
+    (catRowOf(hydroid).cast("long") + lit(0.5)) * lit(CatH) - lit(90.0)
+  def lngCOf(hydroid: Column): Column = (catColOf(hydroid) + lit(0.5)) * lit(CatW) - lit(180.0)
 
   final case class Catchment(
       hydroid: Int, feature_id: Long, huc8: String, lake_id: Int, order_ : Int,
@@ -246,9 +255,7 @@ object Synth {
           ((col("hydroid") % 5) * lit(0.5) + lit(0.5)) * col("stage") * col("stage"))
       .withColumn("feature_id", featureIdOf(col("hydroid")))
       .withColumn("lake_id", when(isLake(col("hydroid")), col("hydroid").cast("int")).otherwise(lit(-999)))
-      .withColumn("huc8", lpad(
-        (floor(floor(col("hydroid") / 144) / 8) * 18 + floor((col("hydroid") % 144) / 8)).cast("long").cast("string"),
-        8, "0"))
+      .withColumn("huc8", huc8Of(col("hydroid")))
       .select("hydroid", "feature_id", "huc8", "lake_id", "i", "stage", "discharge_cms")
 
   /** A feature's [[forecast]] discharge in integer tenths. */

@@ -57,7 +57,7 @@ class AnnSpec extends SparkTestBase {
     val embBig = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     val brute = AnnSearch.bruteTopK(embBig, 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val approx = AnnSearch.srpTopK(embBig, 5, nBits = 2, tables = 12).collect()
+    val approx = AnnSearch.srpTopK(embBig, nBits = 2, tables = 12).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = brute.intersect(approx).size.toDouble / brute.size
     assert(recall >= 0.9, s"recall=$recall")
@@ -67,7 +67,7 @@ class AnnSpec extends SparkTestBase {
     val embBig = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     val brute = AnnSearch.bruteTopK(embBig, 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val ivf = AnnSearch.ivfTopK(embBig, 5).collect()
+    val ivf = AnnSearch.ivfTopK(embBig).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = brute.intersect(ivf).size.toDouble / brute.size
     // C = N/50 = 40 lists, nProbe 3 ⇒ candidates ≈ 7.5 % of the corpus.
@@ -87,12 +87,12 @@ class AnnSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     def recallOf(rows: Array[org.apache.spark.sql.Row]): Double =
       brute.intersect(rows.map(r => (r.getLong(0), r.getLong(2))).toSet).size.toDouble / brute.size
-    val untrained = recallOf(AnnSearch.ivfTopK(embBig, 5).collect())
+    val untrained = recallOf(AnnSearch.ivfTopK(embBig).collect())
     val trained = recallOf(
-      AnnSearch.ivfTopKWith(embBig, AnnSearch.trainedCentroids(embBig), 5).collect())
+      AnnSearch.ivfTopKWith(embBig, AnnSearch.trainedCentroids(embBig)).collect())
     val trained2 = recallOf(
       AnnSearch.ivfTopKWith(embBig,
-        AnnSearch.kmeansIterateFrom(embBig, AnnSearch.trainedCentroids(embBig), 1), 5).collect())
+        AnnSearch.kmeansIterateFrom(embBig, AnnSearch.trainedCentroids(embBig), 1)).collect())
     info(s"IVF recall@5: untrained=$untrained 1-round=$trained 2-round=$trained2")
     // an M-step moves centroids toward their members' means — the lists a
     // query probes then hold more of its true neighborhood
@@ -102,7 +102,7 @@ class AnnSpec extends SparkTestBase {
     // candidates and monotonically more recall — the trade a user tunes
     val cents = AnnSearch.trainedCentroids(embBig)
     val curve = Seq(1, 3, 6).map(p =>
-      p -> recallOf(AnnSearch.ivfTopKWith(embBig, cents, 5, nProbe = p).collect()))
+      p -> recallOf(AnnSearch.ivfTopKWith(embBig, cents, nProbe = p).collect()))
     info(s"IVF recall@5 vs nProbe (trained): $curve")
     curve.sliding(2).foreach { case Seq((_, a), (_, b)) =>
       assert(b >= a, s"recall fell as nProbe grew: $curve")
@@ -121,7 +121,7 @@ class AnnSpec extends SparkTestBase {
     val tuned = recallOf(AnnSearch.ivfTopKWith(
       embBig,
       AnnSearch.kmeansIterateFrom(embBig, AnnSearch.trainedCentroids(embBig), 3),
-      5, nProbe = 4).collect())
+      nProbe = 4).collect())
     info(s"IVF best-at-10%-scan (C=40, 3 rounds, nProbe=4): recall@5 = $tuned")
     assert(tuned >= 0.45, s"tuned IVF fell below its recorded band: $tuned")
 
@@ -139,7 +139,7 @@ class AnnSpec extends SparkTestBase {
     val c80 = AnnSearch.kmeansIterateFrom(embBig, AnnSearch.seedCentroidsPP(embBig, 80), 3)
       .cache()
     val tuned80 = recallOf(
-      AnnSearch.ivfTopKWith(embBig, c80, 5, nProbe = 8).collect())
+      AnnSearch.ivfTopKWith(embBig, c80, nProbe = 8).collect())
     val nCand = AnnSearch.ivfCandidatesWith(embBig, c80, nProbe = 8).count()
     val scan80 = nCand.toDouble / (brute.map(_._1).size.toDouble * embBig.count())
     info(f"IVF r5 retune (C=80, pp+3 rounds, nProbe=8): recall@5 = $tuned80 at scan=$scan80%.3f")
@@ -149,9 +149,9 @@ class AnnSpec extends SparkTestBase {
     // count (the index holds each vector twice, so every query sees a
     // superset of the single-assign candidates)
     val dual = recallOf(
-      AnnSearch.ivfTopKWith(embBig, c80, 5, nProbe = 6, nAssign = 2).collect())
+      AnnSearch.ivfTopKWith(embBig, c80, nProbe = 6, nAssign = 2).collect())
     val single = recallOf(
-      AnnSearch.ivfTopKWith(embBig, c80, 5, nProbe = 6).collect())
+      AnnSearch.ivfTopKWith(embBig, c80, nProbe = 6).collect())
     info(s"IVF nAssign=2 vs 1 (C=80, nProbe=6): $dual vs $single")
     assert(dual >= single, s"multi-assignment lost recall: $dual < $single")
     c80.unpersist()

@@ -19,6 +19,26 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
+  test("grid twins: hydrotable huc8 == huc8Of, Column centroid == catchmentList's, every hydroid") {
+    import spark.implicits._
+    val n = Synth.CatRows * Synth.CatCols
+    val huc8 = Synth.hydrotable(spark).filter(col("i") === 0)
+      .select(col("hydroid"), col("huc8")).as[(Long, String)].collect()
+    assert(huc8.length == n)
+    val badHuc = huc8.filter { case (h, s) => s != Synth.huc8Of(h.toInt) }
+    assert(badHuc.isEmpty, badHuc.take(5).mkString(", "))
+    val h = col("hydroid")
+    val cents = Synth.hydroids(spark).select(h, Synth.latCOf(h), Synth.lngCOf(h))
+      .as[(Long, Double, Double)].collect()
+    assert(cents.length == n)
+    val bits: Double => Long = java.lang.Double.doubleToLongBits
+    val badCent = cents.filter { case (k, lat, lng) =>
+      val c = Synth.catchmentList(k.toInt)
+      bits(lat) != bits(c.lat_c) || bits(lng) != bits(c.lng_c)
+    }
+    assert(badCent.isEmpty, badCent.take(5).mkString(", "))
+  }
+
   test("rating interp: bracketing agg == typed Aggregator UDAF (np.interp semantics)") {
     val ht = Synth.hydrotable(spark).filter(col("hydroid") % 37 === 0)
     val fc = Synth.forecast(spark)

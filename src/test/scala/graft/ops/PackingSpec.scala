@@ -16,7 +16,7 @@ class PackingSpec extends SparkTestBase {
     // one shard (ids ≡ 0 mod 64), budget 4: docs of 3/3/6 tokens →
     // [0,3) in seq 0, [3,6) spans seqs 0-1, [6,12) spans seqs 1-2
     val d = docs(0L -> "a b c", 64L -> "d e f", 128L -> "g h i j k l")
-    val got = Packing.seqPack(d, budgetTokens = 4, shards = 64)
+    val got = Packing.seqPack(d, budgetTokens = 4)
       .select("doc_id", "tok_start", "tok_end", "seq_first", "seq_last", "n_seqs")
       .as[(Long, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
     assert(got.toSeq == Seq(
@@ -27,7 +27,7 @@ class PackingSpec extends SparkTestBase {
 
   test("seqPack: shards pack independently (offsets restart per shard)") {
     val d = docs(1L -> "a b c d", 2L -> "e f g h")
-    val starts = Packing.seqPack(d, budgetTokens = 8, shards = 64)
+    val starts = Packing.seqPack(d, budgetTokens = 8)
       .select("tok_start").as[Long].collect()
     assert(starts.toSeq == Seq(0L, 0L), s"each shard starts at 0: ${starts.mkString(",")}")
   }

@@ -128,7 +128,7 @@ class TextOpsSpec extends SparkTestBase {
     val (barr, bbands) = TextOps.dedupArtifacts(batch)
     val viaArtifacts = TextOps.incrementalDedupAgainst(
       spark.read.parquet(s"$dir/base_arr"), spark.read.parquet(s"$dir/base_bands"),
-      barr, bbands)
+      barr, bbands, TextOps.NearDupJaccard)
     val direct = TextOps.incrementalDedup(corpus)
     assert(viaArtifacts.except(direct).isEmpty && direct.except(viaArtifacts).isEmpty)
   }

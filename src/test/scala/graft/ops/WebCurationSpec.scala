@@ -111,7 +111,7 @@ class WebCurationSpec extends SparkTestBase {
 
   test("domainCap: at most k rows per host, highest-fetch URLs win, rank is total-ordered") {
     val pages = Synth.pages(spark, sf0001)
-    val out = WebCuration.domainCap(pages, k = 2).cache()
+    val out = WebCuration.domainCap(pages).cache()
     // cap respected
     assert(out.groupBy($"host").count().filter($"count" > 2).count() === 0)
     // no dropped URL out-fetches a kept one on the same host
