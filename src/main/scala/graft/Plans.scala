@@ -49,7 +49,7 @@ object Plans {
         ops.Calibration.subdivide(ops.Calibration.srcGeom(spark)
           .filter(org.apache.spark.sql.functions.col("hydroid") % 7 === 3)),
       "Near-dup candidates (adaptive SRP bits, capped windows, 8 tables)" ->
-        ops.AnnSearch.nearDupPairs(spark.read.parquet(s"$sf/embeddings.parquet")),
+        ops.AnnSearch.nearDupPairs(Synth.table(spark, sf, "embeddings")),
       "Agreement metrics with exclusion-polygon masks (mask lookup in the mosaic's final aggregate; no join)" ->
         ops.Agreement.metrics(ops.Agreement.agreement(spark, pipeline.Inundate.run(spark, sf))),
       "Extent dissolve (wet-cell 4-neighbor self-equi-join)" ->
@@ -64,7 +64,7 @@ object Plans {
       "CatFIM site acceptance (broadcast dims over one SRC partial-agg)" ->
         ops.CatFim.siteAcceptance(spark),
       "k-means step (broadcast centroids; exact quantized M-step)" ->
-        ops.AnnSearch.kmeansStep(spark.read.parquet(s"$sf/embeddings.parquet")),
+        ops.AnnSearch.kmeansStep(Synth.table(spark, sf, "embeddings")),
       "Incremental batch-vs-base dedup (cross-side band join only)" ->
         ops.TextOps.incrementalDedup(Synth.corpus(spark, sf)),
       "Sierra test (dual rating-curve interp at recurrence flows)" ->
@@ -104,7 +104,7 @@ object Plans {
       "DSIR importance weights (one model exchange; ≤4096-row broadcast scoring)" ->
         ops.QualityModels.importanceWeights(Synth.corpus(spark, sf)),
       "Source-overlap matrix (map-side distinct; hash-keyed pair join)" ->
-        ops.TextOps.sourceOverlap(spark.read.parquet(s"$sf/documents.parquet"))
+        ops.TextOps.sourceOverlap(Synth.table(spark, sf, "documents"))
     )
     val md = new StringBuilder("# PLANS — executed physical plans (AQE final)\n\n")
     md.append("Generated by `sbt \"runMain graft.Plans\"` at sf0.001; the plan\n")

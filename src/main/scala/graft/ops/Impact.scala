@@ -145,7 +145,7 @@ object Impact {
   def missingFim(spark: SparkSession, assigned: DataFrame): DataFrame = {
     val remDf = Terrain.rem(assigned)
     val perHyd = remDf
-      .withColumn("order_", (col("hydroid") % 8 + 1).cast("int"))
+      .withColumn("order_", Synth.orderOf(col("hydroid")))
       .groupBy(col("order_"), col("hydroid"))
       .agg(count(lit(1)).as("n_cells"),
         count(when(col("rem") === 0.0, 1)).as("n_rem0"))

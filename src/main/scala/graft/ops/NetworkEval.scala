@@ -125,7 +125,7 @@ object NetworkEval {
     Synth.catchmentList.map { cat =>
       val h = cat.hydroid
       val r = h / Synth.CatCols; val c = h % Synth.CatCols
-      val lr = r % 8; val lc = c % 8
+      val lr = r % Synth.HucCatRows; val lc = c % Synth.HucCatRows
       val down = if (lr == 0) -1 else (r - 1) * Synth.CatCols + (c - lc + lc / 2)
       (h.toLong, cat.huc8, down.toLong)
     }.toDF("hydroid", "huc8", "to_node")

@@ -24,8 +24,9 @@ import graft.synth.Synth
   *     few polygons that meet it (1.2 on average on the flagship's pages);
   *  3. for catchments that lookup is the stream-side key of a
   *     **broadcast**-hash join against the 20 736-row catchment-attribute
-  *     table on its unique dense `hydroid` (points in no catchment drop
-  *     here).
+  *     table ([[attributes]]: closed forms over a `Range`, so planning
+  *     never walks literal rows) on its unique dense `hydroid` (points in
+  *     no catchment drop here).
   *
   * Both steps run inside one whole-stage-codegen stage: ZERO shuffle of the
   * fact (pages) side at any scale. At 100 TB this is a map-only stage:
@@ -58,10 +59,7 @@ object SpatialJoin {
     * Output columns: `ccell` (when the points carry it), the other point
     * columns, then hydroid, feature_id, huc8, lake_id, order_. */
   def assign(spark: SparkSession, points: DataFrame): DataFrame = {
-    import spark.implicits._
-    val attrs = Synth.catchmentList
-      .map(c => (c.hydroid, c.feature_id, c.huc8, c.lake_id, c.order_))
-      .toDF("hydroid", "feature_id", "huc8", "lake_id", "order_")
+    val attrs = attributes(spark)
     val keyFirst = points.columns.filter(_ == "ccell") ++ points.columns.filter(_ != "ccell")
     // the lookup is the join key itself, not a projected column: equal to
     // a projected `hydroid`, it would let constraint inference copy every
@@ -71,5 +69,16 @@ object SpatialJoin {
       .join(broadcast(attrs),
         PipLookup.lookup(col("lng"), col("lat"), catchmentIndex(spark)) === attrs("hydroid"))
       .select(keyFirst.map(col) ++ attrs.columns.map(attrs(_)): _*)
+  }
+
+  /** The catchment-attribute table (hydroid INT, feature_id, huc8, lake_id,
+    * order_): [[Synth.catchmentList]]'s attributes as closed forms over
+    * [[Synth.hydroids]], so a plan carries a `Range`, not 20 736 literal
+    * rows that every planner rule would walk. */
+  private[graft] def attributes(spark: SparkSession): DataFrame = {
+    val h = col("hydroid")
+    Synth.hydroids(spark).select(h.cast("int").as("hydroid"))
+      .select(h, Synth.featureIdOf(h).as("feature_id"), Synth.huc8Of(h).as("huc8"),
+        Synth.lakeIdOf(h).as("lake_id"), Synth.orderOf(h).as("order_"))
   }
 }

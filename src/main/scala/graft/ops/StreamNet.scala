@@ -30,11 +30,11 @@ object StreamNet {
   /** Closed-form downstream id, or -1 (driver-side mirror of the synthesis). */
   def downstreamOf(h: Int): Int = {
     val r = h / Synth.CatCols; val c = h % Synth.CatCols
-    val lr = r % 8; val lc = c % 8
+    val lr = r % Synth.HucCatRows; val lc = c % Synth.HucCatRows
     if (lr == 0) -1
     else {
       val dc = lc % 3 - 1
-      val lcp = if (lc + dc < 0 || lc + dc > 7) lc else lc + dc
+      val lcp = if (lc + dc < 0 || lc + dc >= Synth.HucCatRows) lc else lc + dc
       (r - 1) * Synth.CatCols + (c - lc + lcp)
     }
   }
@@ -50,7 +50,7 @@ object StreamNet {
       val h = cat.hydroid
       val d = downstreamOf(h)
       val (tlat, tlng) =
-        if (d < 0) (cat.lat_c - 1.25, cat.lng_c) // outlet pour point below block
+        if (d < 0) (cat.lat_c - Synth.CatH, cat.lng_c) // outlet pour point below block
         else {
           val dc = Synth.catchmentList(d)
           (dc.lat_c, dc.lng_c)

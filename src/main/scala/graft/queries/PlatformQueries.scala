@@ -58,8 +58,8 @@ object PlatformQueries {
     // conditional aggregate (semi ≡ matched, anti ≡ unmatched). At 100 TB this
     // is a single scan of each table instead of two.
     Query("q32_semi_anti", (s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val c = Synth.table(s, dir, "customer")
+      val o = Synth.table(s, dir, "orders")
         .select(col("o_custkey")).distinct()
       c.join(o, c("c_custkey") === o("o_custkey"), "left")
         .agg(count(when(col("o_custkey").isNotNull, 1)).as("n_with_orders"),
@@ -71,7 +71,7 @@ object PlatformQueries {
 
     // grouping-sets rollup (free in Spark; absent in the reference — §2.4)
     Query("q33_rollup", (s, dir) =>
-      s.read.parquet(s"$dir/orders.parquet")
+      Synth.table(s, dir, "orders")
         .rollup(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n")),
       "SELECT o_orderstatus, o_orderpriority, count(*) AS n FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)"),
@@ -94,8 +94,8 @@ object PlatformQueries {
 
     // §2.7 set ops: supplier vs customer nations (except / intersect / union)
     Query("q35_setops", (s, dir) => {
-      val sn = s.read.parquet(s"$dir/supplier.parquet").select(col("s_nationkey").as("k")).distinct()
-      val cn = s.read.parquet(s"$dir/customer.parquet").select(col("c_nationkey").as("k")).distinct()
+      val sn = Synth.table(s, dir, "supplier").select(col("s_nationkey").as("k")).distinct()
+      val cn = Synth.table(s, dir, "customer").select(col("c_nationkey").as("k")).distinct()
       sn.except(cn).withColumn("op", lit("supplier_only"))
         .unionByName(cn.except(sn).withColumn("op", lit("customer_only")))
         .unionByName(sn.intersect(cn).withColumn("op", lit("both")))
@@ -124,7 +124,7 @@ object PlatformQueries {
     Query("q37_sessionize", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      s.read.parquet(s"$dir/events.parquet")
+      Synth.table(s, dir, "events")
         .withColumn("us", unix_micros(col("ts").cast("timestamp")))
         .withColumn("prev_us", lag(col("us"), 1).over(w))
         .withColumn("new_sess",
@@ -142,7 +142,7 @@ object PlatformQueries {
 
     // A9 pivot: per-source doc counts by language
     Query("q38_pivot", (s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
+      Synth.table(s, dir, "documents")
         .groupBy(col("source"))
         .pivot("lang", Seq("en", "es", "de", "fr", "zh")).count()
         .select(col("source"),
@@ -215,7 +215,7 @@ object PlatformQueries {
     // §2.8 higher-order array functions: quantized dot product of adjacent
     // embedding vectors via zip_with + aggregate (exact BIGINT arithmetic)
     Query("q62_hof_dot", (s, dir) => {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
+      val e = Synth.table(s, dir, "embeddings")
       val a = e.select(col("vec_id"), col("embedding").as("ea"))
       val b = e.select((col("vec_id") - 1).as("vec_id"), col("embedding").as("eb"))
       a.join(b, "vec_id")
@@ -271,7 +271,7 @@ object PlatformQueries {
     // JSON property extraction over the REAL events table (src.json scalar
     // family on driver data, not synthetic): get_json_object + typed agg
     Query("q85_json_props", (s, dir) =>
-      s.read.parquet(s"$dir/events.parquet")
+      Synth.table(s, dir, "events")
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast("int").as("k"))
         .groupBy(col("event_type"))
@@ -336,7 +336,8 @@ object PlatformQueries {
     // source-side oracle — any sink, read-back, or lineage corruption breaks
     // the hash
     Query("q116_snapshot_roundtrip", (s, dir) => {
-      val table = s"/tmp/graft_artifacts/q116_${new java.io.File(dir).getName}"
+      // under this application's temp dir: two JVMs never share the table
+      val table = s"${org.apache.spark.SparkFiles.getRootDirectory()}/q116_${new java.io.File(dir).getName}"
       graft.pipeline.Snapshots.deleteRecursively(java.nio.file.Paths.get(table))
       val src = SpatialJoin.assign(s, Synth.points(s, dir))
         .select(col("pid"), col("hydroid").cast("long").as("hydroid"),

@@ -242,7 +242,7 @@ object TextDedupQueries {
 
     // brute-force quantized-cosine top-k ANN
     Query("q21_ann_brute", (s, dir) =>
-      AnnSearch.bruteTopK(s.read.parquet(s"$dir/embeddings.parquet")),
+      AnnSearch.bruteTopK(Synth.table(s, dir, "embeddings")),
       withCtes(qt, nrm,
         """dots AS (
           |  SELECT a.vec_id AS qvec, b.vec_id AS vec, CAST(sum(a.q * b.q) AS BIGINT) AS dot
@@ -263,7 +263,7 @@ object TextDedupQueries {
 
     // SRP bucket assignment (the LSH scale path for ANN)
     Query("q22_srp_buckets", (s, dir) =>
-      AnnSearch.srpBuckets(s.read.parquet(s"$dir/embeddings.parquet")),
+      AnnSearch.srpBuckets(Synth.table(s, dir, "embeddings")),
       {
         val sums = (0 until 8).map(b =>
           s"sum(q * ((((pos + ${b * 37 + 1}) * 2654435761 >> 13) & 1) * 2 - 1)) AS p$b").mkString(",\n      ")
@@ -278,7 +278,7 @@ object TextDedupQueries {
     // IVF ANN: deterministic coarse quantizer, nProbe nearest lists, exact
     // rerank — the cluster-pruned scale path beside the SRP hash tables
     Query("q72_ivf_topk", (s, dir) =>
-      AnnSearch.ivfTopK(s.read.parquet(s"$dir/embeddings.parquet")),
+      AnnSearch.ivfTopK(Synth.table(s, dir, "embeddings")),
       withCtes(qt, nrm,
         "cvq AS (SELECT vec_id AS cid, pos, q AS cq FROM qt WHERE vec_id % 50 = 7)",
         "cnr AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm WHERE vec_id % 50 = 7)",
@@ -328,7 +328,7 @@ object TextDedupQueries {
     // This is the ARTIFACT BUILDER: the scored-pair table is persisted once
     // and read back (the cost measured here is the honest end-to-end build)
     Query("q49_embed_neardup", (s, dir) =>
-      AnnSearch.writeNearDupPairs(s.read.parquet(s"$dir/embeddings.parquet"), dir)
+      AnnSearch.writeNearDupPairs(Synth.table(s, dir, "embeddings"), dir)
         .filter(col("cos") >= 0.35)
         .select(col("va"), col("vb"), col("cos")),
       neardupOracle(
@@ -342,7 +342,7 @@ object TextDedupQueries {
     // pairs (what moves if the dedup cut-off shifts a band) — reads the
     // persisted pairs artifact; reports don't re-derive the SRP chain
     Query("q94_neardup_hist", (s, dir) =>
-      AnnSearch.readNearDupPairs(s.read.parquet(s"$dir/embeddings.parquet"), dir)
+      AnnSearch.readNearDupPairs(Synth.table(s, dir, "embeddings"), dir)
         .select(floor(col("cos") * lit(10.0)).cast("long").as("band"), col("cos"))
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n_pairs"),
@@ -404,7 +404,7 @@ object TextDedupQueries {
     // exact quantized M-step sums (order-insensitive where float means
     // are not)
     Query("q80_kmeans_step", (s, dir) =>
-      AnnSearch.kmeansStep(s.read.parquet(s"$dir/embeddings.parquet")),
+      AnnSearch.kmeansStep(Synth.table(s, dir, "embeddings")),
       withCtes(qt, nrm,
         "cvq AS (SELECT vec_id AS cid, pos, q AS cq FROM qt WHERE vec_id % 50 = 7)",
         "cnr AS (SELECT vec_id AS cid, n2 AS cn2 FROM nrm WHERE vec_id % 50 = 7)",
@@ -672,7 +672,7 @@ object TextDedupQueries {
     // connected components → keep-one-per-MEANING ledger
     Query("q132_semantic_dedup", (s, dir) =>
       DedupGraph.semanticDedup(
-        AnnSearch.nearDupPairs(s.read.parquet(s"$dir/embeddings.parquet"))),
+        AnnSearch.nearDupPairs(Synth.table(s, dir, "embeddings"))),
       // semantic-dedup ledger: the SRP scored-pair chain (same CTEs as q49)
       // at cos ≥ 0.35, closed by a recursive reachability walk to components
       neardupRecursiveOracle(Seq(
@@ -949,7 +949,7 @@ object TextDedupQueries {
     // source-pair shingle-overlap matrix: distinct (source, hb) in one
     // partial pass, hash-keyed pair join, exact-ppm Jaccard per cell
     Query("q151_source_overlap", (s, dir) =>
-      TextOps.sourceOverlap(s.read.parquet(s"$dir/documents.parquet")),
+      TextOps.sourceOverlap(Synth.table(s, dir, "documents")),
       // source-pair shingle overlap: distinct (source, 60-bit shingle hash),
       // pair join on the hash, exact-ppm set Jaccard
       withCtes(

@@ -2,6 +2,7 @@ package graft.synth
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.geo.{Cells, Geom}
 
 /** Deterministic synthesis of the graft's geospatial world (FIXTURES.md) from
@@ -28,6 +29,36 @@ object Synth {
   val HucCatRows = 8 // catchments per HUC edge
   val HucCols = 18
 
+  // --------------------------------------------------------- driver tables
+
+  /** The schema of each driver table (`<sfDir>/<name>.parquet`): the types
+    * Spark infers from the files' footers, every field nullable. A read with
+    * a declared schema plans without the footer-reading job an inferring
+    * read launches on every call. */
+  val TableSchemas: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, " +
+      "c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, " +
+      "p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, " +
+      "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  /** Driver table `name` of the scale-factor directory `sfDir`, read with
+    * its [[TableSchemas]] entry. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.schema(TableSchemas(name)).parquet(s"$sfDir/$name.parquet")
+
   // ---------------------------------------------------------------- points
 
   /** Shared geocode formulas. `pid` must be a non-negative BIGINT column.
@@ -52,14 +83,13 @@ object Synth {
   }
 
   /** The driver's `lineitem` table (the large one). */
-  def lineitem(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+  def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
 
   /** Pages table per BASELINE.json input_hint, from `documents`:
     * (url, warc_ts, html, text, lang) + geocode. `text` is a byte-identical
     * passthrough of the source column (the invariant). */
   def pages(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    val d = table(spark, sfDir, "documents")
     withGeo(d.select(
       col("doc_id").cast("long").as("pid"),
       concat(lit("https://"), col("source"), lit(".example.com/doc/"), col("doc_id")).as("url"),
@@ -80,7 +110,7 @@ object Synth {
     * near-clones (every 50th, last 10 chars truncated, ids + [[BaseDocs]])
     * — the synthetic duplicate structure the dedup family must find. */
   def corpus(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
+    val d = table(spark, sfDir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("lang"))
     val exact = d.filter(col("doc_id") % 40 === 0)
       .select((col("doc_id") + 2 * BaseDocs).as("doc_id"), col("text"), col("lang"))
@@ -132,6 +162,9 @@ object Synth {
   def hydroidOf(featureId: Column): Column = featureId - FeatureIdOffset
   /** Waterbody (lake) catchment: [[lakeIdOf]] is its own id. */
   def isLake(hydroid: Column): Column = hydroid % 97 === 0
+  def lakeIdOf(hydroid: Column): Column =
+    when(isLake(hydroid), hydroid.cast("int")).otherwise(lit(-999))
+  def orderOf(hydroid: Column): Column = (hydroid % 8 + 1).cast("int")
   def isGage(hydroid: Column): Column = hydroid % 199 === 0
   def hucIdxOf(hydroid: Int): Int = {
     val r = hydroid / CatCols; val c = hydroid % CatCols
@@ -254,7 +287,7 @@ object Synth {
         (col("hydroid") % 7 + 1) * col("stage") +
           ((col("hydroid") % 5) * lit(0.5) + lit(0.5)) * col("stage") * col("stage"))
       .withColumn("feature_id", featureIdOf(col("hydroid")))
-      .withColumn("lake_id", when(isLake(col("hydroid")), col("hydroid").cast("int")).otherwise(lit(-999)))
+      .withColumn("lake_id", lakeIdOf(col("hydroid")))
       .withColumn("huc8", huc8Of(col("hydroid")))
       .select("hydroid", "feature_id", "huc8", "lake_id", "i", "stage", "discharge_cms")
 

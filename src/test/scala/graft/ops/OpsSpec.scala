@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import graft.SparkTestBase
 import graft.synth.Synth
 import graft.pipeline.Inundate
@@ -37,6 +38,27 @@ class OpsSpec extends SparkTestBase {
       bits(lat) != bits(c.lat_c) || bits(lng) != bits(c.lng_c)
     }
     assert(badCent.isEmpty, badCent.take(5).mkString(", "))
+    // the assign join's attribute table: closed forms == the driver list
+    val attrs = SpatialJoin.attributes(spark)
+    assert(attrs.schema.map(f => f.name -> f.dataType) == Seq("hydroid" -> IntegerType,
+      "feature_id" -> LongType, "huc8" -> StringType, "lake_id" -> IntegerType, "order_" -> IntegerType),
+      attrs.schema.treeString)
+    val got = attrs.as[(Int, Long, String, Int, Int)].collect().sortBy(_._1).toSeq
+    val want = Synth.catchmentList.map(c => (c.hydroid, c.feature_id, c.huc8, c.lake_id, c.order_))
+    assert(got.length == n)
+    val badAttr = got.zip(want).filter { case (g, w) => g != w }
+    assert(badAttr.isEmpty, badAttr.take(5).mkString(", "))
+  }
+
+  test("driver tables: each declared schema == the schema Spark infers, at every scale") {
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"); (name, schema) <- Synth.TableSchemas) {
+      val dir = s"/root/testdata/$sf"
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      assert(Synth.table(spark, dir, name).schema == inferred,
+        s"$sf/$name declared ${schema.toDDL} inferred ${inferred.toDDL}")
+    }
+    assert(Synth.TableSchemas.keySet == Set("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings"))
   }
 
   test("rating interp: bracketing agg == typed Aggregator UDAF (np.interp semantics)") {

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -57,6 +59,30 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("SortMergeJoin"))
     // whole-stage codegen spans appear as "*(n)" markers in the final plan
     assert("""\*\(\d+\) BroadcastHashJoin""".r.findFirstIn(plan).isDefined, plan.take(1500))
+  }
+
+  test("flagship queries plan without a Spark job; tiles, mosaic and metrics hold no local table") {
+    // a driver-table read that infers its schema runs a footer job per
+    // call, and a literal dimension table is walked by every planner rule
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try for (q <- Seq("q03_pip_join", "q07_mosaic", "q12_metrics")) {
+      graft.SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
+      ListenerBusAccess.drain(sc)
+      assert(jobs.get == 0, s"planning $q launched ${jobs.get} Spark job(s)")
+    } finally sc.removeSparkListener(listener)
+    val tiles = Inundate.tiles(spark, Synth.points(spark, sf0001))
+    val mosaic = Inundate.mosaic(tiles)
+    val metrics = graft.ops.Agreement.metrics(graft.ops.Agreement.agreement(spark, mosaic))
+    for ((name, df) <- Seq("tiles" -> tiles, "mosaic" -> mosaic, "metrics" -> metrics)) {
+      val plan = physical(df)
+      assert(!plan.contains("LocalTableScan"), s"$name:\n" + plan.take(3000))
+    }
   }
 
   test("rating-curve stages: one codegen'd lookup per forecast row; tiles broadcast attributes and stages only") {
