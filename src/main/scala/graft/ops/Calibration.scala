@@ -41,8 +41,8 @@ object Calibration {
   def srcGeom(spark: SparkSession): DataFrame = {
     val g = col("hydroid") % 3 + 1
     Synth.hydrotable(spark)
-      .withColumn("length_km", lit(1.0) + (col("hydroid") % 8) * lit(0.125))
-      .withColumn("slope", lit(0.001) + (col("hydroid") % 11) * lit(0.0005))
+      .withColumn("length_km", StreamNet.lengthOf(col("hydroid")))
+      .withColumn("slope", StreamNet.slopeOf(col("hydroid")))
       .withColumn("channel_n", lit(0.03) + (col("hydroid") % 6) * lit(0.01))
       .withColumn("overbank_n", lit(0.1) + (col("hydroid") % 4) * lit(0.025))
       .withColumn("area_base", (col("hydroid") % 13 + 5) * lit(100.0))

@@ -81,10 +81,6 @@ object KnnJoin {
         col("m.votes").as("mode_votes"), col("n_votes"))
 
   /** Points → nearest gage-catchment centroid (the synthetic gage set). */
-  def nearestGage(spark: SparkSession, points: DataFrame): DataFrame = {
-    import spark.implicits._
-    val gages = Synth.catchmentList.filter(c => Synth.isGage(c.hydroid))
-      .map(c => (c.hydroid, c.lat_c, c.lng_c)).toDF("hydroid", "lat_c", "lng_c")
-    nearest(points, gages)
-  }
+  def nearestGage(spark: SparkSession, points: DataFrame): DataFrame =
+    nearest(points, Synth.gages(spark))
 }

@@ -45,7 +45,7 @@ object Levees {
       a_x0: Double, a_lat_min: Double, a_lat_max: Double)
 
   /** Deterministic levee + leveed-area scene (tiny dimension, 120 rows).
-    * Levee ℓ sits on row boundary y = r·1.25 − 90 spanning 2–4 catchment
+    * Levee ℓ sits on row boundary y = r·CatH − 90 spanning 2–4 catchment
     * columns, x-shifted 0.5° OFF the column grid — the shift makes some
     * diagonal reaches clip a buffer corner without crossing the levee line
     * (the parallel-running river the association is FOR; perfectly aligned
@@ -57,19 +57,19 @@ object Levees {
     * else fully north (ℓ%2=0) or south. */
   lazy val leveeList: IndexedSeq[Levee] =
     for (l <- 0 until NumLevees) yield {
-      val r = (l * 13 + 7) % 142 + 1
-      val y = r * 1.25 - 90.0
-      val c0 = (l * 29 + 3) % 138
+      val r = (l * 13 + 7) % (Synth.CatRows - 2) + 1
+      val y = r * Synth.CatH - 90.0
+      val c0 = (l * 29 + 3) % (Synth.CatCols - 6)
       val w = 2 + l % 3
-      val x0 = c0 * 2.5 - 180.0 + 0.5
-      val x1 = (c0 + w) * 2.5 - 180.0 + 0.5
+      val x0 = c0 * Synth.CatW - 180.0 + 0.5
+      val x1 = (c0 + w) * Synth.CatW - 180.0 + 0.5
       val d = 0.25 + (l % 4) * 0.125
       val (aMin, aMax) =
         if (l % 7 == 0) (y + 5.0, y + 5.5)
         else if (l % 5 == 0) (y - 0.25, y + d)
         else if (l % 2 == 0) (y + 0.125, y + 0.125 + d)
         else (y - 0.125 - d, y - 0.125)
-      Levee(l, y, x0, x1, x0 + 2.5, aMin, aMax)
+      Levee(l, y, x0, x1, x0 + Synth.CatW, aMin, aMax)
     }
 
   def levees(spark: SparkSession): DataFrame = {

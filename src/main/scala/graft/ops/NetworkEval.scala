@@ -120,16 +120,8 @@ object NetworkEval {
     * (integer halving — every receiving reach in columns 0–3 is a 2-way
     * confluence, the mass-balance case `evaluate_continuity.py` exists
     * for). */
-  def confluenceNet(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Synth.catchmentList.map { cat =>
-      val h = cat.hydroid
-      val r = h / Synth.CatCols; val c = h % Synth.CatCols
-      val lr = r % Synth.HucCatRows; val lc = c % Synth.HucCatRows
-      val down = if (lr == 0) -1 else (r - 1) * Synth.CatCols + (c - lc + lc / 2)
-      (h.toLong, cat.huc8, down.toLong)
-    }.toDF("hydroid", "huc8", "to_node")
-  }
+  def confluenceNet(spark: SparkSession): DataFrame =
+    StreamNet.reachNet(spark, lc => floor(lc / 2))
 
   /** Flow-continuity evaluation (q98) — `tools/evaluate_continuity.py:14-121`:
     * per confluence reach, the forecast discharge must equal the SUM of its
@@ -200,7 +192,7 @@ object NetworkEval {
             / (col("n_cat") * (col("n_cat") - 1)).cast("double"))))
     val outlets = StreamNet.reaches(spark).filter(col("to_node") === -1)
       .select(col("hydroid").cast("long").as("hydroid"), col("huc8"), col("length_km"))
-      .withColumn("slope", lit(0.001) + (col("hydroid") % 11) * lit(0.0005))
+      .withColumn("slope", StreamNet.slopeOf(col("hydroid")))
     outlets
       .join(counts, Seq("hydroid", "huc8")) // inner: catchment present in raster
       .join(broadcast(stats.select(col("huc8"), col("mean_pts"), col("std_pts"))), "huc8")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.synth.Synth
 
@@ -11,6 +11,9 @@ import graft.synth.Synth
   *   local (lr, lc) in the 8×8 HUC block; downstream of (lr, lc) is
   *   (lr−1, lc′) with lc′ = lc + (lc%3 − 1) clamped to the block; lr == 0 is
   *   an outlet (NextDownID = −1, `src/build_stream_traversal.py:164-165`).
+  *
+  * The table is closed forms over [[Synth.hydroids]] ([[reachNet]]), not
+  * 20 736 literal rows; its oracle twin is `OracleSql.net`.
   *
   * Reach length = 1.0 + (hydroid % 8) · 0.125 km — dyadic, so arbolate sums
   * are exact doubles (order-insensitive) at any partitioning.
@@ -27,43 +30,44 @@ object StreamNet {
   private val MinReachKm = 1.25
   private val MinAreaSqKm = 3.0 // ratingGraftFull's short-catchment area
 
-  /** Closed-form downstream id, or -1 (driver-side mirror of the synthesis). */
-  def downstreamOf(h: Int): Int = {
-    val r = h / Synth.CatCols; val c = h % Synth.CatCols
-    val lr = r % Synth.HucCatRows; val lc = c % Synth.HucCatRows
-    if (lr == 0) -1
-    else {
-      val dc = lc % 3 - 1
-      val lcp = if (lc + dc < 0 || lc + dc >= Synth.HucCatRows) lc else lc + dc
-      (r - 1) * Synth.CatCols + (c - lc + lcp)
-    }
-  }
-
   def lengthOf(h: Int): Double = 1.0 + (h % 8) * 0.125
+  def lengthOf(hydroid: Column): Column = lit(1.0) + (hydroid % 8) * lit(0.125)
+  /** Reach slope (`Calibration.srcGeom`, `NetworkEval.backpool`). */
+  def slopeOf(hydroid: Column): Column = lit(0.001) + (hydroid % 11) * lit(0.0005)
+
+  /** (hydroid, huc8, to_node) over [[Synth.hydroids]], `OracleSql.reachNet`'s
+    * twin: a reach in HUC-block row 0 is an outlet (−1); any other drains to
+    * the row below, at local column `downLc(lc)`. */
+  private[ops] def reachNet(spark: SparkSession, downLc: Column => Column): DataFrame = {
+    val h = col("hydroid")
+    val lc = Synth.catColOf(h) % Synth.HucCatRows
+    Synth.hydroids(spark).select(h, Synth.huc8Of(h).as("huc8"),
+      when(Synth.catRowOf(h) % Synth.HucCatRows === 0, lit(-1L))
+        .otherwise((Synth.catRowOf(h) - 1) * Synth.CatCols + Synth.catColOf(h) - lc + downLc(lc))
+        .as("to_node"))
+  }
 
   /** reaches(hydroid, huc8, order_, length_km, to_node,
     *         from_lat, from_lng, to_lat, to_lng) — node coords are catchment
-    * centroids (from) and downstream centroids (to). */
+    * centroids (from) and downstream centroids (to; an outlet's lies a row
+    * south). */
   def reaches(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Synth.catchmentList.map { cat =>
-      val h = cat.hydroid
-      val d = downstreamOf(h)
-      val (tlat, tlng) =
-        if (d < 0) (cat.lat_c - Synth.CatH, cat.lng_c) // outlet pour point below block
-        else {
-          val dc = Synth.catchmentList(d)
-          (dc.lat_c, dc.lng_c)
-        }
-      (h, cat.huc8, cat.order_, lengthOf(h), d, cat.lat_c, cat.lng_c, tlat, tlng)
-    }.toDF("hydroid", "huc8", "order_", "length_km", "to_node",
-      "from_lat", "from_lng", "to_lat", "to_lng")
+    val h = col("hydroid"); val d = col("to_node")
+    val net = reachNet(spark, { lc =>
+      val lcp = lc + (lc % 3 - 1)
+      when(lcp < 0 || lcp >= Synth.HucCatRows, lc).otherwise(lcp)
+    })
+    net.select(h.cast("int").as("hydroid"), col("huc8"), Synth.orderOf(h).as("order_"),
+      lengthOf(h).as("length_km"), d.cast("int").as("to_node"),
+      Synth.latCOf(h).as("from_lat"), Synth.lngCOf(h).as("from_lng"),
+      when(d < 0, Synth.latCOf(h) - lit(Synth.CatH)).otherwise(Synth.latCOf(d)).as("to_lat"),
+      when(d < 0, Synth.lngCOf(h)).otherwise(Synth.lngCOf(d)).as("to_lng"))
   }
 
   /** G5: NextDownID resolved *relationally* from node coordinates — self
     * equi-join to-coord = from-coord within the HUC (exact double equality;
-    * coords are exact dyadics), terminal −1 when no match. The closed form
-    * above is the oracle for this derivation. */
+    * coords are exact dyadics), terminal −1 when no match. `OracleSql.net`'s
+    * closed-form `to_node` is the oracle for this derivation. */
   def resolveNextDown(reaches: DataFrame): DataFrame = {
     val dst = reaches.select(col("huc8").as("huc8_d"), col("hydroid").as("next_id"),
       col("from_lat").as("nlat"), col("from_lng").as("nlng"))

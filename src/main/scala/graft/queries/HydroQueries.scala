@@ -241,11 +241,8 @@ object HydroQueries {
     // S6 point sampling: lookup join of gage points into the cell table
     // (window sample at CoarseRes — the masked-window read analog)
     Query("q48_point_sample", (s, dir) => {
-      import s.implicits._
-      val gageCells = Synth.catchmentList.filter(c => Synth.isGage(c.hydroid))
-        .map(c => (c.hydroid.toLong,
-          graft.geo.Cells.latLngToCell(c.lat_c, c.lng_c, graft.geo.Cells.CoarseRes)))
-        .toDF("gage_id", "ccell")
+      val gageCells = Synth.gages(s).select(col("hydroid").cast("long").as("gage_id"),
+        Cells.latLngToCellCol(col("lat_c"), col("lng_c"), Cells.CoarseRes).as("ccell"))
       Synth.points(s, dir)
         .join(broadcast(gageCells), "ccell") // sample the raster around gages
         .groupBy(col("gage_id"))

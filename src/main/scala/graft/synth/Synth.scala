@@ -181,12 +181,21 @@ object Synth {
     (catRowOf(hydroid).cast("long") + lit(0.5)) * lit(CatH) - lit(90.0)
   def lngCOf(hydroid: Column): Column = (catColOf(hydroid) + lit(0.5)) * lit(CatW) - lit(180.0)
 
+  /** The synthetic gage set (hydroid INT, lat_c, lng_c): the [[isGage]]
+    * catchments at their centroids. Oracle twin: `HydroQueries.gageCentroids`. */
+  def gages(spark: SparkSession): DataFrame = {
+    val h = col("hydroid")
+    hydroids(spark).filter(isGage(h))
+      .select(h.cast("int").as("hydroid"), latCOf(h).as("lat_c"), lngCOf(h).as("lng_c"))
+  }
+
   final case class Catchment(
       hydroid: Int, feature_id: Long, huc8: String, lake_id: Int, order_ : Int,
       lat_c: Double, lng_c: Double, ring: Array[Double])
 
-  /** Driver-side catchment polygon list (broadcast dimension, ~20736 rows ≈
-    * 3 MB — the NWM-catchment analog; always broadcast, never shuffled). */
+  /** Driver-side catchment polygon list (~20736 rows ≈ 3 MB — the
+    * NWM-catchment analog), read by driver-side index builders only; tables
+    * of catchment attributes are closed forms over [[hydroids]]. */
   lazy val catchmentList: IndexedSeq[Catchment] =
     for (k <- 0 until CatRows * CatCols) yield {
       val r = k / CatCols; val c = k % CatCols
@@ -199,11 +208,6 @@ object Synth {
         // closed ring, CCW, packed [lng, lat, ...]
         ring = Array(lngMin, latMin, lngMax, latMin, lngMax, latMax, lngMin, latMax))
     }
-
-  def catchments(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    catchmentList.toDF()
-  }
 
   /** (ccell, catchment…) cover table: each polygon exploded to the CoarseRes
     * cells its bbox intersects — the cell-keyed side of the q68 polygon

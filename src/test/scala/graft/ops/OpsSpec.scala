@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 import graft.SparkTestBase
 import graft.synth.Synth
 import graft.pipeline.Inundate
@@ -48,6 +48,61 @@ class OpsSpec extends SparkTestBase {
     assert(got.length == n)
     val badAttr = got.zip(want).filter { case (g, w) => g != w }
     assert(badAttr.isEmpty, badAttr.take(5).mkString(", "))
+    // the gage set: closed forms == the driver list's gage centroids
+    val gages = Synth.gages(spark)
+    assert(gages.schema.map(f => f.name -> f.dataType) ==
+      Seq("hydroid" -> IntegerType, "lat_c" -> DoubleType, "lng_c" -> DoubleType),
+      gages.schema.treeString)
+    val gotGages = gages.as[(Int, Double, Double)].collect().sortBy(_._1).toSeq
+      .map { case (k, lat, lng) => (k, bits(lat), bits(lng)) }
+    val wantGages = Synth.catchmentList.filter(c => Synth.isGage(c.hydroid))
+      .map(c => (c.hydroid, bits(c.lat_c), bits(c.lng_c)))
+    assert(gotGages == wantGages)
+  }
+
+  test("reach networks: closed forms == driver reference, every hydroid") {
+    import spark.implicits._
+    val n = Synth.CatRows * Synth.CatCols
+    // the reference topology: local (lr, lc) in the HUC block; lr == 0 is an
+    // outlet, else the reach drains to row r − 1 at local column downLc(lc)
+    def downstreamOf(h: Int, downLc: Int => Int): Int = {
+      val r = h / Synth.CatCols; val c = h % Synth.CatCols
+      val lr = r % Synth.HucCatRows; val lc = c % Synth.HucCatRows
+      if (lr == 0) -1 else (r - 1) * Synth.CatCols + (c - lc + downLc(lc))
+    }
+    val clamped = (lc: Int) => {
+      val lcp = lc + (lc % 3 - 1)
+      if (lcp < 0 || lcp >= Synth.HucCatRows) lc else lcp
+    }
+    val bits: Double => Long = java.lang.Double.doubleToLongBits
+    val reaches = StreamNet.reaches(spark)
+    assert(reaches.schema.map(f => f.name -> f.dataType) == Seq("hydroid" -> IntegerType,
+      "huc8" -> StringType, "order_" -> IntegerType, "length_km" -> DoubleType,
+      "to_node" -> IntegerType, "from_lat" -> DoubleType, "from_lng" -> DoubleType,
+      "to_lat" -> DoubleType, "to_lng" -> DoubleType), reaches.schema.treeString)
+    val got = reaches.as[(Int, String, Int, Double, Int, Double, Double, Double, Double)]
+      .collect().sortBy(_._1)
+    assert(got.length == n && got.map(_._1).toSeq == (0 until n))
+    val badReach = got.filter { case (h, huc, ord, len, d, flat, flng, tlat, tlng) =>
+      val c = Synth.catchmentList(h)
+      val want = downstreamOf(h, clamped)
+      val (wlat, wlng) =
+        if (want < 0) (c.lat_c - Synth.CatH, c.lng_c)
+        else (Synth.catchmentList(want).lat_c, Synth.catchmentList(want).lng_c)
+      huc != c.huc8 || ord != c.order_ || bits(len) != bits(StreamNet.lengthOf(h)) ||
+        d != want || bits(flat) != bits(c.lat_c) || bits(flng) != bits(c.lng_c) ||
+        bits(tlat) != bits(wlat) || bits(tlng) != bits(wlng)
+    }
+    if (badReach.nonEmpty) fail(s"${badReach.length} reaches differ: ${badReach.take(5).mkString(", ")}")
+    val conf = NetworkEval.confluenceNet(spark)
+    assert(conf.schema.map(f => f.name -> f.dataType) ==
+      Seq("hydroid" -> LongType, "huc8" -> StringType, "to_node" -> LongType), conf.schema.treeString)
+    val gotConf = conf.as[(Long, String, Long)].collect().sortBy(_._1)
+    assert(gotConf.length == n && gotConf.map(_._1).toSeq == (0L until n.toLong))
+    val badConf = gotConf.filter { case (h, huc, d) =>
+      huc != Synth.huc8Of(h.toInt) || d != downstreamOf(h.toInt, _ / 2).toLong
+    }
+    if (badConf.nonEmpty) fail(s"${badConf.length} confluence reaches differ: ${badConf.take(5).mkString(", ")}")
   }
 
   test("driver tables: each declared schema == the schema Spark infers, at every scale") {

@@ -57,7 +57,7 @@ class RatingCurvesSpec extends SparkTestBase {
       "midpoint" -> (col("q_lo") + col("q_hi")) / 2, "last" -> col("q_last"),
       "above" -> (col("q_last") + 1.0), "far above" -> col("q_last") * 3.0,
       "nan" -> lit(Double.NaN), "null" -> lit(null).cast("double"))
-    val base = Synth.catchments(spark).select(col("hydroid").cast("long").as("hydroid"), col("feature_id"))
+    val base = SpatialJoin.attributes(spark).select(col("hydroid").cast("long").as("hydroid"), col("feature_id"))
       .join(exact, "hydroid").join(lo, "hydroid").join(hi, "hydroid").join(last, "hydroid")
       .cache()
     try {

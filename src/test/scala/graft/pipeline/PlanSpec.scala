@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import graft.SparkTestBase
 import graft.geo.PipLookup
 import graft.synth.Synth
@@ -82,6 +83,18 @@ class PlanSpec extends SparkTestBase {
     for ((name, df) <- Seq("tiles" -> tiles, "mosaic" -> mosaic, "metrics" -> metrics)) {
       val plan = physical(df)
       assert(!plan.contains("LocalTableScan"), s"$name:\n" + plan.take(3000))
+    }
+  }
+
+  test("reach-network and gage queries: no local table in the optimized plan") {
+    // the reach networks and the gage set are closed forms over a Range; a
+    // literal table built from the driver's catchment list is walked by
+    // every planner rule
+    for (q <- Seq("q23_reaches", "q27_next_down", "q96_crosswalk_eval", "q98_continuity",
+        "q104_mannings_reset", "q09_knn_gage", "q48_point_sample")) {
+      val plan = graft.SparkEntry.queries(q)(spark, sf0001).queryExecution.optimizedPlan
+      val locals = plan.collect { case l: LocalRelation => l.data.size }
+      assert(locals.isEmpty, s"$q holds LocalRelation(s) of ${locals.mkString(", ")} rows")
     }
   }
 
